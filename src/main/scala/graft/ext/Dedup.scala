@@ -135,9 +135,13 @@ object Dedup {
     * label-propagation loop on the LSH pair graph — each round shuffles only
     * the (shrinking) EDGE set, where the label loop joins the full vertex
     * frame every iteration; and it converges in O(log n) rounds regardless
-    * of diameter. The two algorithms are proven equivalent on the same
-    * oracle (q86 vs q110 hash-collide; GraphSpec equality on adversarial
-    * chains), so this routing is a pure plan change. */
+    * of diameter. Rounds run only until the edge set fits under
+    * [[graft.operators.Graph.LocalFinishEdges]]; union-find on the driver
+    * finishes from there, so a pair graph that small runs no round at all.
+    * `maxIters` bounds the rounds: running out over the bound throws. The
+    * two algorithms are proven equivalent on the same oracle (q86 vs q110
+    * hash-collide; GraphSpec equality on adversarial chains), so this
+    * routing is a pure plan change. */
   def nearDupClusters(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int, rowsPerBand: Int, shingleN: Int, minJaccard: Double,
       maxIters: Int = 20): DataFrame = {

@@ -254,14 +254,18 @@ object ExtQueries {
 
   // ------------------------------------------- near-dup components (Large/Small-Star)
   /** The SAME clustering as q86 computed by a structurally different
-    * distributed algorithm — [[graft.operators.Graph.connectedComponentsStars]]
+    * algorithm — [[graft.operators.Graph.connectedComponentsStars]]
     * (Kiveris et al. SoCC '14 edge rewriting, O(log n) rounds independent
     * of diameter) instead of min-label propagation — and hash-checked
-    * against the SAME recursive-CTE oracle. Three independent formulations
-    * of one fixpoint (label loop, star rewriting, declarative transitive
+    * against the SAME recursive-CTE oracle. The star rounds run only until
+    * the edge set fits under [[graft.operators.Graph.LocalFinishEdges]];
+    * union-find on the driver finishes it, and this pair graph fits from
+    * the start. Three independent formulations of one fixpoint (label
+    * loop, star rewriting with its local finish, declarative transitive
     * closure) must collide on every row; GraphSpec additionally proves the
-    * two Spark algorithms agree on adversarial shapes (long chains) the
-    * dedup graph never produces. */
+    * distributed rounds (local finish off), the hand-off and label
+    * propagation agree on adversarial shapes (long chains) the dedup graph
+    * never produces. */
   val q110ComponentsStars = QuerySpec(
     "q110_components_stars", "EXT-dedup-components-stars",
     "near-dup components via Large-Star/Small-Star edge rewriting (q86's oracle)",
@@ -466,7 +470,9 @@ object ExtQueries {
     * at ≥ 0.25 → Large-Star/Small-Star components. At 100 TB this is the
     * standard SemDeDup-style shape: narrow signatures, one bucket-keyed
     * shuffle, cosine math only inside buckets, then a component pass over
-    * the (tiny) verified-pair graph. The oracle rebuilds the whole chain
+    * the verified-pair graph: star rounds until the edge set fits under
+    * [[graft.operators.Graph.LocalFinishEdges]], then union-find on the
+    * driver (this graph's few hundred edges fit at once). The oracle rebuilds the whole chain
     * — planes, buckets, pairs, cosine filter, recursive-CTE components —
     * so bucketing, verification and clustering are all hash-checked. */
   val q111SemanticClusters = QuerySpec(

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Plan-growth guard for ITERATIVE loops (CC/PageRank fixpoints, near-dup
   * clustering): every round must truncate the logical plan or it grows
@@ -66,11 +67,16 @@ object IterGuard {
   * checkpoints (executor loss kills local-checkpoint blocks).
   *
   * Scale notes: label frames are a few bytes per vertex — orders of
-  * magnitude below the edge data — so the loop's shuffles are sized to
-  * label volume, and restored after. Near-clique graphs (dedup) converge
-  * in 2-3 iterations and should pass `shortcut = false` (the jump join
-  * costs more than it saves at diameter ≤ 3); long-chain graphs keep the
-  * default.
+  * magnitude below the edge data — so the label loop and PageRank cap the
+  * shuffle partitions at 8 (sized to label volume) and restore them
+  * after. Near-clique graphs (dedup) converge in 2-3 iterations and should
+  * pass `shortcut = false` (the jump join costs more than it saves at
+  * diameter ≤ 3); long-chain graphs keep the default.
+  * [[connectedComponentsStars]] runs distributed rounds only while its
+  * edge set is over [[LocalFinishEdges]] and then finishes with
+  * union-find on the driver, so the small graphs dedup produces cost one
+  * collect instead of several rounds of jobs; it leaves the session conf
+  * alone.
   */
 object Graph {
 
@@ -174,6 +180,15 @@ object Graph {
     } finally session.conf.set("spark.sql.shuffle.partitions", prevParts)
   }
 
+  /** Edge count at or under which [[connectedComponentsStars]] stops the
+    * distributed rounds and finishes on the driver. The bound is driver
+    * memory: 2^20 edges have at most 2^21 endpoints, so union-find needs
+    * two 16 MB `Long` arrays and one 8 MB `Int` array; the collected rows
+    * and the (vertex, root) local relation are transient on top of that.
+    * Under it, a Spark round costs more in per-job overhead than in data;
+    * over it, only the distributed rounds can run. */
+  private[graft] val LocalFinishEdges: Long = 1L << 20
+
   /** Connected components by Large-Star / Small-Star EDGE REWRITING
     * (Kiveris, Lattanzi, Mirrokni, Rastogi, Vassilvitskii, "Connected
     * Components in MapReduce and Beyond", SoCC '14) — the alternative to
@@ -195,76 +210,143 @@ object Graph {
     * pointer jumping, and its jump join still touches every vertex every
     * iteration). At 100 TB-scale graphs the shuffle volume per round is
     * the (shrinking) edge set — the better trade when edges ≪ vertices ×
-    * iterations, i.e. sparse wide graphs.
+    * iterations, i.e. sparse wide graphs. Both operations preserve every
+    * component and keep every non-isolated vertex on some edge, so ANY
+    * round's edge set has the input's components.
     *
-    * Convergence = the canonical edge multiset reaches a fixed point,
-    * detected by (count, xxhash64-sum) — two scalars per round, no
-    * edge-set diff join. The same per-round `localCheckpoint` discipline
-    * as the label loop applies (each round references the previous edge
-    * frame 2-3×; an uncheckpointed plan grows exponentially). */
+    * Hybrid finish: rounds run only while the edge set is over
+    * [[LocalFinishEdges]]. Once it fits (often before the first round),
+    * the frame is collected once and union-find on the driver labels each
+    * vertex with its component minimum; at that size a round is all
+    * per-job overhead. The edge count is the `n` of the (count, xxhash64)
+    * signature each checkpoint job already observes, so the check costs
+    * no job. An edge set that never fits runs to the fixed point — the
+    * canonical edge multiset stops changing — detected by that same
+    * signature, no edge-set diff join. If `maxIters` rounds pass with the
+    * edge set still over the bound and not at its fixed point, this throws
+    * rather than return unconverged labels. Vertex ids of a non-integral
+    * type always take the distributed rounds (the local finish orders ids
+    * as `Long`). The same per-round `localCheckpoint` discipline as the
+    * label loop applies (each round references the previous edge frame
+    * 2-3×; an uncheckpointed plan grows exponentially). */
   def connectedComponentsStars(vertices: DataFrame, edges: DataFrame,
-      maxIters: Int = 20): DataFrame = {
-    val session = vertices.sparkSession
-    val prevParts = session.conf.get("spark.sql.shuffle.partitions")
-    try {
-      session.conf.set("spark.sql.shuffle.partitions",
-        math.min(8, prevParts.toInt).toString)
-      // the (count, xxhash64-xor) edge-set fingerprint rides each round's
-      // checkpoint job as OBSERVED metrics (bit_xor fold: order-independent,
-      // overflow-free ANSI-safe; distinct() upstream guarantees multiset ==
-      // set) instead of a separate aggregate-collect job per round
-      var obsId = 0
-      def observedSig(df: DataFrame): (DataFrame, org.apache.spark.sql.Observation) = {
-        obsId += 1
-        val obs = new org.apache.spark.sql.Observation(s"stars_sig_$obsId")
-        (df.observe(obs, count(lit(1)).as("n"),
-          bit_xor(xxhash64(col("src"), col("dst"))).as("h")), obs)
-      }
-      def sigOf(obs: org.apache.spark.sql.Observation): (Long, Long) = {
-        val m = obs.get
-        (m.get("n").flatMap(Option(_)).map(_.asInstanceOf[Long]).getOrElse(0L),
-          m.get("h").flatMap(Option(_)).map(_.asInstanceOf[Long]).getOrElse(0L))
-      }
+      maxIters: Int = 20): DataFrame =
+    starComponents(vertices, edges, maxIters, LocalFinishEdges)
 
-      // canonical orientation (bigger, smaller); self loops dropped
-      val (e0, obs0) = observedSig(edges
-        .select(greatest(col("src"), col("dst")).as("src"),
-          least(col("src"), col("dst")).as("dst"))
-        .filter(col("src") =!= col("dst")).distinct())
-      var e = IterGuard(e0)
-      var sig = sigOf(obs0)
-      var iter = 0
-      var converged = false
-      while (iter < maxIters && !converged) {
-        // large-star over the SYMMETRIZED neighborhood
-        val sym = e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
-        val mFull = sym.groupBy("src").agg(min("dst").as("_mn"))
-          .select(col("src"), least(col("src"), col("_mn")).as("m"))
-        val large = sym.filter(col("dst") > col("src"))
-          .join(mFull, "src")
-          .select(col("dst").as("src"), col("m").as("dst")) // v > u ≥ m ⇒ no self loop
-          .distinct()
-          .transform(IterGuard.apply)
-        // small-star over the larger-endpoint orientation (already canonical)
-        val mSmall = large.groupBy("src").agg(min("dst").as("m"))
-        val (small0, obsI) = observedSig(large.join(mSmall, "src")
-          .select(col("dst").as("src"), col("m").as("dst")) // smaller nbr → m
-          .filter(col("src") =!= col("dst"))
-          .unionByName(mSmall.select(col("src"), col("m").as("dst"))) // u itself → m
-          .distinct())
-        val small = IterGuard(small0)
-        val nextSig = sigOf(obsI)
-        converged = nextSig == sig
-        sig = nextSig
-        e = small
-        iter += 1
-      }
-      // converged edges are stars (child, component-min); min vertices and
-      // isolated vertices label themselves
-      vertices.select(col("id")).distinct()
-        .join(e.groupBy(col("src").as("id")).agg(min("dst").as("_m")), Seq("id"), "left")
-        .select(col("id"), coalesce(col("_m"), col("id")).as("cluster_id"))
+  /** [[connectedComponentsStars]] with the local-finish bound as a
+    * parameter: tests pass 0 to run every distributed round. */
+  private[graft] def starComponents(vertices: DataFrame, edges: DataFrame,
+      maxIters: Int, localFinishEdges: Long): DataFrame = {
+    // the (count, xxhash64-xor) edge-set fingerprint rides each round's
+    // checkpoint job as OBSERVED metrics (bit_xor fold: order-independent,
+    // overflow-free ANSI-safe; distinct() upstream guarantees multiset ==
+    // set) instead of a separate aggregate-collect job per round
+    var obsId = 0
+    def observedSig(df: DataFrame): (DataFrame, org.apache.spark.sql.Observation) = {
+      obsId += 1
+      val obs = new org.apache.spark.sql.Observation(s"stars_sig_$obsId")
+      (df.observe(obs, count(lit(1)).as("n"),
+        bit_xor(xxhash64(col("src"), col("dst"))).as("h")), obs)
+    }
+    def sigOf(obs: org.apache.spark.sql.Observation): (Long, Long) = {
+      val m = obs.get
+      (m.get("n").flatMap(Option(_)).map(_.asInstanceOf[Long]).getOrElse(0L),
+        m.get("h").flatMap(Option(_)).map(_.asInstanceOf[Long]).getOrElse(0L))
+    }
+
+    // canonical orientation (bigger, smaller); self loops dropped
+    val (e0, obs0) = observedSig(edges
+      .select(greatest(col("src"), col("dst")).as("src"),
+        least(col("src"), col("dst")).as("dst"))
+      .filter(col("src") =!= col("dst")).distinct())
+    var e = IterGuard(e0)
+    var sig = sigOf(obs0)
+    val bound = e.schema("src").dataType match {
+      case ByteType | ShortType | IntegerType | LongType => localFinishEdges
+      case _ => -1L
+    }
+    var iter = 0
+    var converged = false
+    while (!converged && sig._1 > bound) {
+      if (iter >= maxIters) throw new IllegalStateException(
+        s"connectedComponentsStars: ${sig._1} edges after $maxIters rounds, " +
+          s"not at a fixed point and over the local-finish bound $bound")
+      // large-star over the SYMMETRIZED neighborhood
+      val sym = e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
+      val mFull = sym.groupBy("src").agg(min("dst").as("_mn"))
+        .select(col("src"), least(col("src"), col("_mn")).as("m"))
+      val large = sym.filter(col("dst") > col("src"))
+        .join(mFull, "src")
+        .select(col("dst").as("src"), col("m").as("dst")) // v > u ≥ m ⇒ no self loop
+        .distinct()
         .transform(IterGuard.apply)
-    } finally session.conf.set("spark.sql.shuffle.partitions", prevParts)
+      // small-star over the larger-endpoint orientation (already canonical)
+      val mSmall = large.groupBy("src").agg(min("dst").as("m"))
+      val (small0, obsI) = observedSig(large.join(mSmall, "src")
+        .select(col("dst").as("src"), col("m").as("dst")) // smaller nbr → m
+        .filter(col("src") =!= col("dst"))
+        .unionByName(mSmall.select(col("src"), col("m").as("dst"))) // u itself → m
+        .distinct())
+      val small = IterGuard(small0)
+      val nextSig = sigOf(obsI)
+      converged = nextSig == sig
+      sig = nextSig
+      e = small
+      iter += 1
+    }
+    // (vertex, component min) for every non-minimum vertex on an edge:
+    // converged edges are already such stars; a small edge set gets them
+    // from union-find on the driver
+    val roots =
+      if (converged) e.groupBy(col("src").as("id")).agg(min("dst").as("_m"))
+      else localRoots(e)
+    // min vertices and isolated vertices label themselves
+    vertices.select(col("id")).distinct()
+      .join(roots, Seq("id"), "left")
+      .select(col("id"), coalesce(col("_m"), col("id")).as("cluster_id"))
+      .transform(IterGuard.apply)
+  }
+
+  /** Union-find over a collected integral edge frame, uniting toward the
+    * smaller id so each root is its component's minimum; returns
+    * `(id, _m)` as a local relation typed like the edge columns. */
+  private def localRoots(e: DataFrame): DataFrame = {
+    val rows = e.collect()
+    val ends = new Array[Long](rows.length * 2)
+    var i = 0
+    while (i < rows.length) {
+      ends(2 * i) = rows(i).getAs[Number](0).longValue
+      ends(2 * i + 1) = rows(i).getAs[Number](1).longValue
+      i += 1
+    }
+    // dense indices in id order, so "smaller index" is "smaller id"
+    val ids = ends.clone()
+    java.util.Arrays.sort(ids)
+    var nIds = 0
+    i = 0
+    while (i < ids.length) {
+      if (nIds == 0 || ids(i) != ids(nIds - 1)) { ids(nIds) = ids(i); nIds += 1 }
+      i += 1
+    }
+    val parent = Array.range(0, nIds)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    i = 0
+    while (i < ends.length) {
+      val a = find(java.util.Arrays.binarySearch(ids, 0, nIds, ends(i)))
+      val b = find(java.util.Arrays.binarySearch(ids, 0, nIds, ends(i + 1)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+      i += 2
+    }
+    val pairs = (0 until nIds).iterator.map(v => (v, find(v)))
+      .collect { case (v, r) if r != v => (ids(v), ids(r)) }.toVector
+    val session = e.sparkSession
+    import session.implicits._
+    pairs.toDF("id", "_m").select(
+      col("id").cast(e.schema("src").dataType).as("id"),
+      col("_m").cast(e.schema("dst").dataType).as("_m"))
   }
 }

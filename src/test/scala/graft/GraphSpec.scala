@@ -15,6 +15,12 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     m
   }
 
+  /** The star rounds with the local finish off: every round runs
+    * distributed, to the fixed point. */
+  private def distributedStars(vertices: org.apache.spark.sql.DataFrame,
+      edges: org.apache.spark.sql.DataFrame, maxIters: Int = 20) =
+    Graph.starComponents(vertices, edges, maxIters, localFinishEdges = 0)
+
   test("chain, cycle, clique and isolated vertices all label to component min") {
     import spark.implicits._
     // chain 0-1-2-3-4; cycle 10-11-12-10; clique 20,21,22; isolated 30
@@ -74,7 +80,7 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
       (10L, 11L), (11L, 12L), (12L, 10L),
       (20L, 21L), (21L, 22L), (20L, 22L)).toDF("src", "dst")
     val vertices = Seq(0L, 1L, 2L, 3L, 4L, 10L, 11L, 12L, 20L, 21L, 22L, 30L).toDF("id")
-    val got = labelsOf(Graph.connectedComponentsStars(vertices, edges))
+    val got = labelsOf(distributedStars(vertices, edges))
     assert(got === Map(
       0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 0L, 4L -> 0L,
       10L -> 10L, 11L -> 10L, 12L -> 10L,
@@ -89,7 +95,7 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     val vertices = (0L until n).toDF("id")
     // a 200-diameter chain needs ~200 label-propagation iterations; the
     // edge-rewriting form must land inside a log-ish round budget
-    val got = labelsOf(Graph.connectedComponentsStars(vertices, edges, maxIters = 12))
+    val got = labelsOf(distributedStars(vertices, edges, maxIters = 12))
     assert(got.values.toSet === Set(0L), got.filter(_._2 != 0L).take(5).toString)
   }
 
@@ -97,14 +103,22 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     val rnd = new scala.util.Random(13)
     val n = 2000
-    val edges = (0 until 2500)
+    val pairs = (0 until 2500)
       .map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
       .filter { case (a, b) => a != b }
-      .toDF("src", "dst")
+    val edges = pairs.toDF("src", "dst")
     val vertices = (0L until n.toLong).toDF("id")
-    val stars = labelsOf(Graph.connectedComponentsStars(vertices, edges, maxIters = 30))
     val labels = labelsOf(Graph.connectedComponents(vertices, edges, maxIters = 50))
-    assert(stars === labels)
+    assert(labelsOf(distributedStars(vertices, edges, maxIters = 30)) === labels)
+    // ~2500 edges sit far under the bound: the local finish runs no round
+    assert(labelsOf(Graph.connectedComponentsStars(vertices, edges)) === labels)
+    // hand-off: start over the bound; the fixed point (one star edge per
+    // non-minimum vertex) sits under it, so some round hands off first
+    val initial = pairs.map { case (a, b) => (a max b, a min b) }.distinct.size
+    val stars = labels.count { case (v, c) => v != c }
+    val bound = (initial + stars) / 2
+    assert(initial > bound && bound > stars, s"$initial > $bound > $stars")
+    assert(labelsOf(Graph.starComponents(vertices, edges, 30, bound)) === labels)
   }
 
   test("edge direction is irrelevant (symmetrized internally)") {
@@ -114,6 +128,51 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     val vertices = Seq(1L, 5L, 9L).toDF("id")
     assert(labelsOf(Graph.connectedComponents(vertices, fwd))
       === labelsOf(Graph.connectedComponents(vertices, rev)))
+  }
+
+  test("large-star/small-star local finish: self loops, duplicates, reversals, isolated vertices") {
+    import spark.implicits._
+    // int ids: the local relation must come back typed like the input
+    val edges = Seq((1, 2), (2, 1), (1, 2), (3, 2), (9, 9), (7, 5), (5, 6), (6, 7))
+      .toDF("src", "dst")
+    val vertices = Seq(1, 2, 3, 5, 6, 7, 9, 30).toDF("id")
+    val local = Graph.connectedComponentsStars(vertices, edges)
+    val distributed = distributedStars(vertices, edges)
+    assert(local.schema === distributed.schema)
+    def intLabels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
+    val want = Map(1 -> 1, 2 -> 1, 3 -> 1, 5 -> 5, 6 -> 5, 7 -> 5, 9 -> 9, 30 -> 30)
+    assert(intLabels(local) === want)
+    assert(intLabels(distributed) === want)
+  }
+
+  test("large-star/small-star keeps string ids on the distributed rounds") {
+    import spark.implicits._
+    // the local finish orders ids as Long; other id types run every round
+    val edges = Seq(("b", "c"), ("c", "d"), ("x", "y")).toDF("src", "dst")
+    val vertices = Seq("b", "c", "d", "x", "y", "z").toDF("id")
+    val got = Graph.connectedComponentsStars(vertices, edges)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(got === Map("b" -> "b", "c" -> "b", "d" -> "b", "x" -> "x", "y" -> "x", "z" -> "z"))
+  }
+
+  test("large-star/small-star round budget: local finish under the bound, error over it") {
+    import spark.implicits._
+    // a path keeps its edge count every round; the 6-clique beside it
+    // contracts to a 5-edge star, so one round takes 7 + 15 edges to 12
+    val path = (1L until 8L).map(i => (i, i + 1))
+    val clique = for (a <- 20L to 25L; b <- a + 1 to 25L) yield (a, b)
+    val edges = (path ++ clique).toDF("src", "dst")
+    val vertices = ((1L to 8L) ++ (20L to 25L)).toDF("id")
+    val want = (1L to 8L).map(_ -> 1L).toMap ++ (20L to 25L).map(_ -> 20L)
+    // one round cannot also confirm a fixed point: only the hand-off at
+    // 12 edges lets this return
+    assert(labelsOf(Graph.starComponents(vertices, edges, maxIters = 1,
+      localFinishEdges = 12)) === want)
+    val err = intercept[IllegalStateException] {
+      Graph.starComponents(vertices, edges, maxIters = 1, localFinishEdges = 11)
+    }
+    assert(err.getMessage.contains("after 1 rounds"), err.getMessage)
   }
 
   test("pagerank: star hub out-ranks leaves; mass conserved on a cycle") {
@@ -145,14 +204,14 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     val edges = Seq((1L, 2L), (2L, 3L), (5L, 6L), (9L, 9L)).toDF("src", "dst")
     val vertices = (1L to 9L).toDF("id")
     val localCc = labelsOf(Graph.connectedComponents(vertices, edges))
-    val localStars = labelsOf(Graph.connectedComponentsStars(vertices, edges))
+    val localStars = labelsOf(distributedStars(vertices, edges))
     val localPr = Graph.pageRank(vertices, edges, iters = 3)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     spark.conf.set("spark.graft.checkpointDir", dir)
     try {
       assert(labelsOf(Graph.connectedComponents(vertices, edges)) === localCc)
-      assert(labelsOf(Graph.connectedComponentsStars(vertices, edges)) === localStars)
+      assert(labelsOf(distributedStars(vertices, edges)) === localStars)
       val pr = Graph.pageRank(vertices, edges, iters = 3)
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
       assert(pr === localPr)
@@ -183,7 +242,7 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-path").toString
     spark.conf.set("spark.graft.checkpointDir", dir)
     try {
-      val got = labelsOf(Graph.connectedComponentsStars(vs, path))
+      val got = labelsOf(distributedStars(vs, path))
       assert(got === (1L to n).map(_ -> 1L).toMap,
         "path graph must contract to a single component rooted at 1")
     } finally spark.conf.unset("spark.graft.checkpointDir")
