@@ -94,6 +94,24 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * tracks ingest volume, not table size. */
 object GraftMview {
 
+  /** Row bound under which a refresh keeps its churn-sized frames on the
+    * driver: the netted churn of each source, the per-group deltas and the
+    * merged groups are each collected once into a LocalRelation instead of
+    * checkpointed, and everything that reads them (key predicates, key
+    * frames, the commit's key dedupe) then runs without a Spark job. The
+    * choice comes from [[GraftStoreOps.signedChangeRowEstimate]], a
+    * manifest-only upper bound, so no frame is ever computed twice. The
+    * bound is driver memory: 2^16 rows of a wide fact row (about 100
+    * bytes as an UnsafeRow) are under 10 MB per frame, and a refresh holds
+    * at most the churn of each source plus the deltas and merged frames at
+    * once. The large churn class of a 150k-row table (5%, about 7.5k rows)
+    * fits with room to spare. */
+  private[graft] val LocalFrameRows: Long = 1L << 16
+
+  /** [[LocalFrameRows]] as the refresh reads it: tests run a refresh
+    * under `withValue(0)` to take the checkpoint path for every frame. */
+  private[graft] val localFrameRows = new scala.util.DynamicVariable[Long](LocalFrameRows)
+
   /** One output column of the view: a group key or an aggregate. */
   private[v2] sealed trait ColSpec { def out: String }
 
@@ -701,10 +719,14 @@ object GraftMview {
     * columns — In over the non-null values, OR'd with IsNull where NULL
     * appears in the key set. None when over cap; callers keep their exact
     * (null-safe) semi-join either way, this only prunes files. */
-  private def boundedKeyPred(keys: DataFrame, keyCols: Seq[String],
+  private[v2] def boundedKeyPred(keys: DataFrame, keyCols: Seq[String],
       targetCols: Seq[String]): Option[Column] = {
-    val rows = keys.select(keyCols.map(col): _*).distinct()
-      .limit(1001).collect()
+    val sel = keys.select(keyCols.map(col): _*)
+    // a driver-local key frame is read without a job (duplicate rows
+    // would only repeat IN values; they are dropped for the cap count)
+    val rows =
+      if (GraftLocal.rows(sel).isDefined) sel.collect().distinct.take(1001)
+      else sel.distinct().limit(1001).collect()
     // an EMPTY key set is the strongest predicate, not the weakest: every
     // caller pairs this with an exact (semi-)join on the same keys, whose
     // output is empty for empty keys — `false` skips the scan entirely
@@ -750,23 +772,32 @@ object GraftMview {
       }.reduce(_ && _))
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** Materialize a bounded churn KEY FRAME for reuse. The frame is always
-    * collected once here (≤ cap+1 rows — it derives from an
-    * already-materialized netted-churn frame, so the collect is a cheap
-    * cached-read job): within the cap it is re-issued as a LOCAL relation,
+  /** Materialize a bounded churn KEY FRAME for reuse. A frame derived
+    * from a driver-local churn frame is already a LOCAL relation and is
+    * returned as is, with no job. Any other frame is collected once here
+    * (≤ cap+1 rows — it derives from an already-materialized netted-churn
+    * frame, so the collect is a cheap cached-read job): within the cap it
+    * is re-issued as a LOCAL relation,
     * so the downstream [[boundedKeyPred]] collect becomes driver-local (no
     * job), the exact semi-joins broadcast it without a scan job, and the
     * former eager-checkpoint job disappears — three fewer Spark jobs per
     * key frame on the refresh path. Over the cap it degrades to the usual
     * [[graft.operators.IterGuard]] checkpoint: identical frames, identical
     * semantics, churn-proportional exactly as before. */
-  private def materializeKeys(df: DataFrame): DataFrame = {
-    val rows = df.limit(1001).collect()
-    if (rows.length <= 1000)
-      df.sparkSession.createDataFrame(
-        java.util.Arrays.asList(rows: _*), df.schema)
-    else graft.operators.IterGuard(df)
-  }
+  private def materializeKeys(df: DataFrame): DataFrame =
+    if (GraftLocal.rows(df).isDefined) df // already on the driver: no job
+    else {
+      val rows = df.limit(1001).collect()
+      if (rows.length <= 1000)
+        df.sparkSession.createDataFrame(
+          java.util.Arrays.asList(rows: _*), df.schema)
+      else graft.operators.IterGuard(df)
+    }
+
+  /** [[materializeKeys]] of the DISTINCT rows of `df`: a driver-local
+    * frame dedupes on the driver, with no job. */
+  private def materializeDistinctKeys(df: DataFrame): DataFrame =
+    GraftLocal.distinct(df).getOrElse(materializeKeys(df.distinct()))
 
   /** Collapse carried-identical ± pairs down to NET row churn: a
     * rewritten file re-emits its unchanged rows as -1/+1 pairs (a 1-row
@@ -804,7 +835,7 @@ object GraftMview {
     * pruned customer's keys prune the fact); an over-cap side stops the
     * cascade along its branch — the join itself stays exact either way,
     * and the driver transfer is always ≤ cap+1 rows per hop. */
-  private def pruneByChurnKeys(frames0: Seq[DataFrame],
+  private[v2] def pruneByChurnKeys(frames0: Seq[DataFrame],
       keys: Seq[(Int, String, Int, String)], churned: Int): Seq[DataFrame] = {
     val cap = 1000
     val frames = frames0.toArray
@@ -818,9 +849,13 @@ object GraftMview {
           else if (sb == cur && !visited(sa)) Some((cb, sa, ca))
           else None
         hop.foreach { case (curCol, other, otherCol) =>
-          // NULL keys never equi-match: dropping them keeps the IN exact
-          val vals = frames(cur).select(col(curCol)).na.drop()
-            .distinct().limit(cap + 1).collect().map(_.get(0))
+          // NULL keys never equi-match: dropping them keeps the IN exact;
+          // a driver-local churn frame is read without a job
+          val sel = frames(cur).select(col(curCol)).na.drop()
+          val vals =
+            if (GraftLocal.rows(sel).isDefined)
+              sel.collect().map(_.get(0)).distinct.take(cap + 1)
+            else sel.distinct().limit(cap + 1).collect().map(_.get(0))
           visited += other
           if (vals.length <= cap) {
             frames(other) = frames(other)
@@ -1075,25 +1110,28 @@ object GraftMview {
       return ("full", n, 0L, heads.head)
     }
     // ---- incremental ----
-    // CHURN-ADAPTIVE parallelism (guide §2.2/§2.6): every maintenance
-    // frame below is churn-sized, not corpus-sized, so the shuffle
-    // partition count follows the manifest-level churn row estimate (a
-    // driver-side metadata read, no job) at ~256k rows/partition —
-    // capped at the session default, so 100 TB churn keeps the
-    // configured cluster parallelism while a small batch stops paying
-    // 32-way fan-out tax per tiny shuffle (the measured symptom: the
-    // 8-core bench BEATING the 32-core one on refresh fixtures). Scans
-    // of pinned sides parallelize by file split as before — only
-    // post-shuffle partitioning changes, which no result depends on.
-    val churnEstimate = paths.indices.iterator
-      .filter(i => wms(i)._1 != heads(i))
-      .map(i => GraftStoreOps.signedChangeRowEstimate(
-        spark, paths(i), wms(i)._1, heads(i))).sum
-    val prevShuffleParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", math.max(1L,
-      math.min(prevShuffleParts.toInt.toLong,
-        churnEstimate / 262144L + 1L)).toString)
-    try {
+    // every maintenance frame below is churn-sized, not corpus-sized: the
+    // manifest-level churn row estimate (a driver-side metadata read, no
+    // job) decides which of them stay on the driver (see
+    // [[LocalFrameRows]])
+    val localBound = localFrameRows.value
+    val estimates = paths.indices.map { i =>
+      if (wms(i)._1 == heads(i)) 0L
+      else GraftStoreOps.signedChangeRowEstimate(spark, paths(i), wms(i)._1, heads(i))
+    }
+    // the signed churn of source i, its carried ± pairs collapsed when its
+    // reads can produce any (appends and grown masks cannot)
+    def churnAt(p: String, i: Int): DataFrame = {
+      val signed = GraftStoreOps.signedChanges(spark, p, wms(i)._1, heads(i))
+      if (GraftStoreOps.signedChangesMayCarry(spark, p, wms(i)._1, heads(i)))
+        netChurn(signed)
+      else signed
+    }
+    // one collect onto the driver when the frame's rows are bounded by
+    // `rows` ≤ the local bound, else the usual checkpoint
+    def materialize(df: DataFrame, rows: Long): DataFrame =
+      if (rows <= localBound) GraftLocal.collect(df)
+      else graft.operators.IterGuard(df)
     // the signed churn of the MAINTAINED RELATION. Single table: the
     // source's own +1/-1 deltas. Join: the delta rule
     //   Δ(R⋈S) = ΔR ⋈ S_new  ∪  R_old ⋈ ΔS
@@ -1103,15 +1141,14 @@ object GraftMview {
     def pinnedAt(i: Int, snap: Int): DataFrame =
       spark.read.format("graft-store").option("snapshot", snap).load(paths(i))
     // materialize the requested sides' netted churn ONCE each, submitting
-    // the independent eager-checkpoint jobs CONCURRENTLY (guide §2.6:
-    // actions are only sequential because the driver calls them
+    // the independent collect or eager-checkpoint jobs CONCURRENTLY (guide
+    // §2.6: actions are only sequential because the driver calls them
     // sequentially): each job is churn-sized and tiny, so overlapping
     // them hides the per-action driver gap (planning + scheduling —
     // scheduler latency on a real cluster) that dominates refresh cost.
     // Identical frames to the sequential form; order-independent.
     def churnedDeltasAt(paths2: Seq[String], idx: Seq[Int]): Map[Int, DataFrame] = {
-      def one(i: Int) = graft.operators.IterGuard(netChurn(
-        GraftStoreOps.signedChanges(spark, paths2(i), wms(i)._1, heads(i))))
+      def one(i: Int) = materialize(churnAt(paths2(i), i), estimates(i))
       if (idx.size <= 1) idx.map(i => i -> one(i)).toMap
       else {
         import scala.concurrent.{Await, Future}
@@ -1121,9 +1158,14 @@ object GraftMview {
           .map { case (i, f) => i -> Await.result(f, Duration.Inf) }.toMap
       }
     }
+    val hasDCount = cols.exists(_.isInstanceOf[DCountCol])
     val signed = src match {
       case SingleSrc(p) =>
-        netChurn(GraftStoreOps.signedChanges(spark, p, wms.head._1, heads.head))
+        // read twice (deltas and the dup-count churn) only with a
+        // COUNT(DISTINCT) column: then a driver-sized churn is collected
+        // once; otherwise the deltas' one job reads it directly
+        val net = churnAt(p, 0)
+        if (hasDCount && estimates.head <= localBound) GraftLocal.collect(net) else net
       case JoinSrc(paths2, keys, ls) if ls.isEmpty =>
         // N-WAY delta rule, one term per CHURNED side i:
         //   Δi = R1_old ⋈ … ⋈ R(i-1)_old ⋈ ΔRi ⋈ R(i+1)_new ⋈ … ⋈ Rn_new
@@ -1187,8 +1229,8 @@ object GraftMview {
               if (i == 0) myKeys2.map(_._2) else myKeys2.map(_._1)
             val kf = di.select(ownKeyCols.zipWithIndex.map { case (c, x) =>
                 col(c).as(s"__jk_$x") }: _*)
-              .na.drop("any").distinct()
-              .transform(materializeKeys)
+              .na.drop("any")
+              .transform(materializeDistinctKeys)
             // NOT eagerly checkpointed: the restricted frame is a
             // churn-key-scoped scan (bounded IN for file skipping +
             // broadcast semi-join against the bounded key frame) — cheap
@@ -1258,8 +1300,7 @@ object GraftMview {
         val t0: Option[DataFrame] =
           if (wms.head._1 == heads.head) None
           else {
-            val d0 = netChurn(GraftStoreOps.signedChanges(
-              spark, paths2.head, wms.head._1, heads.head))
+            val d0 = churnAt(paths2.head, 0)
             Some(joinFrames(
               d0 +: (1 until n).map(j => pinnedAt(j, heads(j))),
               keys, leftSides))
@@ -1275,8 +1316,7 @@ object GraftMview {
         val dimTerms: Seq[DataFrame] = (1 until n).flatMap { i =>
           if (wms(i)._1 == heads(i)) None
           else {
-            val di = if (leftSides(i)) netChurn(GraftStoreOps.signedChanges(
-              spark, paths2(i), wms(i)._1, heads(i))) else diAt(i)
+            val di = if (leftSides(i)) churnAt(paths2(i), i) else diAt(i)
             val myKeys = keys.filter(_._3 == i) // (parent, pcol, i, icol)
             // the state each OTHER side is pinned at in THIS term
             def pin(j: Int): DataFrame = pinnedAt(j,
@@ -1294,8 +1334,8 @@ object GraftMview {
             // K_i: churned key combos (NULL components never equi-match)
             val kf0 = di.select(myKeys.zipWithIndex.map { case (k, x) =>
                 col(k._4).as(s"__jk_$x") }: _*)
-              .na.drop("any").distinct()
-              .transform(materializeKeys)
+              .na.drop("any")
+              .transform(materializeDistinctKeys)
             // value-based restriction: bounded compile-time IN (file
             // skipping) + exact semi-join against the key frame
             def restrict(f0: DataFrame, cols2: Seq[String],
@@ -1329,8 +1369,8 @@ object GraftMview {
                 val parKeys = keys.filter(_._3 == par)
                 kf = fj.select(parKeys.zipWithIndex.map { case (k, x) =>
                     col(k._4).as(s"__jk_$x") }: _*)
-                  .na.drop("any").distinct()
-                  .transform(materializeKeys)
+                  .na.drop("any")
+                  .transform(materializeDistinctKeys)
               }
               child = par
             }
@@ -1355,7 +1395,18 @@ object GraftMview {
           case ts => ts.reduce(_.unionByName(_))
         }
     }
-    val d = filterSql.fold(signed)(f => signed.filter(expr(f)))
+    val d0 = filterSql.fold(signed)(f => signed.filter(expr(f)))
+    // a single source's signed rows are exactly its churn reads, so their
+    // tasks follow the estimate (~256k rows each, at most the session's
+    // shuffle partitions): a small batch does not pay a task per local
+    // slice or file for a few rows. A join's signed rows also scan pinned
+    // sides, which keep their file-split parallelism.
+    val d = src match {
+      case SingleSrc(_) => d0.coalesce(math.max(1L, math.min(
+        spark.conf.get("spark.sql.shuffle.partitions").toLong,
+        estimates.head / 262144L + 1L)).toInt)
+      case _ => d0
+    }
     val groupOuts = cols.collect { case g: GroupCol => g }
     val liveOut = cols.collectFirst { case CountCol(o) => o }.get
     // min/max/hll share the rescan device: not sign-maintainable under
@@ -1395,16 +1446,31 @@ object GraftMview {
     // delta group keys carry a reserved prefix so every downstream join is
     // an EXPLICIT null-safe condition, never a by-name equality that drops
     // the NULL group
-    val deltas = graft.operators.IterGuard(d
+    val deltas0 = d
       .groupBy(groupOuts.map(g => groupKey(g).as(s"__dk_${g.out}")): _*)
-      .agg(deltaAggs.head, deltaAggs.tail: _*))
-    // the CHURNED GROUP-KEY frame, collected once (bounded, from the
-    // already-materialized deltas — one cheap cached-read job) and
-    // re-issued as a LocalRelation: every consumer below — the dup-count
-    // companion reads, the MV-side merge scan — gets driver-local file
-    // pruning (boundedKeyPred without a collect job) and broadcast
-    // semi-joins without a scan job. Over the cap it degrades to the
-    // checkpointed frame, same semantics.
+      .agg(deltaAggs.head, deltaAggs.tail: _*)
+    // one row per churned group. A single source's churn estimate bounds
+    // it; a join's churn can fan out, so its deltas are checkpointed and
+    // their row count observed by that same job, which sizes `merged`
+    // (one row per delta row) below
+    val (deltas, deltaRows) = src match {
+      case SingleSrc(_) if estimates.head <= localBound =>
+        val l = GraftLocal.collect(deltas0)
+        (l, GraftLocal.rows(l).get.size.toLong)
+      case _ =>
+        val obs = new org.apache.spark.sql.Observation()
+        val c = graft.operators.IterGuard(deltas0.observe(obs, count(lit(1)).as("n")))
+        val metrics = obs.get
+        (c, metrics("n").asInstanceOf[Long])
+    }
+    // the CHURNED GROUP-KEY frame: driver-local deltas already are one
+    // (no job); checkpointed deltas are collected once (bounded — one
+    // cheap cached-read job) and re-issued as a LocalRelation. Either
+    // way every consumer below — the dup-count companion reads, the
+    // MV-side merge scan — gets driver-local file pruning
+    // (boundedKeyPred without a collect job) and broadcast semi-joins
+    // without a scan job. Over the cap it degrades to the checkpointed
+    // frame, same semantics.
     val gkAll = materializeKeys(
       deltas.select(groupOuts.map(g => col(s"__dk_${g.out}")): _*))
     // EXACT COUNT(DISTINCT): route the same signed churn through each
@@ -1639,7 +1705,7 @@ object GraftMview {
           Seq(when(sk.isNotNull, hll_sketch_estimate(sk))
             .cast(mvSchema(o).dataType).as(o), base64(sk).as(s"__h_$o"))
       }: _*)
-      .transform(graft.operators.IterGuard(_))
+      .transform(materialize(_, deltaRows))
     val storedCols = cols.map(_.out) ++ internals(cols)
     val survivors = merged.filter(col(liveOut) > 0L)
       .select(storedCols.map(col): _*)
@@ -1652,6 +1718,5 @@ object GraftMview {
     // count (live <= 0) is exactly nKeys − nUp — the former separate
     // count() job re-derived a number the commit already knows.
     ("incremental", nUp, nKeys - nUp, heads.head)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffleParts)
   }
 }

@@ -320,8 +320,10 @@ private[v2] class GraftDeltaBatchWrite(path: String, schema: StructType,
       fs.delete(dataTmp, true); fs.delete(delTmp, true)
       return
     }
-    dataCommitted.foreach(m => fs.rename(new Path(dataTmp, m.file), new Path(path, m.file)))
-    delCommitted.foreach(m => fs.rename(new Path(delTmp, m.file), new Path(path, m.file)))
+    GraftStoreFormat.moveLive(fs, path,
+      dataCommitted.map(m => new Path(dataTmp, m.file)) ++
+        delCommitted.map(m => new Path(delTmp, m.file)),
+      { fs.delete(dataTmp, true); fs.delete(delTmp, true) })
     val newEntries = dataCommitted.map(m =>
       GraftFileEntry(m.file, m.rows, GraftStoreFormat.statsFromString(m.stats),
         GraftStoreFormat.partValsFromString(m.partVals),

@@ -552,6 +552,26 @@ private[v2] object GraftStoreFormat {
     StructField("file", StringType, nullable = false),
     StructField("pos", LongType, nullable = false)))
 
+  /** Move a commit's written files from scratch into the table directory
+    * `path`, each under its own name, BEFORE the manifest that lists them
+    * publishes. `rename` reports failure by returning false on some
+    * filesystems, so a false fails the commit like an exception does: the
+    * files already moved are deleted again (no manifest lists them yet),
+    * `cleanup` drops the scratch, and nothing publishes. */
+  def moveLive(f: FileSystem, path: String, files: Seq[Path], cleanup: => Unit): Unit = {
+    val moved = scala.collection.mutable.ArrayBuffer.empty[Path]
+    try files.foreach { src =>
+      val dst = new Path(path, src.getName)
+      if (!f.rename(src, dst))
+        throw new java.io.IOException(s"graft-store: could not move $src to $dst")
+      moved += dst
+    } catch { case t: Throwable =>
+      moved.foreach(p => try f.delete(p, false) catch { case _: Throwable => () })
+      try cleanup catch { case _: Throwable => () }
+      throw t
+    }
+  }
+
   /** ABSOLUTE paths of the delete files a read of `fileName` must apply. */
   def coveringDeletes(path: String, m: GraftManifest, fileName: String): Seq[String] =
     if (m.deletes.isEmpty) Nil
@@ -5017,8 +5037,11 @@ private[v2] object GraftCdc {
               // the commit's delete files record (target, position), and
               // the deleted rows' VALUES are still physically present in
               // the (immutable, still-listed) target files — the feed
-              // resolves the refs at read time, one partition per delete
-              // file. Cost = the covered files, i.e. the commit's churn.
+              // resolves the refs at read time, one partition per covered
+              // target. Each partition walks its target up to the last
+              // newly masked position, so the cost is the covered files'
+              // bytes up to that row: churn-sized for small files, up to
+              // one pass over a compacted table-sized file.
               val newDels = m.deletes.filterNot(d => prevDels.contains(d.name))
                 .sortBy(_.name)
               if (newDels.nonEmpty) {
@@ -5031,9 +5054,22 @@ private[v2] object GraftCdc {
                   s"graft-store: snapshot $seq's delete targets were written " +
                     s"under an evolved schema (> pinned ${pinned.length} cols); " +
                     "restart the feed")
-                newDels.foreach { d =>
-                  out += GraftCdcRefPartition(
-                    new Path(path, d.name).toString, path, widths, seq)
+                def abs(name: String) = new Path(path, name).toString
+                covered.foreach { e =>
+                  // the target's masks from before this commit: positions
+                  // they record, and rows their equality stores match,
+                  // were already dead and never re-emit
+                  val priorEq = m.eqDeletes
+                    .filter(q => prevEq.contains(q.name) && q.covers(e))
+                    .map(q => (abs(q.name), q.keyCols.map(pinned.fieldNames.indexOf(_))))
+                  require(priorEq.forall(_._2.forall(_ >= 0)),
+                    s"graft-store: snapshot $seq's prior equality-delete key " +
+                      "columns are not all in the pinned schema; restart the feed")
+                  out += GraftCdcRefPartition(abs(e.name), widths(e.name),
+                    newDels.filter(_.covers(e.name)).map(d => abs(d.name)),
+                    m.deletes.filter(d => prevDels.contains(d.name) && d.covers(e.name))
+                      .map(d => abs(d.name)),
+                    priorEq, seq)
                 }
               }
             }
@@ -5058,15 +5094,21 @@ private[v2] object GraftCdc {
 private[v2] case class GraftCdcPartition(file: String, ncols: Int, tag: String,
     seq: Long) extends InputPartition
 
-/** A POSITION-REF CDC read unit (merge-on-read DELETE commits): `delFile`
-  * is a position-delete store (rows `(target name, pos)`); the deleted
-  * rows' values are resolved by re-reading each covered target file under
-  * `dir` (width per target in `widths`) and emitting the rows at the
-  * masked ordinals as `change_type = "delete"`. Valid while the commit is
-  * retained: MOR keeps target files LISTED (only masked), so expiry can't
-  * reclaim them before the manifest that references the delete file. */
-private[v2] case class GraftCdcRefPartition(delFile: String, dir: String,
-    widths: Map[String, Int], seq: Long) extends InputPartition
+/** A POSITION-REF read unit: the rows of ONE data file (`target`, physical
+  * width `width`) that `newDeletes` newly mask. Its positions are the
+  * distinct ones the new position-delete stores record for the target,
+  * minus those `priorDeletes` already record; a row that a `priorEq`
+  * equality store matches was already dead and is skipped too. The rows
+  * are read in one merge-walk that stops after the last such position.
+  * The change feed emits them as `change_type = "delete"` (one unit per
+  * target a merge-on-read DELETE commit covers), and
+  * [[GraftStoreOps.signedChanges]] reads a file whose masks only grew
+  * through the same unit. Valid while the snapshots are retained: MOR
+  * keeps target files LISTED (only masked), so expiry can't reclaim them
+  * before the manifest that references the delete stores. */
+private[v2] case class GraftCdcRefPartition(target: String, width: Int,
+    newDeletes: Seq[String], priorDeletes: Seq[String],
+    priorEq: Seq[(String, Seq[Int])], seq: Long) extends InputPartition
 
 /** An EQUALITY-REF CDC read unit (opt-in `resolveEqDeletes=true`): one
   * covered PRE-COMMIT target file, key-probed against the commit's NEW
@@ -5116,83 +5158,95 @@ private[v2] class GraftCdcReaderFactory(table: StructType, required: StructType,
       case p: GraftCdcPartition => fileReader(p)
     }
 
-  /** Resolve a MOR delete store's refs into full `delete` rows: load the
-    * (target, pos) pairs grouped per target, then stream each target file
-    * once, emitting rows whose ordinal is masked — a merge-walk against
-    * the sorted positions, same discipline as the data reader's skip. */
-  private def refReader(p: GraftCdcRefPartition): PartitionReader[InternalRow] = {
-    val GraftCdcRefPartition(delFile, dir, widths, seq) = p
-    val byTarget: Seq[(String, Array[Long])] = {
-      val fs = new Path(delFile).getFileSystem(conf.value)
-      val in = new DataInputStream(
-        new BufferedInputStream(fs.open(new Path(delFile)), 1 << 16))
-      val acc = scala.collection.mutable.LinkedHashMap
-        .empty[String, scala.collection.mutable.ArrayBuffer[Long]]
+  /** The distinct positions, ascending, that the position-delete stores
+    * `stores` record for the data file NAMED `name`. */
+  private def maskedPositions(stores: Seq[String], name: UTF8String): Array[Long] = {
+    val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
+    stores.foreach { d =>
+      val dfs = new Path(d).getFileSystem(conf.value)
+      val din = new DataInputStream(
+        new BufferedInputStream(dfs.open(new Path(d)), 1 << 16))
       try {
-        var r = GraftStoreFormat.readRow(in, GraftStoreFormat.DeleteSchema)
+        var r = GraftStoreFormat.readRow(din, GraftStoreFormat.DeleteSchema)
         while (r != null) {
-          acc.getOrElseUpdate(r(0).toString,
-            scala.collection.mutable.ArrayBuffer.empty[Long]) += r(1).asInstanceOf[Long]
-          r = GraftStoreFormat.readRow(in, GraftStoreFormat.DeleteSchema)
+          if (r(0).asInstanceOf[UTF8String] == name) buf += r(1).asInstanceOf[Long]
+          r = GraftStoreFormat.readRow(din, GraftStoreFormat.DeleteSchema)
         }
-      } finally in.close()
-      acc.toSeq.map { case (t, ps) => (t, ps.distinct.sorted.toArray) }
+      } finally din.close()
     }
-    // prune-skipping decode set: only columns the CDC projection names are
-    // decoded from the target files (the rest seek past — same discipline
-    // as the data reader)
+    buf.distinct.sorted.toArray
+  }
+
+  /** The key tuples of one equality-delete store, at the table types of
+    * columns `keyIdxs`. */
+  private def loadKeys(store: String, keyIdxs: Seq[Int]): java.util.HashSet[Seq[Any]] = {
+    val keySchema = StructType(keyIdxs.map(table.fields).toArray)
+    val set = new java.util.HashSet[Seq[Any]]()
+    val fs = new Path(store).getFileSystem(conf.value)
+    val din = new DataInputStream(
+      new BufferedInputStream(fs.open(new Path(store)), 1 << 16))
+    try {
+      var r = GraftStoreFormat.readRow(din, keySchema)
+      while (r != null) { set.add(r.toSeq); r = GraftStoreFormat.readRow(din, keySchema) }
+    } finally din.close()
+    set
+  }
+
+  /** Resolve a target's NEWLY masked positions (see
+    * [[GraftCdcRefPartition]]) into full rows: a merge-walk against the
+    * sorted positions, same discipline as the data reader's skip, that
+    * stops reading the target after the last one. A target with no new
+    * position is never opened. */
+  private def refReader(p: GraftCdcRefPartition): PartitionReader[InternalRow] = {
+    val GraftCdcRefPartition(target, width, newDeletes, priorDeletes, priorEq, seq) = p
+    val masked: Array[Long] = {
+      val name = UTF8String.fromString(target.substring(target.lastIndexOf('/') + 1))
+      val prior = maskedPositions(priorDeletes, name)
+      maskedPositions(newDeletes, name)
+        .filter(q => java.util.Arrays.binarySearch(prior, q) < 0)
+    }
+    val fileSchema =
+      if (width >= table.length) table else StructType(table.fields.take(width))
+    // prune-skipping decode set: only columns the projection names, plus
+    // the prior equality stores' key columns, are decoded from the target
+    // (the rest seek past — same discipline as the data reader)
     val wanted: Array[Boolean] = {
-      val w = new Array[Boolean](table.length)
+      val w = new Array[Boolean](fileSchema.length)
       required.fieldNames.foreach {
         case GraftCdc.TypeCol | GraftCdc.SnapCol | GraftFileColumn.Name => ()
-        case name => w(table.fieldIndex(name)) = true
+        case name =>
+          val i = table.fieldIndex(name)
+          if (i < fileSchema.length) w(i) = true
       }
+      priorEq.foreach(_._2.foreach(i => if (i < fileSchema.length) w(i) = true))
       w
     }
     val defaultVals = decodedDefaults()
     new PartitionReader[InternalRow] {
-      private var remaining = byTarget
       private var in: DataInputStream = _
-      private var fileSchema: StructType = _
-      private var fileWidth = 0
-      private var curFile: UTF8String = _
-      private var masked: Array[Long] = Array.emptyLongArray
+      private lazy val eqMasks = priorEq.map { case (s, ks) => (ks.toArray, loadKeys(s, ks)) }
+      private val curFile = UTF8String.fromString(target)
       private var maskIdx = 0
       private var pos = -1L
       private var cur: Array[Any] = _
-      private def openNext(): Boolean = remaining match {
-        case (t, ps) +: rest =>
-          remaining = rest
-          val abs = new Path(dir, t)
-          val fs = abs.getFileSystem(conf.value)
-          in = new DataInputStream(new BufferedInputStream(fs.open(abs), 1 << 16))
-          fileWidth = widths.getOrElse(t, table.length)
-          fileSchema =
-            if (fileWidth >= table.length) table
-            else StructType(table.fields.take(fileWidth))
-          curFile = UTF8String.fromString(abs.toString)
-          masked = ps; maskIdx = 0; pos = -1L
-          true
-        case _ => false
-      }
+      private def keyOf(idxs: Array[Int]): Seq[Any] =
+        idxs.map(i => if (i < fileSchema.length) cur(i) else defaultVals(i)).toSeq
       override def next(): Boolean = {
-        if (in == null && !openNext()) return false
-        while (true) {
-          if (maskIdx >= masked.length) { // emitted every masked row: stop
-            in.close(); in = null         // reading the rest of the target
-            if (!openNext()) return false
-          } else {
-            cur = GraftStoreFormat.readRowPruned(in, fileSchema, wanted)
-            if (cur == null) {
-              in.close(); in = null
-              if (!openNext()) return false
-            } else {
-              pos += 1
-              if (masked(maskIdx) == pos) { maskIdx += 1; return true }
-            }
+        while (maskIdx < masked.length) {
+          if (in == null) {
+            val abs = new Path(target)
+            in = new DataInputStream(new BufferedInputStream(
+              abs.getFileSystem(conf.value).open(abs), 1 << 16))
+          }
+          cur = GraftStoreFormat.readRowPruned(in, fileSchema, wanted)
+          if (cur == null) return false
+          pos += 1
+          if (masked(maskIdx) == pos) {
+            maskIdx += 1
+            if (!eqMasks.exists { case (ks, set) => set.contains(keyOf(ks)) }) return true
           }
         }
-        false // unreachable
+        false // every newly masked row emitted: the rest is never read
       }
       private val tag = UTF8String.fromString("delete")
       override def get(): InternalRow =
@@ -5202,9 +5256,9 @@ private[v2] class GraftCdcReaderFactory(table: StructType, required: StructType,
           case GraftFileColumn.Name => curFile
           case name =>
             val i = table.fieldIndex(name)
-            if (i < fileWidth) cur(i) else defaultVals(i)
+            if (i < fileSchema.length) cur(i) else defaultVals(i)
         })
-      override def close(): Unit = if (in != null) in.close()
+      override def close(): Unit = if (in != null) { in.close(); in = null }
     }
   }
 
@@ -5231,18 +5285,6 @@ private[v2] class GraftCdcReaderFactory(table: StructType, required: StructType,
         if (i < fileSchema.length) w(i) = true))
       w
     }
-    def loadKeys(store: String, keyIdxs: Seq[Int]): java.util.HashSet[Seq[Any]] = {
-      val keySchema = StructType(keyIdxs.map(table.fields).toArray)
-      val set = new java.util.HashSet[Seq[Any]]()
-      val fs = new Path(store).getFileSystem(conf.value)
-      val din = new DataInputStream(
-        new BufferedInputStream(fs.open(new Path(store)), 1 << 16))
-      try {
-        var r = GraftStoreFormat.readRow(din, keySchema)
-        while (r != null) { set.add(r.toSeq); r = GraftStoreFormat.readRow(din, keySchema) }
-      } finally din.close()
-      set
-    }
     new PartitionReader[InternalRow] {
       private val abs = new Path(target)
       private val fs = abs.getFileSystem(conf.value)
@@ -5251,25 +5293,8 @@ private[v2] class GraftCdcReaderFactory(table: StructType, required: StructType,
       private val curFile = UTF8String.fromString(target)
       private val newMasks = keyStores.map { case (s, ks) => (ks.toArray, loadKeys(s, ks)) }
       private val oldMasks = priorEq.map { case (s, ks) => (ks.toArray, loadKeys(s, ks)) }
-      private val deleted: Array[Long] = {
-        val myName = UTF8String.fromString(
-          target.substring(target.lastIndexOf('/') + 1))
-        val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-        priorDeletes.foreach { d =>
-          val dfs = new Path(d).getFileSystem(conf.value)
-          val din = new DataInputStream(
-            new BufferedInputStream(dfs.open(new Path(d)), 1 << 16))
-          try {
-            var r = GraftStoreFormat.readRow(din, GraftStoreFormat.DeleteSchema)
-            while (r != null) {
-              if (r(0).asInstanceOf[UTF8String] == myName)
-                buf += r(1).asInstanceOf[Long]
-              r = GraftStoreFormat.readRow(din, GraftStoreFormat.DeleteSchema)
-            }
-          } finally din.close()
-        }
-        buf.distinct.sorted.toArray
-      }
+      private val deleted: Array[Long] = maskedPositions(priorDeletes,
+        UTF8String.fromString(target.substring(target.lastIndexOf('/') + 1)))
       private var delIdx = 0
       private var pos = -1L
       private var cur: Array[Any] = _
@@ -5921,16 +5946,6 @@ object GraftStoreOps {
     eqDeltaCommit(spark, path, m, keyCols, keys.distinct(), None)._2
   }
 
-  /** True when the frame's OPTIMIZED plan is a provably empty local
-    * relation — decidable on the driver, no Spark job. Conservative:
-    * anything non-local reports false. */
-  private def provablyEmpty(df: org.apache.spark.sql.DataFrame): Boolean =
-    df.queryExecution.optimizedPlan match {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        l.data.isEmpty
-      case _ => false
-    }
-
   /** Shared equality-delta commit: write the key store (and rename any
     * pre-written data scratch in), then OCC-publish files+masks at one
     * sequence. Returns (data rows added, key tuples recorded), both read
@@ -5969,7 +5984,8 @@ object GraftStoreOps {
           s"graft-store: equality-delete key $k type ${keyRows.schema(k).dataType.simpleString} " +
             s"must match table type ${dt.simpleString}")
       }
-      keyRows.select(keyCols.map(org.apache.spark.sql.functions.col).toSeq: _*)
+      GraftLocal.oneSlice(
+        keyRows.select(keyCols.map(org.apache.spark.sql.functions.col).toSeq: _*))
         .write.format("graft-store").mode("overwrite").save(keyScratch)
       val km = GraftStoreFormat.readLatestManifest(keyScratch, conf)
         .getOrElse(GraftManifest(new StructType(), Seq.empty))
@@ -6001,10 +6017,10 @@ object GraftStoreOps {
     // cleanup below
     val liveKeyFiles = km.files.filter(_.rows > 0L)
     val liveDataFiles = dm.map(_.files.filter(_.rows > 0L)).getOrElse(Seq.empty)
-    liveKeyFiles.foreach(e => f.rename(new Path(keyScratch, e.name), new Path(path, e.name)))
-    dataScratch.foreach { s =>
-      liveDataFiles.foreach(e => f.rename(new Path(s, e.name), new Path(path, e.name)))
-    }
+    GraftStoreFormat.moveLive(f, path,
+      liveKeyFiles.map(e => new Path(keyScratch, e.name)) ++
+        dataScratch.toSeq.flatMap(s => liveDataFiles.map(e => new Path(s, e.name))),
+      dropScratch())
     var done = false
     while (!done) {
       val head = GraftStoreFormat.listManifests(path, conf)
@@ -6059,15 +6075,18 @@ object GraftStoreOps {
     // jobs per refresh commit for numbers the writes already produce.
     // (Both call sites pass frames derived from an already-materialized
     // merge frame, so the two executions share no recomputed lineage.)
-    val distinctKeys = keys.select(keyCols.map(col).toSeq: _*).distinct()
+    // driver-local keys (a churn-sized refresh frame) dedupe on the
+    // driver: the key-store write is then their only job
+    val keyFrame = keys.select(keyCols.map(col).toSeq: _*)
+    val distinctKeys = GraftLocal.distinct(keyFrame).getOrElse(keyFrame.distinct())
     // a DRIVER-provably-empty source (empty LocalRelation after
     // optimization — e.g. a no-op refresh built from collected churn)
     // skips the data-scratch write job entirely: pure keyed delete +
     // property stamp, one job fewer per no-op refresh
-    if (provablyEmpty(src))
+    if (GraftLocal.rows(src).exists(_.isEmpty))
       return eqDeltaCommit(spark, path, m, keyCols, distinctKeys, None, setProps)
     val scratch = s"$path/_rewrite-${UUID.randomUUID().toString.take(12)}"
-    val w0 = src.write.format("graft-store").mode("overwrite")
+    val w0 = GraftLocal.oneSlice(src).write.format("graft-store").mode("overwrite")
     val w1 = m.check.fold(w0)(c => w0.option("check", c))
     try {
       ((m.partitionCol, m.clusterCols) match {
@@ -7032,8 +7051,10 @@ object GraftStoreOps {
     // EFFECTIVELY if its covering delete set differs (a MOR DELETE commits
     // masks, not file swaps). Such files are read at both ends — the scan
     // applies each snapshot's masks — and surviving rows cancel in the
-    // join; the cost stays churn-proportional (only changed-coverage files
-    // re-read)
+    // join. Only changed-coverage files are re-read, but each one whole
+    // and twice, so a mask on one compacted table-sized file costs two
+    // passes over the table ([[signedChanges]] walks only the newly
+    // masked rows instead)
     // the signature includes EQUALITY deletes scoping the file: an upsert
     // makes every older file changed-coverage, so the diff re-reads them
     // all — the honest cost of key-addressed deletion (which rows died is
@@ -7073,75 +7094,149 @@ object GraftStoreOps {
         col("pre").isNotNull && col("post").isNotNull, "update_postimage"))
   }
 
+  /** How [[signedChanges]] reads the churn between two snapshots, decided
+    * from the two manifests alone. A file listed at only one end is read
+    * whole: `removed` at `from` with sign -1, `added` at `to` with sign +1.
+    * A file listed at both ends whose masks only GREW — the same equality
+    * stores cover it, and its position-delete stores at `to` include those
+    * at `from` — lost exactly its newly masked rows, so it contributes
+    * only those, through one [[GraftCdcRefPartition]] walk (`walks`, each
+    * with its new stores' summed row count as a bound on its rows). Any
+    * other change of a listed file's masks (a store removed by a restore,
+    * a changed equality scope, a layout the walk cannot decode
+    * positionally) reads the file at both ends, and its carried rows net
+    * out downstream. */
+  private case class ChurnReads(removed: Seq[String], added: Seq[String],
+      walks: Seq[(GraftCdcRefPartition, Long)])
+
+  private def churnReads(path: String, mFrom: GraftManifest,
+      mTo: GraftManifest): ChurnReads = {
+    val fromNames = mFrom.files.map(_.name).toSet
+    val toNames = mTo.files.map(_.name).toSet
+    val schema = mTo.schema
+    def abs(name: String) = new Path(path, name).toString
+    val fromEntries = mFrom.files.map(e => e.name -> e).toMap
+    val changed = mTo.files.filter(e => fromNames.contains(e.name)).flatMap { e =>
+      val ef = fromEntries(e.name)
+      val posFrom = mFrom.deletes.filter(_.covers(e.name))
+      val posTo = mTo.deletes.filter(_.covers(e.name))
+      val eqFrom = mFrom.eqDeletes.filter(_.covers(ef))
+      val eqTo = mTo.eqDeletes.filter(_.covers(e))
+      val fromSet = posFrom.map(_.name).toSet
+      val toSet = posTo.map(_.name).toSet
+      val sameEq = eqFrom.map(_.name).toSet == eqTo.map(_.name).toSet
+      if (fromSet == toSet && sameEq) None
+      else {
+        val width = e.ncols.getOrElse(schema.length)
+        val eqKeys = eqTo.map(q => (abs(q.name), q.keyCols.map(schema.fieldNames.indexOf(_))))
+        val grown = sameEq && fromSet.subsetOf(toSet) &&
+          width <= schema.length && eqKeys.forall(_._2.forall(_ >= 0)) &&
+          scala.util.Try(GraftStoreFormat.requireOrdinalLayout(mTo, e, "", schema)).isSuccess
+        val fresh = posTo.filterNot(d => fromSet(d.name))
+        Some(e.name -> (if (!grown) None else Some((GraftCdcRefPartition(abs(e.name),
+          width, fresh.map(d => abs(d.name)), posFrom.map(d => abs(d.name)), eqKeys, 0L),
+          fresh.map(_.rows).sum))))
+      }
+    }
+    val reread = changed.collect { case (n, None) => n }
+    ChurnReads(
+      mFrom.files.map(_.name).filterNot(toNames) ++ reread,
+      mTo.files.map(_.name).filterNot(fromNames) ++ reread,
+      changed.flatMap(_._2))
+  }
+
+  /** The two manifests of a valid, schema-stable range; None otherwise. */
+  private def rangeManifests(spark: SparkSession, path: String, fromSnap: Int,
+      toSnap: Int): Option[(GraftManifest, GraftManifest)] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val ms = GraftStoreFormat.listManifests(path, conf)
+    if (fromSnap < 0 || toSnap >= ms.size || fromSnap > toSnap) return None
+    val mFrom = GraftStoreFormat.readManifestFile(path, conf, ms(fromSnap))
+    val mTo = GraftStoreFormat.readManifestFile(path, conf, ms(toSnap))
+    if (mFrom.schema.toDDL != mTo.schema.toDDL) None else Some((mFrom, mTo))
+  }
+
   /** SIGNED row deltas between two snapshots: every row leaving the table
     * with `_sign = -1`, every row arriving with `_sign = +1` — the
     * multiset difference [[changesBetween]] classifies, WITHOUT the keyed
     * full-outer join (no key column required, no shuffle): for
     * DISTRIBUTIVE aggregation (count/sum — incremental view maintenance)
     * the algebra cancels carried-identical rows by itself, so classifying
-    * them is pure cost. Churn-proportional like the change feed: only
-    * files whose membership or delete coverage changed are read. */
+    * them is pure cost. Files whose listing and masks are unchanged are
+    * never read. A file whose masks only grew yields just its newly
+    * masked rows, from one positional walk that stops after the last of
+    * them (see [[churnReads]]), so an append or a merge-on-read
+    * DELETE/MERGE costs its added files plus at most one pass over each
+    * masked file. Every other change reads the whole file at both ends:
+    * departed and arrived files, shrunk masks, changed equality scope.
+    * The carried rows of those re-reads come out as ± pairs. */
   def signedChanges(spark: SparkSession, path: String, fromSnap: Int,
       toSnap: Int): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val conf = spark.sparkContext.hadoopConfiguration
-    val ms = GraftStoreFormat.listManifests(path, conf)
+    import org.apache.spark.sql.functions.lit
+    val ms = GraftStoreFormat.listManifests(path, spark.sparkContext.hadoopConfiguration)
     require(fromSnap >= 0 && toSnap < ms.size && fromSnap <= toSnap,
       s"graft-store: snapshot range [$fromSnap, $toSnap] outside [0, ${ms.size})")
-    val mFrom = GraftStoreFormat.readManifestFile(path, conf, ms(fromSnap))
-    val mTo = GraftStoreFormat.readManifestFile(path, conf, ms(toSnap))
-    require(mFrom.schema.toDDL == mTo.schema.toDDL,
-      "graft-store: change feed across a schema change is not defined")
-    val fromNames = mFrom.files.map(_.name).toSet
-    val toNames = mTo.files.map(_.name).toSet
-    def delSig(mf: GraftManifest, e: GraftFileEntry): Seq[String] =
-      (mf.deletes.filter(_.covers(e.name)).map(_.name) ++
-        mf.eqDeletes.filter(_.covers(e)).map(_.name)).sorted
-    val toEntries = mTo.files.map(e => e.name -> e).toMap
-    val masked = mFrom.files.filter(e => toNames.contains(e.name))
-      .filter(e => delSig(mFrom, e) != delSig(mTo, toEntries(e.name)))
-      .map(_.name)
-    val removed = mFrom.files.map(_.name).filterNot(toNames) ++ masked
-    val added = mTo.files.map(_.name).filterNot(fromNames) ++ masked
+    val range = rangeManifests(spark, path, fromSnap, toSnap)
+    require(range.isDefined, "graft-store: change feed across a schema change is not defined")
+    val (mFrom, mTo) = range.get
+    val r = churnReads(path, mFrom, mTo)
     def readSubset(names: Seq[String], snap: Int) =
       if (names.isEmpty)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], mFrom.schema)
       else spark.read.format("graft-store").option("snapshot", snap)
         .option("files", names.mkString(",")).load(path)
-    readSubset(removed, fromSnap).withColumn("_sign", lit(-1L))
-      .unionByName(readSubset(added, toSnap).withColumn("_sign", lit(1L)))
+    val whole = readSubset(r.removed, fromSnap).withColumn("_sign", lit(-1L))
+      .unionByName(readSubset(r.added, toSnap).withColumn("_sign", lit(1L)))
+    if (r.walks.isEmpty) whole
+    else whole.unionByName(walkedRows(spark, mTo, r.walks.map(_._1))
+      .withColumn("_sign", lit(-1L)))
   }
 
-  /** DRIVER-SIDE churn-volume estimate between two snapshots: the summed
-    * row count of the files [[signedChanges]] would read (departed +
-    * arrived + mask-churned), from manifest metadata alone — no Spark
-    * job. An upper bound on signed-delta rows (carried-identical rows
-    * net out later); used to size maintenance-frame parallelism to the
-    * churn instead of the cluster (guide §2.2: partition count should
-    * follow data volume). Returns 0 for an invalid range. */
-  def signedChangeRowEstimate(spark: SparkSession, path: String,
-      fromSnap: Int, toSnap: Int): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val ms = GraftStoreFormat.listManifests(path, conf)
-    if (fromSnap < 0 || toSnap >= ms.size || fromSnap > toSnap) return 0L
-    val mFrom = GraftStoreFormat.readManifestFile(path, conf, ms(fromSnap))
-    val mTo = GraftStoreFormat.readManifestFile(path, conf, ms(toSnap))
-    if (mFrom.schema.toDDL != mTo.schema.toDDL) return 0L
-    val fromNames = mFrom.files.map(_.name).toSet
-    val toNames = mTo.files.map(_.name).toSet
-    def delSig(mf: GraftManifest, e: GraftFileEntry): Seq[String] =
-      (mf.deletes.filter(_.covers(e.name)).map(_.name) ++
-        mf.eqDeletes.filter(_.covers(e)).map(_.name)).sorted
-    val toEntries = mTo.files.map(e => e.name -> e).toMap
-    val masked = mFrom.files.filter(e => toNames.contains(e.name))
-      .filter(e => delSig(mFrom, e) != delSig(mTo, toEntries(e.name)))
-      .map(_.name).toSet
-    mFrom.files.filter(e => !toNames.contains(e.name) || masked(e.name))
-      .map(_.rows).sum +
-      mTo.files.filter(e => !fromNames.contains(e.name) || masked(e.name))
-        .map(_.rows).sum
+  /** The rows the walk units name, as a frame of the table's schema: one
+    * Spark partition per unit, read through the change feed's reader by
+    * the DSv2 reader RDD, so the walk's bytes count as scan input. */
+  private def walkedRows(spark: SparkSession, m: GraftManifest,
+      units: Seq[GraftCdcRefPartition]): org.apache.spark.sql.DataFrame = {
+    val factory = new GraftCdcReaderFactory(m.schema, m.schema,
+      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration),
+      GraftStoreFormat.logicalDefaults(m))
+    org.apache.spark.sql.graftshim.internalDataFrame(spark,
+      new org.apache.spark.sql.execution.datasources.v2.DataSourceRDD(
+        spark.sparkContext, units.map(Seq(_)), factory, false, Map.empty),
+      m.schema)
   }
+
+  /** True when [[signedChanges]] between two snapshots may return rows
+    * present at both ends as -1/+1 pairs: some file is read whole at
+    * `from` while others are read at `to` (a rewrite, compaction, restore
+    * or changed mask scope). Appends and position deletes that only grew
+    * masks never do, so their signed rows are already the net churn.
+    * Manifest metadata only; true for an invalid range. */
+  def signedChangesMayCarry(spark: SparkSession, path: String, fromSnap: Int,
+      toSnap: Int): Boolean =
+    rangeManifests(spark, path, fromSnap, toSnap).forall { case (mFrom, mTo) =>
+      val r = churnReads(path, mFrom, mTo)
+      r.removed.nonEmpty && r.added.nonEmpty
+    }
+
+  /** DRIVER-SIDE churn-volume estimate between two snapshots, from
+    * manifest metadata alone — no Spark job: the summed row count of the
+    * files [[signedChanges]] reads whole, plus, for each file it walks,
+    * the row count of the new delete stores covering it. An upper bound
+    * on its signed rows (carried-identical rows net out later), which
+    * sizes the refresh's frames to the churn. Returns 0 for an invalid
+    * range. */
+  def signedChangeRowEstimate(spark: SparkSession, path: String,
+      fromSnap: Int, toSnap: Int): Long =
+    rangeManifests(spark, path, fromSnap, toSnap).fold(0L) { case (mFrom, mTo) =>
+      val r = churnReads(path, mFrom, mTo)
+      def rows(m: GraftManifest, names: Seq[String]) = {
+        val ns = names.toSet
+        m.files.filter(e => ns(e.name)).map(_.rows).sum
+      }
+      rows(mFrom, r.removed) + rows(mTo, r.added) + r.walks.map(_._2).sum
+    }
 
   /** Drop all but the newest `keepLast` snapshots, then delete data files no
     * retained snapshot references. Order matters for crash safety: manifests

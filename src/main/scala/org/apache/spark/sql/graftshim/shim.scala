@@ -20,6 +20,14 @@ package object graftshim {
   def ofRows(spark: SparkSession, plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** Build a DataFrame over an RDD of Catalyst rows of `schema`
+    * (internalCreateDataFrame is private[sql]) — needed by the store's
+    * positional walk, whose reader already yields InternalRows. */
+  def internalDataFrame(spark: SparkSession,
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
+
   /** V2 Predicate → V1 Filter conversion (PredicateUtils is private[sql])
     * — needed by the row-level scan's runtime group filtering to feed
     * dynamic IN predicates into the manifest-stats skipper. */

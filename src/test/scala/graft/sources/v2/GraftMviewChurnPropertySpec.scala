@@ -16,12 +16,21 @@ import org.scalatest.funsuite.AnyFunSuite
   * the telescoped ± delta rules that single-scenario specs can miss. */
 class GraftMviewChurnPropertySpec extends AnyFunSuite with graft.SparkTestBase {
 
+  /** The catalog this suite's tables live in, and the local-frame bound
+    * its refreshes run under ([[GraftMview.localFrameRows]]); a subclass
+    * reruns the suite on the checkpoint path under its own catalog. */
+  protected def cat: String = "mvchurn"
+  protected def localBound: Long = GraftMview.LocalFrameRows
+
+  override def withFixture(test: NoArgTest) =
+    GraftMview.localFrameRows.withValue(localBound)(super.withFixture(test))
+
   import spark.implicits._
 
   private lazy val catBase: String = {
     val base = Files.createTempDirectory("graft-mv-churn").toString
-    spark.conf.set("spark.sql.catalog.mvchurn", "graft.sources.v2.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.mvchurn.base", base)
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.v2.GraftCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.base", base)
     base
   }
 
@@ -60,7 +69,7 @@ class GraftMviewChurnPropertySpec extends AnyFunSuite with graft.SparkTestBase {
     val (sql, recompute) = shape match {
       case "single" =>
         ("SELECT fk, count(*) AS n, sum(v) AS s, count(DISTINCT v) AS dv " +
-          s"FROM mvchurn.f_$shape GROUP BY fk",
+          s"FROM $cat.f_$shape GROUP BY fk",
           () => spark.read.format("graft-store").load(fact)
             .groupBy("fk").agg(count(lit(1)).as("n"), sum("v").as("s"),
               countDistinct(col("v")).as("dv")))
@@ -79,7 +88,7 @@ class GraftMviewChurnPropertySpec extends AnyFunSuite with graft.SparkTestBase {
           // churn (NULL keys, dim flips, both-side deletes) as the
           // distributive columns
           (s"SELECT nk, count(*) AS n, min(v) AS mn, max(v) AS mx " +
-            s"FROM mvchurn.f_$shape $jt mvchurn.c_$shape ON fk = pk GROUP BY nk",
+            s"FROM $cat.f_$shape $jt $cat.c_$shape ON fk = pk GROUP BY nk",
             () => {
               val f = spark.read.format("graft-store").load(fact)
               val c = spark.read.format("graft-store").load(d1)
@@ -89,7 +98,7 @@ class GraftMviewChurnPropertySpec extends AnyFunSuite with graft.SparkTestBase {
             })
         else
         (s"SELECT nk, count(*) AS n, sum(v) AS s, count(DISTINCT v) AS dv " +
-          s"FROM mvchurn.f_$shape $jt mvchurn.c_$shape ON fk = pk GROUP BY nk",
+          s"FROM $cat.f_$shape $jt $cat.c_$shape ON fk = pk GROUP BY nk",
           () => {
             val f = spark.read.format("graft-store").load(fact)
             val c = spark.read.format("graft-store").load(d1)
@@ -99,8 +108,8 @@ class GraftMviewChurnPropertySpec extends AnyFunSuite with graft.SparkTestBase {
           })
       case "chain" =>
         (s"SELECT lbl, count(*) AS n, sum(v) AS s " +
-          s"FROM mvchurn.f_$shape LEFT JOIN mvchurn.c_$shape ON fk = pk " +
-          s"LEFT JOIN mvchurn.n_$shape ON nk = nk2 GROUP BY lbl",
+          s"FROM $cat.f_$shape LEFT JOIN $cat.c_$shape ON fk = pk " +
+          s"LEFT JOIN $cat.n_$shape ON nk = nk2 GROUP BY lbl",
           () => {
             val f = spark.read.format("graft-store").load(fact)
             val c = spark.read.format("graft-store").load(d1)
@@ -120,7 +129,7 @@ class GraftMviewChurnPropertySpec extends AnyFunSuite with graft.SparkTestBase {
             .write.format("graft-store").mode("append").save(fact)
           case 1 =>
             val m = rnd.nextInt(5)
-            spark.sql(s"DELETE FROM mvchurn.f_$shape WHERE v % 5 = $m")
+            spark.sql(s"DELETE FROM $cat.f_$shape WHERE v % 5 = $m")
           case 2 => // dim append: new + re-added keys
             val lo = 15 + rnd.nextInt(5)
             Seq((lo.toLong, rnd.nextInt(4).toLong),
@@ -129,14 +138,14 @@ class GraftMviewChurnPropertySpec extends AnyFunSuite with graft.SparkTestBase {
               .write.format("graft-store").mode("append").save(d1)
           case 3 =>
             val m = rnd.nextInt(4)
-            spark.sql(s"DELETE FROM mvchurn.c_$shape WHERE pk % 7 = $m")
+            spark.sql(s"DELETE FROM $cat.c_$shape WHERE pk % 7 = $m")
           case 4 =>
             val m = rnd.nextInt(4)
-            spark.sql(s"UPDATE mvchurn.c_$shape SET nk = (nk + 1) % 4 " +
+            spark.sql(s"UPDATE $cat.c_$shape SET nk = (nk + 1) % 4 " +
               s"WHERE pk % 5 = $m")
           case 5 => // leaf-dim churn (chain only)
             if (rnd.nextBoolean())
-              spark.sql(s"DELETE FROM mvchurn.n_$shape WHERE nk2 = ${rnd.nextInt(3)}")
+              spark.sql(s"DELETE FROM $cat.n_$shape WHERE nk2 = ${rnd.nextInt(3)}")
             else Seq((rnd.nextInt(4).toLong, "zz")).toDF("nk2", "lbl")
               .write.format("graft-store").mode("append").save(d2)
         }

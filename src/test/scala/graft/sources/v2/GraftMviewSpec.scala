@@ -12,12 +12,21 @@ import org.scalatest.funsuite.AnyFunSuite
   * watermark as one commit. */
 class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
 
+  /** The catalog this suite's tables live in, and the local-frame bound
+    * its refreshes run under ([[GraftMview.localFrameRows]]); a subclass
+    * reruns the suite on the checkpoint path under its own catalog. */
+  protected def cat: String = "mvcat"
+  protected def localBound: Long = GraftMview.LocalFrameRows
+
+  override def withFixture(test: NoArgTest) =
+    GraftMview.localFrameRows.withValue(localBound)(super.withFixture(test))
+
   import spark.implicits._
 
   private lazy val catBase: String = {
     val base = Files.createTempDirectory("graft-mv").toString
-    spark.conf.set("spark.sql.catalog.mvcat", "graft.sources.v2.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.mvcat.base", base)
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.v2.GraftCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.base", base)
     base
   }
 
@@ -37,19 +46,19 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     Seq(("a", 1L), ("a", 2L), ("b", 10L), ("c", 5L), ("x", -1L))
       .toDF("g", "v").write.format("graft-store").mode("overwrite").save(srcDir)
     val res = spark.sql(
-      "CALL mvcat.system.create_mview('mv1', " +
-        "'SELECT g, count(*) AS n, sum(v) AS s FROM mvcat.src1 WHERE v >= 0 GROUP BY g')")
+      s"CALL $cat.system.create_mview('mv1', " +
+        s"'SELECT g, count(*) AS n, sum(v) AS s FROM $cat.src1 WHERE v >= 0 GROUP BY g')")
       .collect()(0)
     assert(res.getLong(0) === 3) // a, b, c (x filtered out)
     assert(mvRows(mvDir) === recompute(srcDir))
     // reads are the materialized fast path: a plain catalog table read
-    assert(spark.sql("SELECT * FROM mvcat.mv1").count() === 3)
+    assert(spark.sql(s"SELECT * FROM $cat.mv1").count() === 3)
 
     // churn: append into a and a NEW group d; delete ALL of b (vanishes)
     Seq(("a", 100L), ("d", 7L)).toDF("g", "v")
       .write.format("graft-store").mode("append").save(srcDir)
-    spark.sql("DELETE FROM mvcat.src1 WHERE g = 'b'")
-    val r2 = spark.sql("CALL mvcat.system.refresh_mview('mv1')").collect()(0)
+    spark.sql(s"DELETE FROM $cat.src1 WHERE g = 'b'")
+    val r2 = spark.sql(s"CALL $cat.system.refresh_mview('mv1')").collect()(0)
     assert(r2.getString(0) === "incremental")
     assert(r2.getLong(2) === 1L, "b vanished")
     assert(mvRows(mvDir) === recompute(srcDir))
@@ -57,7 +66,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     assert(mvRows(mvDir)("a") === ((3L, 103L)))
 
     // idempotent: at the head, refresh is a no-op
-    val r3 = spark.sql("CALL mvcat.system.refresh_mview('mv1')").collect()(0)
+    val r3 = spark.sql(s"CALL $cat.system.refresh_mview('mv1')").collect()(0)
     assert(r3.getString(0) === "noop")
   }
 
@@ -70,7 +79,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       .select((col("id") % 16).cast("string").as("g"), col("id").as("v"))
       .repartition(8).write.format("graft-store").mode("overwrite").save(srcDir)
     GraftMview.create(spark, mvDir,
-      "SELECT g, count(*) AS n, sum(v) AS s FROM mvcat.src2 GROUP BY g")
+      s"SELECT g, count(*) AS n, sum(v) AS s FROM $cat.src2 GROUP BY g")
     Seq(("0", 1L)).toDF("g", "v")
       .write.format("graft-store").mode("append").save(srcDir)
     val before = GraftStoreFormat.scannedFileSlices.sum()
@@ -94,7 +103,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     Seq(("a", 1L), ("b", 2L)).toDF("g", "v")
       .write.format("graft-store").mode("overwrite").save(srcDir)
     GraftMview.create(spark, mvDir,
-      "SELECT g, count(*) AS n, sum(v) AS s FROM mvcat.src3 GROUP BY g")
+      s"SELECT g, count(*) AS n, sum(v) AS s FROM $cat.src3 GROUP BY g")
     Seq(("a", 5L)).toDF("g", "v")
       .write.format("graft-store").mode("append").save(srcDir)
     val snapsBefore = GraftStoreOps.history(spark, mvDir).size
@@ -112,11 +121,11 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       .write.format("graft-store").option("dmlMode", "mor")
       .mode("overwrite").save(srcDir)
     GraftMview.create(spark, mvDir,
-      "SELECT g, count(*) AS n, sum(v) AS s FROM mvcat.src4 GROUP BY g")
+      s"SELECT g, count(*) AS n, sum(v) AS s FROM $cat.src4 GROUP BY g")
     // MOR churn: upsert-style eq-delta ingest on the source
     GraftStoreOps.upsertMor(spark, srcDir,
       Seq(("c", 9L)).toDF("g", "v"), Seq("g", "v"))
-    spark.sql("DELETE FROM mvcat.src4 WHERE v = 4")
+    spark.sql(s"DELETE FROM $cat.src4 WHERE v = 4")
     val (m1, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m1 === "incremental")
     assert(mvRows(mvDir) === Map("a" -> ((1L, 1L)), "b" -> ((1L, 2L)), "c" -> ((1L, 9L))))
@@ -138,7 +147,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     Seq(("a", 1L), ("b", 2L)).toDF("g", "v")
       .write.format("graft-store").mode("overwrite").save(srcDir)
     GraftMview.create(spark, mvDir,
-      "SELECT g, count(*) AS n, sum(v) AS s FROM mvcat.src6 GROUP BY g")
+      s"SELECT g, count(*) AS n, sum(v) AS s FROM $cat.src6 GROUP BY g")
     def run(appends: Seq[Seq[(String, Long)]]): Unit = {
       val q = GraftMview.streamRefresh(spark, mvDir, ckpt)
       try {
@@ -172,7 +181,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       .write.format("graft-store").mode("overwrite").save(dimDir)
     GraftMview.create(spark, mvDir,
       "SELECT seg, count(*) AS n, sum(v) AS s " +
-        "FROM mvcat.sjfact JOIN mvcat.sjdim ON fk = pk GROUP BY seg")
+        s"FROM $cat.sjfact JOIN $cat.sjdim ON fk = pk GROUP BY seg")
     val q = GraftMview.streamRefresh(spark, mvDir, ckpt)
     try {
       q.processAllAvailable()
@@ -182,7 +191,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       q.processAllAvailable()
       assert(mvRows(mvDir) === Map("a" -> ((2L, 9L)), "b" -> ((1L, 10L))))
       // DIM-side commit (group mass moves) triggers a refresh too
-      spark.sql(s"UPDATE mvcat.sjdim SET seg = 'c' WHERE pk = 2")
+      spark.sql(s"UPDATE $cat.sjdim SET seg = 'c' WHERE pk = 2")
       q.processAllAvailable()
       assert(mvRows(mvDir) === Map("a" -> ((2L, 9L)), "c" -> ((1L, 10L))))
     } finally q.stop()
@@ -201,7 +210,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       .write.format("graft-store").mode("overwrite").save(dimDir)
     GraftMview.create(spark, mvDir,
       "SELECT seg, count(*) AS n, sum(v) AS s " +
-        "FROM mvcat.slfact LEFT JOIN mvcat.sldim ON fk = pk GROUP BY seg")
+        s"FROM $cat.slfact LEFT JOIN $cat.sldim ON fk = pk GROUP BY seg")
     def rows(): Map[String, (Long, Long)] =
       spark.read.format("graft-store").load(mvDir).collect()
         .map(r => (if (r.isNullAt(0)) "(null)" else r.getString(0)) ->
@@ -219,7 +228,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       assert(rows() === Map("a" -> ((2L, 9L)), "b" -> ((1L, 10L))),
         "a dim insert under continuous refresh must retract the null group")
       // dim DELETE: fk=2 transitions matched → null-extended
-      spark.sql("DELETE FROM mvcat.sldim WHERE pk = 2")
+      spark.sql(s"DELETE FROM $cat.sldim WHERE pk = 2")
       q.processAllAvailable()
       assert(rows() === Map("a" -> ((2L, 9L)), "(null)" -> ((1L, 10L))),
         "a dim delete under continuous refresh must re-create the null group")
@@ -243,7 +252,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       .write.format("graft-store").mode("overwrite").save(fbDir)
     GraftMview.create(spark, mvDir,
       "SELECT h, count(*) AS n, sum(va) AS s " +
-        "FROM mvcat.sffa FULL OUTER JOIN mvcat.sffb ON ka = kb GROUP BY h")
+        s"FROM $cat.sffa FULL OUTER JOIN $cat.sffb ON ka = kb GROUP BY h")
     def rows(): Map[String, (Long, Option[Long])] =
       spark.read.format("graft-store").load(mvDir).collect()
         .map(r => (if (r.isNullAt(0)) "(null)" else r.getString(0)) ->
@@ -262,7 +271,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       assert(rows() === Map("p" -> ((1L, Some(2L))), "(null)" -> ((1L, Some(10L))),
         "q" -> ((1L, Some(7L)))))
       // B-side commit flips A's matched row back: kb=1 leaves
-      spark.sql("DELETE FROM mvcat.sffb WHERE kb = 1")
+      spark.sql(s"DELETE FROM $cat.sffb WHERE kb = 1")
       q.processAllAvailable()
       assert(rows() === Map("(null)" -> ((2L, Some(12L))),
         "q" -> ((1L, Some(7L)))))
@@ -276,7 +285,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     Seq(("a", 1L), ("a", 9L), ("b", 5L), ("b", 7L)).toDF("g", "v")
       .write.format("graft-store").mode("overwrite").save(srcDir)
     GraftMview.create(spark, mvDir,
-      "SELECT g, count(*) AS n, min(v) AS mn, max(v) AS mx FROM mvcat.src7 GROUP BY g")
+      s"SELECT g, count(*) AS n, min(v) AS mn, max(v) AS mx FROM $cat.src7 GROUP BY g")
     def rows() = spark.read.format("graft-store").load(mvDir)
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     assert(rows() === Map("a" -> ((2L, 1L, 9L)), "b" -> ((2L, 5L, 7L))))
@@ -288,13 +297,13 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     assert(rows() === Map("a" -> ((3L, 1L, 100L)), "b" -> ((2L, 5L, 7L)),
       "c" -> ((1L, 3L, 3L))))
     // removal of a's MAX: only a rescans; b/c keep their stored values
-    spark.sql("DELETE FROM mvcat.src7 WHERE v = 100")
+    spark.sql(s"DELETE FROM $cat.src7 WHERE v = 100")
     val (m2, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m2 === "incremental")
     assert(rows() === Map("a" -> ((2L, 1L, 9L)), "b" -> ((2L, 5L, 7L)),
       "c" -> ((1L, 3L, 3L))))
     // removal that empties a group drops it despite min/max columns
-    spark.sql("DELETE FROM mvcat.src7 WHERE g = 'c'")
+    spark.sql(s"DELETE FROM $cat.src7 WHERE g = 'c'")
     GraftMview.refresh(spark, mvDir)
     assert(rows() === Map("a" -> ((2L, 1L, 9L)), "b" -> ((2L, 5L, 7L))))
     // and it all still equals a recompute
@@ -313,17 +322,17 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       val e = intercept[Exception](GraftMview.create(spark, s"$catBase/mvx", sql))
       assert(e.getMessage.contains(frag), s"message '${e.getMessage}' lacks '$frag'")
     }
-    refuse("SELECT g, sum(v) AS s FROM mvcat.src5 GROUP BY g", "count(*)")
+    refuse(s"SELECT g, sum(v) AS s FROM $cat.src5 GROUP BY g", "count(*)")
     // count(DISTINCT col) is a FEATURE now (dup-count companion); other
     // distinct aggregates still refuse with guidance
     refuse("SELECT g, sum(DISTINCT v) AS s, count(*) AS n " +
-      "FROM mvcat.src5 GROUP BY g", "count(DISTINCT col)")
+      s"FROM $cat.src5 GROUP BY g", "count(DISTINCT col)")
     // (GROUP BY upper(g) is now a supported expression key — see the
     // calendar tests; aggregates over expressions still refuse)
-    refuse("SELECT g, sum(v + 1) AS s, count(*) AS n FROM mvcat.src5 GROUP BY g",
+    refuse(s"SELECT g, sum(v + 1) AS s, count(*) AS n FROM $cat.src5 GROUP BY g",
       "plain columns")
-    refuse("SELECT count(*) AS n FROM mvcat.src5", "group")
-    refuse("SELECT g, count(*) AS __n_x FROM mvcat.src5 GROUP BY g", "reserved")
+    refuse(s"SELECT count(*) AS n FROM $cat.src5", "group")
+    refuse(s"SELECT g, count(*) AS __n_x FROM $cat.src5 GROUP BY g", "reserved")
   }
 
   test("NULL group key merges with its stored row (null-safe maintenance joins)") {
@@ -334,7 +343,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       .map { case (g, v) => (g.orNull, v) }.toDF("g", "v")
       .write.format("graft-store").mode("overwrite").save(srcDir)
     GraftMview.create(spark, mvDir,
-      "SELECT g, count(*) AS n, sum(v) AS s, min(v) AS mn FROM mvcat.src8 GROUP BY g")
+      s"SELECT g, count(*) AS n, sum(v) AS s, min(v) AS mn FROM $cat.src8 GROUP BY g")
     def rows() = spark.read.format("graft-store").load(mvDir)
       .select("g", "n", "s", "mn").collect()
       .map(r => Option(r.getString(0)) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
@@ -342,7 +351,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     // churn the NULL group: insert + remove its stored min
     Seq((null.asInstanceOf[String], 7L)).toDF("g", "v")
       .write.format("graft-store").mode("append").save(srcDir)
-    spark.sql("DELETE FROM mvcat.src8 WHERE v = 10")
+    spark.sql(s"DELETE FROM $cat.src8 WHERE v = 10")
     val (m, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m === "incremental")
     // stored count/sum MERGE with the delta (2+1-1, 30+7-10) and the
@@ -359,7 +368,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       .map { case (g, v) => (g, v.map(Long.box).orNull) }.toDF("g", "v")
       .write.format("graft-store").mode("overwrite").save(srcDir)
     GraftMview.create(spark, mvDir,
-      "SELECT g, count(*) AS n, sum(v) AS s, count(v) AS nn FROM mvcat.src9 GROUP BY g")
+      s"SELECT g, count(*) AS n, sum(v) AS s, count(v) AS nn FROM $cat.src9 GROUP BY g")
     def rows() = spark.read.format("graft-store").load(mvDir)
       .select("g", "n", "s", "nn").collect()
       .map(r => r.getString(0) ->
@@ -371,7 +380,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     Seq(("n", None), ("one", None)).map { case (g, v: Option[Long]) =>
       (g, v.map(Long.box).orNull) }.toDF("g", "v")
       .write.format("graft-store").mode("append").save(srcDir)
-    spark.sql("DELETE FROM mvcat.src9 WHERE v = 4")
+    spark.sql(s"DELETE FROM $cat.src9 WHERE v = 4")
     val (m, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m === "incremental")
     assert(rows() === Map("a" -> ((2L, Some(3L), 2L)),
@@ -395,8 +404,8 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     Seq((1L, "east"), (2L, "west"), (3L, "east"))
       .toDF("pk", "region").write.format("graft-store").mode("overwrite").save(dim)
     val (n0, _) = GraftMview.create(spark, mvDir,
-      "SELECT region, count(*) AS n, sum(v) AS s, avg(v) AS a FROM mvcat.jf " +
-        "JOIN mvcat.jd ON fk = pk GROUP BY region")
+      s"SELECT region, count(*) AS n, sum(v) AS s, avg(v) AS a FROM $cat.jf " +
+        s"JOIN $cat.jd ON fk = pk GROUP BY region")
     assert(n0 === 2)
     def rows() = spark.read.format("graft-store").load(mvDir)
       .select("region", "n", "s", "a").collect()
@@ -421,13 +430,13 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     // key 3 changes region east->west (group mass MOVES between groups)
     Seq((4L, "north")).toDF("pk", "region")
       .write.format("graft-store").mode("append").save(dim)
-    spark.sql("UPDATE mvcat.jd SET region = 'west' WHERE pk = 3")
+    spark.sql(s"UPDATE $cat.jd SET region = 'west' WHERE pk = 3")
     val (m2, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m2 === "incremental")
     assert(rows() === recompute())
     assert(rows()("north") === ((1L, 50L, 50.0)))
     // BOTH sides churn between refreshes; a dim delete vanishes a group
-    spark.sql("DELETE FROM mvcat.jd WHERE region = 'north'")
+    spark.sql(s"DELETE FROM $cat.jd WHERE region = 'north'")
     Seq((1L, 3L)).toDF("fk", "v").write.format("graft-store").mode("append").save(fact)
     val (m3, _, vanished, _) = GraftMview.refresh(spark, mvDir)
     assert(m3 === "incremental" && vanished === 1L)
@@ -454,8 +463,8 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
         concat(lit("g"), col("id") % 8).as("grp"))
       .write.format("graft-store").mode("overwrite").save(dim)
     GraftMview.create(spark, mvDir,
-      "SELECT grp, count(*) AS n, sum(v) AS s FROM mvcat.jf2 " +
-        "JOIN mvcat.jd2 ON fk = pk GROUP BY grp")
+      s"SELECT grp, count(*) AS n, sum(v) AS s FROM $cat.jf2 " +
+        s"JOIN $cat.jd2 ON fk = pk GROUP BY grp")
     Seq((0L, 1L)).toDF("fk", "v")
       .write.format("graft-store").mode("append").save(fact)
     val before = GraftStoreFormat.scannedFileSlices.sum()
@@ -494,8 +503,8 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
         concat(lit("n"), col("id")).as("nname"))
       .write.format("graft-store").mode("overwrite").save(d2)
     val (n0, _) = GraftMview.create(spark, mvDir,
-      "SELECT nname, count(*) AS n, sum(v) AS s FROM mvcat.n3f " +
-        "JOIN mvcat.n3c ON fk = pk JOIN mvcat.n3n ON nk = nk2 GROUP BY nname")
+      s"SELECT nname, count(*) AS n, sum(v) AS s FROM $cat.n3f " +
+        s"JOIN $cat.n3c ON fk = pk JOIN $cat.n3n ON nk = nk2 GROUP BY nname")
     assert(n0 === 10)
     def rows() = spark.read.format("graft-store").load(mvDir)
       .select("nname", "n", "s").collect()
@@ -521,12 +530,12 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       "unchurned side must contribute no pinned-fact term (fact base is 16 files)")
     assert(rows() === recompute())
     // MIDDLE-dim churn: UPDATE moves group mass across nations
-    spark.sql("UPDATE mvcat.n3c SET nk = (nk + 1) % 10 WHERE pk % 7 = 0")
+    spark.sql(s"UPDATE $cat.n3c SET nk = (nk + 1) % 10 WHERE pk % 7 = 0")
     val (m2, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m2 === "incremental")
     assert(rows() === recompute())
     // LEAF-dim churn: a nation vanishes (its group leaves the view)
-    spark.sql("DELETE FROM mvcat.n3n WHERE nk2 = 9")
+    spark.sql(s"DELETE FROM $cat.n3n WHERE nk2 = 9")
     val (m3, _, vanished, _) = GraftMview.refresh(spark, mvDir)
     assert(m3 === "incremental" && vanished >= 1L)
     assert(rows() === recompute() && !rows().contains("n9"))
@@ -553,13 +562,13 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     // no key path reaches c — some delta term would be a cartesian, so
     // creation refuses rather than refresh exploding later
     val e = intercept[Exception](GraftMview.create(spark, s"$catBase/dgmv",
-      "SELECT bg, count(*) AS n, sum(cv) AS s FROM mvcat.dga " +
-        "JOIN mvcat.dgb ON ak = bk JOIN mvcat.dgc ON ak = bk GROUP BY bg"))
+      s"SELECT bg, count(*) AS n, sum(cv) AS s FROM $cat.dga " +
+        s"JOIN $cat.dgb ON ak = bk JOIN $cat.dgc ON ak = bk GROUP BY bg"))
     assert(e.getMessage.contains("disconnected"), e.getMessage)
     // a same-table "pair" is refused at the key level
     val e2 = intercept[Exception](GraftMview.create(spark, s"$catBase/dgmv",
-      "SELECT bg, count(*) AS n, sum(cv) AS s FROM mvcat.dga " +
-        "JOIN mvcat.dgb ON ak = bk JOIN mvcat.dgc ON bk = bk GROUP BY bg"))
+      s"SELECT bg, count(*) AS n, sum(cv) AS s FROM $cat.dga " +
+        s"JOIN $cat.dgb ON ak = bk JOIN $cat.dgc ON bk = bk GROUP BY bg"))
     assert(e2.getMessage.contains("two different tables"), e2.getMessage)
     // legacy 2-table "a:b" key property decodes to side indices (0,1) —
     // views stored before the N-way format keep refreshing unmigrated
@@ -587,8 +596,8 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     Seq((1L, "east"), (2L, "west"))
       .toDF("pk", "region").write.format("graft-store").mode("overwrite").save(dim)
     val (n0, _) = GraftMview.create(spark, mvDir,
-      "SELECT region, count(*) AS n, sum(v) AS s FROM mvcat.lof " +
-        "LEFT JOIN mvcat.lod ON fk = pk GROUP BY region")
+      s"SELECT region, count(*) AS n, sum(v) AS s FROM $cat.lof " +
+        s"LEFT JOIN $cat.lod ON fk = pk GROUP BY region")
     assert(n0 === 3) // east, west, NULL
     def rows() = spark.read.format("graft-store").load(mvDir)
       .select("region", "n", "s").collect()
@@ -623,15 +632,15 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     val ckpt = Files.createTempDirectory("graft-mv-ckpt").toString
     spark.conf.set("spark.graft.checkpointDir", ckpt)
     try {
-      spark.sql("DELETE FROM mvcat.lod WHERE pk = 1")
+      spark.sql(s"DELETE FROM $cat.lod WHERE pk = 1")
       val (m3, _, vanished, _) = GraftMview.refresh(spark, mvDir)
       assert(m3 === "incremental" && vanished === 1L)
       assert(rows() === recompute())
       assert(!rows().contains(Some("east")) && rows()(None) === ((3L, 80L)))
     } finally spark.conf.unset("spark.graft.checkpointDir")
     // (d) dim UPDATE moves mass between groups; fact DELETE in same round
-    spark.sql("UPDATE mvcat.lod SET region = 'south' WHERE pk = 2")
-    spark.sql("DELETE FROM mvcat.lof WHERE fk = 8")
+    spark.sql(s"UPDATE $cat.lod SET region = 'south' WHERE pk = 2")
+    spark.sql(s"DELETE FROM $cat.lof WHERE fk = 8")
     val (m4, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m4 === "incremental")
     assert(rows() === recompute())
@@ -655,8 +664,8 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     Seq((0L, "east"), (1L, "west"))
       .toDF("nk2", "nname").write.format("graft-store").mode("overwrite").save(d2)
     val (n0, _) = GraftMview.create(spark, mvDir,
-      "SELECT nname, count(*) AS n, sum(v) AS s FROM mvcat.lc3f " +
-        "LEFT JOIN mvcat.lc3c ON fk = pk LEFT JOIN mvcat.lc3n ON nk = nk2 " +
+      s"SELECT nname, count(*) AS n, sum(v) AS s FROM $cat.lc3f " +
+        s"LEFT JOIN $cat.lc3c ON fk = pk LEFT JOIN $cat.lc3n ON nk = nk2 " +
         "GROUP BY nname")
     assert(n0 === 3) // east, west, NULL (fk=9 + pk=3's dangling nk)
     def rows() = spark.read.format("graft-store").load(mvDir)
@@ -683,7 +692,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     // transition), and pk=1 moves nation east→west (mass moves)
     Seq((9L, 1L)).toDF("pk", "nk")
       .write.format("graft-store").mode("append").save(d1)
-    spark.sql("UPDATE mvcat.lc3c SET nk = 1 WHERE pk = 1")
+    spark.sql(s"UPDATE $cat.lc3c SET nk = 1 WHERE pk = 1")
     val (m2, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m2 === "incremental")
     assert(rows() === recompute())
@@ -699,22 +708,22 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     assert(rows() === recompute())
     assert(rows()(Some("north")) === ((1L, 7L)))
     assert(!rows().contains(Some("east")))
-    spark.sql("DELETE FROM mvcat.lc3n WHERE nname = 'west'")
+    spark.sql(s"DELETE FROM $cat.lc3n WHERE nname = 'west'")
     val (m4, _, vanished, _) = GraftMview.refresh(spark, mvDir)
     assert(m4 === "incremental" && vanished >= 1L)
     assert(rows() === recompute() && !rows().contains(Some("west")))
     // TWO sides churn between refreshes; then noop at head
     Seq((3L, 1000L)).toDF("fk", "v")
       .write.format("graft-store").mode("append").save(fact)
-    spark.sql("DELETE FROM mvcat.lc3c WHERE pk = 2")
+    spark.sql(s"DELETE FROM $cat.lc3c WHERE pk = 2")
     val (m5, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m5 === "incremental")
     assert(rows() === recompute())
     assert(GraftMview.refresh(spark, mvDir)._1 === "noop")
     // the REWRITE serves the same chain shape — and only when fresh
     def q() = spark.sql(
-      "SELECT nname, count(*) AS n, sum(v) AS s FROM mvcat.lc3f " +
-        "LEFT JOIN mvcat.lc3c ON fk = pk LEFT JOIN mvcat.lc3n ON nk = nk2 " +
+      s"SELECT nname, count(*) AS n, sum(v) AS s FROM $cat.lc3f " +
+        s"LEFT JOIN $cat.lc3c ON fk = pk LEFT JOIN $cat.lc3n ON nk = nk2 " +
         "GROUP BY nname")
     assert(q().queryExecution.optimizedPlan.toString.contains(mvDir))
     assert(q().collect().map(r => Option(r.getString(0)) ->
@@ -739,8 +748,8 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     Seq((100L, "b1")).toDF("bk", "blab")
       .write.format("graft-store").mode("overwrite").save(d2)
     GraftMview.create(spark, mvDir,
-      "SELECT alab, blab, count(*) AS n, sum(v) AS s FROM mvcat.ls3f " +
-        "LEFT JOIN mvcat.ls3a ON k1 = ak LEFT JOIN mvcat.ls3b ON k2 = bk " +
+      s"SELECT alab, blab, count(*) AS n, sum(v) AS s FROM $cat.ls3f " +
+        s"LEFT JOIN $cat.ls3a ON k1 = ak LEFT JOIN $cat.ls3b ON k2 = bk " +
         "GROUP BY alab, blab")
     def rows() = spark.read.format("graft-store").load(mvDir)
       .select("alab", "blab", "n", "s").collect()
@@ -765,7 +774,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     assert(m1 === "incremental" && rows() === recompute())
     Seq((200L, "b2")).toDF("bk", "blab")
       .write.format("graft-store").mode("append").save(d2)
-    spark.sql("DELETE FROM mvcat.ls3a WHERE alab = 'a2'")
+    spark.sql(s"DELETE FROM $cat.ls3a WHERE alab = 'a2'")
     val (m2, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m2 === "incremental")
     assert(rows() === recompute())
@@ -787,8 +796,8 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     Seq((100L, "x")).toDF("ek2", "lab")
       .write.format("graft-store").mode("overwrite").save(da2)
     GraftMview.create(spark, mvA,
-      "SELECT lab, count(*) AS n, sum(v) AS s FROM mvcat.mxaf " +
-        "JOIN mvcat.mxa1 ON fk = pk LEFT JOIN mvcat.mxa2 ON ek = ek2 " +
+      s"SELECT lab, count(*) AS n, sum(v) AS s FROM $cat.mxaf " +
+        s"JOIN $cat.mxa1 ON fk = pk LEFT JOIN $cat.mxa2 ON ek = ek2 " +
         "GROUP BY lab")
     def rowsA() = spark.read.format("graft-store").load(mvA)
       .select("lab", "n", "s").collect()
@@ -820,15 +829,15 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     assert(rowsA()(Option("y")) === ((3L, 154L)) && !rowsA().contains(None))
     // REWRITE: the mixed shape serves only its exact type sequence
     def qMixed() = spark.sql(
-      "SELECT lab, count(*) AS n, sum(v) AS s FROM mvcat.mxaf " +
-        "JOIN mvcat.mxa1 ON fk = pk LEFT JOIN mvcat.mxa2 ON ek = ek2 " +
+      s"SELECT lab, count(*) AS n, sum(v) AS s FROM $cat.mxaf " +
+        s"JOIN $cat.mxa1 ON fk = pk LEFT JOIN $cat.mxa2 ON ek = ek2 " +
         "GROUP BY lab")
     assert(qMixed().queryExecution.optimizedPlan.toString.contains(mvA))
     assert(qMixed().collect().map(r => Option(r.getString(0)) ->
       (r.getLong(1), r.getLong(2))).toMap === recomputeA())
     val qAllLeft = spark.sql(
-      "SELECT lab, count(*) AS n, sum(v) AS s FROM mvcat.mxaf " +
-        "LEFT JOIN mvcat.mxa1 ON fk = pk LEFT JOIN mvcat.mxa2 ON ek = ek2 " +
+      s"SELECT lab, count(*) AS n, sum(v) AS s FROM $cat.mxaf " +
+        s"LEFT JOIN $cat.mxa1 ON fk = pk LEFT JOIN $cat.mxa2 ON ek = ek2 " +
         "GROUP BY lab")
     assert(!qAllLeft.queryExecution.optimizedPlan.toString.contains(mvA),
       "an all-left query must not read the mixed view")
@@ -846,8 +855,8 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     Seq((100L, "p"), (200L, "q")).toDF("bek2", "blab")
       .write.format("graft-store").mode("overwrite").save(db2)
     GraftMview.create(spark, mvB,
-      "SELECT blab, count(*) AS n, sum(w) AS s FROM mvcat.mxbf " +
-        "LEFT JOIN mvcat.mxb1 ON bk = bpk JOIN mvcat.mxb2 ON bek = bek2 " +
+      s"SELECT blab, count(*) AS n, sum(w) AS s FROM $cat.mxbf " +
+        s"LEFT JOIN $cat.mxb1 ON bk = bpk JOIN $cat.mxb2 ON bek = bek2 " +
         "GROUP BY blab")
     def rowsB() = spark.read.format("graft-store").load(mvB)
       .select("blab", "n", "s").collect()
@@ -864,12 +873,12 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     assert(rowsB() === Map(Option("p") -> ((1L, 10L)), Option("q") -> ((1L, 5L))))
     // churn: D1 delete makes bk=2 null-extended → the INNER D2 step then
     // DROPS it; D2 delete kills a lab group
-    spark.sql("DELETE FROM mvcat.mxb1 WHERE bpk = 2")
+    spark.sql(s"DELETE FROM $cat.mxb1 WHERE bpk = 2")
     assert(GraftMview.refresh(spark, mvB)._1 === "incremental")
     assert(rowsB() === recomputeB() && !rowsB().contains(Option("q")))
     Seq((9L, 100L)).toDF("bpk", "bek")
       .write.format("graft-store").mode("append").save(db1)
-    spark.sql("DELETE FROM mvcat.mxb2 WHERE blab = 'p'")
+    spark.sql(s"DELETE FROM $cat.mxb2 WHERE blab = 'p'")
     assert(GraftMview.refresh(spark, mvB)._1 === "incremental")
     assert(rowsB() === recomputeB())
     assert(rowsB().isEmpty) // no D2 rows survive for any matched bek
@@ -890,8 +899,8 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
         concat(lit("g"), col("id") % 8).as("grp"))
       .write.format("graft-store").mode("overwrite").save(dim)
     GraftMview.create(spark, mvDir,
-      "SELECT grp, count(*) AS n, sum(v) AS s FROM mvcat.lof2 " +
-        "LEFT JOIN mvcat.lod2 ON fk = pk GROUP BY grp")
+      s"SELECT grp, count(*) AS n, sum(v) AS s FROM $cat.lof2 " +
+        s"LEFT JOIN $cat.lod2 ON fk = pk GROUP BY grp")
     // dim churn: ONE key converts from null-extended to matched. The
     // refresh must scope its fact rescans to that key, not the corpus —
     // stats pruning keeps opened slices below the 8-file fact base.
@@ -927,7 +936,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("pk", "grp")
       .write.format("graft-store").mode("overwrite").save(dim)
     GraftMview.create(spark, mvDir,
-      "SELECT grp, count(*) AS n, sum(v) AS s FROM mvcat.jw1 JOIN mvcat.jw2 " +
+      s"SELECT grp, count(*) AS n, sum(v) AS s FROM $cat.jw1 JOIN $cat.jw2 " +
         "ON fk = pk WHERE v > 0 GROUP BY grp")
     def rows() = spark.read.format("graft-store").load(mvDir)
       .select("grp", "n", "s").collect()
@@ -937,7 +946,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     // dim flip that moves ONLY the rows passing the predicate
     Seq((2L, -100L), (2L, 7L)).toDF("fk", "v")
       .write.format("graft-store").mode("append").save(fact)
-    spark.sql("UPDATE mvcat.jw2 SET grp = 'b' WHERE pk = 3")
+    spark.sql(s"UPDATE $cat.jw2 SET grp = 'b' WHERE pk = 3")
     val (m, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m === "incremental")
     assert(rows() === Map("a" -> ((1L, 10L)), "b" -> ((3L, 57L))))
@@ -950,7 +959,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     Seq(("a", 1L), ("a", 2L), ("b", 10L), (null.asInstanceOf[String], 5L))
       .toDF("g", "v").write.format("graft-store").mode("overwrite").save(srcDir)
     GraftMview.create(spark, mvDir,
-      "SELECT g, count(*) AS n, sum(v) AS s, avg(v) AS a FROM mvcat.rwsrc GROUP BY g")
+      s"SELECT g, count(*) AS n, sum(v) AS s, avg(v) AS a FROM $cat.rwsrc GROUP BY g")
     def q() = spark.read.format("graft-store").load(srcDir)
       .groupBy("g").agg(count(lit(1)).as("n"), sum("v").as("s"), avg("v").as("am"))
     def servedFromMv(df: org.apache.spark.sql.DataFrame): Boolean =
@@ -989,7 +998,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     finally spark.conf.unset("spark.graft.mv.rewrite")
     // SQL path through the catalog rewrites too
     val sqlDf = spark.sql(
-      "SELECT g, count(*) AS n, sum(v) AS s FROM mvcat.rwsrc GROUP BY g")
+      s"SELECT g, count(*) AS n, sum(v) AS s FROM $cat.rwsrc GROUP BY g")
     assert(sqlDf.queryExecution.optimizedPlan.toString.contains(mvDir))
     assert(sqlDf.collect().map(_.getLong(1)).sum === 5L)
   }
@@ -1006,11 +1015,11 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     Seq((1L, "east"), (2L, "west"))
       .toDF("pk", "region").write.format("graft-store").mode("overwrite").save(dim)
     GraftMview.create(spark, leftMv,
-      "SELECT region, count(*) AS n, sum(v) AS s FROM mvcat.lrf " +
-        "LEFT JOIN mvcat.lrd ON fk = pk GROUP BY region")
+      s"SELECT region, count(*) AS n, sum(v) AS s FROM $cat.lrf " +
+        s"LEFT JOIN $cat.lrd ON fk = pk GROUP BY region")
     GraftMview.create(spark, innerMv,
-      "SELECT region, count(*) AS n, sum(v) AS s FROM mvcat.lrf " +
-        "JOIN mvcat.lrd ON fk = pk GROUP BY region")
+      s"SELECT region, count(*) AS n, sum(v) AS s FROM $cat.lrf " +
+        s"JOIN $cat.lrd ON fk = pk GROUP BY region")
     def f() = spark.read.format("graft-store").load(fact)
     def dm() = spark.read.format("graft-store").load(dim)
     def qLeft() = { val a = f(); val b = dm()
@@ -1061,7 +1070,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     // SQL path serves the left shape too
     GraftMview.refresh(spark, innerMv)
     val sqlDf = spark.sql("SELECT region, count(*) AS n, sum(v) AS s " +
-      "FROM mvcat.lrf LEFT JOIN mvcat.lrd ON fk = pk GROUP BY region")
+      s"FROM $cat.lrf LEFT JOIN $cat.lrd ON fk = pk GROUP BY region")
     assert(sqlDf.queryExecution.optimizedPlan.toString.contains(leftMv))
     assert(rows(sqlDf)(None) === ((1L, 99L)))
   }
@@ -1075,19 +1084,19 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       .toDF("g1", "g2", "v")
       .write.format("graft-store").mode("overwrite").save(srcDir)
     GraftMview.create(spark, mvDir,
-      "SELECT g1, g2, count(*) AS n, sum(v) AS s FROM mvcat.hfsrc GROUP BY g1, g2")
+      s"SELECT g1, g2, count(*) AS n, sum(v) AS s FROM $cat.hfsrc GROUP BY g1, g2")
     def served(df: org.apache.spark.sql.DataFrame): Boolean =
       df.queryExecution.optimizedPlan.toString.contains(mvDir)
     // HAVING is a Filter ABOVE the aggregate: the rollup serves, the
     // predicate applies to served rows — no extra machinery
-    val having = spark.sql("SELECT g1, sum(v) AS s FROM mvcat.hfsrc " +
+    val having = spark.sql(s"SELECT g1, sum(v) AS s FROM $cat.hfsrc " +
       "GROUP BY g1 HAVING sum(v) > 10")
     assert(served(having), "HAVING rollup must serve from the view")
     assert(having.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       === Map("a" -> 13L, "b" -> 12L, "c" -> 20L))
     // HAVING over an aggregate NOT in the select list (analyzer plants a
     // hidden output) serves too
-    val having2 = spark.sql("SELECT g1, sum(v) AS s FROM mvcat.hfsrc " +
+    val having2 = spark.sql(s"SELECT g1, sum(v) AS s FROM $cat.hfsrc " +
       "GROUP BY g1 HAVING count(*) > 1")
     assert(served(having2))
     assert(having2.collect().map(_.getString(0)).toSet === Set("a", "b"))
@@ -1095,7 +1104,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     // to the internal re-aggregations over stored rows
     val filtered = spark.sql(
       "SELECT g1, count(*) AS n, sum(v) FILTER (WHERE g2 = 'x') AS sx " +
-        "FROM mvcat.hfsrc GROUP BY g1")
+        s"FROM $cat.hfsrc GROUP BY g1")
     assert(served(filtered), "group-column FILTER must serve")
     assert(filtered.collect()
       .map(r => r.getString(0) -> (r.getLong(1), if (r.isNullAt(2)) -1L else r.getLong(2))).toMap
@@ -1103,7 +1112,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     // FILTER at the EXACT group set forces the re-aggregation form
     val exactF = spark.sql(
       "SELECT g1, g2, count(*) FILTER (WHERE g2 = 'x') AS nx " +
-        "FROM mvcat.hfsrc GROUP BY g1, g2")
+        s"FROM $cat.hfsrc GROUP BY g1, g2")
     assert(served(exactF))
     assert(exactF.collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
@@ -1113,7 +1122,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     // against stored rows — refuses, and the base-table answer is right
     val collapsed = spark.sql(
       "SELECT g1, sum(v) FILTER (WHERE v > 2) AS sv " +
-        "FROM mvcat.hfsrc GROUP BY g1")
+        s"FROM $cat.hfsrc GROUP BY g1")
     assert(!served(collapsed), "collapsed-column FILTER must refuse")
     assert(collapsed.collect()
       .map(r => r.getString(0) -> (if (r.isNullAt(1)) -1L else r.getLong(1))).toMap
@@ -1130,7 +1139,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     // FINER view: grouped by (g, h) with every recombinable aggregate
     GraftMview.create(spark, mvDir,
       "SELECT g, h, count(*) AS n, sum(v) AS s, avg(v) AS a, min(v) AS mn, " +
-        "max(v) AS mx, stddev_samp(v) AS sd FROM mvcat.rusrc GROUP BY g, h")
+        s"max(v) AS mx, stddev_samp(v) AS sd FROM $cat.rusrc GROUP BY g, h")
     def base() = spark.read.format("graft-store").load(srcDir)
     def servedFromMv(df: org.apache.spark.sql.DataFrame): Boolean =
       df.queryExecution.optimizedPlan.toString.contains(mvDir)
@@ -1170,7 +1179,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       .toDF("g", "h", "v").write.format("graft-store").mode("overwrite").save(srcDir)
     // UNFILTERED view at (g, h) grain
     GraftMview.create(spark, mvDir,
-      "SELECT g, h, count(*) AS n, sum(v) AS s FROM mvcat.fgsrc GROUP BY g, h")
+      s"SELECT g, h, count(*) AS n, sum(v) AS s FROM $cat.fgsrc GROUP BY g, h")
     def base() = spark.read.format("graft-store").load(srcDir)
     def servedFromMv(df: org.apache.spark.sql.DataFrame): Boolean =
       df.queryExecution.optimizedPlan.toString.contains(mvDir)
@@ -1205,7 +1214,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       .toDF("g", "v").write.format("graft-store").mode("overwrite").save(srcDir)
     // FILTERED view: WHERE over a non-group column
     GraftMview.create(spark, mvDir,
-      "SELECT g, count(*) AS n, sum(v) AS s FROM mvcat.fvsrc WHERE v > 5 GROUP BY g")
+      s"SELECT g, count(*) AS n, sum(v) AS s FROM $cat.fvsrc WHERE v > 5 GROUP BY g")
     def base() = spark.read.format("graft-store").load(srcDir)
     def servedFromMv(df: org.apache.spark.sql.DataFrame): Boolean =
       df.queryExecution.optimizedPlan.toString.contains(mvDir)
@@ -1250,7 +1259,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     Seq((5, 1L), (10, 2L), (15, 4L), (20, 8L), (3, 99L))
       .toDF("day", "v").write.format("graft-store").mode("overwrite").save(srcDir)
     GraftMview.create(spark, mvDir,
-      "SELECT day, count(*) AS n, sum(v) AS s FROM mvcat.risrc " +
+      s"SELECT day, count(*) AS n, sum(v) AS s FROM $cat.risrc " +
         "WHERE day >= 5 GROUP BY day")
     def base() = spark.read.format("graft-store").load(srcDir)
     def servedFromMv(df: org.apache.spark.sql.DataFrame): Boolean =
@@ -1299,7 +1308,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       .toDF("pk", "seg").write.format("graft-store").mode("overwrite").save(dimDir)
     GraftMview.create(spark, mvDir,
       "SELECT seg, count(*) AS n, sum(v) AS s " +
-        "FROM mvcat.jrfact JOIN mvcat.jrdim ON fk = pk GROUP BY seg")
+        s"FROM $cat.jrfact JOIN $cat.jrdim ON fk = pk GROUP BY seg")
     def fact() = spark.read.format("graft-store").load(factDir)
     def dim() = spark.read.format("graft-store").load(dimDir)
     def servedFromMv(df: org.apache.spark.sql.DataFrame): Boolean =
@@ -1349,7 +1358,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     Seq((1L, "a", 500L), (2L, "b", 600L), (3L, "a", 700L))
       .toDF("pk", "seg", "v").write.format("graft-store").mode("overwrite").save(dimDir)
     GraftMview.create(spark, mvDir,
-      "SELECT fk, count(*) AS n, sum(v) AS s FROM mvcat.jbfact GROUP BY fk")
+      s"SELECT fk, count(*) AS n, sum(v) AS s FROM $cat.jbfact GROUP BY fk")
     def fact() = spark.read.format("graft-store").load(factDir)
     def dim() = spark.read.format("graft-store").load(dimDir)
     def servedFromMv(df: org.apache.spark.sql.DataFrame): Boolean =
@@ -1385,7 +1394,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       .groupBy("seg").agg(count(lit(1)).as("n"))))
     // DIM churn does NOT stale: the dim side is read live through the
     // query's own relation — a segment correction shows up immediately
-    spark.sql("UPDATE mvcat.jbdim SET seg = 'c' WHERE pk = 2")
+    spark.sql(s"UPDATE $cat.jbdim SET seg = 'c' WHERE pk = 2")
     val q3 = q()
     assert(servedFromMv(q3), "dim churn must not stale a fact-side MV")
     assert(q3.collect().map(r => r.getString(0) -> r.getLong(2)).toMap ===
@@ -1418,7 +1427,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     Seq((10L, "north", 5L), (20L, "south", 99L))
       .toDF("nk2", "region", "w2").write.format("graft-store").mode("overwrite").save(d2Dir)
     GraftMview.create(spark, mvDir,
-      "SELECT fk, count(*) AS n, sum(v) AS s FROM mvcat.jb2fact GROUP BY fk")
+      s"SELECT fk, count(*) AS n, sum(v) AS s FROM $cat.jb2fact GROUP BY fk")
     def servedFromMv(df: org.apache.spark.sql.DataFrame): Boolean =
       df.queryExecution.optimizedPlan.toString.contains(mvDir)
     def fact() = spark.read.format("graft-store").load(factDir)
@@ -1463,8 +1472,8 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     Seq((10L, "north"), (20L, "south"))
       .toDF("nk2", "region").write.format("graft-store").mode("overwrite").save(natDir)
     GraftMview.create(spark, mvDir,
-      "SELECT nk, count(*) AS n, sum(v) AS s FROM mvcat.pjfact " +
-        "JOIN mvcat.pjcust ON ck = pk GROUP BY nk")
+      s"SELECT nk, count(*) AS n, sum(v) AS s FROM $cat.pjfact " +
+        s"JOIN $cat.pjcust ON ck = pk GROUP BY nk")
     def servedFromMv(df: org.apache.spark.sql.DataFrame): Boolean =
       df.queryExecution.optimizedPlan.toString.contains(mvDir)
     def fact() = spark.read.format("graft-store").load(factDir)
@@ -1493,7 +1502,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       .groupBy("region").agg(sum(f3("v")).as("s"))),
       "an outbound key outside the group set must refuse")
     // churn on the covered DIM side stales (both watermarks gate)
-    spark.sql(s"UPDATE mvcat.pjcust SET nk = 20 WHERE pk = 3")
+    spark.sql(s"UPDATE $cat.pjcust SET nk = 20 WHERE pk = 3")
     assert(!servedFromMv(q()), "covered-dim churn must stale the join MV")
     GraftMview.refresh(spark, mvDir)
     val q4 = q()
@@ -1510,7 +1519,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       .toDF("k", "g", "v")
       .write.format("graft-store").mode("overwrite").save(srcDir)
     GraftMview.create(spark, mvDir,
-      "SELECT g, k, count(*) AS n, sum(v) AS s FROM mvcat.indsrc " +
+      s"SELECT g, k, count(*) AS n, sum(v) AS s FROM $cat.indsrc " +
         "WHERE k IN (1, 2, 3, 4) GROUP BY g, k")
     def base() = spark.read.format("graft-store").load(srcDir)
     def servedFromMv(df: org.apache.spark.sql.DataFrame): Boolean =
@@ -1556,7 +1565,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       ("2024-02-20", 20L), ("2024-03-09", 7L)), "overwrite")
     GraftMview.create(spark, mvDir,
       "SELECT date_trunc('month', ts) AS mon, count(*) AS n, sum(v) AS s, " +
-        "min(v) AS lo FROM mvcat.calsrc GROUP BY date_trunc('month', ts)")
+        s"min(v) AS lo FROM $cat.calsrc GROUP BY date_trunc('month', ts)")
     def rows() = spark.read.format("graft-store").load(mvDir)
       .select(date_format($"mon", "yyyy-MM").as("m"), $"n", $"s", $"lo")
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
@@ -1588,9 +1597,9 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       }
       assert(e.getMessage.contains(frag), s"got: ${e.getMessage}")
     }
-    refuse("SELECT count(*) AS n FROM mvcat.calrefsrc GROUP BY rand()",
+    refuse(s"SELECT count(*) AS n FROM $cat.calrefsrc GROUP BY rand()",
       "non-deterministic GROUP BY expression")
-    refuse("SELECT count(*) AS n FROM mvcat.calrefsrc " +
+    refuse(s"SELECT count(*) AS n FROM $cat.calrefsrc " +
       "GROUP BY date_trunc('month', ts)",
       "must appear in the SELECT")
   }
@@ -1606,7 +1615,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       .write.format("graft-store").mode("overwrite").save(srcDir)
     GraftMview.create(spark, mvDir,
       "SELECT date_trunc('month', ts) AS mon, g, count(*) AS n, sum(v) AS s " +
-        "FROM mvcat.calrwsrc GROUP BY date_trunc('month', ts), g")
+        s"FROM $cat.calrwsrc GROUP BY date_trunc('month', ts), g")
     def base() = spark.read.format("graft-store").load(srcDir)
     def servedFromMv(df: org.apache.spark.sql.DataFrame): Boolean =
       df.queryExecution.optimizedPlan.toString.contains(mvDir)
@@ -1654,7 +1663,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     GraftMview.create(spark, mvDir,
       "SELECT g, u, count(*) AS n, " +
         "hll_sketch_estimate(hll_sketch_agg(k, 12)) AS dk " +
-        "FROM mvcat.hllsrc GROUP BY g, u")
+        s"FROM $cat.hllsrc GROUP BY g, u")
     def mv() = spark.read.format("graft-store").load(mvDir)
       .select($"g", $"u", $"dk").collect()
       .map(r => (r.getString(0), if (r.isNullAt(1)) null else r.getLong(1)) ->
@@ -1711,7 +1720,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     val e1 = intercept[IllegalArgumentException] {
       GraftMview.create(spark, s"$catBase/hllbad1",
         "SELECT g, count(*) AS n, hll_sketch_agg(k) AS sk " +
-          "FROM mvcat.hllsrc GROUP BY g")
+          s"FROM $cat.hllsrc GROUP BY g")
     }
     assert(e1.getMessage.contains("wrap it"))
     // hll over a JOIN view is a FEATURE since round 14 (the removal
@@ -1720,7 +1729,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     GraftMview.create(spark, jmv,
       "SELECT seg, count(*) AS n, " +
         "hll_sketch_estimate(hll_sketch_agg(k, 12)) AS dk " +
-        "FROM mvcat.hllsrc JOIN mvcat.hlldim ON u = pk GROUP BY seg")
+        s"FROM $cat.hllsrc JOIN $cat.hlldim ON u = pk GROUP BY seg")
     def jmvRows() = spark.read.format("graft-store").load(jmv)
       .select($"seg", $"dk").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -1778,33 +1787,33 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     // LEFT OUTER (2 plain tables) and 2-table FULL OUTER are FEATURES,
     // and RIGHT OUTER flip-normalizes — the remaining join-type refusals
     // are NESTED full-outer shapes and outer shapes with nested joins
-    refuse("SELECT a.grp, count(*) AS n FROM mvcat.jr1 FULL OUTER JOIN " +
-      "(SELECT b.pk, b.grp FROM mvcat.jr2 b JOIN mvcat.jr3 c ON b.pk = c.pk) a " +
+    refuse(s"SELECT a.grp, count(*) AS n FROM $cat.jr1 FULL OUTER JOIN " +
+      s"(SELECT b.pk, b.grp FROM $cat.jr2 b JOIN $cat.jr3 c ON b.pk = c.pk) a " +
       "ON fk = a.pk GROUP BY a.grp", "two plain graft tables")
     Seq((1L, 5L)).toDF("pk2", "w")
       .write.format("graft-store").mode("overwrite").save(s"$catBase/jr4")
     // left-deep LEFT chains are a FEATURE; the refusals are a nested
     // join on a RIGHT side, an INNER join inside the chain, and an ON
     // keying the new table to more than one earlier table
-    refuse("SELECT grp, count(*) AS n FROM mvcat.jr1 " +
-      "LEFT JOIN (SELECT pk, grp FROM mvcat.jr2 JOIN mvcat.jr4 ON pk = pk2) " +
+    refuse(s"SELECT grp, count(*) AS n FROM $cat.jr1 " +
+      s"LEFT JOIN (SELECT pk, grp FROM $cat.jr2 JOIN $cat.jr4 ON pk = pk2) " +
       "ON fk = pk GROUP BY grp", "right side")
     // INNER steps inside a chain are a FEATURE (mixed chains), and a
     // RIGHT step flips into one; FULL steps inside a chain still refuse
-    refuse("SELECT grp, count(*) AS n FROM mvcat.jr1 " +
-      "FULL JOIN mvcat.jr2 ON fk = pk " +
-      "LEFT JOIN mvcat.jr4 ON pk = pk2 GROUP BY grp",
+    refuse(s"SELECT grp, count(*) AS n FROM $cat.jr1 " +
+      s"FULL JOIN $cat.jr2 ON fk = pk " +
+      s"LEFT JOIN $cat.jr4 ON pk = pk2 GROUP BY grp",
       "INNER or LEFT OUTER steps")
-    refuse("SELECT grp, count(*) AS n FROM mvcat.jr1 " +
-      "LEFT JOIN mvcat.jr2 ON fk = pk " +
-      "LEFT JOIN mvcat.jr4 ON pk = pk2 AND fk = pk2 GROUP BY grp",
+    refuse(s"SELECT grp, count(*) AS n FROM $cat.jr1 " +
+      s"LEFT JOIN $cat.jr2 ON fk = pk " +
+      s"LEFT JOIN $cat.jr4 ON pk = pk2 AND fk = pk2 GROUP BY grp",
       "exactly ONE earlier table")
     // min/max over a join view is a FEATURE since round 14 (the removal
     // rescan rebuilds the join for touched groups) — see
     // GraftMviewServeExtSpec; no refusal here anymore
-    refuse("SELECT grp, count(*) AS n FROM mvcat.jr1 JOIN mvcat.jr3 " +
+    refuse(s"SELECT grp, count(*) AS n FROM $cat.jr1 JOIN $cat.jr3 " +
       "ON fk = pk GROUP BY grp", "more than one side")
-    refuse("SELECT a.fk AS k, count(*) AS n FROM mvcat.jr1 a JOIN mvcat.jr1 b " +
+    refuse(s"SELECT a.fk AS k, count(*) AS n FROM $cat.jr1 a JOIN $cat.jr1 b " +
       "ON a.fk = b.fk GROUP BY a.fk", "self-join")
   }
 
@@ -1818,7 +1827,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
         when(col("u") >= 0, col("u"))) // -1 → NULL (never counts)
       .write.format("graft-store").mode("overwrite").save(srcDir)
     val (n0, _) = GraftMview.create(spark, mvDir,
-      "SELECT g, count(*) AS n, count(DISTINCT u) AS d FROM mvcat.ddsrc GROUP BY g")
+      s"SELECT g, count(*) AS n, count(DISTINCT u) AS d FROM $cat.ddsrc GROUP BY g")
     assert(n0 === 3)
     def rows() = spark.read.format("graft-store").load(mvDir)
       .select("g", "n", "d").collect()
@@ -1836,7 +1845,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     // DELETES: one of a's two u=1 rows (a keeps the value — dup-count);
     // b's only u=1 row (the value VANISHES from b while SURVIVING in a);
     // all of c (the whole group leaves)
-    spark.sql("DELETE FROM mvcat.ddsrc WHERE id IN (2, 4, 6)")
+    spark.sql(s"DELETE FROM $cat.ddsrc WHERE id IN (2, 4, 6)")
     val (m2, _, vanished, _) = GraftMview.refresh(spark, mvDir)
     assert(m2 === "incremental" && vanished === 1L)
     assert(rows() === recompute())
@@ -1844,7 +1853,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     assert(rows()("b") === ((1L, 0L)), "last-copy removal must drop b's value")
     assert(!rows().contains("c"))
     // MIXED round: update moves a value between groups; noop at head
-    spark.sql("UPDATE mvcat.ddsrc SET g = 'd' WHERE id = 8")
+    spark.sql(s"UPDATE $cat.ddsrc SET g = 'd' WHERE id = 8")
     Seq((10L, "b", 5L)).toDF("id", "g", "u")
       .write.format("graft-store").mode("append").save(srcDir)
     val (m3, _, _, _) = GraftMview.refresh(spark, mvDir)
@@ -1855,7 +1864,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     // REWRITE: the stored exact distinct serves the same call at the
     // exact group set; stale never serves
     def q() = spark.sql(
-      "SELECT g, count(*) AS n, count(DISTINCT u) AS d FROM mvcat.ddsrc GROUP BY g")
+      s"SELECT g, count(*) AS n, count(DISTINCT u) AS d FROM $cat.ddsrc GROUP BY g")
     assert(q().queryExecution.optimizedPlan.toString.contains(mvDir))
     assert(q().collect().map(r => r.getString(0) -> r.getLong(2)).toMap
       === recompute().map { case (k, (_, dd)) => k -> dd })
@@ -1884,8 +1893,8 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     Seq((1L, "east"), (2L, "west"), (3L, "east"))
       .toDF("pk", "region").write.format("graft-store").mode("overwrite").save(dim)
     GraftMview.create(spark, mvDir,
-      "SELECT region, count(*) AS n, count(DISTINCT v) AS dv FROM mvcat.djf " +
-        "JOIN mvcat.djd ON fk = pk GROUP BY region")
+      s"SELECT region, count(*) AS n, count(DISTINCT v) AS dv FROM $cat.djf " +
+        s"JOIN $cat.djd ON fk = pk GROUP BY region")
     def rows() = spark.read.format("graft-store").load(mvDir)
       .select("region", "n", "dv").collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -1904,7 +1913,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     assert(m1 === "incremental")
     assert(rows() === recompute() && rows()("east") === ((4L, 3L)))
     // dim churn: pk=3 moves east→west (v=30 and the dup'd 10 move with it)
-    spark.sql("UPDATE mvcat.djd SET region = 'west' WHERE pk = 3")
+    spark.sql(s"UPDATE $cat.djd SET region = 'west' WHERE pk = 3")
     val (m2, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m2 === "incremental")
     assert(rows() === recompute())
@@ -1918,45 +1927,45 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     Seq(("a", 1L), ("a", 2L), ("b", 10L))
       .toDF("g", "v").write.format("graft-store").mode("overwrite").save(srcDir)
     // CREATE: standard DDL text, no CALL-procedure string nesting
-    val created = spark.sql("CREATE MATERIALIZED VIEW mvcat.ddlmv AS " +
-      "SELECT g, count(*) AS n, sum(v) AS s FROM mvcat.ddlsrc GROUP BY g")
+    val created = spark.sql(s"CREATE MATERIALIZED VIEW $cat.ddlmv AS " +
+      s"SELECT g, count(*) AS n, sum(v) AS s FROM $cat.ddlsrc GROUP BY g")
       .collect()(0)
     assert(created.getLong(0) === 2) // rows_materialized
-    assert(spark.sql("SELECT * FROM mvcat.ddlmv").count() === 2)
+    assert(spark.sql(s"SELECT * FROM $cat.ddlmv").count() === 2)
     // IF NOT EXISTS is a no-op; a bare re-CREATE refuses
-    assert(spark.sql("CREATE MATERIALIZED VIEW IF NOT EXISTS mvcat.ddlmv AS " +
-      "SELECT g, count(*) AS n FROM mvcat.ddlsrc GROUP BY g").collect().isEmpty)
+    assert(spark.sql(s"CREATE MATERIALIZED VIEW IF NOT EXISTS $cat.ddlmv AS " +
+      s"SELECT g, count(*) AS n FROM $cat.ddlsrc GROUP BY g").collect().isEmpty)
     val dup = intercept[Exception](spark.sql(
-      "CREATE MATERIALIZED VIEW mvcat.ddlmv AS " +
-        "SELECT g, count(*) AS n FROM mvcat.ddlsrc GROUP BY g"))
+      s"CREATE MATERIALIZED VIEW $cat.ddlmv AS " +
+        s"SELECT g, count(*) AS n FROM $cat.ddlsrc GROUP BY g"))
     assert(dup.getMessage.contains("already exists"))
     // REFRESH: incremental through churn; FULL forces a rebuild
     Seq(("a", 100L), ("c", 5L)).toDF("g", "v")
       .write.format("graft-store").mode("append").save(srcDir)
-    val r1 = spark.sql("REFRESH MATERIALIZED VIEW mvcat.ddlmv").collect()(0)
+    val r1 = spark.sql(s"REFRESH MATERIALIZED VIEW $cat.ddlmv").collect()(0)
     assert(r1.getString(0) === "incremental")
     assert(spark.read.format("graft-store").load(mvDir).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
       === Map("a" -> ((3L, 103L)), "b" -> ((1L, 10L)), "c" -> ((1L, 5L))))
-    val r2 = spark.sql("REFRESH MATERIALIZED VIEW mvcat.ddlmv FULL").collect()(0)
+    val r2 = spark.sql(s"REFRESH MATERIALIZED VIEW $cat.ddlmv FULL").collect()(0)
     assert(r2.getString(0) === "full")
     // the DDL-created view serves the transparent rewrite like any other
     val q = spark.sql(
-      "SELECT g, count(*) AS n, sum(v) AS s FROM mvcat.ddlsrc GROUP BY g")
+      s"SELECT g, count(*) AS n, sum(v) AS s FROM $cat.ddlsrc GROUP BY g")
     assert(q.queryExecution.optimizedPlan.toString.contains(mvDir))
     // DROP: the view dies AND its dep pointer leaves the source (no
     // stale-probe tax on future queries); IF EXISTS tolerates the gap,
     // a bare DROP not
-    spark.sql("DROP MATERIALIZED VIEW mvcat.ddlmv")
+    spark.sql(s"DROP MATERIALIZED VIEW $cat.ddlmv")
     assert(intercept[Exception](
-      spark.sql("SELECT * FROM mvcat.ddlmv").collect()) != null)
+      spark.sql(s"SELECT * FROM $cat.ddlmv").collect()) != null)
     assert(!GraftStoreFormat.readMvDeps(srcDir,
       spark.sparkContext.hadoopConfiguration).contains(mvDir),
       "DROP must deregister the dep pointer from the source")
-    assert(spark.sql("DROP MATERIALIZED VIEW IF EXISTS mvcat.ddlmv")
+    assert(spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.ddlmv")
       .collect().isEmpty)
     val gone = intercept[Exception](
-      spark.sql("DROP MATERIALIZED VIEW mvcat.ddlmv"))
+      spark.sql(s"DROP MATERIALIZED VIEW $cat.ddlmv"))
     assert(gone.getMessage.contains("no materialized view"))
     // a non-graft name falls through to the stock parser, which parses
     // the MATERIALIZED grammar but refuses to execute it — Spark's own
@@ -1965,7 +1974,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       spark.sql("CREATE MATERIALIZED VIEW spark_catalog.default.x AS SELECT 1"))
     // and DROP TABLE-style misuse on a plain table refuses with guidance
     val plain = intercept[Exception](
-      spark.sql("DROP MATERIALIZED VIEW mvcat.ddlsrc"))
+      spark.sql(s"DROP MATERIALIZED VIEW $cat.ddlsrc"))
     assert(plain.getMessage.contains("plain table"))
   }
 
@@ -1979,8 +1988,8 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     Seq((1L, "east"), (2L, "west"))
       .toDF("pk", "region").write.format("graft-store").mode("overwrite").save(dim)
     GraftMview.create(spark, mvDir,
-      "SELECT region, count(*) AS n, count(DISTINCT v) AS dv FROM mvcat.dlf " +
-        "LEFT JOIN mvcat.dld ON fk = pk GROUP BY region")
+      s"SELECT region, count(*) AS n, count(DISTINCT v) AS dv FROM $cat.dlf " +
+        s"LEFT JOIN $cat.dld ON fk = pk GROUP BY region")
     def rows() = spark.read.format("graft-store").load(mvDir)
       .select("region", "n", "dv").collect()
       .map(r => Option(r.getString(0)) -> (r.getLong(1), r.getLong(2))).toMap
@@ -2003,7 +2012,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     // dim delete: east's rows fall back to NULL — value 10 re-enters the
     // NULL group's set (already counted there? no: north holds 10, NULL
     // group is fresh) and east vanishes
-    spark.sql("DELETE FROM mvcat.dld WHERE pk = 1")
+    spark.sql(s"DELETE FROM $cat.dld WHERE pk = 1")
     assert(GraftMview.refresh(spark, mvDir)._1 === "incremental")
     assert(rows() === recompute())
     assert(rows()(None) === ((2L, 1L)) && !rows().contains(Option("east")))
@@ -2023,7 +2032,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       .toDF("g", "v").write.format("graft-store").mode("overwrite").save(srcDir)
     GraftMview.create(spark, mvDir,
       "SELECT g, count(*) AS n, var_samp(v) AS vs, var_pop(v) AS vp, " +
-        "stddev_samp(v) AS ds, stddev_pop(v) AS dp FROM mvcat.vsrc GROUP BY g")
+        s"stddev_samp(v) AS ds, stddev_pop(v) AS dp FROM $cat.vsrc GROUP BY g")
     def rows() = spark.read.format("graft-store").load(mvDir)
       .select("g", "n", "vs", "vp", "ds", "dp").collect()
       .map(r => r.getString(0) -> (r.getLong(1),
@@ -2055,7 +2064,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     // new group d — all maintained from signed (n, sum, sumsq) deltas
     Seq(("a", 1.0), ("d", 3.0), ("d", 8.0)).toDF("g", "v")
       .write.format("graft-store").mode("append").save(srcDir)
-    spark.sql("DELETE FROM mvcat.vsrc WHERE g = 'b' AND v = 5.0")
+    spark.sql(s"DELETE FROM $cat.vsrc WHERE g = 'b' AND v = 5.0")
     val (m, _, vanished, _) = GraftMview.refresh(spark, mvDir)
     assert(m === "incremental" && vanished === 1L, "b vanished (both rows matched)")
     close(rows(), recompute())
@@ -2077,7 +2086,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       .map { case (g, v) => (g, v.map(Double.box).orNull) }.toDF("g", "v")
       .write.format("graft-store").mode("overwrite").save(srcDir)
     GraftMview.create(spark, mvDir,
-      "SELECT g, count(*) AS n, avg(v) AS a FROM mvcat.src10 GROUP BY g")
+      s"SELECT g, count(*) AS n, avg(v) AS a FROM $cat.src10 GROUP BY g")
     def rows() = spark.read.format("graft-store").load(mvDir)
       .select("g", "n", "a").collect()
       .map(r => r.getString(0) ->
@@ -2092,7 +2101,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     Seq(("a", Some(9.0)), ("z", Some(7.0))).map { case (g, v) =>
       (g, v.map(Double.box).orNull) }.toDF("g", "v")
       .write.format("graft-store").mode("append").save(srcDir)
-    spark.sql("DELETE FROM mvcat.src10 WHERE g = 'b'")
+    spark.sql(s"DELETE FROM $cat.src10 WHERE g = 'b'")
     val (m, _, vanished, _) = GraftMview.refresh(spark, mvDir)
     assert(m === "incremental")
     assert(vanished === 1L)
@@ -2117,7 +2126,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     Seq((10L, "north"), (20L, "south"))
       .toDF("nk2", "region").write.format("graft-store").mode("overwrite").save(d2Dir)
     GraftMview.create(spark, mvDir,
-      "SELECT fk, count(*) AS n, sum(v) AS s FROM mvcat.ljfact GROUP BY fk")
+      s"SELECT fk, count(*) AS n, sum(v) AS s FROM $cat.ljfact GROUP BY fk")
     def servedFromMv(df: org.apache.spark.sql.DataFrame): Boolean =
       df.queryExecution.optimizedPlan.toString.contains(mvDir)
     def fact() = spark.read.format("graft-store").load(factDir)
@@ -2187,8 +2196,8 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       .toDF("pk", "seg").write.format("graft-store").mode("overwrite").save(dimDir)
     // the VIEW is fact ⟕ dim (left, null-extended groups stored)
     GraftMview.create(spark, mvDir,
-      "SELECT fk, count(*) AS n, sum(v) AS s FROM mvcat.lvfact " +
-        "LEFT JOIN mvcat.lvdim ON fk = pk GROUP BY fk")
+      s"SELECT fk, count(*) AS n, sum(v) AS s FROM $cat.lvfact " +
+        s"LEFT JOIN $cat.lvdim ON fk = pk GROUP BY fk")
     def servedFromMv(df: org.apache.spark.sql.DataFrame): Boolean =
       df.queryExecution.optimizedPlan.toString.contains(mvDir)
     // the QUERY is fact ⟕ x ⋈ dim: its positional left-index SET ({1})
@@ -2225,8 +2234,8 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       .toDF("pk", "seg").write.format("graft-store").mode("overwrite").save(dimDir)
     // written RIGHT JOIN (fact preserved) — recognized as fact ⟕ dim
     GraftMview.create(spark, mvDir,
-      "SELECT seg, count(*) AS n, sum(v) AS s FROM mvcat.rodim " +
-        "RIGHT JOIN mvcat.rofact ON pk = fk GROUP BY seg")
+      s"SELECT seg, count(*) AS n, sum(v) AS s FROM $cat.rodim " +
+        s"RIGHT JOIN $cat.rofact ON pk = fk GROUP BY seg")
     def expect(): Map[String, (Long, Long)] = {
       val f = spark.read.format("graft-store").load(factDir)
       val dd = spark.read.format("graft-store").load(dimDir)
@@ -2250,7 +2259,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     // matched), delete null-extends matched rows (fk=2 matched → null)
     Seq((3L, "c")).toDF("pk", "seg")
       .write.format("graft-store").mode("append").save(dimDir)
-    spark.sql("DELETE FROM mvcat.rodim WHERE pk = 2")
+    spark.sql(s"DELETE FROM $cat.rodim WHERE pk = 2")
     val (m2, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m2 === "incremental")
     assert(got() === expect())
@@ -2275,7 +2284,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       .write.format("graft-store").mode("overwrite").save(srcDir)
     GraftMview.create(spark, mvDir,
       "SELECT g, h, count(*) AS n, count(DISTINCT u) AS dc " +
-        "FROM mvcat.dcrsrc GROUP BY g, h")
+        s"FROM $cat.dcrsrc GROUP BY g, h")
     def servedFromMv(df: org.apache.spark.sql.DataFrame): Boolean =
       df.queryExecution.optimizedPlan.toString.contains(mvDir)
     def src() = spark.read.format("graft-store").load(srcDir)
@@ -2305,7 +2314,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     // companion keeps serving the rollup exactly
     Seq(("z", "x", 9L), ("c", "y", 1L)).toDF("g", "h", "u")
       .write.format("graft-store").mode("append").save(srcDir)
-    spark.sql("DELETE FROM mvcat.dcrsrc WHERE g = 'b'")
+    spark.sql(s"DELETE FROM $cat.dcrsrc WHERE g = 'b'")
     val (m, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m === "incremental")
     val q4 = src().groupBy("g").agg(countDistinct(col("u")).as("dc"))
@@ -2327,7 +2336,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       .toDF("pk", "seg").write.format("graft-store").mode("overwrite").save(dimDir)
     GraftMview.create(spark, mvDir,
       "SELECT seg, fk, count(*) AS n, count(DISTINCT u) AS dc " +
-        "FROM mvcat.dcjfact JOIN mvcat.dcjdim ON fk = pk GROUP BY seg, fk")
+        s"FROM $cat.dcjfact JOIN $cat.dcjdim ON fk = pk GROUP BY seg, fk")
     def servedFromMv(df: org.apache.spark.sql.DataFrame): Boolean =
       df.queryExecution.optimizedPlan.toString.contains(mvDir)
     def q(groupSeg: Boolean) = {
@@ -2368,7 +2377,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       .write.format("graft-store").mode("overwrite").save(srcDir)
     GraftMview.create(spark, mvDir,
       "SELECT g, day, count(*) AS n, sum(v) AS s, avg(v) AS av " +
-        "FROM mvcat.mxsrc WHERE day < 10 GROUP BY g, day")
+        s"FROM $cat.mxsrc WHERE day < 10 GROUP BY g, day")
     // complement rows: day in [10, 20), one beyond the query range, one
     // NULL day (in neither the view nor a day < 20 query — 3-valued)
     Seq(("a", Option(15L), 7L), ("c", Option(12L), 5L), ("b", Option(25L), 99L),
@@ -2433,8 +2442,8 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       .toDF("pk", "seg").write.format("graft-store").mode("overwrite").save(dimDir)
     // join view covering day < 10 only
     GraftMview.create(spark, mvDir,
-      "SELECT seg, day, count(*) AS n, sum(v) AS s FROM mvcat.mjfact " +
-        "JOIN mvcat.mjdim ON fk = pk WHERE day < 10 GROUP BY seg, day")
+      s"SELECT seg, day, count(*) AS n, sum(v) AS s FROM $cat.mjfact " +
+        s"JOIN $cat.mjdim ON fk = pk WHERE day < 10 GROUP BY seg, day")
     def servedFromMv(df: org.apache.spark.sql.DataFrame): Boolean =
       df.queryExecution.optimizedPlan.toString.contains(mvDir)
     def q() = {
@@ -2471,7 +2480,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     // calendar-keyed view covering v < 100 only
     GraftMview.create(spark, mvDir,
       "SELECT date_trunc('month', ts) AS mon, count(*) AS n, sum(v) AS s " +
-        "FROM mvcat.cmxsrc WHERE v < 100 GROUP BY date_trunc('month', ts)")
+        s"FROM $cat.cmxsrc WHERE v < 100 GROUP BY date_trunc('month', ts)")
     def servedFromMv(df: org.apache.spark.sql.DataFrame): Boolean =
       df.queryExecution.optimizedPlan.toString.contains(mvDir)
     // wider WHERE: the complement side must group by the re-parsed
@@ -2502,8 +2511,8 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       .toDF("pk", "seg").write.format("graft-store").mode("overwrite").save(dimDir)
     // LEFT OUTER view covering day < 10 only
     GraftMview.create(spark, mvDir,
-      "SELECT seg, day, count(*) AS n, sum(v) AS s FROM mvcat.mlfact " +
-        "LEFT JOIN mvcat.mldim ON fk = pk WHERE day < 10 GROUP BY seg, day")
+      s"SELECT seg, day, count(*) AS n, sum(v) AS s FROM $cat.mlfact " +
+        s"LEFT JOIN $cat.mldim ON fk = pk WHERE day < 10 GROUP BY seg, day")
     def servedFromMv(df: org.apache.spark.sql.DataFrame): Boolean =
       df.queryExecution.optimizedPlan.toString.contains(mvDir)
     val f = spark.read.format("graft-store").load(factDir)
@@ -2533,7 +2542,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       .toDF("pk", "seg").write.format("graft-store").mode("overwrite").save(dimDir)
     // fact-grain MV covering day < 10 only (fk is the outbound group key)
     GraftMview.create(spark, mvDir,
-      "SELECT fk, day, count(*) AS n, sum(v) AS s FROM mvcat.mbfact " +
+      s"SELECT fk, day, count(*) AS n, sum(v) AS s FROM $cat.mbfact " +
         "WHERE day < 10 GROUP BY fk, day")
     def servedFromMv(df: org.apache.spark.sql.DataFrame): Boolean =
       df.queryExecution.optimizedPlan.toString.contains(mvDir)
@@ -2583,7 +2592,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       "overwrite")
     GraftMview.create(spark, mvDir,
       "SELECT g, h, count(*) AS n, sum(va) AS sa, sum(wb) AS sb " +
-        "FROM mvcat.fofa FULL OUTER JOIN mvcat.fofb ON ka = kb GROUP BY g, h")
+        s"FROM $cat.fofa FULL OUTER JOIN $cat.fofb ON ka = kb GROUP BY g, h")
     def expect(): Set[(String, String, Long, Option[Long], Option[Long])] = {
       val fa = spark.read.format("graft-store").load(faDir)
       val fb = spark.read.format("graft-store").load(fbDir)
@@ -2615,7 +2624,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     assert(got() === expect(), "B-side flip via A churn diverged")
     // side-B churn that flips an A row: kb=1 leaves — fa's ka=1 row
     // transitions matched → null-extended
-    spark.sql("DELETE FROM mvcat.fofb WHERE kb = 1")
+    spark.sql(s"DELETE FROM $cat.fofb WHERE kb = 1")
     val (m2, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m2 === "incremental")
     assert(got() === expect(), "A-side flip via B churn diverged")
@@ -2626,7 +2635,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     assert(m3 === "incremental")
     assert(got() === expect(), "NULL-key churn diverged")
     // delete a NULL-key row (removal through the linear term)
-    spark.sql("DELETE FROM mvcat.fofa WHERE ka IS NULL AND va = 99")
+    spark.sql(s"DELETE FROM $cat.fofa WHERE ka IS NULL AND va = 99")
     val (m4, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m4 === "incremental")
     assert(got() === expect(), "NULL-key removal diverged")

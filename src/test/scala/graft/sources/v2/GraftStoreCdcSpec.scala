@@ -171,4 +171,42 @@ class GraftStoreCdcSpec extends AnyFunSuite with graft.SparkTestBase {
       .option("readChangeFeed", "true").option("startSnapshot", "0")
       .load(dir)) === Set((1L, 1L, "delete", 2L)))
   }
+
+  test("a position recorded by two delete stores is one delete, emitted once") {
+    val dir = tmpDir()
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = GraftStoreFormat.fs(dir, conf)
+    spark.range(0, 20).selectExpr("id", "id * 10 as v").coalesce(1)
+      .write.format("graft-store").option("dmlMode", "mor")
+      .mode("overwrite").save(dir) // snap 0
+    GraftStoreOps.deleteWhereMor(spark, dir, col("id") === 5L) // snap 1
+    val store = GraftStoreFormat.readLatestManifest(dir, conf).get.deletes.head
+    // publish `copies` of the store's file in one commit on top of `base`
+    def commitCopies(base: GraftManifest, copies: Int): Unit = {
+      val extra = (1 to copies).map { _ =>
+        val n = s"copy-${java.util.UUID.randomUUID().toString.take(8)}-${store.name}"
+        org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(dir, store.name),
+          fs, new org.apache.hadoop.fs.Path(dir, n), false, conf)
+        store.copy(name = n)
+      }
+      val ms = GraftStoreFormat.listManifests(dir, conf)
+      assert(GraftStoreFormat.commitManifest(dir, conf,
+        base.copy(deletes = base.deletes ++ extra, txn = None, cdc = None,
+          dropCdc = Seq.empty), GraftStoreFormat.nextSeq(ms)))
+    }
+    def feed(snap: Int): Seq[(Long, Long, String, Long)] =
+      spark.read.format("graft-store").option("readChangeFeed", "true")
+        .option("startSnapshot", snap.toString).option("endSnapshot", snap.toString)
+        .load(dir).select("id", "v", "change_type", "_commit_snapshot").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3))).toSeq
+    assert(feed(1) === Seq((5L, 50L, "delete", 1L)))
+    // a later store re-recording an already-masked position deletes nothing
+    commitCopies(GraftStoreFormat.readLatestManifest(dir, conf).get, 1) // snap 2
+    assert(feed(2).isEmpty)
+    // two new stores of one commit recording the same position: one delete
+    GraftStoreOps.restoreSnapshot(spark, dir, 0) // snap 3: no masks
+    commitCopies(GraftStoreFormat.readLatestManifest(dir, conf).get, 2) // snap 4
+    assert(feed(4) === Seq((5L, 50L, "delete", 4L)))
+    assert(spark.read.format("graft-store").load(dir).count() === 19L)
+  }
 }
