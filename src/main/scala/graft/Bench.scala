@@ -1,16 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
+/** Times every SparkEntry query and prints two JSON lines. The full line
+  * also goes to `/tmp/bench.json` and, when an output path is given as the
+  * only argument, to that file: `runMain graft.Bench BENCH_LOCAL.json`. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // optional comma-separated subset for targeted profiling
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
@@ -89,13 +84,10 @@ object Bench {
     val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"setup_s":$setups,"query_s":$queryS,"query_total":$queryTotal,"repeat_query_s":$repeatJson,"errors":$errs,"sf":"$sfDir"}"""
     println(json)
     // Persist the full-precision JSON where the driver / a human can always
-    // recover it (stdout has proven lossy three rounds running). A SUBSET
-    // run (SPARK_GRAFT_ONLY) must not clobber the committed full-run
-    // snapshot — it goes to /tmp only (learned the hard way).
-    val sinks =
-      if (only.isDefined) Seq("/tmp/bench.json")
-      else Seq("/tmp/bench.json", "BENCH_LOCAL.json")
-    for (p <- sinks) {
+    // recover it (stdout has proven lossy three rounds running). Only an
+    // explicit output path writes a file outside /tmp, so no run overwrites
+    // a committed snapshot as a side effect.
+    for (p <- "/tmp/bench.json" +: args.headOption.toSeq) {
       try {
         val w = new java.io.PrintWriter(new java.io.File(p))
         try w.println(json) finally w.close()

@@ -1,16 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted physical plans for the plan-quality audit
-  * (pushdown / pruning / broadcast / TakeOrdered / codegen spans). */
+  * (pushdown / pruning / broadcast / TakeOrdered / codegen spans, and the
+  * [[GraftExtensions]] rules such as TopKPerGroup). */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(8)
     val dir = "/root/testdata/sf0.01"
     val names = if (args.nonEmpty) args.toSeq else Seq(
       "q01_scan_agg", "q02_projection", "q07_topk", "q09_join3", "q10_semi_join")

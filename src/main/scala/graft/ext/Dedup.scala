@@ -130,25 +130,22 @@ object Dedup {
     * document yields 190 pairs); cluster output is O(k) — the form a dedup
     * pipeline actually consumes ("keep cluster_id == doc_id, drop the rest").
     *
-    * Components run via [[graft.operators.Graph.connectedComponentsStars]]
-    * (Large-Star/Small-Star edge rewriting): measured ~2× faster than the
-    * label-propagation loop on the LSH pair graph — each round shuffles only
-    * the (shrinking) EDGE set, where the label loop joins the full vertex
-    * frame every iteration; and it converges in O(log n) rounds regardless
+    * Components run via [[graft.operators.Graph.connectedComponents]]
+    * (Large-Star/Small-Star edge rewriting): each round shuffles only the
+    * (shrinking) EDGE set, and it converges in O(log n) rounds regardless
     * of diameter. Rounds run only until the edge set fits under
     * [[graft.operators.Graph.LocalFinishEdges]]; union-find on the driver
     * finishes from there, so a pair graph that small runs no round at all.
-    * `maxIters` bounds the rounds: running out over the bound throws. The
-    * two algorithms are proven equivalent on the same oracle (q86 vs q110
-    * hash-collide; GraphSpec equality on adversarial chains), so this
-    * routing is a pure plan change. */
+    * `maxIters` bounds the rounds: running out over the bound throws.
+    * q86 and q101 run this path against recursive-CTE oracles; q110 runs
+    * the distributed rounds alone against q86's oracle. */
   def nearDupClusters(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int, rowsPerBand: Int, shingleN: Int, minJaccard: Double,
       maxIters: Int = 20): DataFrame = {
     // nearDupPairs returns an already-persisted, already-materialized frame
     val pairs = nearDupPairs(df, idCol, textCol, numHashes, rowsPerBand, shingleN, minJaccard)
     try {
-      graft.operators.Graph.connectedComponentsStars(
+      graft.operators.Graph.connectedComponents(
         df.select(col(idCol).as("id")),
         pairs.select(col("id1").as("src"), col("id2").as("dst")),
         maxIters)

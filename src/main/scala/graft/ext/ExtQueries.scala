@@ -18,6 +18,18 @@ object ExtQueries {
   private def docs(s: SparkSession, d: String) = Tables.documents(s, d)
   private def emb(s: SparkSession, d: String) = Tables.embeddings(s, d)
 
+  /** The documents plus planted near-duplicates: every tenth document
+    * again, with its first token dropped and its id + 100000. The corpus
+    * of the near-dup pair and cluster queries (q27, q86, q101, q110);
+    * their oracles build the same `corpus` CTE. */
+  private def nearDupCorpus(s: SparkSession, d: String): DataFrame = {
+    val base = docs(s, d).select("doc_id", "text")
+    val mutated = base.filter(col("doc_id") % 10 === 0)
+      .select((col("doc_id") + 100000).as("doc_id"),
+        concat_ws(" ", slice(tokens(col("text")), 2, 1000000)).as("text"))
+    base.unionByName(mutated)
+  }
+
   /** DuckDB-side normalized text (mirror of graft.ext.normText). */
   private val oNorm =
     "trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\\s]', '', 'g'), '\\s+', ' ', 'g'))"
@@ -141,15 +153,8 @@ object ExtQueries {
   val q27MinHashPairs = QuerySpec(
     "q27_minhash_pairs", "EXT-dedup-minhash-lsh",
     "MinHash-LSH candidate pairs verified by shingle Jaccard (planted near-dups)",
-    (s, d) => {
-      val base = docs(s, d).select("doc_id", "text")
-      val mutated = base.filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + 100000).as("doc_id"),
-          concat_ws(" ", slice(tokens(col("text")), 2, 1000000)).as("text"))
-      val corpus = base.unionByName(mutated)
-      Dedup.nearDupPairs(corpus, "doc_id", "text",
-        numHashes = 8, rowsPerBand = 2, shingleN = 3, minJaccard = 0.3)
-    },
+    (s, d) => Dedup.nearDupPairs(nearDupCorpus(s, d), "doc_id", "text",
+      numHashes = 8, rowsPerBand = 2, shingleN = 3, minJaccard = 0.3),
     Some(s"""WITH corpus AS (
             |  SELECT doc_id, text FROM documents
             |  UNION ALL
@@ -181,40 +186,20 @@ object ExtQueries {
   // ---------------------------------------------------------------- near-dup connected components
   /** Connected components over the verified near-dup graph — the cluster
     * form a dedup pipeline actually consumes ("keep cluster_id == doc_id").
-    * Spark side: [[graft.operators.Graph.connectedComponents]] — iterative
-    * min-label propagation to FIXPOINT (each iteration one co-partitioned
-    * join + agg, checkpointed to truncate lineage; early-exits when no label
-    * changes), called directly on the LSH pair graph (the production
-    * [[Dedup.nearDupClusters]] path routes through the faster stars
-    * algorithm — q101 exercises that; this query keeps the label-prop
-    * formulation under oracle check). Oracle side: DuckDB computes the same
-    * fixpoint declaratively with a recursive CTE (min reachable id over
-    * symmetrized edges), so the iterative distributed algorithm is
-    * hash-checked against an independent transitive-closure formulation —
-    * not against itself. */
+    * Spark side: the production path, [[Dedup.nearDupClusters]] (LSH pairs,
+    * then [[graft.operators.Graph.connectedComponents]], whose star rounds
+    * hand off to union-find on the driver once the edge set fits — this
+    * pair graph fits from the start). Oracle side: DuckDB computes the
+    * same fixpoint declaratively with a recursive CTE (min reachable id
+    * over symmetrized edges), so the clustering is hash-checked against an
+    * independent transitive-closure formulation, not against itself. */
   val q86Components = QuerySpec(
     "q86_components", "EXT-dedup-components",
-    "connected components of the near-dup pair graph (min-label fixpoint vs recursive-CTE oracle)",
-    (s, d) => {
-      val base = docs(s, d).select("doc_id", "text")
-      val mutated = base.filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + 100000).as("doc_id"),
-          concat_ws(" ", slice(tokens(col("text")), 2, 1000000)).as("text"))
-      val corpus = base.unionByName(mutated)
-      val pairs = Dedup.nearDupPairs(corpus, "doc_id", "text",
-        numHashes = 8, rowsPerBand = 2, shingleN = 3, minJaccard = 0.3)
-      val labels =
-        try {
-          // near-cliques (diameter ≤ 3): the pointer-jumping shortcut's
-          // self-join costs more than the iteration it would save
-          graft.operators.Graph.connectedComponents(
-            corpus.select(col("doc_id").as("id")),
-            pairs.select(col("id1").as("src"), col("id2").as("dst")),
-            maxIters = 20, shortcut = false)
-        } finally pairs.unpersist(blocking = false)
-      labels.select(col("id").as("doc_id"), col("cluster_id"))
-        .withColumn("n_members", count(lit(1)).over(Window.partitionBy("cluster_id")))
-    },
+    "connected components of the near-dup pair graph (production clustering path vs recursive-CTE oracle)",
+    (s, d) => Dedup.nearDupClusters(nearDupCorpus(s, d), "doc_id", "text",
+        numHashes = 8, rowsPerBand = 2, shingleN = 3, minJaccard = 0.3, maxIters = 20)
+      .select(col("id").as("doc_id"), col("cluster_id"))
+      .withColumn("n_members", count(lit(1)).over(Window.partitionBy("cluster_id"))),
     Some(s"""WITH RECURSIVE corpus AS (
             |  SELECT doc_id, text FROM documents
             |  UNION ALL
@@ -253,34 +238,28 @@ object ExtQueries {
             |FROM comp""".stripMargin))
 
   // ------------------------------------------- near-dup components (Large/Small-Star)
-  /** The SAME clustering as q86 computed by a structurally different
-    * algorithm — [[graft.operators.Graph.connectedComponentsStars]]
+  /** The SAME clustering as q86 with the driver finish OFF: every
+    * Large-Star/Small-Star round of [[graft.operators.Graph.connectedComponents]]
     * (Kiveris et al. SoCC '14 edge rewriting, O(log n) rounds independent
-    * of diameter) instead of min-label propagation — and hash-checked
-    * against the SAME recursive-CTE oracle. The star rounds run only until
-    * the edge set fits under [[graft.operators.Graph.LocalFinishEdges]];
-    * union-find on the driver finishes it, and this pair graph fits from
-    * the start. Three independent formulations of one fixpoint (label
-    * loop, star rewriting with its local finish, declarative transitive
-    * closure) must collide on every row; GraphSpec additionally proves the
-    * distributed rounds (local finish off), the hand-off and label
-    * propagation agree on adversarial shapes (long chains) the dedup graph
-    * never produces. */
+    * of diameter) runs distributed to its fixed point, and the result is
+    * hash-checked against q86's recursive-CTE oracle. q86 covers the
+    * production path, whose union-find finish takes this pair graph
+    * before any round runs; this query keeps the distributed rounds
+    * themselves under oracle check on real data. GraphSpec compares the
+    * rounds, the hand-off and a min-label reference on shapes (long
+    * chains) the dedup graph never produces. */
   val q110ComponentsStars = QuerySpec(
     "q110_components_stars", "EXT-dedup-components-stars",
     "near-dup components via Large-Star/Small-Star edge rewriting (q86's oracle)",
     (s, d) => {
-      val base = docs(s, d).select("doc_id", "text")
-      val mutated = base.filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + 100000).as("doc_id"),
-          concat_ws(" ", slice(tokens(col("text")), 2, 1000000)).as("text"))
-      val corpus = base.unionByName(mutated)
+      val corpus = nearDupCorpus(s, d)
       val pairs = Dedup.nearDupPairs(corpus, "doc_id", "text",
         numHashes = 8, rowsPerBand = 2, shingleN = 3, minJaccard = 0.3)
       try {
-        graft.operators.Graph.connectedComponentsStars(
+        graft.operators.Graph.starComponents(
             corpus.select(col("doc_id").as("id")),
-            pairs.select(col("id1").as("src"), col("id2").as("dst")))
+            pairs.select(col("id1").as("src"), col("id2").as("dst")),
+            maxIters = 20, localFinishEdges = 0)
           .select(col("id").as("doc_id"), col("cluster_id"))
           .withColumn("n_members", count(lit(1)).over(Window.partitionBy("cluster_id")))
       } finally pairs.unpersist(blocking = false)
@@ -299,11 +278,7 @@ object ExtQueries {
     "q101_cluster_curation", "EXT-dedup-cluster-curation",
     "keep best-quality doc per near-dup cluster (components + quality argmax)",
     (s, d) => {
-      val base = docs(s, d).select("doc_id", "text")
-      val mutated = base.filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + 100000).as("doc_id"),
-          concat_ws(" ", slice(tokens(col("text")), 2, 1000000)).as("text"))
-      val corpus = base.unionByName(mutated)
+      val corpus = nearDupCorpus(s, d)
       val labels = Dedup.nearDupClusters(corpus, "doc_id", "text",
           numHashes = 8, rowsPerBand = 2, shingleN = 3, minJaccard = 0.3, maxIters = 20)
         .select(col("id").as("doc_id"), col("cluster_id"))
@@ -489,7 +464,7 @@ object ExtQueries {
         .select(col("id1"), col("id2"),
           round(Similarity.cosine(col("e1"), col("e2")), 4).as("cos"))
         .filter(col("cos") >= 0.25)
-      graft.operators.Graph.connectedComponentsStars(
+      graft.operators.Graph.connectedComponents(
           withB.select(col("vec_id").as("id")),
           pairs.select(col("id1").as("src"), col("id2").as("dst")))
         .select(col("id").as("vec_id"), col("cluster_id"))

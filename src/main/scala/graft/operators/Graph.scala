@@ -42,100 +42,27 @@ object IterGuard {
   }
 }
 
-/** Distributed connected components over an arbitrary edge frame —
-  * iterative min-label propagation run to FIXPOINT, the general operator
-  * behind near-dup clustering ([[graft.ext.Dedup.nearDupClusters]]), entity
-  * resolution, and householding.
+/** Graph operators over edge frames: connected components (the general
+  * operator behind near-dup clustering ([[graft.ext.Dedup.nearDupClusters]]),
+  * entity resolution and householding) and PageRank.
   *
-  * Algorithm per iteration (labels start as the vertex id):
-  *   1. neighbor step: label(v) := min(label(v), min over neighbors u of
-  *      label(u)) — one co-partitioned join + aggregation;
-  *   2. optional pointer jumping (`shortcut`): label(v) := min(label(v),
-  *      label(label(v))) — labels are vertex ids, so the lookup is a self
-  *      join; this contracts label chains and drops convergence from
-  *      O(diameter) to O(log diameter) iterations, the Large-Star/
-  *      Small-Star idea in two joins.
-  * Convergence is detected from a flag computed IN the propagation pass
-  * (no extra old-vs-new join). Every iteration `localCheckpoint`s: persist
-  * alone does NOT truncate the ANALYZED plan (cache substitution happens
-  * at physical planning), so each iteration would reference the previous
-  * labels twice (neighbor join + update join — and the jump SELF-join
-  * doubles it again), growing the logical plan exponentially until plan
-  * stringification itself OOMs. Checkpointing replaces the plan with the
-  * materialized RDD — O(1) plan size per iteration, the same reason GraphX
-  * checkpoints Pregel state. On a cluster, swap local for reliable
-  * checkpoints (executor loss kills local-checkpoint blocks).
+  * Both are iterative, and every round goes through [[IterGuard]]: each
+  * round references the previous frame two or three times, so an
+  * uncheckpointed plan grows exponentially until plan stringification
+  * itself runs out of memory. Persist alone does not truncate the
+  * analyzed plan (cache substitution happens at physical planning);
+  * checkpointing replaces the plan with the materialized RDD, O(1) plan
+  * size per round, the same reason GraphX checkpoints Pregel state.
   *
-  * Scale notes: label frames are a few bytes per vertex — orders of
-  * magnitude below the edge data — so the label loop and PageRank cap the
-  * shuffle partitions at 8 (sized to label volume) and restore them
-  * after. Near-clique graphs (dedup) converge in 2-3 iterations and should
-  * pass `shortcut = false` (the jump join costs more than it saves at
-  * diameter ≤ 3); long-chain graphs keep the default.
-  * [[connectedComponentsStars]] runs distributed rounds only while its
-  * edge set is over [[LocalFinishEdges]] and then finishes with
-  * union-find on the driver, so the small graphs dedup produces cost one
-  * collect instead of several rounds of jobs; it leaves the session conf
-  * alone.
+  * Neither operator touches the session conf. Their per-round frames are
+  * vertex- or edge-sized, far below the corpus they came from, and AQE
+  * coalesces those shuffles to a few partitions on its own.
+  * [[connectedComponents]] runs distributed rounds only while its edge set
+  * is over [[LocalFinishEdges]] and then finishes with union-find on the
+  * driver, so the small graphs dedup produces cost one collect instead of
+  * several rounds of jobs.
   */
 object Graph {
-
-  /** Component labels for every vertex: `(id, cluster_id)` with cluster_id
-    * = the component's minimum vertex id. `edges` is treated as undirected
-    * (symmetrized internally). Returns an already-materialized frame
-    * (eagerly checkpointed — unpersist is not required). */
-  def connectedComponents(vertices: DataFrame, edges: DataFrame,
-      maxIters: Int = 20, shortcut: Boolean = true): DataFrame = {
-    val session = vertices.sparkSession
-    val prevParts = session.conf.get("spark.sql.shuffle.partitions")
-    try {
-      session.conf.set("spark.sql.shuffle.partitions",
-        math.min(8, prevParts.toInt).toString)
-      val sym = edges.select(col("src"), col("dst"))
-        .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-        .transform(IterGuard.apply)
-      var labels = vertices.select(col("id")).distinct()
-        .withColumn("cluster_id", col("id"))
-        .transform(IterGuard.apply)
-      var iter = 0
-      var changed = 1L
-      while (iter < maxIters && changed > 0) {
-        val nbrMin = sym
-          .join(labels.select(col("id").as("dst"), col("cluster_id").as("nbr_label")), "dst")
-          .groupBy("src").agg(min("nbr_label").as("nbr_min"))
-        val stepped = labels
-          .join(nbrMin.withColumnRenamed("src", "id"), Seq("id"), "left")
-          .select(col("id"), col("cluster_id").as("_old"),
-            least(col("cluster_id"), coalesce(col("nbr_min"), col("cluster_id"))).as("mid"))
-          .transform(IterGuard.apply) // checkpoint BEFORE the self join below
-        val jumped =
-          if (shortcut)
-            stepped.join(
-              stepped.select(col("id").as("mid"), col("mid").as("_jump")),
-              Seq("mid"), "left")
-              .select(col("id"), col("_old"),
-                least(col("mid"), coalesce(col("_jump"), col("mid"))).as("cluster_id"))
-          else stepped.withColumnRenamed("mid", "cluster_id")
-        // the changed count rides the checkpoint job as an OBSERVED metric
-        // (CollectMetricsExec accumulator) instead of a separate count()
-        // job over the materialized frame — one action per iteration
-        val obs = new org.apache.spark.sql.Observation(s"cc_changed_$iter")
-        val next = jumped
-          .select(col("id"), col("cluster_id"),
-            (col("cluster_id") < col("_old")).as("_improved"))
-          .observe(obs, sum(when(col("_improved"), 1L).otherwise(0L)).as("changed"))
-          .transform(IterGuard.apply)
-        changed = obs.get.get("changed").flatMap(Option(_))
-          .map(_.asInstanceOf[Long]).getOrElse(0L)
-        labels = next
-        iter += 1
-      }
-      // already materialized by the eager checkpoint — the projection is a
-      // free plan over the checkpointed RDD (ContextCleaner reclaims loop
-      // blocks once the intermediate frames go out of scope)
-      labels.select("id", "cluster_id")
-    } finally session.conf.set("spark.sql.shuffle.partitions", prevParts)
-  }
 
   /** PAGERANK over a directed edge frame, fixed iteration count — the
     * link-analysis centrality used by web-scale curation pipelines to
@@ -149,38 +76,32 @@ object Graph {
     * sources keep a rank. Dangling mass (vertices with no out-edges) is
     * not redistributed — the simple formulation; both the engine and any
     * oracle must agree on one convention and this is the documented one.
-    * The per-iteration `localCheckpoint` is the same plan-growth guard as
-    * the component loops above. `vertices.count()` is one bounded scalar
+    * The per-iteration checkpoint is the same plan-growth guard as the
+    * component rounds below. `vertices.count()` is one bounded scalar
     * (the teleport denominator), the GraphX convention. */
   def pageRank(vertices: DataFrame, edges: DataFrame, iters: Int,
       damping: Double = 0.85): DataFrame = {
-    val session = vertices.sparkSession
-    val prevParts = session.conf.get("spark.sql.shuffle.partitions")
-    try {
-      session.conf.set("spark.sql.shuffle.partitions",
-        math.min(8, prevParts.toInt).toString)
-      val v = vertices.select(col("id")).distinct().transform(IterGuard.apply)
-      val n = v.count()
-      val e = edges.select(col("src"), col("dst")).distinct().transform(IterGuard.apply)
-      val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg")).transform(IterGuard.apply)
-      var ranks = v.withColumn("rank", lit(1.0 / n))
-      for (_ <- 0 until iters) {
-        val inflow = e
-          .join(ranks.withColumnRenamed("id", "src"), "src")
-          .join(deg, "src")
-          .select(col("dst").as("id"), (col("rank") / col("outdeg")).as("c"))
-          .groupBy("id").agg(sum("c").as("inflow"))
-        ranks = v.join(inflow, Seq("id"), "left")
-          .select(col("id"),
-            (lit((1.0 - damping) / n)
-              + lit(damping) * coalesce(col("inflow"), lit(0.0))).as("rank"))
-          .transform(IterGuard.apply)
-      }
-      ranks
-    } finally session.conf.set("spark.sql.shuffle.partitions", prevParts)
+    val v = vertices.select(col("id")).distinct().transform(IterGuard.apply)
+    val n = v.count()
+    val e = edges.select(col("src"), col("dst")).distinct().transform(IterGuard.apply)
+    val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg")).transform(IterGuard.apply)
+    var ranks = v.withColumn("rank", lit(1.0 / n))
+    for (_ <- 0 until iters) {
+      val inflow = e
+        .join(ranks.withColumnRenamed("id", "src"), "src")
+        .join(deg, "src")
+        .select(col("dst").as("id"), (col("rank") / col("outdeg")).as("c"))
+        .groupBy("id").agg(sum("c").as("inflow"))
+      ranks = v.join(inflow, Seq("id"), "left")
+        .select(col("id"),
+          (lit((1.0 - damping) / n)
+            + lit(damping) * coalesce(col("inflow"), lit(0.0))).as("rank"))
+        .transform(IterGuard.apply)
+    }
+    ranks
   }
 
-  /** Edge count at or under which [[connectedComponentsStars]] stops the
+  /** Edge count at or under which [[connectedComponents]] stops the
     * distributed rounds and finishes on the driver. The bound is driver
     * memory: 2^20 edges have at most 2^21 endpoints, so union-find needs
     * two 16 MB `Long` arrays and one 8 MB `Int` array; the collected rows
@@ -189,13 +110,16 @@ object Graph {
     * over it, only the distributed rounds can run. */
   private[graft] val LocalFinishEdges: Long = 1L << 20
 
-  /** Connected components by Large-Star / Small-Star EDGE REWRITING
-    * (Kiveris, Lattanzi, Mirrokni, Rastogi, Vassilvitskii, "Connected
-    * Components in MapReduce and Beyond", SoCC '14) — the alternative to
-    * [[connectedComponents]]'s label propagation for HIGH-DIAMETER graphs.
+  /** Component labels for every vertex: `(id, cluster_id)` with
+    * cluster_id = the component's minimum vertex id. `edges` is treated as
+    * undirected. Returns an already-materialized frame (eagerly
+    * checkpointed; unpersist is not required).
     *
-    * Instead of carrying a (vertex → label) frame and joining it against
-    * the edges every iteration, each round REWRITES the edge set itself:
+    * Large-Star / Small-Star EDGE REWRITING (Kiveris, Lattanzi, Mirrokni,
+    * Rastogi, Vassilvitskii, "Connected Components in MapReduce and
+    * Beyond", SoCC '14). Instead of carrying a (vertex → label) frame and
+    * joining it against the edges every iteration, each round REWRITES the
+    * edge set itself:
     *
     *   - large-star: every node u connects its LARGER neighbors to
     *     m = min(Γ(u) ∪ {u})   — emit (v, m) for v ∈ Γ(u), v > u;
@@ -206,11 +130,9 @@ object Graph {
     * Each operation is one aggregation + one co-partitioned join on the
     * CURRENT edge set — no vertex-table join — and the edge set contracts
     * toward star graphs centered at component minima in O(log n) rounds
-    * regardless of diameter (label propagation needs O(diameter) without
-    * pointer jumping, and its jump join still touches every vertex every
-    * iteration). At 100 TB-scale graphs the shuffle volume per round is
-    * the (shrinking) edge set — the better trade when edges ≪ vertices ×
-    * iterations, i.e. sparse wide graphs. Both operations preserve every
+    * regardless of diameter (min-label propagation needs O(diameter)
+    * iterations, each joining the full vertex frame). The shuffle volume
+    * per round is the (shrinking) edge set. Both operations preserve every
     * component and keep every non-isolated vertex on some edge, so ANY
     * round's edge set has the input's components.
     *
@@ -226,15 +148,13 @@ object Graph {
     * edge set still over the bound and not at its fixed point, this throws
     * rather than return unconverged labels. Vertex ids of a non-integral
     * type always take the distributed rounds (the local finish orders ids
-    * as `Long`). The same per-round `localCheckpoint` discipline as the
-    * label loop applies (each round references the previous edge frame
-    * 2-3×; an uncheckpointed plan grows exponentially). */
-  def connectedComponentsStars(vertices: DataFrame, edges: DataFrame,
+    * as `Long`). */
+  def connectedComponents(vertices: DataFrame, edges: DataFrame,
       maxIters: Int = 20): DataFrame =
     starComponents(vertices, edges, maxIters, LocalFinishEdges)
 
-  /** [[connectedComponentsStars]] with the local-finish bound as a
-    * parameter: tests pass 0 to run every distributed round. */
+  /** [[connectedComponents]] with the local-finish bound as a parameter:
+    * 0 runs every round distributed. */
   private[graft] def starComponents(vertices: DataFrame, edges: DataFrame,
       maxIters: Int, localFinishEdges: Long): DataFrame = {
     // the (count, xxhash64-xor) edge-set fingerprint rides each round's
@@ -269,7 +189,7 @@ object Graph {
     var converged = false
     while (!converged && sig._1 > bound) {
       if (iter >= maxIters) throw new IllegalStateException(
-        s"connectedComponentsStars: ${sig._1} edges after $maxIters rounds, " +
+        s"connectedComponents: ${sig._1} edges after $maxIters rounds, " +
           s"not at a fixed point and over the local-finish bound $bound")
       // large-star over the SYMMETRIZED neighborhood
       val sym = e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))

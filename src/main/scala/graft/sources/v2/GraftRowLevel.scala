@@ -510,7 +510,8 @@ private[v2] class GraftRowLevelBatchWrite(path: String, schema: StructType,
     val fs = GraftStoreFormat.fs(path, conf)
     val committed = messages.flatMap(_.asInstanceOf[GraftCommitMessage].entries)
       .filter(_.rows > 0L).toSeq
-    committed.foreach(m => fs.rename(new Path(tmpDir, m.file), new Path(path, m.file)))
+    GraftStoreFormat.moveLive(fs, path, committed.map(m => new Path(tmpDir, m.file)),
+      fs.delete(tmpDir, true))
     val newEntries = committed.map(m =>
       GraftFileEntry(m.file, m.rows, GraftStoreFormat.statsFromString(m.stats),
         GraftStoreFormat.partValsFromString(m.partVals),

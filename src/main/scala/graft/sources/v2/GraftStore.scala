@@ -2643,16 +2643,14 @@ private[v2] class GraftStoreBatchWrite(path: String, schema: StructType,
     // would tax every future scan with a guaranteed-useless file open
     val committed = messages.flatMap(_.asInstanceOf[GraftCommitMessage].entries)
       .filter(_.rows > 0L).toSeq
-    committed.foreach { m =>
-      fs.rename(new Path(tmpDir, m.file), new Path(path, m.file))
-    }
     // task-written bloom sidecars ride the same move; the manifest records
     // name + covering data-file range only (commit metadata stays O(tasks))
     val sidecars = messages
       .flatMap(_.asInstanceOf[GraftCommitMessage].bloomSidecar).toSeq
-    sidecars.foreach { case (n, _, _) =>
-      fs.rename(new Path(tmpDir, n), new Path(path, n))
-    }
+    GraftStoreFormat.moveLive(fs, path,
+      committed.map(m => new Path(tmpDir, m.file)) ++
+        sidecars.map { case (n, _, _) => new Path(tmpDir, n) },
+      fs.delete(tmpDir, true))
     val newBlooms = sidecars.map { case (n, mn, mx) => GraftBloomSidecarEntry(n, mn, mx) }
     val newEntries = committed.map(m =>
       GraftFileEntry(m.file, m.rows, GraftStoreFormat.statsFromString(m.stats),
@@ -5512,9 +5510,7 @@ object GraftStoreOps {
     * is crash-safe (manifest CREATE), non-blocking for readers (they hold
     * older manifests whose files are retained), and fully time-travelable
     * (the pre-compaction layout stays readable until [[expireSnapshots]]).
-    * This is the table-format way to compact; contrast
-    * [[graft.sources.Compaction]], which swaps raw directories and has a
-    * documented reader-visible window. Returns the new file count. */
+    * Returns the new file count. */
   def compactSnapshot(spark: SparkSession, path: String, targetBytes: Long): Int = {
     val conf = spark.sparkContext.hadoopConfiguration
     val f = GraftStoreFormat.fs(path, conf)

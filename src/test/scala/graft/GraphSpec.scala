@@ -5,14 +5,33 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Connected components on graph shapes the dedup pipeline never
-  * produces: long chains (diameter >> 3), cycles, isolated vertices, and
-  * the pointer-jumping convergence contrast. */
+  * produces: long chains (diameter >> 3), cycles, isolated vertices; the
+  * public path, the distributed rounds and the driver hand-off are each
+  * compared against a min-label reference. */
 class GraphSpec extends AnyFunSuite with SparkTestBase {
 
   private def labelsOf(df: org.apache.spark.sql.DataFrame): Map[Long, Long] = {
     val m = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     df.unpersist()
     m
+  }
+
+  /** Reference components by min-label propagation on the driver: every
+    * vertex starts labelled with its own id and takes the smallest label
+    * among itself and its neighbours until no label changes. Every edge
+    * endpoint must be a vertex. */
+  private def minLabels(vertices: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val nbrs = (edges ++ edges.map(_.swap)).groupMap(_._1)(_._2)
+    var labels = vertices.map(v => v -> v).toMap
+    var changed = true
+    while (changed) {
+      val next = labels.map { case (v, l) =>
+        v -> nbrs.getOrElse(v, Nil).foldLeft(l)((m, u) => m min labels(u))
+      }
+      changed = next != labels
+      labels = next
+    }
+    labels
   }
 
   /** The star rounds with the local finish off: every round runs
@@ -36,41 +55,6 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
       10L -> 10L, 11L -> 10L, 12L -> 10L,
       20L -> 20L, 21L -> 20L, 22L -> 20L,
       30L -> 30L))
-  }
-
-  test("pointer jumping converges a long chain where plain propagation cannot") {
-    import spark.implicits._
-    val n = 24
-    val edges = (0L until n - 1).map(i => (i, i + 1)).toDF("src", "dst")
-    val vertices = (0L until n).toDF("id")
-    // min-label travels one hop per iteration: 6 iterations cannot close a
-    // 24-node chain without the shortcut...
-    val plain = labelsOf(Graph.connectedComponents(vertices, edges,
-      maxIters = 6, shortcut = false))
-    assert(plain(n - 1) > 0L, "plain propagation should NOT have converged in 6 iters")
-    // ...but pointer jumping contracts label chains to O(log diameter)
-    val jumped = labelsOf(Graph.connectedComponents(vertices, edges,
-      maxIters = 6, shortcut = true))
-    assert(jumped.values.toSet === Set(0L), jumped.toString)
-  }
-
-  test("plain and shortcut labelings agree on a seeded random graph") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    val n = 2000
-    val edges = (0 until 3000)
-      .map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-      .filter { case (a, b) => a != b }
-      .toDF("src", "dst")
-    val vertices = (0L until n.toLong).toDF("id")
-    // two independently-converging formulations of the same fixpoint
-    val plain = labelsOf(Graph.connectedComponents(vertices, edges,
-      maxIters = 50, shortcut = false))
-    val jumped = labelsOf(Graph.connectedComponents(vertices, edges,
-      maxIters = 50, shortcut = true))
-    assert(plain === jumped)
-    // sanity: a random graph at this density has a giant component
-    assert(plain.values.groupBy(identity).map(_._2.size).max > n / 2)
   }
 
   test("large-star/small-star labels every shape to the component min") {
@@ -108,10 +92,10 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
       .filter { case (a, b) => a != b }
     val edges = pairs.toDF("src", "dst")
     val vertices = (0L until n.toLong).toDF("id")
-    val labels = labelsOf(Graph.connectedComponents(vertices, edges, maxIters = 50))
+    val labels = minLabels(0L until n.toLong, pairs)
     assert(labelsOf(distributedStars(vertices, edges, maxIters = 30)) === labels)
     // ~2500 edges sit far under the bound: the local finish runs no round
-    assert(labelsOf(Graph.connectedComponentsStars(vertices, edges)) === labels)
+    assert(labelsOf(Graph.connectedComponents(vertices, edges)) === labels)
     // hand-off: start over the bound; the fixed point (one star edge per
     // non-minimum vertex) sits under it, so some round hands off first
     val initial = pairs.map { case (a, b) => (a max b, a min b) }.distinct.size
@@ -136,7 +120,7 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     val edges = Seq((1, 2), (2, 1), (1, 2), (3, 2), (9, 9), (7, 5), (5, 6), (6, 7))
       .toDF("src", "dst")
     val vertices = Seq(1, 2, 3, 5, 6, 7, 9, 30).toDF("id")
-    val local = Graph.connectedComponentsStars(vertices, edges)
+    val local = Graph.connectedComponents(vertices, edges)
     val distributed = distributedStars(vertices, edges)
     assert(local.schema === distributed.schema)
     def intLabels(df: org.apache.spark.sql.DataFrame) =
@@ -151,7 +135,7 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     // the local finish orders ids as Long; other id types run every round
     val edges = Seq(("b", "c"), ("c", "d"), ("x", "y")).toDF("src", "dst")
     val vertices = Seq("b", "c", "d", "x", "y", "z").toDF("id")
-    val got = Graph.connectedComponentsStars(vertices, edges)
+    val got = Graph.connectedComponents(vertices, edges)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(got === Map("b" -> "b", "c" -> "b", "d" -> "b", "x" -> "x", "y" -> "x", "z" -> "z"))
   }
@@ -203,14 +187,12 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     // Same inputs, both modes, identical labels and ranks.
     val edges = Seq((1L, 2L), (2L, 3L), (5L, 6L), (9L, 9L)).toDF("src", "dst")
     val vertices = (1L to 9L).toDF("id")
-    val localCc = labelsOf(Graph.connectedComponents(vertices, edges))
     val localStars = labelsOf(distributedStars(vertices, edges))
     val localPr = Graph.pageRank(vertices, edges, iters = 3)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     spark.conf.set("spark.graft.checkpointDir", dir)
     try {
-      assert(labelsOf(Graph.connectedComponents(vertices, edges)) === localCc)
       assert(labelsOf(distributedStars(vertices, edges)) === localStars)
       val pr = Graph.pageRank(vertices, edges, iters = 3)
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap

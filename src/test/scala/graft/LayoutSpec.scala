@@ -1,28 +1,13 @@
 package graft
 
-import graft.sources.{Compaction, ZOrder}
+import graft.sources.ZOrder
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Storage-layout operators: small-file compaction and Z-order clustering. */
+/** Storage-layout operators: Z-order clustering. */
 class LayoutSpec extends AnyFunSuite with SparkTestBase {
 
   private val d = "/root/testdata/sf0.001"
-
-  test("compact rewrites a many-small-files directory to the byte-targeted count") {
-    val dir = "/tmp/graft-layout-spec/compact"
-    val li = Tables.lineitem(spark, d)
-    li.repartition(64).write.mode("overwrite").parquet(dir)
-    assert(Compaction.dataFileCount(spark, dir) === 64)
-    val before = li.agg(count(lit(1)), round(sum("l_extendedprice"), 2)).collect()(0)
-    val bytes = Compaction.dataBytes(spark, dir)
-    val got = Compaction.compact(spark, dir, targetBytes = bytes / 4)
-    assert(got <= 6, s"expected ~4-5 files, got $got") // ceil(bytes/target)=4 plus slack
-    assert(got < 64)
-    val after = spark.read.parquet(dir)
-      .agg(count(lit(1)), round(sum("l_extendedprice"), 2)).collect()(0)
-    assert(after === before)
-  }
 
   test("z-ordered files cover small rectangles on BOTH dimensions") {
     val zDir = "/tmp/graft-layout-spec/zorder"

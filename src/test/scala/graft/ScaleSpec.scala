@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Skew
-import graft.sources.Bucketing
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -57,9 +56,12 @@ class ScaleSpec extends AnyFunSuite with SparkTestBase {
         .select("l_orderkey", "l_quantity")
       val ord = Tables.orders(spark, "/root/testdata/sf0.001")
         .select("o_orderkey", "o_totalprice").withColumnRenamed("o_orderkey", "l_orderkey")
-      Bucketing.writeBucketed(li, "li_b", "l_orderkey", 8)
-      Bucketing.writeBucketed(ord, "ord_b", "l_orderkey", 8)
-      val joined = Bucketing.bucketedJoin(spark, "li_b", "ord_b", "l_orderkey")
+      // bucketed on write, sorted within buckets: the join needs neither
+      // an exchange nor a sort at read time
+      for ((df, t) <- Seq(li -> "li_b", ord -> "ord_b"))
+        df.write.mode("overwrite").bucketBy(8, "l_orderkey").sortBy("l_orderkey")
+          .format("parquet").saveAsTable(t)
+      val joined = spark.table("li_b").join(spark.table("ord_b"), "l_orderkey")
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"), s"expected zero-exchange bucketed join, got:\n$plan")
       assert(joined.count() === li.count()) // every lineitem has its order
@@ -71,10 +73,9 @@ class ScaleSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("partitionBy write prunes partitions at read (PartitionFilters, not data scan)") {
-    import graft.sources.PartitionedWrite
     val ev = Tables.events(spark, "/root/testdata/sf0.001")
-    PartitionedWrite.write(ev, "/tmp/graft-part-spec/events", Seq("event_type"))
-    val back = PartitionedWrite.read(spark, "/tmp/graft-part-spec/events")
+    ev.write.mode("overwrite").partitionBy("event_type").parquet("/tmp/graft-part-spec/events")
+    val back = spark.read.parquet("/tmp/graft-part-spec/events")
       .filter(col("event_type") === "purchase")
     val plan = back.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [isnotnull(event_type"), plan.take(2000))

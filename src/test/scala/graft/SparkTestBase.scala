@@ -5,19 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for the whole test JVM (sbt forks one JVM for
   * Test; per-suite sessions would pay ~5 s startup each). */
 object SparkTestBase {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the production conf line: parser-level view SQL + native functions
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(4)
 }
 
 trait SparkTestBase {

@@ -61,6 +61,11 @@ class GraftStoreRenameSpec extends AnyFunSuite with graft.SparkTestBase {
     finally FlakyRenameFs.fails = _ => false
   }
 
+  /** The commit failed on a move: Spark may wrap the commit's exception. */
+  private def failedMove(err: Throwable): Boolean =
+    Iterator.iterate(err)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(_.contains("could not move")))
+
   private def rowsOf(dir: String): Seq[(Long, Long)] =
     spark.read.format("graft-store").load(dir).collect()
       .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
@@ -99,12 +104,56 @@ class GraftStoreRenameSpec extends AnyFunSuite with graft.SparkTestBase {
         p.getParent.getParent.getName == "_tmp") {
       spark.sql("UPDATE rncat.ud SET v = v + 1 WHERE id < 5")
     }
-    assert(Iterator.iterate(err)(_.getCause).takeWhile(_ != null)
-      .exists(t => Option(t.getMessage).exists(_.contains("could not move"))), err)
+    assert(failedMove(err), err)
     assert(GraftStoreOps.snapshotCount(spark, dir) === snaps)
     assert(listing(dir) === before)
     assert(rowsOf(dir) === rows)
     spark.sql("UPDATE rncat.ud SET v = v + 1 WHERE id < 5")
     assert(rowsOf(dir).take(5) === (0L until 5L).map(i => (i, i * 10 + 1)))
+  }
+
+  test("append commit: a failed rename publishes nothing") {
+    val dir = s"$base/ap"
+    spark.range(0, 40).selectExpr("id", "id * 10 as v").coalesce(1)
+      .write.format("graft-store").option("bloomCols", "id")
+      .mode("overwrite").save(dir)
+    val before = listing(dir)
+    val rows = rowsOf(dir)
+    val snaps = GraftStoreOps.snapshotCount(spark, dir)
+    def append(): Unit = spark.range(40, 60).selectExpr("id", "id * 10 as v")
+      .coalesce(1).write.format("graft-store").mode("append").save(dir)
+    // data files move first; failing the bloom sidecar's move leaves moved
+    // data files behind that must be deleted again
+    val err = failingOn(_.getName.startsWith("bloom-"))(append())
+    assert(failedMove(err), err)
+    assert(GraftStoreOps.snapshotCount(spark, dir) === snaps)
+    assert(listing(dir) === before)
+    assert(rowsOf(dir) === rows)
+    append()
+    assert(rowsOf(dir) === (0L until 60L).map(i => (i, i * 10)))
+  }
+
+  test("copy-on-write UPDATE commit: a failed rename publishes nothing") {
+    val dir = s"$base/cw"
+    spark.range(0, 40).selectExpr("id", "id * 10 as v").coalesce(2)
+      .write.format("graft-store").mode("overwrite").save(dir)
+    val before = listing(dir)
+    val rows = rowsOf(dir)
+    val snaps = GraftStoreOps.snapshotCount(spark, dir)
+    // the update rewrites both files; the first rewritten file moves, the
+    // second's move fails, so the first must be deleted again
+    var moves = 0
+    val err = failingOn { p =>
+      p.getParent.getParent.getName == "_tmp" && { moves += 1; moves > 1 }
+    } {
+      spark.sql("UPDATE rncat.cw SET v = v + 1 WHERE id % 2 = 0")
+    }
+    assert(moves === 2)
+    assert(failedMove(err), err)
+    assert(GraftStoreOps.snapshotCount(spark, dir) === snaps)
+    assert(listing(dir) === before)
+    assert(rowsOf(dir) === rows)
+    spark.sql("UPDATE rncat.cw SET v = v + 1 WHERE id % 2 = 0")
+    assert(rowsOf(dir) === (0L until 40L).map(i => (i, i * 10 + (if (i % 2 == 0) 1 else 0))))
   }
 }
