@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QuerySpec, Tables}
+import graft.{Fixture, QuerySpec, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -95,7 +95,7 @@ object PipelineQueries {
       val base = Tables.lineitem(s, d)
         .filter(col("l_quantity") > 45)
         .select("l_orderkey", "l_linenumber", "l_returnflag", "l_extendedprice")
-      val root = "/tmp/graft-formats"
+      val root = Fixture.dir()
       base.write.mode("overwrite").orc(s"$root/orc")
       base.write.mode("overwrite").option("header", "true").csv(s"$root/csv")
       base.write.mode("overwrite").json(s"$root/json")

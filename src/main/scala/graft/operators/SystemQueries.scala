@@ -1,44 +1,37 @@
 package graft.operators
 
-import graft.{QuerySpec, Tables}
+import graft.{Fixture, QuerySpec, Tables}
 import graft.sources.Sinks
 import graft.streaming.EventsPipeline
 import org.apache.spark.sql.functions._
 
-/** Streaming, upsert-sink, and ML-lifecycle queries — the system-level
-  * capabilities beyond pure relational operators. */
+/** Streaming, upsert-sink, table-lifecycle and ML-lifecycle queries — the
+  * system-level capabilities beyond pure relational operators.
+  *
+  * Every spec that writes tables, registers a catalog, starts a stream or
+  * changes a session conf runs its body through [[graft.Fixture]]: on a
+  * private session of the caller's (shared SparkContext, extensions and
+  * cache; its own SQL conf, catalogs, temp views and streams) with a fresh
+  * directory. Catalogs the body names are registered on that session with
+  * the directory as their base, and confs the body sets stay on it. The
+  * caller's session is never changed, no two calls share a directory, and
+  * the returned Dataset may be evaluated lazily after the body returns. */
 object SystemQueries {
 
-  /** Run `body` with storage-partitioned-join planning enabled (and
-    * auto-broadcast disabled so the join shape is actually exercised),
-    * restoring the session confs after. `body` must MATERIALIZE any
-    * result whose plan shape matters (localCheckpoint) — a lazily
-    * returned Dataset re-plans AFTER the confs are restored, silently
-    * executing a different (shuffled) plan than the one inspected. */
-  private def withSpjConfs[T](s: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val prevBucketing = s.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
-    val prevBroadcast = s.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
+  /** Storage-partitioned-join planning on a fixture session: v2 bucketing
+    * on, and auto-broadcast off so the join shape is actually exercised. */
+  private def spjConfs(s: org.apache.spark.sql.SparkSession): Unit = {
     s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try body
-    finally {
-      prevBucketing.fold(s.conf.unset("spark.sql.sources.v2.bucketing.enabled"))(
-        v => s.conf.set("spark.sql.sources.v2.bucketing.enabled", v))
-      prevBroadcast.fold(s.conf.unset("spark.sql.autoBroadcastJoinThreshold"))(
-        v => s.conf.set("spark.sql.autoBroadcastJoinThreshold", v))
-    }
   }
 
-  /** Run `body` with `n` shuffle (= state store) partitions, restoring the
-    * session conf after. Streaming results are partitioning-independent;
-    * at test-scale state volume the per-partition state-store commit
-    * overhead dominates, so streaming queries size this down — the same
-    * knob a real deployment tunes to state volume. */
-  private def withStatePartitions[T](s: org.apache.spark.sql.SparkSession, n: Int)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  /** 8 shuffle (= state store) partitions on a fixture session. Streaming
+    * results are partitioning-independent; at test-scale state volume the
+    * per-partition state-store commit overhead dominates, so streaming
+    * queries size this down — the same knob a real deployment tunes to
+    * state volume. */
+  private def statePartitions(s: org.apache.spark.sql.SparkSession): Unit =
+    s.conf.set("spark.sql.shuffle.partitions", "8")
 
   /** §2.6 [EXT]: the REAL Structured Streaming plan (file source →
     * watermark → tumbling window agg → memory sink, run to completion) —
@@ -46,7 +39,8 @@ object SystemQueries {
   val q34StreamWindow = QuerySpec(
     "q34_stream_window", "EXT-streaming-window",
     "Structured Streaming tumbling-window aggregation (oracle = batch twin)",
-    (s, d) => withStatePartitions(s, 8) {
+    (s, d) => Fixture(s) { (s, _) =>
+      statePartitions(s)
       EventsPipeline.runToMemoryTable(
         s, EventsPipeline.windowedAgg(EventsPipeline.readEventsStream(s, d)), "q34_out")
     },
@@ -164,8 +158,7 @@ object SystemQueries {
   val q83Dsv2Store = QuerySpec(
     "q83_dsv2_store", "S-dsv2-write",
     "custom DSv2 write path: manifest-committed round-trip + aggregate",
-    (s, d) => {
-      val path = "/tmp/graft_store_q83"
+    (s, d) => Fixture(s) { (s, path) =>
       Tables.customer(s, d)
         .select(col("c_custkey"), col("c_nationkey"), col("c_acctbal"), col("c_mktsegment"))
         .write.format("graft-store").mode("overwrite").save(path)
@@ -187,11 +180,7 @@ object SystemQueries {
   val q88TimeTravel = QuerySpec(
     "q88_time_travel", "S-dsv2-time-travel",
     "graft-store snapshot pinning: read v0 and latest after two commits",
-    (s, d) => {
-      val path = "/tmp/graft_store_q88"
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    (s, d) => Fixture(s) { (s, path) =>
       val nat = Tables.nation(s, d).select("n_nationkey", "n_name", "n_regionkey")
       nat.filter(col("n_regionkey") <= 1).write.format("graft-store").mode("append").save(path)
       nat.filter(col("n_regionkey") >= 2).write.format("graft-store").mode("append").save(path)
@@ -223,13 +212,7 @@ object SystemQueries {
   val q109SqlTimeTravel = QuerySpec(
     "q109_sql_time_travel", "S-dsv2-sql-time-travel",
     "SQL VERSION AS OF / TIMESTAMP AS OF over graft-store via a TableCatalog",
-    (s, d) => {
-      val base = "/tmp/graft_catalog_q109"
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      s.conf.set("spark.sql.catalog.graft", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.graft.base", base)
+    (s, d) => Fixture(s, "graft") { (s, base) =>
       val nat = Tables.nation(s, d).select("n_nationkey", "n_name", "n_regionkey")
       nat.filter(col("n_regionkey") <= 1)
         .write.format("graft-store").mode("append").save(s"$base/nat")
@@ -270,11 +253,8 @@ object SystemQueries {
   val q112StoreStream = QuerySpec(
     "q112_store_stream", "S-dsv2-stream-source",
     "graft-store streaming source: snapshot-tail replay aggregates to table content",
-    (s, d) => withStatePartitions(s, 8) {
-      val path = "/tmp/graft_store_q112"
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    (s, d) => Fixture(s) { (s, path) =>
+      statePartitions(s)
       val nat = Tables.nation(s, d).select("n_nationkey", "n_name", "n_regionkey")
       nat.filter(col("n_regionkey") <= 1)
         .write.format("graft-store").mode("append").save(path)
@@ -325,10 +305,7 @@ object SystemQueries {
   val q97StoreSkipping = QuerySpec(
     "q97_store_skipping", "S-dsv2-data-skipping",
     "graft-store manifest-stats file skipping under a selective key range",
-    (s, d) => {
-      val path = "/tmp/graft_store_q97"
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+    (s, d) => Fixture(s) { (s, path) =>
       Tables.orders(s, d)
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
         .repartitionByRange(8, col("o_orderkey"))
@@ -357,10 +334,7 @@ object SystemQueries {
   val q113StoreClustered = QuerySpec(
     "q113_store_clustered", "S-dsv2-clustered-write",
     "clusterBy write: sink-required distribution + string-stat file pruning",
-    (s, d) => {
-      val path = "/tmp/graft_store_q113"
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+    (s, d) => Fixture(s) { (s, path) =>
       Tables.documents(s, d)
         .select("doc_id", "source", "lang", "n_chars")
         .write.format("graft-store").option("clusterBy", "source")
@@ -394,10 +368,7 @@ object SystemQueries {
   val q124StoreZorder = QuerySpec(
     "q124_store_zorder", "S-dsv2-zorder",
     "Z-order clustered graft-store: either-dimension file pruning, both oracle-checked",
-    (s, d) => {
-      val path = "/tmp/graft_store_q124"
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+    (s, d) => Fixture(s) { (s, path) =>
       val o = Tables.orders(s, d).select("o_orderkey", "o_custkey", "o_totalprice")
       val r = o.agg(min(col("o_custkey")).cast("double"), max(col("o_custkey")).cast("double"),
         min(col("o_totalprice")), max(col("o_totalprice"))).collect()(0) // 1 row — bounded
@@ -444,32 +415,27 @@ object SystemQueries {
   val q129StoreSpj = QuerySpec(
     "q129_store_spj", "S-dsv2-spj",
     "storage-partitioned join: co-partitioned graft-store tables, zero exchange",
-    (s, d) => {
-      val dirC = "/tmp/graft_store_q129_c"
-      val dirS = "/tmp/graft_store_q129_s"
-      for (p <- Seq(dirC, dirS)) {
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
-      }
+    (s, d) => Fixture(s) { (s, dir) =>
+      val dirC = s"$dir/c"
+      val dirS = s"$dir/s"
       Tables.customer(s, d).select("c_custkey", "c_nationkey", "c_acctbal")
         .write.format("graft-store").option("partitionBy", "c_nationkey")
         .mode("overwrite").save(dirC)
       Tables.supplier(s, d).select("s_suppkey", "s_nationkey", "s_acctbal")
         .write.format("graft-store").option("partitionBy", "s_nationkey")
         .mode("overwrite").save(dirS)
-      withSpjConfs(s) {
-        val c = s.read.format("graft-store").load(dirC)
-        val sup = s.read.format("graft-store").load(dirS)
-        val j = c.join(sup, col("c_nationkey") === col("s_nationkey"))
-          .groupBy(col("c_nationkey").as("nationkey"))
-          .agg(count(lit(1)).as("n_pairs"),
-            round(sum(col("c_acctbal") + col("s_acctbal")), 2).as("sum_bal"))
-        // materialize INSIDE the conf window: the checkpoint executes the
-        // SPJ plan, and the flag describes the plan that actually ran
-        val materialized = j.localCheckpoint(true)
-        val noExchange = !j.queryExecution.executedPlan.toString.contains("Exchange")
-        materialized.withColumn("no_exchange", lit(noExchange))
-      }
+      spjConfs(s)
+      val c = s.read.format("graft-store").load(dirC)
+      val sup = s.read.format("graft-store").load(dirS)
+      val j = c.join(sup, col("c_nationkey") === col("s_nationkey"))
+        .groupBy(col("c_nationkey").as("nationkey"))
+        .agg(count(lit(1)).as("n_pairs"),
+          round(sum(col("c_acctbal") + col("s_acctbal")), 2).as("sum_bal"))
+      // the checkpoint executes the SPJ plan, so the flag describes the
+      // plan that actually ran
+      val materialized = j.localCheckpoint(true)
+      val noExchange = !j.queryExecution.executedPlan.toString.contains("Exchange")
+      materialized.withColumn("no_exchange", lit(noExchange))
     },
     Some("""SELECT c_nationkey AS nationkey, count(*) AS n_pairs,
            |  round(sum(c_acctbal + s_acctbal), 2) AS sum_bal,
@@ -490,10 +456,7 @@ object SystemQueries {
   val q132StoreDelete = QuerySpec(
     "q132_store_delete", "S-dsv2-cow-delete",
     "copy-on-write DELETE: stats-pruned rewrite set, carried files untouched",
-    (s, d) => {
-      val path = "/tmp/graft_store_q132"
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+    (s, d) => Fixture(s) { (s, path) =>
       Tables.orders(s, d)
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
         .repartitionByRange(8, col("o_orderkey"))
@@ -527,10 +490,7 @@ object SystemQueries {
   val q133StoreUpdate = QuerySpec(
     "q133_store_update", "S-dsv2-cow-update",
     "copy-on-write UPDATE: set expressions on matching rows, carried files untouched",
-    (s, d) => {
-      val path = "/tmp/graft_store_q133"
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+    (s, d) => Fixture(s) { (s, path) =>
       Tables.orders(s, d)
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
         .repartitionByRange(8, col("o_orderkey"))
@@ -575,10 +535,7 @@ object SystemQueries {
   val q134StoreMerge = QuerySpec(
     "q134_store_merge", "S-dsv2-cow-merge",
     "copy-on-write MERGE: pruned update-merge + zero-rewrite insert-merge",
-    (s, d) => {
-      val path = "/tmp/graft_store_q134"
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+    (s, d) => Fixture(s) { (s, path) =>
       val base = Tables.orders(s, d)
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
       base.repartitionByRange(8, col("o_orderkey"))
@@ -626,12 +583,7 @@ object SystemQueries {
   val q135SqlDelete = QuerySpec(
     "q135_sql_delete", "S-dsv2-sql-delete",
     "SQL DELETE FROM via SupportsDelete: parsed WHERE -> COW pruned rewrite",
-    (s, d) => {
-      val base = "/tmp/graft_catalog_q135"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.graftq135", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.graftq135.base", base)
+    (s, d) => Fixture(s, "graftq135") { (s, base) =>
       Tables.orders(s, d)
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
         .repartitionByRange(8, col("o_orderkey"))
@@ -658,13 +610,10 @@ object SystemQueries {
   val q136StreamSink = QuerySpec(
     "q136_stream_sink", "S-dsv2-stream-sink",
     "native streaming sink: per-epoch snapshot commits, content equals batch",
-    (s, d) => withStatePartitions(s, 8) {
-      val path = "/tmp/graft_store_q136"
-      val ckpt = "/tmp/graft_store_q136_ckpt"
-      for (p <- Seq(path, ckpt)) {
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
-      }
+    (s, d) => Fixture(s) { (s, dir) =>
+      statePartitions(s)
+      val path = s"$dir/t"
+      val ckpt = s"$dir/ckpt"
       val q = EventsPipeline.readEventsStream(s, d)
         .select("event_id", "user_id", "event_type", "value")
         .writeStream.format("graft-store")
@@ -693,10 +642,7 @@ object SystemQueries {
   val q93StreamUpsertStore = QuerySpec(
     "q93_stream_upsert_store", "S3-streaming-upsert",
     "streaming foreachBatch upsert into graft-store: latest event per user",
-    (s, d) => {
-      val path = "/tmp/graft_store_q93"
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+    (s, d) => Fixture(s) { (s, path) =>
       val stream = EventsPipeline.readEventsStream(s, d)
         .withColumn("ts", date_trunc("second", col("ts")))
         .select("user_id", "event_id", "ts", "event_type", "value")
@@ -737,7 +683,8 @@ object SystemQueries {
   val q96StreamDedup = QuerySpec(
     "q96_stream_dedup", "EXT-streaming-exact-dedup",
     "streaming dropDuplicatesWithinWatermark over an at-least-once (2x) replay",
-    (s, d) => withStatePartitions(s, 8) {
+    (s, d) => Fixture(s) { (s, _) =>
+      statePartitions(s)
       val doubled = EventsPipeline.readEventsStream(s, d)
         .unionByName(EventsPipeline.readEventsStream(s, d))
       val deduped = EventsPipeline.dedupStream(doubled)
@@ -767,7 +714,8 @@ object SystemQueries {
   val q63StreamNearDup = QuerySpec(
     "q63_stream_neardup", "EXT-dedup-streaming",
     "streaming MinHash-LSH near-dup candidates (stateful, incremental)",
-    (s, d) => withStatePartitions(s, 8) {
+    (s, d) => Fixture(s) { (s, _) =>
+      statePartitions(s)
       // note: signature hashing still runs at full parallelism — the
       // bandedStream repartition targets defaultParallelism (32); only the
       // stateful groupByKey shuffle uses the reduced state partition count
@@ -823,7 +771,8 @@ object SystemQueries {
   val q84StreamIvf = QuerySpec(
     "q84_stream_ivf", "EXT-sim-ivf-streaming",
     "streaming IVF cell assignment against batch-fit centroids, equality-checked",
-    (s, d) => withStatePartitions(s, 8) {
+    (s, d) => Fixture(s) { (s, _) =>
+      statePartitions(s)
       val index = graft.ext.Ivf.build(Tables.embeddings(s, d), numCells = 16)
       val centroids = index.model.clusterCenters.zipWithIndex
         .map { case (c, i) => (i, c.toArray) }
@@ -857,15 +806,14 @@ object SystemQueries {
   val q81StreamStreamJoin = QuerySpec(
     "q81_stream_stream_join", "EXT-streaming-join",
     "stream-stream watermarked interval join (oracle = batch range join)",
-    (s, d) => {
+    (s, d) => Fixture(s) { (s, _) =>
       // a stream-stream join keeps FOUR state stores per shuffle partition —
       // the strongest case for sizing state partitions down (11.4s → 3.4s)
-      withStatePartitions(s, 8) {
-        EventsPipeline.runToMemoryTable(
-          s,
-          EventsPipeline.errorPurchaseJoin(EventsPipeline.readEventsStream(s, d)),
-          "q81_out", org.apache.spark.sql.streaming.OutputMode.Append())
-      }
+      statePartitions(s)
+      EventsPipeline.runToMemoryTable(
+        s,
+        EventsPipeline.errorPurchaseJoin(EventsPipeline.readEventsStream(s, d)),
+        "q81_out", org.apache.spark.sql.streaming.OutputMode.Append())
     },
     Some("""WITH ev AS (SELECT user_id, event_id, event_type, date_trunc('second', ts) AS ts FROM events)
            |SELECT e.user_id, e.event_id AS error_id, p.event_id AS purchase_id,
@@ -895,31 +843,24 @@ object SystemQueries {
   val q137StoreBucketJoin = QuerySpec(
     "q137_store_bucket_join", "S-dsv2-spj-bucket",
     "bucketed SPJ: high-cardinality co-bucketed join + agg, zero exchange",
-    (s, d) => {
-      val base = "/tmp/graft_catalog_q137"
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      s.conf.set("spark.sql.catalog.graftb", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.graftb.base", base)
+    (s, d) => Fixture(s, "graftb") { (s, base) =>
       Tables.customer(s, d).select("c_custkey", "c_mktsegment")
         .write.format("graft-store").option("partitionBy", "bucket(8,c_custkey)")
         .mode("overwrite").save(s"$base/cust")
       Tables.orders(s, d).select("o_custkey", "o_totalprice")
         .write.format("graft-store").option("partitionBy", "bucket(8,o_custkey)")
         .mode("overwrite").save(s"$base/ords")
-      withSpjConfs(s) {
-        // grouping on the bucketed join key: the key-grouped distribution
-        // satisfies join AND aggregate — the whole pipeline is shuffle-free
-        val j = s.sql(
-          """SELECT c_custkey AS custkey, min(c_mktsegment) AS segment,
-            |  count(*) AS n_orders, round(sum(o_totalprice), 2) AS sum_price
-            |FROM graftb.ords JOIN graftb.cust ON o_custkey = c_custkey
-            |GROUP BY c_custkey""".stripMargin)
-        val materialized = j.localCheckpoint(true) // executes the SPJ plan
-        val noExchange = !j.queryExecution.executedPlan.toString.contains("Exchange")
-        materialized.withColumn("no_exchange", lit(noExchange))
-      }
+      spjConfs(s)
+      // grouping on the bucketed join key: the key-grouped distribution
+      // satisfies join AND aggregate — the whole pipeline is shuffle-free
+      val j = s.sql(
+        """SELECT c_custkey AS custkey, min(c_mktsegment) AS segment,
+          |  count(*) AS n_orders, round(sum(o_totalprice), 2) AS sum_price
+          |FROM graftb.ords JOIN graftb.cust ON o_custkey = c_custkey
+          |GROUP BY c_custkey""".stripMargin)
+      val materialized = j.localCheckpoint(true) // executes the SPJ plan
+      val noExchange = !j.queryExecution.executedPlan.toString.contains("Exchange")
+      materialized.withColumn("no_exchange", lit(noExchange))
     },
     Some("""SELECT c_custkey AS custkey, min(c_mktsegment) AS segment,
            |  count(*) AS n_orders, round(sum(o_totalprice), 2) AS sum_price,
@@ -946,8 +887,6 @@ object SystemQueries {
     * in one place or not at all. Returns the head snapshot index. */
   private def churnedOrdersStore(s: org.apache.spark.sql.SparkSession,
       d: String, path: String): Int = {
-    val fsPath = new org.apache.hadoop.fs.Path(path)
-    fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
     val base = Tables.orders(s, d)
       .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
     base.filter(col("o_orderkey") < 4000)
@@ -966,8 +905,7 @@ object SystemQueries {
   val q138StoreChanges = QuerySpec(
     "q138_store_changes", "S-dsv2-change-feed",
     "snapshot change feed: net insert/delete/update images from the manifest diff",
-    (s, d) => {
-      val path = "/tmp/graft_store_q138"
+    (s, d) => Fixture(s) { (s, path) =>
       val head = churnedOrdersStore(s, d, path)
       graft.sources.v2.GraftStoreOps.changesBetween(s, path, 0, head, "o_orderkey")
         .select(col("o_orderkey"), col("change_type"),
@@ -999,10 +937,7 @@ object SystemQueries {
   val q145StoreRestore = QuerySpec(
     "q145_store_restore", "S-dsv2-restore",
     "snapshot restore: metadata-only rollback of a COW delete, history intact",
-    (s, d) => {
-      val path = "/tmp/graft_store_q145"
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+    (s, d) => Fixture(s) { (s, path) =>
       val slice = Tables.orders(s, d)
         .select("o_orderkey", "o_totalprice", "o_orderpriority")
         .filter(col("o_orderkey") < 3000)
@@ -1041,10 +976,7 @@ object SystemQueries {
   val q148SchemaEvolution = QuerySpec(
     "q148_schema_evolution", "S-dsv2-schema-evolution",
     "additive ADD COLUMN: mergeSchema append, zero rewrite, null-extended reads",
-    (s, d) => {
-      val path = "/tmp/graft_store_q148"
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+    (s, d) => Fixture(s) { (s, path) =>
       Tables.orders(s, d).select("o_orderkey", "o_totalprice")
         .filter(col("o_orderkey") < 3000)
         .repartitionByRange(4, col("o_orderkey"))
@@ -1083,13 +1015,7 @@ object SystemQueries {
   val q149StoreHistory = QuerySpec(
     "q149_store_history", "S-dsv2-metadata-tables",
     "snapshot history as a SQL metadata table (cat.`t\\$history`)",
-    (s, d) => {
-      val base = "/tmp/graft_catalog_q149"
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      s.conf.set("spark.sql.catalog.graftm", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.graftm.base", base)
+    (s, d) => Fixture(s, "graftm") { (s, base) =>
       val orders = Tables.orders(s, d).select("o_orderkey", "o_totalprice")
       // halves of the key range: both eras nonempty at every fixture scale
       val cut = orders.agg(max("o_orderkey")).collect()(0).getLong(0) / 2
@@ -1120,10 +1046,7 @@ object SystemQueries {
   val q150StoreCheck = QuerySpec(
     "q150_store_check", "S-dsv2-check-constraint",
     "CHECK constraint: persisted, inherited, enforced on appends and COW updates",
-    (s, d) => {
-      val path = "/tmp/graft_store_q150"
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+    (s, d) => Fixture(s) { (s, path) =>
       Tables.orders(s, d)
         .select("o_orderkey", "o_totalprice", "o_orderpriority")
         .filter(col("o_orderkey") < 4000)
@@ -1183,8 +1106,7 @@ object SystemQueries {
   val q151CdcIvm = QuerySpec(
     "q151_cdc_ivm", "S-dsv2-cdc-ivm",
     "incremental view maintenance: base aggregate + CDC deltas == recompute",
-    (s, d) => {
-      val path = "/tmp/graft_store_q151"
+    (s, d) => Fixture(s) { (s, path) =>
       val headSnap = churnedOrdersStore(s, d, path)
       // the view as of snapshot 0 — in production this is the stored MV,
       // maintained BEFORE the churn; time travel reconstructs it here
@@ -1233,13 +1155,7 @@ object SystemQueries {
   val q152CompositeLayout = QuerySpec(
     "q152_composite_layout", "S-dsv2-composite-spec",
     "identity+bucket composite layout: date pruning plus zero-exchange SPJ",
-    (s, d) => {
-      val base = "/tmp/graft_catalog_q152"
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      s.conf.set("spark.sql.catalog.graftc", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.graftc.base", base)
+    (s, d) => Fixture(s, "graftc") { (s, base) =>
       val orders = Tables.orders(s, d)
         .select("o_orderkey", "o_custkey", "o_orderdate", "o_totalprice")
         // keep the identity element low-cardinality: month bucket the date
@@ -1253,21 +1169,20 @@ object SystemQueries {
         .write.format("graft-store")
         .option("partitionBy", "o_month,bucket(8,o_custkey)")
         .mode("overwrite").save(s"$base/ob")
-      withSpjConfs(s) {
-        // grouping on the FULL key pair keeps the aggregate inside the
-        // key-grouped distribution (grouping by month alone would need a
-        // re-shuffle — a month spans every bucket)
-        val j = s.sql(
-          """SELECT oa.o_month AS mth, oa.o_custkey AS custkey,
-            |  count(*) AS n_pairs,
-            |  round(sum(oa.o_totalprice + ob.o_totalprice), 2) AS sum_price
-            |FROM graftc.oa oa JOIN graftc.ob ob
-            |  ON oa.o_month = ob.o_month AND oa.o_custkey = ob.o_custkey
-            |GROUP BY oa.o_month, oa.o_custkey""".stripMargin)
-        val materialized = j.localCheckpoint(true) // executes the SPJ plan
-        val noExchange = !j.queryExecution.executedPlan.toString.contains("Exchange")
-        materialized.withColumn("no_exchange", lit(noExchange))
-      }
+      spjConfs(s)
+      // grouping on the FULL key pair keeps the aggregate inside the
+      // key-grouped distribution (grouping by month alone would need a
+      // re-shuffle — a month spans every bucket)
+      val j = s.sql(
+        """SELECT oa.o_month AS mth, oa.o_custkey AS custkey,
+          |  count(*) AS n_pairs,
+          |  round(sum(oa.o_totalprice + ob.o_totalprice), 2) AS sum_price
+          |FROM graftc.oa oa JOIN graftc.ob ob
+          |  ON oa.o_month = ob.o_month AND oa.o_custkey = ob.o_custkey
+          |GROUP BY oa.o_month, oa.o_custkey""".stripMargin)
+      val materialized = j.localCheckpoint(true) // executes the SPJ plan
+      val noExchange = !j.queryExecution.executedPlan.toString.contains("Exchange")
+      materialized.withColumn("no_exchange", lit(noExchange))
     },
     Some("""WITH o AS (SELECT o_orderkey, o_custkey,
            |    CAST(month(o_orderdate) % 4 AS INT) AS o_month, o_totalprice
@@ -1295,12 +1210,11 @@ object SystemQueries {
   val q153CdcStream = QuerySpec(
     "q153_cdc_stream", "S-dsv2-cdc-stream",
     "CDC streaming source: writer-emitted change files, exactly-once restart",
-    (s, d) => withStatePartitions(s, 8) {
-      val path = "/tmp/graft_store_q153"
+    (s, d) => Fixture(s) { (s, dir) =>
+      statePartitions(s)
+      val path = s"$dir/t"
       churnedOrdersStore(s, d, path)
-      val ckpt = "/tmp/graft_ckpt_q153"
-      val ckptPath = new org.apache.hadoop.fs.Path(ckpt)
-      ckptPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(ckptPath, true)
+      val ckpt = s"$dir/ckpt"
       // each run counts streamed rows per batch — a bounded scalar per
       // batch, never a row collect
       def run(): Long = {
@@ -1360,8 +1274,8 @@ object SystemQueries {
   val q154CdcStreamIvm = QuerySpec(
     "q154_cdc_stream_ivm", "S-dsv2-cdc-stream-ivm",
     "continuous IVM: maintained aggregate fed by the CDC stream",
-    (s, d) => withStatePartitions(s, 8) {
-      val path = "/tmp/graft_store_q154"
+    (s, d) => Fixture(s) { (s, path) =>
+      statePartitions(s)
       churnedOrdersStore(s, d, path)
       val state = new java.util.concurrent.ConcurrentHashMap[String, (Long, Double)]()
       val q = s.readStream.format("graft-store").option("readChangeFeed", "true")
@@ -1405,12 +1319,7 @@ object SystemQueries {
   val q155SqlUpdate = QuerySpec(
     "q155_sql_update", "S-dsv2-sql-update",
     "SQL UPDATE via SupportsRowLevelOperations: pruned group rewrite from SQL text",
-    (s, d) => {
-      val base = "/tmp/graft_catalog_q155"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.graftq155", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.graftq155.base", base)
+    (s, d) => Fixture(s, "graftq155") { (s, base) =>
       Tables.orders(s, d)
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
         .repartitionByRange(8, col("o_orderkey"))
@@ -1460,12 +1369,7 @@ object SystemQueries {
   val q156SqlMerge = QuerySpec(
     "q156_sql_merge", "S-dsv2-sql-merge",
     "SQL MERGE INTO via SupportsRowLevelOperations: upsert from SQL text",
-    (s, d) => {
-      val base = "/tmp/graft_catalog_q156"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.graftq156", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.graftq156.base", base)
+    (s, d) => Fixture(s, "graftq156") { (s, base) =>
       val baseDf = Tables.orders(s, d)
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
       baseDf.repartitionByRange(8, col("o_orderkey"))
@@ -1518,13 +1422,9 @@ object SystemQueries {
   val q157MultiBucket = QuerySpec(
     "q157_multi_bucket", "S-dsv2-multi-bucket",
     "multi-column bucket(n,a,b) layout: composite-key co-location, bounded files",
-    (s, d) => {
-      val pa = "/tmp/graft_store_q157a"
-      val pb = "/tmp/graft_store_q157b"
-      for (p <- Seq(pa, pb)) {
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
-      }
+    (s, d) => Fixture(s) { (s, dir) =>
+      val pa = s"$dir/a"
+      val pb = s"$dir/b"
       val base = Tables.orders(s, d)
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
       // halves of the key range: both sides nonempty at every fixture sf
@@ -1591,10 +1491,7 @@ object SystemQueries {
   val q158SpecEvolution = QuerySpec(
     "q158_spec_evolution", "S-dsv2-spec-evolution",
     "partition-spec evolution: metadata-only re-layout, mixed-spec reads exact",
-    (s, d) => {
-      val path = "/tmp/graft_store_q158"
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+    (s, d) => Fixture(s) { (s, path) =>
       val base = Tables.orders(s, d)
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
       // halves of the key range: the post-evolution era is nonempty at
@@ -1640,10 +1537,7 @@ object SystemQueries {
   val q159StoreFileLineage = QuerySpec(
     "q159_store_file_lineage", "S-dsv2-file-lineage",
     "_file metadata column: native-format scan lineage matches the manifest",
-    (s, d) => {
-      val path = "/tmp/graft_store_q159"
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+    (s, d) => Fixture(s) { (s, path) =>
       Tables.orders(s, d)
         .select("o_orderkey", "o_totalprice", "o_orderpriority")
         .filter(col("o_orderkey") < 4000)
@@ -1677,12 +1571,7 @@ object SystemQueries {
   val q160SqlAlter = QuerySpec(
     "q160_sql_alter", "S-dsv2-sql-ddl",
     "SQL ALTER TABLE: metadata-only ADD COLUMNS + validated CHECK declaration",
-    (s, d) => {
-      val base = "/tmp/graft_catalog_q160"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.graftq160", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.graftq160.base", base)
+    (s, d) => Fixture(s, "graftq160") { (s, base) =>
       Tables.orders(s, d).select("o_orderkey", "o_totalprice")
         .filter(col("o_orderkey") < 3000)
         .repartitionByRange(4, col("o_orderkey"))
@@ -1736,10 +1625,7 @@ object SystemQueries {
   val q161MorDelete = QuerySpec(
     "q161_mor_delete", "S-dsv2-mor-delete",
     "merge-on-read DELETE: position-delete masks, data files untouched",
-    (s, d) => {
-      val path = "/tmp/graft_store_q161"
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+    (s, d) => Fixture(s) { (s, path) =>
       Tables.orders(s, d)
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
         .repartitionByRange(8, col("o_orderkey"))
@@ -1793,10 +1679,7 @@ object SystemQueries {
   val q162MorCdc = QuerySpec(
     "q162_mor_cdc", "S-dsv2-mor-cdc",
     "CDC over merge-on-read: delete refs resolve from live target files",
-    (s, d) => {
-      val path = "/tmp/graft_store_q162"
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+    (s, d) => Fixture(s) { (s, path) =>
       Tables.orders(s, d).select("o_orderkey", "o_totalprice")
         .filter(col("o_orderkey") < 4000)
         .repartitionByRange(4, col("o_orderkey"))
@@ -1837,10 +1720,7 @@ object SystemQueries {
   val q163MorPurge = QuerySpec(
     "q163_mor_purge", "S-dsv2-mor-maintenance",
     "position-delete purge: read-debt repayment costs covered files only",
-    (s, d) => {
-      val path = "/tmp/graft_store_q163"
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+    (s, d) => Fixture(s) { (s, path) =>
       Tables.orders(s, d)
         .select("o_orderkey", "o_totalprice", "o_orderpriority")
         .repartitionByRange(8, col("o_orderkey"))
@@ -1878,12 +1758,7 @@ object SystemQueries {
   val q164MorSqlUpdate = QuerySpec(
     "q164_mor_sql_update", "S-dsv2-mor-sql-update",
     "SQL UPDATE via SupportsDelta on a MOR table: churn-sized delta commit",
-    (s, d) => {
-      val base = "/tmp/graft_catalog_q164"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.graftq164", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.graftq164.base", base)
+    (s, d) => Fixture(s, "graftq164") { (s, base) =>
       Tables.orders(s, d)
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
         .repartitionByRange(8, col("o_orderkey"))
@@ -1931,12 +1806,7 @@ object SystemQueries {
   val q165MorSqlMerge = QuerySpec(
     "q165_mor_sql_merge", "S-dsv2-mor-sql-merge",
     "SQL MERGE via SupportsDelta on a MOR table; CDC streams it change-store-free",
-    (s, d) => {
-      val base = "/tmp/graft_catalog_q165"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.graftq165", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.graftq165.base", base)
+    (s, d) => Fixture(s, "graftq165") { (s, base) =>
       val baseDf = Tables.orders(s, d)
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
       baseDf.repartitionByRange(8, col("o_orderkey"))
@@ -2001,10 +1871,7 @@ object SystemQueries {
   val q166MorUpsert = QuerySpec(
     "q166_mor_upsert", "S-dsv2-mor-upsert",
     "zero-read CDC upsert batches via equality deletes: last writer wins",
-    (s, d) => {
-      val path = "/tmp/graft_store_q166"
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+    (s, d) => Fixture(s) { (s, path) =>
       val base = Tables.orders(s, d)
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
       base.repartitionByRange(8, col("o_orderkey"))
@@ -2061,10 +1928,7 @@ object SystemQueries {
   val q167StreamForget = QuerySpec(
     "q167_stream_forget", "S-dsv2-mor-stream-delete",
     "streaming key-deletion feed via equality deletes: O(batch) erasure commits",
-    (s, d) => {
-      val path = "/tmp/graft_store_q167"
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+    (s, d) => Fixture(s) { (s, path) =>
       Tables.events(s, d)
         .groupBy("user_id")
         .agg(count(lit(1)).as("n_events"), round(sum("value"), 2).as("sum_value"))
@@ -2116,10 +1980,7 @@ object SystemQueries {
   val q168AggPushdown = QuerySpec(
     "q168_agg_pushdown", "S-dsv2-agg-pushdown",
     "metadata-only count/min/max: manifest-served aggregates, zero files read",
-    (s, d) => {
-      val path = "/tmp/graft_store_q168"
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+    (s, d) => Fixture(s) { (s, path) =>
       Tables.orders(s, d)
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
         .repartitionByRange(6, col("o_orderkey"))
@@ -2163,12 +2024,7 @@ object SystemQueries {
   val q169FieldIdEvolution = QuerySpec(
     "q169_fieldid_evolution", "S-dsv2-fieldid-evolution",
     "RENAME/DROP COLUMN as metadata-only commits: field-id evolution",
-    (s, d) => {
-      val base = "/tmp/graft_catalog_q169"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.graftq169", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.graftq169.base", base)
+    (s, d) => Fixture(s, "graftq169") { (s, base) =>
       Tables.orders(s, d)
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
         .filter(col("o_orderkey") < 4000)
@@ -2220,10 +2076,7 @@ object SystemQueries {
   val q170NullStats = QuerySpec(
     "q170_null_stats", "S-dsv2-null-stats",
     "per-file null counts: count(col) pushdown + IS NULL file skipping",
-    (s, d) => {
-      val path = "/tmp/graft_store_q170"
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+    (s, d) => Fixture(s) { (s, path) =>
       // two eras: pre-evolution files lack o_comment entirely (IS NOT NULL
       // skips them wholesale); post-evolution files carry a nullable
       // derived column with real nulls
@@ -2286,12 +2139,7 @@ object SystemQueries {
   val q171TagsWap = QuerySpec(
     "q171_tags_wap", "S-dsv2-tags-wap",
     "snapshot tags (VERSION AS OF 'name') + write-audit-publish staging",
-    (s, d) => {
-      val base = "/tmp/graft_catalog_q171"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.graftq171", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.graftq171.base", base)
+    (s, d) => Fixture(s, "graftq171") { (s, base) =>
       val dir = s"$base/ord"
       def slice(lo: Long, hi: Long) = Tables.orders(s, d)
         .select("o_orderkey", "o_totalprice", "o_orderpriority")
@@ -2342,10 +2190,7 @@ object SystemQueries {
   val q172EqCdcResolve = QuerySpec(
     "q172_eq_cdc_resolve", "S-dsv2-eq-cdc-resolve",
     "equality-delete CDC resolution: upsert feeds as delete pre-images + inserts",
-    (s, d) => {
-      val path = "/tmp/graft_store_q172"
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+    (s, d) => Fixture(s) { (s, path) =>
       // data-derived windows: base = keys below 5/6 of max, upsert = keys
       // from 2/3 of max on — overlap (updates) AND extension (inserts)
       // are both nonempty at every fixture scale
@@ -2404,12 +2249,7 @@ object SystemQueries {
   val q173Branches = QuerySpec(
     "q173_branches", "S-dsv2-branches",
     "branch refs: staged multi-commit lineage + metadata-only fast-forward",
-    (s, d) => {
-      val base = "/tmp/graft_catalog_q173"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.graftq173", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.graftq173.base", base)
+    (s, d) => Fixture(s, "graftq173") { (s, base) =>
       val dir = s"$base/ord"
       // thirds of the key range: every slice nonempty at every fixture sf
       val mx = Tables.orders(s, d).agg(max("o_orderkey")).collect()(0).getLong(0)
@@ -2460,10 +2300,8 @@ object SystemQueries {
   val q174CompactSmall = QuerySpec(
     "q174_compact_small", "S-dsv2-compact-small",
     "binpack compaction: small files merge, right-sized files carry untouched",
-    (s, d) => {
-      val path = "/tmp/graft_store_q174"
+    (s, d) => Fixture(s) { (s, path) =>
       val fsPath = new org.apache.hadoop.fs.Path(path)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
       val orders = Tables.orders(s, d)
         .select("o_orderkey", "o_totalprice", "o_orderpriority")
       // one right-sized file, then a trail of 5 epoch-style small appends.
@@ -2520,10 +2358,7 @@ object SystemQueries {
   val q175SegmentedManifest = QuerySpec(
     "q175_segmented_manifest", "S-dsv2-segmented-manifest",
     "segmented manifests: O(churn) commit metadata via content-addressed chunks",
-    (s, d) => {
-      val path = "/tmp/graft_store_q175"
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+    (s, d) => Fixture(s) { (s, path) =>
       Tables.orders(s, d)
         .select("o_orderkey", "o_totalprice", "o_orderpriority")
         .filter(col("o_orderkey") < 8000)
@@ -2564,10 +2399,7 @@ object SystemQueries {
   val q176BucketPrune = QuerySpec(
     "q176_bucket_prune", "S-dsv2-bucket-prune",
     "bucket-layout point lookup: file selection prunes to the keys' buckets",
-    (s, d) => {
-      val path = "/tmp/graft_store_q176"
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+    (s, d) => Fixture(s) { (s, path) =>
       Tables.orders(s, d)
         .select("o_orderkey", "o_custkey", "o_totalprice")
         .write.format("graft-store").option("partitionBy", "bucket(16,o_orderkey)")
@@ -2607,10 +2439,7 @@ object SystemQueries {
   val q177RuntimePrune = QuerySpec(
     "q177_runtime_prune", "S-dsv2-runtime-prune",
     "join-driven runtime file skipping: dim keys prune fact files at execution",
-    (s, d) => {
-      val path = "/tmp/graft_store_q177"
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+    (s, d) => Fixture(s) { (s, path) =>
       Tables.lineitem(s, d)
         .select("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount")
         .write.format("graft-store").option("partitionBy", "bucket(16,l_suppkey)")
@@ -2656,10 +2485,7 @@ object SystemQueries {
   val q178BloomSkip = QuerySpec(
     "q178_bloom_skip", "S-dsv2-bloom-index",
     "bloom sidecar index: point lookup on an unsorted column skips files",
-    (s, d) => {
-      val path = "/tmp/graft_store_q178"
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+    (s, d) => Fixture(s) { (s, path) =>
       Tables.orders(s, d)
         .select("o_orderkey", "o_totalprice")
         .repartition(8) // hash-scatter: every file spans the key domain
@@ -2695,11 +2521,8 @@ object SystemQueries {
   val q179StreamRateLimit = QuerySpec(
     "q179_stream_ratelimit", "S-dsv2-stream-ratelimit",
     "admission control: backlog drains in bounded per-trigger batches, content exact",
-    (s, d) => withStatePartitions(s, 8) {
-      val path = "/tmp/graft_store_q179"
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    (s, d) => Fixture(s) { (s, path) =>
+      statePartitions(s)
       Tables.supplier(s, d).select("s_suppkey", "s_nationkey", "s_acctbal")
         .repartition(4)
         .write.format("graft-store").mode("append").save(path)
@@ -2738,11 +2561,9 @@ object SystemQueries {
   val q180RollingWrite = QuerySpec(
     "q180_rolling_write", "S-dsv2-target-file-size",
     "targetFileBytes rolling write: bounded file sizes under task skew",
-    (s, d) => {
-      val path = "/tmp/graft_store_q180"
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      val fs = fsPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(fsPath, true)
+    (s, d) => Fixture(s) { (s, path) =>
+      val fs = new org.apache.hadoop.fs.Path(path)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
       Tables.lineitem(s, d)
         .select("l_orderkey", "l_partkey", "l_extendedprice")
         .coalesce(2) // skew the tasks: ~30k rows each at sf0.01
@@ -2780,11 +2601,9 @@ object SystemQueries {
   val q181RemoveOrphans = QuerySpec(
     "q181_remove_orphans", "S-dsv2-orphan-cleanup",
     "orphan cleanup: crash debris reclaimed, no history dropped",
-    (s, d) => {
-      val path = "/tmp/graft_store_q181"
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      val fs = fsPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(fsPath, true)
+    (s, d) => Fixture(s) { (s, path) =>
+      val fs = new org.apache.hadoop.fs.Path(path)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
       Tables.orders(s, d).select("o_orderkey", "o_totalprice")
         .filter(col("o_orderkey") < 5000).repartition(2)
         .write.format("graft-store").mode("overwrite").save(path) // snap 0
@@ -2822,39 +2641,29 @@ object SystemQueries {
   val q182PartitionsMeta = QuerySpec(
     "q182_partitions_meta", "S-dsv2-partitions-table",
     "tbl$partitions: manifest-served per-partition rows match the data",
-    (s, d) => {
-      val base = "/tmp/graft_store_q182"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+    (s, d) => Fixture(s, "gq182") { (s, base) =>
       Tables.orders(s, d).select("o_orderkey", "o_totalprice")
         .write.format("graft-store").option("partitionBy", "bucket(8,o_orderkey)")
         .mode("overwrite").save(s"$base/ord")
-      s.conf.set("spark.sql.catalog.gq182", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq182.base", base)
-      try {
-        val meta = s.sql(
-          """SELECT CAST(partition AS INT) AS bucket,
-            |  CAST(sum(n_rows) AS BIGINT) AS n_rows
-            |FROM gq182.`ord$partitions` GROUP BY 1""".stripMargin)
-          .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-        // DuckDB cannot compute murmur3 bucket ids, so the data-side
-        // recomputation runs HERE with the writer's own hash — invoked as
-        // the catalog's bound V2 ScalarFunction (codegen'd Invoke), not a
-        // Scala udf; the oracle then only needs the invariant bit + an
-        // oracle-stable aggregate
-        val data = s.sql(
-          """SELECT gq182.bucket(8, o_orderkey) AS bucket,
-            |  count(*) AS n_rows
-            |FROM gq182.ord GROUP BY 1""".stripMargin)
-          .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-        val metaMatches = meta.nonEmpty && (meta sameElements data)
-        s.read.format("graft-store").load(s"$base/ord")
-          .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("sum_price"))
-          .withColumn("meta_matches", lit(metaMatches))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq182")
-        s.conf.unset("spark.sql.catalog.gq182.base")
-      }
+      val meta = s.sql(
+        """SELECT CAST(partition AS INT) AS bucket,
+          |  CAST(sum(n_rows) AS BIGINT) AS n_rows
+          |FROM gq182.`ord$partitions` GROUP BY 1""".stripMargin)
+        .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
+      // DuckDB cannot compute murmur3 bucket ids, so the data-side
+      // recomputation runs HERE with the writer's own hash — invoked as
+      // the catalog's bound V2 ScalarFunction (codegen'd Invoke), not a
+      // Scala udf; the oracle then only needs the invariant bit + an
+      // oracle-stable aggregate
+      val data = s.sql(
+        """SELECT gq182.bucket(8, o_orderkey) AS bucket,
+          |  count(*) AS n_rows
+          |FROM gq182.ord GROUP BY 1""".stripMargin)
+        .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
+      val metaMatches = meta.nonEmpty && (meta sameElements data)
+      s.read.format("graft-store").load(s"$base/ord")
+        .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("sum_price"))
+        .withColumn("meta_matches", lit(metaMatches))
     },
     Some("""SELECT count(*) AS n, round(sum(o_totalprice), 2) AS sum_price,
            |  TRUE AS meta_matches
@@ -2873,10 +2682,7 @@ object SystemQueries {
   val q183TemporalLayout = QuerySpec(
     "q183_temporal_layout", "S-dsv2-temporal-layout",
     "days(ts) layout: time-range predicates prune files by partition value",
-    (s, d) => {
-      val path = "/tmp/graft_store_q183"
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+    (s, d) => Fixture(s) { (s, path) =>
       Tables.events(s, d).select("ts", "event_type", "value")
         .coalesce(2)
         .write.format("graft-store").option("partitionBy", "days(ts)")
@@ -2917,10 +2723,7 @@ object SystemQueries {
   val q184MetaDrop = QuerySpec(
     "q184_meta_drop_delete", "S-dsv2-meta-drop",
     "metadata-only DELETE: proven-full files drop without read or rewrite",
-    (s, d) => {
-      val path = "/tmp/graft_store_q184"
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+    (s, d) => Fixture(s) { (s, path) =>
       Tables.orders(s, d)
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
         .write.format("graft-store").option("partitionBy", "o_orderpriority")
@@ -2971,12 +2774,7 @@ object SystemQueries {
   val q185PartitionOverwrite = QuerySpec(
     "q185_partition_overwrite", "S-dsv2-partition-overwrite",
     "scoped overwrite: atomic metadata-only partition backfill",
-    (s, d) => {
-      val base = "/tmp/graft_store_q185"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.q185cat", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.q185cat.base", base)
+    (s, d) => Fixture(s, "q185cat") { (s, base) =>
       Tables.orders(s, d)
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
         .write.format("graft-store").option("partitionBy", "o_orderpriority")
@@ -3025,12 +2823,7 @@ object SystemQueries {
   val q186SqlDdl = QuerySpec(
     "q186_sql_ddl_lifecycle", "S-dsv2-sql-ddl",
     "SQL DDL lifecycle: CREATE/CTAS/RTAS/RENAME with atomic staged commits",
-    (s, d) => {
-      val base = "/tmp/graft_store_q186"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.q186cat", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.q186cat.base", base)
+    (s, d) => Fixture(s, "q186cat") { (s, base) =>
       Tables.orders(s, d).createOrReplaceTempView("q186_orders")
       // atomic CTAS with declared partitioning
       s.sql("DROP TABLE IF EXISTS q186cat.ord")
@@ -3080,10 +2873,7 @@ object SystemQueries {
   val q187GroupByPushdown = QuerySpec(
     "q187_groupby_pushdown", "S-dsv2-groupby-pushdown",
     "metadata-only GROUP BY partition: manifest fold, zero files read",
-    (s, d) => {
-      val path = "/tmp/graft_store_q187"
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+    (s, d) => Fixture(s) { (s, path) =>
       Tables.orders(s, d)
         .select("o_orderkey", "o_totalprice", "o_orderpriority")
         .write.format("graft-store").option("partitionBy", "o_orderpriority")
@@ -3116,33 +2906,27 @@ object SystemQueries {
   val q188CboStats = QuerySpec(
     "q188_cbo_stats", "S-dsv2-cbo-stats",
     "manifest column stats feed the CBO: ranges, null counts, partition NDV",
-    (s, d) => {
-      val path = "/tmp/graft_store_q188"
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+    (s, d) => Fixture(s) { (s, path) =>
       Tables.orders(s, d)
         .select("o_orderkey", "o_totalprice", "o_orderpriority")
         .write.format("graft-store").option("partitionBy", "o_orderpriority")
         .mode("overwrite").save(path)
-      val oldCbo = s.conf.get("spark.sql.cbo.enabled", "false")
       s.conf.set("spark.sql.cbo.enabled", "true")
-      val (cboStats, selectivity) = try {
-        val df = s.read.format("graft-store").load(path)
-        val trueMin = Tables.orders(s, d).agg(min("o_orderkey")).collect()(0).getLong(0)
-        val trueMax = Tables.orders(s, d).agg(max("o_orderkey")).collect()(0).getLong(0)
-        val byName = df.queryExecution.optimizedPlan.stats
-          .attributeStats.map { case (a, st) => a.name -> st }
-        val ok = byName.get("o_orderkey").exists(st =>
-          st.min.contains(trueMin) && st.max.contains(trueMax) &&
-            st.nullCount.contains(BigInt(0))) &&
-          byName.get("o_orderpriority").exists(_.distinctCount.contains(BigInt(5)))
-        val mid = (trueMin + trueMax) / 2
-        val narrow = df.filter(col("o_orderkey") < lit(trueMin + (mid - trueMin) / 8))
-          .queryExecution.optimizedPlan.stats.rowCount
-        val wide = df.filter(col("o_orderkey") < lit(trueMax))
-          .queryExecution.optimizedPlan.stats.rowCount
-        (ok, narrow.isDefined && wide.isDefined && narrow.get < wide.get)
-      } finally s.conf.set("spark.sql.cbo.enabled", oldCbo)
+      val df = s.read.format("graft-store").load(path)
+      val trueMin = Tables.orders(s, d).agg(min("o_orderkey")).collect()(0).getLong(0)
+      val trueMax = Tables.orders(s, d).agg(max("o_orderkey")).collect()(0).getLong(0)
+      val byName = df.queryExecution.optimizedPlan.stats
+        .attributeStats.map { case (a, st) => a.name -> st }
+      val cboStats = byName.get("o_orderkey").exists(st =>
+        st.min.contains(trueMin) && st.max.contains(trueMax) &&
+          st.nullCount.contains(BigInt(0))) &&
+        byName.get("o_orderpriority").exists(_.distinctCount.contains(BigInt(5)))
+      val mid = (trueMin + trueMax) / 2
+      val narrow = df.filter(col("o_orderkey") < lit(trueMin + (mid - trueMin) / 8))
+        .queryExecution.optimizedPlan.stats.rowCount
+      val wide = df.filter(col("o_orderkey") < lit(trueMax))
+        .queryExecution.optimizedPlan.stats.rowCount
+      val selectivity = narrow.isDefined && wide.isDefined && narrow.get < wide.get
       s.read.format("graft-store").load(path)
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("sum_price"))
@@ -3167,10 +2951,8 @@ object SystemQueries {
   val q189SplitScan = QuerySpec(
     "q189_split_scan", "S-dsv2-split-scan",
     "oversized files scan as parallel slices via row-aligned block offsets",
-    (s, d) => {
-      val path = "/tmp/graft_store_q189"
+    (s, d) => Fixture(s) { (s, path) =>
       val fsPath = new org.apache.hadoop.fs.Path(path)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
       // ONE file (a compaction-output shape) with test-sized blocks
       Tables.lineitem(s, d)
         .select("l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag")
@@ -3214,12 +2996,7 @@ object SystemQueries {
   val q190SqlProcedures = QuerySpec(
     "q190_sql_procedures", "S-dsv2-sql-procedures",
     "CALL-able maintenance: purge_deletes + expire_snapshots from SQL",
-    (s, d) => {
-      val base = "/tmp/graft_store_q190"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.q190cat", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.q190cat.base", base)
+    (s, d) => Fixture(s, "q190cat") { (s, base) =>
       Tables.orders(s, d)
         .select("o_orderkey", "o_totalprice", "o_orderpriority")
         .repartitionByRange(8, col("o_orderkey"))
@@ -3271,10 +3048,7 @@ object SystemQueries {
   val q191Resort = QuerySpec(
     "q191_resort", "S-dsv2-resort",
     "incremental re-sort: only overlapping cluster ranges rewritten",
-    (s, d) => {
-      val path = "/tmp/graft_store_q191"
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+    (s, d) => Fixture(s) { (s, path) =>
       val li = Tables.lineitem(s, d)
         .select("l_orderkey", "l_quantity", "l_returnflag")
       li.write.format("graft-store")
@@ -3326,10 +3100,7 @@ object SystemQueries {
   val q192SortedScan = QuerySpec(
     "q192_sorted_scan", "S-dsv2-sorted-scan",
     "reported scan ordering: pre-sorted files elide per-partition sorts",
-    (s, d) => {
-      val path = "/tmp/graft_store_q192"
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+    (s, d) => Fixture(s) { (s, path) =>
       val li = Tables.lineitem(s, d)
         .select("l_orderkey", "l_quantity", "l_returnflag")
       li.write.format("graft-store")
@@ -3376,50 +3147,41 @@ object SystemQueries {
   val q193TypeWidening = QuerySpec(
     "q193_type_widening", "S-dsv2-type-widening",
     "ALTER COLUMN widening: metadata-only, mixed-width reads, DML across eras",
-    (s, d) => {
-      val base = "/tmp/graft_store_q193"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      val fs = fsPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq193", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq193.base", base)
-      try {
-        // era 1: even keys at the NARROW types (int key, float price)
-        Tables.orders(s, d).filter(col("o_orderkey") % 2 === 0)
-          .selectExpr("cast(o_orderkey as int) as k",
-            "cast(o_totalprice as float) as price")
-          .write.format("graft-store").option("dmlMode", "mor")
-          .mode("overwrite").save(s"$base/t")
-        def dataFiles(): Set[String] =
-          fs.listStatus(new org.apache.hadoop.fs.Path(s"$base/t"))
-            .map(_.getPath.getName).filter(_.endsWith(".gsf")).toSet
-        val before = dataFiles()
-        s.sql("ALTER TABLE gq193.t ALTER COLUMN k TYPE BIGINT")
-        s.sql("ALTER TABLE gq193.t ALTER COLUMN price TYPE DOUBLE")
-        val metadataOnly = before.nonEmpty && dataFiles() == before
-        // int-era stats re-parse as long exactly, so min/max still serves
-        // from the manifest ACROSS the widening (LocalTableScan, zero reads)
-        val agg = s.sql("SELECT min(k) AS mn, max(k) AS mx FROM gq193.t")
-        val pushed =
-          agg.queryExecution.executedPlan.toString.contains("LocalTableScan") &&
-            agg.collect()(0).getLong(1) % 2 == 0
-        // era 2: odd keys SHIFTED beyond int range — genuinely long storage
-        Tables.orders(s, d).filter(col("o_orderkey") % 2 === 1)
-          .selectExpr("o_orderkey + 5000000000 as k",
-            "cast(o_totalprice as double) as price")
-          .write.format("graft-store").mode("append").save(s"$base/t")
-        // row-level DML across BOTH eras: MOR masks (zero rewrites), and
-        // the eq/read paths compare old int bytes at the widened type
-        s.sql("DELETE FROM gq193.t WHERE k % 7 = 3")
-        s.sql("""SELECT count(*) AS n, sum(k) AS sum_k,
-                |  round(sum(price), 2) AS sum_price
-                |FROM gq193.t""".stripMargin)
-          .withColumn("metadata_only", lit(metadataOnly))
-          .withColumn("stats_pushdown", lit(pushed))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq193")
-        s.conf.unset("spark.sql.catalog.gq193.base")
-      }
+    (s, d) => Fixture(s, "gq193") { (s, base) =>
+      val fs = new org.apache.hadoop.fs.Path(base)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
+      // era 1: even keys at the NARROW types (int key, float price)
+      Tables.orders(s, d).filter(col("o_orderkey") % 2 === 0)
+        .selectExpr("cast(o_orderkey as int) as k",
+          "cast(o_totalprice as float) as price")
+        .write.format("graft-store").option("dmlMode", "mor")
+        .mode("overwrite").save(s"$base/t")
+      def dataFiles(): Set[String] =
+        fs.listStatus(new org.apache.hadoop.fs.Path(s"$base/t"))
+          .map(_.getPath.getName).filter(_.endsWith(".gsf")).toSet
+      val before = dataFiles()
+      s.sql("ALTER TABLE gq193.t ALTER COLUMN k TYPE BIGINT")
+      s.sql("ALTER TABLE gq193.t ALTER COLUMN price TYPE DOUBLE")
+      val metadataOnly = before.nonEmpty && dataFiles() == before
+      // int-era stats re-parse as long exactly, so min/max still serves
+      // from the manifest ACROSS the widening (LocalTableScan, zero reads)
+      val agg = s.sql("SELECT min(k) AS mn, max(k) AS mx FROM gq193.t")
+      val pushed =
+        agg.queryExecution.executedPlan.toString.contains("LocalTableScan") &&
+          agg.collect()(0).getLong(1) % 2 == 0
+      // era 2: odd keys SHIFTED beyond int range — genuinely long storage
+      Tables.orders(s, d).filter(col("o_orderkey") % 2 === 1)
+        .selectExpr("o_orderkey + 5000000000 as k",
+          "cast(o_totalprice as double) as price")
+        .write.format("graft-store").mode("append").save(s"$base/t")
+      // row-level DML across BOTH eras: MOR masks (zero rewrites), and
+      // the eq/read paths compare old int bytes at the widened type
+      s.sql("DELETE FROM gq193.t WHERE k % 7 = 3")
+      s.sql("""SELECT count(*) AS n, sum(k) AS sum_k,
+              |  round(sum(price), 2) AS sum_price
+              |FROM gq193.t""".stripMargin)
+        .withColumn("metadata_only", lit(metadataOnly))
+        .withColumn("stats_pushdown", lit(pushed))
     },
     Some("""WITH t AS (
            |  SELECT CAST(o_orderkey AS BIGINT) AS k,
@@ -3448,10 +3210,7 @@ object SystemQueries {
   val q194CompositeRuntimePrune = QuerySpec(
     "q194_composite_runtime_prune", "S-dsv2-composite-runtime-prune",
     "composite-key join: per-key runtime INs prune tuple buckets",
-    (s, d) => {
-      val path = "/tmp/graft_store_q194"
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+    (s, d) => Fixture(s) { (s, path) =>
       Tables.lineitem(s, d)
         .select("l_suppkey", "l_returnflag", "l_extendedprice", "l_discount")
         .write.format("graft-store")
@@ -3495,42 +3254,28 @@ object SystemQueries {
   val q195SqlView = QuerySpec(
     "q195_sql_view", "S-dsv2-sql-view",
     "SQL views: create, query through, persist across catalog instances",
-    (s, d) => {
-      val base = "/tmp/graft_store_q195"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq195", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq195.base", base)
-      s.conf.set("spark.sql.catalog.gq195b", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq195b.base", base)
-      try {
-        Tables.orders(s, d).select("o_orderpriority", "o_totalprice")
-          .write.format("graft-store").mode("overwrite").save(s"$base/ord")
-        s.sql(
-          """CREATE OR REPLACE VIEW gq195.rev (priority, n, revenue) AS
-            |SELECT o_orderpriority, count(*),
-            |  round(sum(o_totalprice), 2)
-            |FROM gq195.ord GROUP BY o_orderpriority""".stripMargin)
-        // read through the OTHER catalog instance: only the persisted view
-        // file connects them — a session restart replays exactly this
-        val rows = s.sql("SELECT priority, n, revenue FROM gq195b.rev").collect()
-        val persisted = rows.nonEmpty &&
-          s.sql("SHOW VIEWS IN gq195b").collect().exists(_.getString(1) == "rev")
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("priority",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("n",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("revenue",
-            org.apache.spark.sql.types.DoubleType)))
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-          .withColumn("view_persisted", lit(persisted))
-      } finally {
-        Seq("gq195", "gq195b").foreach { c =>
-          s.conf.unset(s"spark.sql.catalog.$c")
-          s.conf.unset(s"spark.sql.catalog.$c.base")
-        }
-      }
+    (s, d) => Fixture(s, "gq195", "gq195b") { (s, base) =>
+      Tables.orders(s, d).select("o_orderpriority", "o_totalprice")
+        .write.format("graft-store").mode("overwrite").save(s"$base/ord")
+      s.sql(
+        """CREATE OR REPLACE VIEW gq195.rev (priority, n, revenue) AS
+          |SELECT o_orderpriority, count(*),
+          |  round(sum(o_totalprice), 2)
+          |FROM gq195.ord GROUP BY o_orderpriority""".stripMargin)
+      // read through the OTHER catalog instance: only the persisted view
+      // file connects them — a session restart replays exactly this
+      val rows = s.sql("SELECT priority, n, revenue FROM gq195b.rev").collect()
+      val persisted = rows.nonEmpty &&
+        s.sql("SHOW VIEWS IN gq195b").collect().exists(_.getString(1) == "rev")
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("priority",
+          org.apache.spark.sql.types.StringType),
+        org.apache.spark.sql.types.StructField("n",
+          org.apache.spark.sql.types.LongType, nullable = false),
+        org.apache.spark.sql.types.StructField("revenue",
+          org.apache.spark.sql.types.DoubleType)))
+      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+        .withColumn("view_persisted", lit(persisted))
     },
     Some("""SELECT o_orderpriority AS priority, count(*) AS n,
            |  round(sum(o_totalprice), 2) AS revenue, TRUE AS view_persisted
@@ -3548,36 +3293,27 @@ object SystemQueries {
   val q196ColumnDefault = QuerySpec(
     "q196_column_default", "S-dsv2-column-default",
     "ADD COLUMN DEFAULT: backfill-free, old rows read the default",
-    (s, d) => {
-      val base = "/tmp/graft_store_q196"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      val fs = fsPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq196", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq196.base", base)
-      try {
-        // era 1: even keys, BEFORE the column exists
-        Tables.orders(s, d).filter(col("o_orderkey") % 2 === 0)
-          .select("o_orderkey", "o_totalprice")
-          .write.format("graft-store").mode("overwrite").save(s"$base/t")
-        def dataFiles(): Set[String] =
-          fs.listStatus(new org.apache.hadoop.fs.Path(s"$base/t"))
-            .map(_.getPath.getName).filter(_.endsWith(".gsf")).toSet
-        val before = dataFiles()
-        s.sql("ALTER TABLE gq196.t ADD COLUMNS (channel STRING DEFAULT 'web')")
-        val metadataOnly = before.nonEmpty && dataFiles() == before
-        // era 2: odd keys, written WITH explicit channel values
-        Tables.orders(s, d).filter(col("o_orderkey") % 2 === 1)
-          .selectExpr("o_orderkey", "o_totalprice", "'store' as channel")
-          .write.format("graft-store").mode("append").save(s"$base/t")
-        s.sql("""SELECT channel, count(*) AS n,
-                |  round(sum(o_totalprice), 2) AS revenue
-                |FROM gq196.t GROUP BY channel""".stripMargin)
-          .withColumn("metadata_only", lit(metadataOnly))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq196")
-        s.conf.unset("spark.sql.catalog.gq196.base")
-      }
+    (s, d) => Fixture(s, "gq196") { (s, base) =>
+      val fs = new org.apache.hadoop.fs.Path(base)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
+      // era 1: even keys, BEFORE the column exists
+      Tables.orders(s, d).filter(col("o_orderkey") % 2 === 0)
+        .select("o_orderkey", "o_totalprice")
+        .write.format("graft-store").mode("overwrite").save(s"$base/t")
+      def dataFiles(): Set[String] =
+        fs.listStatus(new org.apache.hadoop.fs.Path(s"$base/t"))
+          .map(_.getPath.getName).filter(_.endsWith(".gsf")).toSet
+      val before = dataFiles()
+      s.sql("ALTER TABLE gq196.t ADD COLUMNS (channel STRING DEFAULT 'web')")
+      val metadataOnly = before.nonEmpty && dataFiles() == before
+      // era 2: odd keys, written WITH explicit channel values
+      Tables.orders(s, d).filter(col("o_orderkey") % 2 === 1)
+        .selectExpr("o_orderkey", "o_totalprice", "'store' as channel")
+        .write.format("graft-store").mode("append").save(s"$base/t")
+      s.sql("""SELECT channel, count(*) AS n,
+              |  round(sum(o_totalprice), 2) AS revenue
+              |FROM gq196.t GROUP BY channel""".stripMargin)
+        .withColumn("metadata_only", lit(metadataOnly))
     },
     Some("""SELECT CASE WHEN o_orderkey % 2 = 0 THEN 'web' ELSE 'store' END
            |  AS channel, count(*) AS n,
@@ -3599,40 +3335,30 @@ object SystemQueries {
   val q197Mview = QuerySpec(
     "q197_mview", "S-dsv2-mview",
     "materialized view: incremental CDC refresh equals recompute",
-    (s, d) => {
-      val base = "/tmp/graft_store_q197"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq197", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq197.base", base)
-      try {
-        val src = s"$base/src"
-        val baseDf = Tables.orders(s, d)
-          .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
-        baseDf.filter(col("o_orderkey") < 4000)
-          .repartitionByRange(4, col("o_orderkey"))
-          .write.format("graft-store").mode("overwrite").save(src) // snapshot 0
-        s.sql("CALL gq197.system.create_mview('mv', " +
-          "'SELECT o_orderpriority AS priority, count(*) AS n, " +
-          "sum(o_totalprice) AS sp FROM gq197.src GROUP BY o_orderpriority')")
-        // the q151 churn trio, AFTER materialization
-        graft.sources.v2.GraftStoreOps.deleteWhere(s, src,
-          col("o_orderkey") < 1000)
-        baseDf.filter(col("o_orderkey") >= 4000 && col("o_orderkey") < 6000)
-          .write.format("graft-store").mode("append").save(src)
-        graft.sources.v2.GraftStoreOps.updateWhere(s, src,
-          col("o_orderkey") >= 2000 && col("o_orderkey") < 3000,
-          Map("o_totalprice" -> (col("o_totalprice") + 10)))
-        val r = s.sql("CALL gq197.system.refresh_mview('mv')").collect()(0)
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        val incremental = r.getString(0) == "incremental"
-        // the refreshed view IS the answer — read through the catalog
-        s.sql("""SELECT priority, n, round(sp, 2) AS sp FROM gq197.mv""")
-          .withColumn("incremental", lit(incremental))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq197")
-        s.conf.unset("spark.sql.catalog.gq197.base")
-      }
+    (s, d) => Fixture(s, "gq197") { (s, base) =>
+      val src = s"$base/src"
+      val baseDf = Tables.orders(s, d)
+        .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
+      baseDf.filter(col("o_orderkey") < 4000)
+        .repartitionByRange(4, col("o_orderkey"))
+        .write.format("graft-store").mode("overwrite").save(src) // snapshot 0
+      s.sql("CALL gq197.system.create_mview('mv', " +
+        "'SELECT o_orderpriority AS priority, count(*) AS n, " +
+        "sum(o_totalprice) AS sp FROM gq197.src GROUP BY o_orderpriority')")
+      // the q151 churn trio, AFTER materialization
+      graft.sources.v2.GraftStoreOps.deleteWhere(s, src,
+        col("o_orderkey") < 1000)
+      baseDf.filter(col("o_orderkey") >= 4000 && col("o_orderkey") < 6000)
+        .write.format("graft-store").mode("append").save(src)
+      graft.sources.v2.GraftStoreOps.updateWhere(s, src,
+        col("o_orderkey") >= 2000 && col("o_orderkey") < 3000,
+        Map("o_totalprice" -> (col("o_totalprice") + 10)))
+      val r = s.sql("CALL gq197.system.refresh_mview('mv')").collect()(0)
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      val incremental = r.getString(0) == "incremental"
+      // the refreshed view IS the answer — read through the catalog
+      s.sql("""SELECT priority, n, round(sp, 2) AS sp FROM gq197.mv""")
+        .withColumn("incremental", lit(incremental))
     },
     Some("""WITH final AS (
            |  SELECT o_orderkey, o_totalprice, o_orderpriority
@@ -3657,34 +3383,24 @@ object SystemQueries {
   val q198MergeEvolve = QuerySpec(
     "q198_merge_evolve", "S-dsv2-merge-evolve",
     "MERGE WITH SCHEMA EVOLUTION: source-driven column add + upsert in one statement",
-    (s, d) => {
-      val base = "/tmp/graft_store_q198"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq198", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq198.base", base)
-      try {
-        val orders = Tables.orders(s, d)
-        orders.filter(col("o_orderkey") < 6000)
-          .select("o_orderkey", "o_totalprice")
-          .write.format("graft-store").mode("overwrite").save(s"$base/t")
-        orders.filter((col("o_orderkey") >= 2000 && col("o_orderkey") < 4000)
-            || (col("o_orderkey") >= 6000 && col("o_orderkey") < 8000))
-          .select(col("o_orderkey"), (col("o_totalprice") + 5).as("o_totalprice"),
-            when(col("o_orderkey") < 4000, "adj").otherwise("new").as("channel"))
-          .createOrReplaceTempView("q198_src")
-        s.sql(
-          """MERGE WITH SCHEMA EVOLUTION INTO gq198.t t USING q198_src s
-            |ON t.o_orderkey = s.o_orderkey
-            |WHEN MATCHED THEN UPDATE SET *
-            |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-        s.sql("""SELECT coalesce(channel, 'base') AS channel, count(*) AS n,
-                |  round(sum(o_totalprice), 2) AS rev
-                |FROM gq198.t GROUP BY 1""".stripMargin)
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq198")
-        s.conf.unset("spark.sql.catalog.gq198.base")
-      }
+    (s, d) => Fixture(s, "gq198") { (s, base) =>
+      val orders = Tables.orders(s, d)
+      orders.filter(col("o_orderkey") < 6000)
+        .select("o_orderkey", "o_totalprice")
+        .write.format("graft-store").mode("overwrite").save(s"$base/t")
+      orders.filter((col("o_orderkey") >= 2000 && col("o_orderkey") < 4000)
+          || (col("o_orderkey") >= 6000 && col("o_orderkey") < 8000))
+        .select(col("o_orderkey"), (col("o_totalprice") + 5).as("o_totalprice"),
+          when(col("o_orderkey") < 4000, "adj").otherwise("new").as("channel"))
+        .createOrReplaceTempView("q198_src")
+      s.sql(
+        """MERGE WITH SCHEMA EVOLUTION INTO gq198.t t USING q198_src s
+          |ON t.o_orderkey = s.o_orderkey
+          |WHEN MATCHED THEN UPDATE SET *
+          |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      s.sql("""SELECT coalesce(channel, 'base') AS channel, count(*) AS n,
+              |  round(sum(o_totalprice), 2) AS rev
+              |FROM gq198.t GROUP BY 1""".stripMargin)
     },
     Some("""WITH t AS (
            |  SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderkey < 6000),
@@ -3711,10 +3427,7 @@ object SystemQueries {
   val q199Decimal = QuerySpec(
     "q199_decimal", "S-dsv2-decimal",
     "decimal codec: exact money aggregates with stats-skipped scans",
-    (s, d) => {
-      val path = "/tmp/graft_store_q199"
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+    (s, d) => Fixture(s) { (s, path) =>
       Tables.lineitem(s, d)
         .select(col("l_orderkey"),
           col("l_quantity").cast("decimal(12,2)").as("qty"),
@@ -3749,40 +3462,30 @@ object SystemQueries {
   val q200MviewStream = QuerySpec(
     "q200_mview_stream", "S-dsv2-mview-stream",
     "streaming MV maintenance: per-batch incremental refresh equals recompute",
-    (s, d) => {
-      val base = "/tmp/graft_store_q200"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq200", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq200.base", base)
+    (s, d) => Fixture(s, "gq200") { (s, base) =>
+      val src = s"$base/src"
+      val mv = s"$base/mv"
+      val baseDf = Tables.orders(s, d)
+        .select("o_orderkey", "o_totalprice", "o_orderpriority")
+      baseDf.filter(col("o_orderkey") < 3000)
+        .write.format("graft-store").mode("overwrite").save(src)
+      graft.sources.v2.GraftMview.create(s, mv,
+        "SELECT o_orderpriority AS priority, count(*) AS n, " +
+          "sum(o_totalprice) AS sp FROM gq200.src GROUP BY o_orderpriority")
+      val q = graft.sources.v2.GraftMview.streamRefresh(s, mv,
+        s"$base/_ckpt")
       try {
-        val src = s"$base/src"
-        val mv = s"$base/mv"
-        val baseDf = Tables.orders(s, d)
-          .select("o_orderkey", "o_totalprice", "o_orderpriority")
-        baseDf.filter(col("o_orderkey") < 3000)
-          .write.format("graft-store").mode("overwrite").save(src)
-        graft.sources.v2.GraftMview.create(s, mv,
-          "SELECT o_orderpriority AS priority, count(*) AS n, " +
-            "sum(o_totalprice) AS sp FROM gq200.src GROUP BY o_orderpriority")
-        val q = graft.sources.v2.GraftMview.streamRefresh(s, mv,
-          s"$base/_ckpt")
-        try {
-          q.processAllAvailable()
-          baseDf.filter(col("o_orderkey") >= 3000 && col("o_orderkey") < 5000)
-            .write.format("graft-store").mode("append").save(src)
-          q.processAllAvailable()
-          baseDf.filter(col("o_orderkey") >= 5000 && col("o_orderkey") < 7000)
-            .write.format("graft-store").mode("append").save(src)
-          q.processAllAvailable()
-        } finally q.stop()
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        s.read.format("graft-store").load(mv)
-          .select(col("priority"), col("n"), round(col("sp"), 2).as("sp"))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq200")
-        s.conf.unset("spark.sql.catalog.gq200.base")
-      }
+        q.processAllAvailable()
+        baseDf.filter(col("o_orderkey") >= 3000 && col("o_orderkey") < 5000)
+          .write.format("graft-store").mode("append").save(src)
+        q.processAllAvailable()
+        baseDf.filter(col("o_orderkey") >= 5000 && col("o_orderkey") < 7000)
+          .write.format("graft-store").mode("append").save(src)
+        q.processAllAvailable()
+      } finally q.stop()
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      s.read.format("graft-store").load(mv)
+        .select(col("priority"), col("n"), round(col("sp"), 2).as("sp"))
     },
     Some("""SELECT o_orderpriority AS priority, count(*) AS n,
            |  round(sum(o_totalprice), 2) AS sp
@@ -3800,40 +3503,30 @@ object SystemQueries {
   val q201MviewMinmax = QuerySpec(
     "q201_mview_minmax", "S-dsv2-mview-minmax",
     "MV min/max: insert fast path + removal-group rescan equals recompute",
-    (s, d) => {
-      val base = "/tmp/graft_store_q201"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq201", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq201.base", base)
-      try {
-        val src = s"$base/src"
-        val baseDf = Tables.orders(s, d)
-          .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
-        baseDf.filter(col("o_orderkey") < 4000)
-          .repartitionByRange(4, col("o_orderkey"))
-          .write.format("graft-store").mode("overwrite").save(src)
-        s.sql("CALL gq201.system.create_mview('mv', " +
-          "'SELECT o_orderpriority AS priority, count(*) AS n, " +
-          "min(o_totalprice) AS mn, max(o_totalprice) AS mx " +
-          "FROM gq201.src GROUP BY o_orderpriority')")
-        graft.sources.v2.GraftStoreOps.deleteWhere(s, src,
-          col("o_orderkey") < 1000)
-        baseDf.filter(col("o_orderkey") >= 4000 && col("o_orderkey") < 6000)
-          .write.format("graft-store").mode("append").save(src)
-        graft.sources.v2.GraftStoreOps.updateWhere(s, src,
-          col("o_orderkey") >= 2000 && col("o_orderkey") < 3000,
-          Map("o_totalprice" -> (col("o_totalprice") + 10)))
-        val r = s.sql("CALL gq201.system.refresh_mview('mv')").collect()(0)
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        val incremental = r.getString(0) == "incremental"
-        s.sql("""SELECT priority, n, round(mn, 2) AS mn, round(mx, 2) AS mx
-                |FROM gq201.mv""".stripMargin)
-          .withColumn("incremental", lit(incremental))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq201")
-        s.conf.unset("spark.sql.catalog.gq201.base")
-      }
+    (s, d) => Fixture(s, "gq201") { (s, base) =>
+      val src = s"$base/src"
+      val baseDf = Tables.orders(s, d)
+        .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
+      baseDf.filter(col("o_orderkey") < 4000)
+        .repartitionByRange(4, col("o_orderkey"))
+        .write.format("graft-store").mode("overwrite").save(src)
+      s.sql("CALL gq201.system.create_mview('mv', " +
+        "'SELECT o_orderpriority AS priority, count(*) AS n, " +
+        "min(o_totalprice) AS mn, max(o_totalprice) AS mx " +
+        "FROM gq201.src GROUP BY o_orderpriority')")
+      graft.sources.v2.GraftStoreOps.deleteWhere(s, src,
+        col("o_orderkey") < 1000)
+      baseDf.filter(col("o_orderkey") >= 4000 && col("o_orderkey") < 6000)
+        .write.format("graft-store").mode("append").save(src)
+      graft.sources.v2.GraftStoreOps.updateWhere(s, src,
+        col("o_orderkey") >= 2000 && col("o_orderkey") < 3000,
+        Map("o_totalprice" -> (col("o_totalprice") + 10)))
+      val r = s.sql("CALL gq201.system.refresh_mview('mv')").collect()(0)
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      val incremental = r.getString(0) == "incremental"
+      s.sql("""SELECT priority, n, round(mn, 2) AS mn, round(mx, 2) AS mx
+              |FROM gq201.mv""".stripMargin)
+        .withColumn("incremental", lit(incremental))
     },
     Some("""WITH final AS (
            |  SELECT o_orderkey, o_totalprice, o_orderpriority
@@ -3858,44 +3551,34 @@ object SystemQueries {
   val q202TblProperties = QuerySpec(
     "q202_tbl_properties", "S-dsv2-tbl-properties",
     "user table properties: persist, inherit through commits, stamp atomically",
-    (s, d) => {
-      val base = "/tmp/graft_store_q202"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq202", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq202.base", base)
-      try {
-        val t = s"$base/t"
-        s.sql("CREATE TABLE gq202.t (o_orderkey BIGINT, o_totalprice DOUBLE) " +
-          "USING `graft-store` TBLPROPERTIES ('owner.team'='curation')")
-        s.sql("ALTER TABLE gq202.t SET TBLPROPERTIES ('quality.tier'='gold')")
-        Tables.orders(s, d).filter(col("o_orderkey") < 5000)
-          .select("o_orderkey", "o_totalprice")
-          .write.format("graft-store").mode("append").save(t)
-        s.sql("DELETE FROM gq202.t WHERE o_orderkey < 1000")
-        graft.sources.v2.GraftStoreOps.compactSnapshot(s, t, 64L << 20)
-        // atomic stamp: ONE commit carries both the appended rows and the
-        // property (the MV-watermark slot)
-        val snapsBefore = graft.sources.v2.GraftStoreOps.history(s, t).size
-        Tables.orders(s, d)
-          .filter(col("o_orderkey") >= 5000 && col("o_orderkey") < 6000)
-          .select("o_orderkey", "o_totalprice")
-          .write.format("graft-store")
-          .option("setProps", "ingest.batch:42").mode("append").save(t)
-        val atomic =
-          graft.sources.v2.GraftStoreOps.history(s, t).size == snapsBefore + 1
-        val props = graft.sources.v2.GraftStoreOps.tableProps(s, t)
-        val surviving = props.get("owner.team").contains("curation") &&
-          props.get("quality.tier").contains("gold") &&
-          props.get("ingest.batch").contains("42")
-        s.sql("""SELECT count(*) AS n, round(sum(o_totalprice), 2) AS rev
-                |FROM gq202.t""".stripMargin)
-          .withColumn("props_survive_commits", lit(surviving))
-          .withColumn("props_stamp_atomic", lit(atomic))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq202")
-        s.conf.unset("spark.sql.catalog.gq202.base")
-      }
+    (s, d) => Fixture(s, "gq202") { (s, base) =>
+      val t = s"$base/t"
+      s.sql("CREATE TABLE gq202.t (o_orderkey BIGINT, o_totalprice DOUBLE) " +
+        "USING `graft-store` TBLPROPERTIES ('owner.team'='curation')")
+      s.sql("ALTER TABLE gq202.t SET TBLPROPERTIES ('quality.tier'='gold')")
+      Tables.orders(s, d).filter(col("o_orderkey") < 5000)
+        .select("o_orderkey", "o_totalprice")
+        .write.format("graft-store").mode("append").save(t)
+      s.sql("DELETE FROM gq202.t WHERE o_orderkey < 1000")
+      graft.sources.v2.GraftStoreOps.compactSnapshot(s, t, 64L << 20)
+      // atomic stamp: ONE commit carries both the appended rows and the
+      // property (the MV-watermark slot)
+      val snapsBefore = graft.sources.v2.GraftStoreOps.history(s, t).size
+      Tables.orders(s, d)
+        .filter(col("o_orderkey") >= 5000 && col("o_orderkey") < 6000)
+        .select("o_orderkey", "o_totalprice")
+        .write.format("graft-store")
+        .option("setProps", "ingest.batch:42").mode("append").save(t)
+      val atomic =
+        graft.sources.v2.GraftStoreOps.history(s, t).size == snapsBefore + 1
+      val props = graft.sources.v2.GraftStoreOps.tableProps(s, t)
+      val surviving = props.get("owner.team").contains("curation") &&
+        props.get("quality.tier").contains("gold") &&
+        props.get("ingest.batch").contains("42")
+      s.sql("""SELECT count(*) AS n, round(sum(o_totalprice), 2) AS rev
+              |FROM gq202.t""".stripMargin)
+        .withColumn("props_survive_commits", lit(surviving))
+        .withColumn("props_stamp_atomic", lit(atomic))
     },
     Some("""SELECT count(*) AS n, round(sum(o_totalprice), 2) AS rev,
            |  TRUE AS props_survive_commits, TRUE AS props_stamp_atomic
@@ -3913,50 +3596,40 @@ object SystemQueries {
   val q203CompactWhere = QuerySpec(
     "q203_compact_where", "S-dsv2-compact-where",
     "scoped compaction: one partition binpacks, the rest carries zero-I/O",
-    (s, d) => {
-      val base = "/tmp/graft_store_q203"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq203", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq203.base", base)
-      try {
-        val t = s"$base/t"
-        val orders = Tables.orders(s, d)
-          .filter(col("o_orderkey") < 6000)
-          .select(col("o_orderkey"), col("o_totalprice"),
-            (col("o_orderkey") % 3).cast("string").as("bucket3"))
-        // 3 epoch appends x 3 partition values = 9 files
-        (0 until 3).foreach { i =>
-          orders.filter(col("o_orderkey") % 7 === i).coalesce(1)
-            .write.format("graft-store").option("partitionBy", "bucket3")
-            .mode(if (i == 0) "overwrite" else "append").save(t)
-        }
-        // file names per partition value via the `t$files` metadata table
-        // (thresholds DERIVED from the fixture — scale-proof)
-        def byPart(): Map[String, Set[String]] =
-          s.sql("SELECT file, part_vals FROM gq203.`t$files`")
-            .collect()
-            .groupBy(r => Option(r.getString(1)).getOrElse("?").stripPrefix("="))
-            .map { case (k, rs) => k -> rs.map(_.getString(0)).toSet }
-        val before = byPart()
-        s.sql("CALL gq203.system.compact('t', where => 'bucket3 = \"1\"')")
-        val after = byPart()
-        // out-of-scope partitions carry BYTE-IDENTICAL (same file names);
-        // the in-scope partition binpacked to one file (when it had >= 2)
-        val carriedIdentical = (before - "1") == (after - "1")
-        val scoped =
-          if (before.getOrElse("1", Set.empty).size >= 2)
-            after.getOrElse("1", Set.empty).size == 1
-          else before.getOrElse("1", Set.empty) == after.getOrElse("1", Set.empty)
-        s.sql("""SELECT bucket3, count(*) AS n,
-                |  round(sum(o_totalprice), 2) AS rev
-                |FROM gq203.t GROUP BY bucket3""".stripMargin)
-          .withColumn("carried_zero_io", lit(carriedIdentical))
-          .withColumn("rewrite_scoped", lit(scoped))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq203")
-        s.conf.unset("spark.sql.catalog.gq203.base")
+    (s, d) => Fixture(s, "gq203") { (s, base) =>
+      val t = s"$base/t"
+      val orders = Tables.orders(s, d)
+        .filter(col("o_orderkey") < 6000)
+        .select(col("o_orderkey"), col("o_totalprice"),
+          (col("o_orderkey") % 3).cast("string").as("bucket3"))
+      // 3 epoch appends x 3 partition values = 9 files
+      (0 until 3).foreach { i =>
+        orders.filter(col("o_orderkey") % 7 === i).coalesce(1)
+          .write.format("graft-store").option("partitionBy", "bucket3")
+          .mode(if (i == 0) "overwrite" else "append").save(t)
       }
+      // file names per partition value via the `t$files` metadata table
+      // (thresholds DERIVED from the fixture — scale-proof)
+      def byPart(): Map[String, Set[String]] =
+        s.sql("SELECT file, part_vals FROM gq203.`t$files`")
+          .collect()
+          .groupBy(r => Option(r.getString(1)).getOrElse("?").stripPrefix("="))
+          .map { case (k, rs) => k -> rs.map(_.getString(0)).toSet }
+      val before = byPart()
+      s.sql("CALL gq203.system.compact('t', where => 'bucket3 = \"1\"')")
+      val after = byPart()
+      // out-of-scope partitions carry BYTE-IDENTICAL (same file names);
+      // the in-scope partition binpacked to one file (when it had >= 2)
+      val carriedIdentical = (before - "1") == (after - "1")
+      val scoped =
+        if (before.getOrElse("1", Set.empty).size >= 2)
+          after.getOrElse("1", Set.empty).size == 1
+        else before.getOrElse("1", Set.empty) == after.getOrElse("1", Set.empty)
+      s.sql("""SELECT bucket3, count(*) AS n,
+              |  round(sum(o_totalprice), 2) AS rev
+              |FROM gq203.t GROUP BY bucket3""".stripMargin)
+        .withColumn("carried_zero_io", lit(carriedIdentical))
+        .withColumn("rewrite_scoped", lit(scoped))
     },
     Some("""SELECT CAST(o_orderkey % 3 AS VARCHAR) AS bucket3, count(*) AS n,
            |  round(sum(o_totalprice), 2) AS rev,
@@ -3975,41 +3648,32 @@ object SystemQueries {
   val q204DecimalWidening = QuerySpec(
     "q204_decimal_widening", "S-dsv2-decimal-widening",
     "decimal widening: metadata-only ALTER, mixed-width decimal aggregate exact",
-    (s, d) => {
-      val base = "/tmp/graft_store_q204"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      val fs = fsPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq204", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq204.base", base)
-      try {
-        val t = s"$base/t"
-        val orders = Tables.orders(s, d).filter(col("o_orderkey") < 4000)
-        // era 1: even keys at the NARROW precision
-        orders.filter(col("o_orderkey") % 2 === 0)
-          .select(col("o_orderkey"),
-            col("o_totalprice").cast("decimal(8,2)").as("amt"))
-          .write.format("graft-store").mode("overwrite").save(t)
-        def dataFiles(): Set[String] =
-          fs.listStatus(new org.apache.hadoop.fs.Path(t))
-            .map(_.getPath.getName).filter(_.endsWith(".gsf")).toSet
-        val before = dataFiles()
-        s.sql("ALTER TABLE gq204.t ALTER COLUMN amt TYPE DECIMAL(14,2)")
-        val metadataOnly = before.nonEmpty && dataFiles() == before
-        // era 2: odd keys at the WIDE precision (x1000 needs the width)
-        orders.filter(col("o_orderkey") % 2 === 1)
-          .select(col("o_orderkey"),
-            (col("o_totalprice") * 1000).cast("decimal(14,2)").as("amt"))
-          .write.format("graft-store").mode("append").save(t)
-        s.sql("""SELECT CASE WHEN o_orderkey % 2 = 0 THEN 'old' ELSE 'new' END
-                |    AS era, count(*) AS n,
-                |  round(CAST(sum(amt) AS DOUBLE), 2) AS total
-                |FROM gq204.t GROUP BY 1""".stripMargin)
-          .withColumn("metadata_only", lit(metadataOnly))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq204")
-        s.conf.unset("spark.sql.catalog.gq204.base")
-      }
+    (s, d) => Fixture(s, "gq204") { (s, base) =>
+      val fs = new org.apache.hadoop.fs.Path(base)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
+      val t = s"$base/t"
+      val orders = Tables.orders(s, d).filter(col("o_orderkey") < 4000)
+      // era 1: even keys at the NARROW precision
+      orders.filter(col("o_orderkey") % 2 === 0)
+        .select(col("o_orderkey"),
+          col("o_totalprice").cast("decimal(8,2)").as("amt"))
+        .write.format("graft-store").mode("overwrite").save(t)
+      def dataFiles(): Set[String] =
+        fs.listStatus(new org.apache.hadoop.fs.Path(t))
+          .map(_.getPath.getName).filter(_.endsWith(".gsf")).toSet
+      val before = dataFiles()
+      s.sql("ALTER TABLE gq204.t ALTER COLUMN amt TYPE DECIMAL(14,2)")
+      val metadataOnly = before.nonEmpty && dataFiles() == before
+      // era 2: odd keys at the WIDE precision (x1000 needs the width)
+      orders.filter(col("o_orderkey") % 2 === 1)
+        .select(col("o_orderkey"),
+          (col("o_totalprice") * 1000).cast("decimal(14,2)").as("amt"))
+        .write.format("graft-store").mode("append").save(t)
+      s.sql("""SELECT CASE WHEN o_orderkey % 2 = 0 THEN 'old' ELSE 'new' END
+              |    AS era, count(*) AS n,
+              |  round(CAST(sum(amt) AS DOUBLE), 2) AS total
+              |FROM gq204.t GROUP BY 1""".stripMargin)
+        .withColumn("metadata_only", lit(metadataOnly))
     },
     Some("""SELECT CASE WHEN o_orderkey % 2 = 0 THEN 'old' ELSE 'new' END
            |    AS era, count(*) AS n,
@@ -4033,43 +3697,33 @@ object SystemQueries {
   val q205MviewAvg = QuerySpec(
     "q205_mview_avg", "S-dsv2-mview-avg",
     "MV avg: internal sum+count maintenance through insert+delete churn, O(churn) reads",
-    (s, d) => {
-      val base = "/tmp/graft_store_q205"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq205", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq205.base", base)
-      try {
-        val src = s"$base/src"
-        val baseDf = Tables.orders(s, d)
-          .select("o_orderkey", "o_totalprice", "o_orderpriority")
-        baseDf.filter(col("o_orderkey") < 8000)
-          .repartitionByRange(8, col("o_orderkey"))
-          .write.format("graft-store").mode("overwrite").save(src) // 8 files
-        s.sql("CALL gq205.system.create_mview('mv', " +
-          "'SELECT o_orderpriority AS priority, count(*) AS n, " +
-          "avg(o_totalprice) AS mean_price FROM gq205.src GROUP BY o_orderpriority')")
-        // churn AFTER materialization: one append, one delete
-        baseDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
-          .write.format("graft-store").mode("append").save(src)
-        graft.sources.v2.GraftStoreOps.deleteWhere(s, src,
-          col("o_orderkey") < 1000)
-        val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
-        val r = s.sql("CALL gq205.system.refresh_mview('mv')").collect()(0)
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
-        val incremental = r.getString(0) == "incremental"
-        // churn-proportional: the delta pass + tiny-MV merge opens fewer
-        // slices than the 8-file base a recompute would have to scan
-        val churnProportional = opened < 8
-        s.sql("""SELECT priority, n, round(mean_price, 2) AS mean_price
-                |FROM gq205.mv""".stripMargin)
-          .withColumn("incremental", lit(incremental))
-          .withColumn("churn_proportional", lit(churnProportional))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq205")
-        s.conf.unset("spark.sql.catalog.gq205.base")
-      }
+    (s, d) => Fixture(s, "gq205") { (s, base) =>
+      val src = s"$base/src"
+      val baseDf = Tables.orders(s, d)
+        .select("o_orderkey", "o_totalprice", "o_orderpriority")
+      baseDf.filter(col("o_orderkey") < 8000)
+        .repartitionByRange(8, col("o_orderkey"))
+        .write.format("graft-store").mode("overwrite").save(src) // 8 files
+      s.sql("CALL gq205.system.create_mview('mv', " +
+        "'SELECT o_orderpriority AS priority, count(*) AS n, " +
+        "avg(o_totalprice) AS mean_price FROM gq205.src GROUP BY o_orderpriority')")
+      // churn AFTER materialization: one append, one delete
+      baseDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
+        .write.format("graft-store").mode("append").save(src)
+      graft.sources.v2.GraftStoreOps.deleteWhere(s, src,
+        col("o_orderkey") < 1000)
+      val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
+      val r = s.sql("CALL gq205.system.refresh_mview('mv')").collect()(0)
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
+      val incremental = r.getString(0) == "incremental"
+      // churn-proportional: the delta pass + tiny-MV merge opens fewer
+      // slices than the 8-file base a recompute would have to scan
+      val churnProportional = opened < 8
+      s.sql("""SELECT priority, n, round(mean_price, 2) AS mean_price
+              |FROM gq205.mv""".stripMargin)
+        .withColumn("incremental", lit(incremental))
+        .withColumn("churn_proportional", lit(churnProportional))
     },
     Some("""SELECT o_orderpriority AS priority, count(*) AS n,
            |  round(avg(o_totalprice), 2) AS mean_price,
@@ -4090,10 +3744,7 @@ object SystemQueries {
   val q206DecimalWide = QuerySpec(
     "q206_decimal_wide", "S-dsv2-decimal-wide",
     "wide decimal(38,6): exact beyond-long aggregates, skipped scans, metadata-only DELETE",
-    (s, d) => {
-      val path = "/tmp/graft_store_q206"
-      val fsPath = new org.apache.hadoop.fs.Path(path)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+    (s, d) => Fixture(s) { (s, path) =>
       val shift = new java.math.BigDecimal("10000000000000000000000") // > Long.Max
       Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_returnflag"),
@@ -4148,50 +3799,40 @@ object SystemQueries {
   val q207MviewJoin = QuerySpec(
     "q207_mview_join", "S-dsv2-mview-join",
     "join MV: delta-rule refresh through fact append + dim update + fact delete",
-    (s, d) => {
-      val base = "/tmp/graft_store_q207"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq207", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq207.base", base)
-      try {
-        val fact = s"$base/fact"
-        val dim = s"$base/dim"
-        val ordersDf = Tables.orders(s, d)
-          .select("o_orderkey", "o_custkey", "o_totalprice")
-        ordersDf.filter(col("o_orderkey") < 8000)
-          .repartitionByRange(8, col("o_orderkey"))
-          .write.format("graft-store").mode("overwrite").save(fact) // 8 files
-        Tables.customer(s, d).select("c_custkey", "c_mktsegment")
-          .write.format("graft-store").mode("overwrite").save(dim)
-        s.sql("CALL gq207.system.create_mview('mv', " +
-          "'SELECT c_mktsegment AS seg, count(*) AS n, " +
-          "sum(o_totalprice) AS rev, avg(o_totalprice) AS avg_price " +
-          "FROM gq207.fact JOIN gq207.dim ON o_custkey = c_custkey " +
-          "GROUP BY c_mktsegment')")
-        // FACT-only churn: refresh must stay churn-proportional
-        ordersDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
-          .write.format("graft-store").mode("append").save(fact)
-        val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
-        val r1 = s.sql("CALL gq207.system.refresh_mview('mv')").collect()(0)
-        val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
-        val churnProportional = opened < 8 // never the 8-file fact base
-        // BOTH sides churn: dim UPDATE moves group mass; fact DELETE
-        s.sql("UPDATE gq207.dim SET c_mktsegment = 'MOVED' WHERE c_custkey % 10 = 0")
-        graft.sources.v2.GraftStoreOps.deleteWhere(s, fact,
-          col("o_orderkey") < 1000)
-        val r2 = s.sql("CALL gq207.system.refresh_mview('mv')").collect()(0)
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        val incremental =
-          r1.getString(0) == "incremental" && r2.getString(0) == "incremental"
-        s.sql("""SELECT seg, n, round(rev, 2) AS rev,
-                |  round(avg_price, 2) AS avg_price FROM gq207.mv""".stripMargin)
-          .withColumn("incremental", lit(incremental))
-          .withColumn("churn_proportional", lit(churnProportional))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq207")
-        s.conf.unset("spark.sql.catalog.gq207.base")
-      }
+    (s, d) => Fixture(s, "gq207") { (s, base) =>
+      val fact = s"$base/fact"
+      val dim = s"$base/dim"
+      val ordersDf = Tables.orders(s, d)
+        .select("o_orderkey", "o_custkey", "o_totalprice")
+      ordersDf.filter(col("o_orderkey") < 8000)
+        .repartitionByRange(8, col("o_orderkey"))
+        .write.format("graft-store").mode("overwrite").save(fact) // 8 files
+      Tables.customer(s, d).select("c_custkey", "c_mktsegment")
+        .write.format("graft-store").mode("overwrite").save(dim)
+      s.sql("CALL gq207.system.create_mview('mv', " +
+        "'SELECT c_mktsegment AS seg, count(*) AS n, " +
+        "sum(o_totalprice) AS rev, avg(o_totalprice) AS avg_price " +
+        "FROM gq207.fact JOIN gq207.dim ON o_custkey = c_custkey " +
+        "GROUP BY c_mktsegment')")
+      // FACT-only churn: refresh must stay churn-proportional
+      ordersDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
+        .write.format("graft-store").mode("append").save(fact)
+      val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
+      val r1 = s.sql("CALL gq207.system.refresh_mview('mv')").collect()(0)
+      val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
+      val churnProportional = opened < 8 // never the 8-file fact base
+      // BOTH sides churn: dim UPDATE moves group mass; fact DELETE
+      s.sql("UPDATE gq207.dim SET c_mktsegment = 'MOVED' WHERE c_custkey % 10 = 0")
+      graft.sources.v2.GraftStoreOps.deleteWhere(s, fact,
+        col("o_orderkey") < 1000)
+      val r2 = s.sql("CALL gq207.system.refresh_mview('mv')").collect()(0)
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      val incremental =
+        r1.getString(0) == "incremental" && r2.getString(0) == "incremental"
+      s.sql("""SELECT seg, n, round(rev, 2) AS rev,
+              |  round(avg_price, 2) AS avg_price FROM gq207.mv""".stripMargin)
+        .withColumn("incremental", lit(incremental))
+        .withColumn("churn_proportional", lit(churnProportional))
     },
     Some("""WITH f AS (
            |  SELECT o_custkey, o_totalprice FROM orders
@@ -4220,58 +3861,48 @@ object SystemQueries {
   val q208MviewRewrite = QuerySpec(
     "q208_mview_rewrite", "S-dsv2-mview-rewrite",
     "transparent MV rewrite: fresh view serves base-table aggregates, staleness opts out",
-    (s, d) => {
-      val base = "/tmp/graft_store_q208"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq208", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq208.base", base)
-      try {
-        val src = s"$base/src"
-        val mv = s"$base/mv"
-        val ordersDf = Tables.orders(s, d)
-          .select("o_orderkey", "o_totalprice", "o_orderpriority")
-        ordersDf.filter(col("o_orderkey") < 8000)
-          .repartitionByRange(8, col("o_orderkey"))
-          .write.format("graft-store").mode("overwrite").save(src) // 8 files
-        s.sql("CALL gq208.system.create_mview('mv', " +
-          "'SELECT o_orderpriority AS priority, count(*) AS n, " +
-          "sum(o_totalprice) AS rev, avg(o_totalprice) AS ap " +
-          "FROM gq208.src GROUP BY o_orderpriority')")
-        def agg() = s.sql(
-          """SELECT o_orderpriority AS priority, count(*) AS n,
-            |  round(sum(o_totalprice), 2) AS rev,
-            |  round(avg(o_totalprice), 2) AS ap
-            |FROM gq208.src GROUP BY o_orderpriority""".stripMargin)
-        def served(df: org.apache.spark.sql.DataFrame): Boolean =
-          df.queryExecution.optimizedPlan.toString.contains(mv)
-        // fresh at create: served from the view
-        val servedAtCreate = served(agg())
-        // churn WITHOUT refresh: the stale view must NOT serve, and the
-        // base-table answer must include the fresh rows
-        ordersDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
-          .write.format("graft-store").mode("append").save(src)
-        val staleDf = agg()
-        val staleNotServed = !served(staleDf)
-        val staleSawChurn =
-          staleDf.agg(sum("n")).collect()(0).getLong(0) > 8000 / 2
-        // refresh restores freshness; the served plan reads the TINY view
-        s.sql("CALL gq208.system.refresh_mview('mv')")
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
-        val finalDf = agg()
-        val rows = finalDf.collect()
-        val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
-        val servedAfterRefresh = served(finalDf)
-        val readTheView = opened < 8 // the 8-file fact base never opens
-        s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), finalDf.schema)
-          .withColumn("lifecycle_exact", lit(
-            servedAtCreate && staleNotServed && staleSawChurn))
-          .withColumn("served_from_view", lit(servedAfterRefresh && readTheView))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq208")
-        s.conf.unset("spark.sql.catalog.gq208.base")
-      }
+    (s, d) => Fixture(s, "gq208") { (s, base) =>
+      val src = s"$base/src"
+      val mv = s"$base/mv"
+      val ordersDf = Tables.orders(s, d)
+        .select("o_orderkey", "o_totalprice", "o_orderpriority")
+      ordersDf.filter(col("o_orderkey") < 8000)
+        .repartitionByRange(8, col("o_orderkey"))
+        .write.format("graft-store").mode("overwrite").save(src) // 8 files
+      s.sql("CALL gq208.system.create_mview('mv', " +
+        "'SELECT o_orderpriority AS priority, count(*) AS n, " +
+        "sum(o_totalprice) AS rev, avg(o_totalprice) AS ap " +
+        "FROM gq208.src GROUP BY o_orderpriority')")
+      def agg() = s.sql(
+        """SELECT o_orderpriority AS priority, count(*) AS n,
+          |  round(sum(o_totalprice), 2) AS rev,
+          |  round(avg(o_totalprice), 2) AS ap
+          |FROM gq208.src GROUP BY o_orderpriority""".stripMargin)
+      def served(df: org.apache.spark.sql.DataFrame): Boolean =
+        df.queryExecution.optimizedPlan.toString.contains(mv)
+      // fresh at create: served from the view
+      val servedAtCreate = served(agg())
+      // churn WITHOUT refresh: the stale view must NOT serve, and the
+      // base-table answer must include the fresh rows
+      ordersDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
+        .write.format("graft-store").mode("append").save(src)
+      val staleDf = agg()
+      val staleNotServed = !served(staleDf)
+      val staleSawChurn =
+        staleDf.agg(sum("n")).collect()(0).getLong(0) > 8000 / 2
+      // refresh restores freshness; the served plan reads the TINY view
+      s.sql("CALL gq208.system.refresh_mview('mv')")
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
+      val finalDf = agg()
+      val rows = finalDf.collect()
+      val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
+      val servedAfterRefresh = served(finalDf)
+      val readTheView = opened < 8 // the 8-file fact base never opens
+      s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), finalDf.schema)
+        .withColumn("lifecycle_exact", lit(
+          servedAtCreate && staleNotServed && staleSawChurn))
+        .withColumn("served_from_view", lit(servedAfterRefresh && readTheView))
     },
     Some("""SELECT o_orderpriority AS priority, count(*) AS n,
            |  round(sum(o_totalprice), 2) AS rev,
@@ -4292,37 +3923,27 @@ object SystemQueries {
   val q209MviewStddev = QuerySpec(
     "q209_mview_stddev", "S-dsv2-mview-stddev",
     "MV stddev/variance: signed (n, sum, sumsq) maintenance through insert+delete churn",
-    (s, d) => {
-      val base = "/tmp/graft_store_q209"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq209", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq209.base", base)
-      try {
-        val src = s"$base/src"
-        val baseDf = Tables.orders(s, d)
-          .select("o_orderkey", "o_totalprice", "o_orderpriority")
-        baseDf.filter(col("o_orderkey") < 8000)
-          .repartitionByRange(8, col("o_orderkey"))
-          .write.format("graft-store").mode("overwrite").save(src)
-        s.sql("CALL gq209.system.create_mview('mv', " +
-          "'SELECT o_orderpriority AS priority, count(*) AS n, " +
-          "stddev_samp(o_totalprice) AS sd, stddev_pop(o_totalprice) AS sp " +
-          "FROM gq209.src GROUP BY o_orderpriority')")
-        baseDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
-          .write.format("graft-store").mode("append").save(src)
-        graft.sources.v2.GraftStoreOps.deleteWhere(s, src,
-          col("o_orderkey") < 1000)
-        val r = s.sql("CALL gq209.system.refresh_mview('mv')").collect()(0)
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        val incremental = r.getString(0) == "incremental"
-        s.sql("""SELECT priority, n, round(sd, 2) AS sd, round(sp, 2) AS sp
-                |FROM gq209.mv""".stripMargin)
-          .withColumn("incremental", lit(incremental))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq209")
-        s.conf.unset("spark.sql.catalog.gq209.base")
-      }
+    (s, d) => Fixture(s, "gq209") { (s, base) =>
+      val src = s"$base/src"
+      val baseDf = Tables.orders(s, d)
+        .select("o_orderkey", "o_totalprice", "o_orderpriority")
+      baseDf.filter(col("o_orderkey") < 8000)
+        .repartitionByRange(8, col("o_orderkey"))
+        .write.format("graft-store").mode("overwrite").save(src)
+      s.sql("CALL gq209.system.create_mview('mv', " +
+        "'SELECT o_orderpriority AS priority, count(*) AS n, " +
+        "stddev_samp(o_totalprice) AS sd, stddev_pop(o_totalprice) AS sp " +
+        "FROM gq209.src GROUP BY o_orderpriority')")
+      baseDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
+        .write.format("graft-store").mode("append").save(src)
+      graft.sources.v2.GraftStoreOps.deleteWhere(s, src,
+        col("o_orderkey") < 1000)
+      val r = s.sql("CALL gq209.system.refresh_mview('mv')").collect()(0)
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      val incremental = r.getString(0) == "incremental"
+      s.sql("""SELECT priority, n, round(sd, 2) AS sd, round(sp, 2) AS sp
+              |FROM gq209.mv""".stripMargin)
+        .withColumn("incremental", lit(incremental))
     },
     Some("""SELECT o_orderpriority AS priority, count(*) AS n,
            |  round(stddev_samp(o_totalprice), 2) AS sd,
@@ -4344,54 +3965,44 @@ object SystemQueries {
   val q210MviewRollup = QuerySpec(
     "q210_mview_rollup", "S-dsv2-mview-rollup",
     "rollup rewrite: coarser + global aggregates served from one finer view",
-    (s, d) => {
-      val base = "/tmp/graft_store_q210"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq210", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq210.base", base)
-      try {
-        val src = s"$base/src"
-        val baseDf = Tables.orders(s, d)
-          .select("o_orderkey", "o_totalprice", "o_orderpriority", "o_orderstatus")
-        baseDf.filter(col("o_orderkey") < 8000)
-          .repartitionByRange(8, col("o_orderkey"))
-          .write.format("graft-store").mode("overwrite").save(src)
-        s.sql("CALL gq210.system.create_mview('mv', " +
-          "'SELECT o_orderpriority AS priority, o_orderstatus AS status, " +
-          "count(*) AS n, sum(o_totalprice) AS rev, avg(o_totalprice) AS ap, " +
-          "stddev_samp(o_totalprice) AS sd " +
-          "FROM gq210.src GROUP BY o_orderpriority, o_orderstatus')")
-        baseDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
-          .write.format("graft-store").mode("append").save(src)
-        s.sql("CALL gq210.system.refresh_mview('mv')")
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        def served(df: org.apache.spark.sql.DataFrame): Boolean =
-          df.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
-        val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
-        // COARSER than the view's (priority, status) grain
-        val coarse = s.sql(
-          """SELECT o_orderpriority AS priority, count(*) AS n,
-            |  round(sum(o_totalprice), 2) AS rev,
-            |  round(avg(o_totalprice), 2) AS ap,
-            |  round(stddev_samp(o_totalprice), 2) AS sd
-            |FROM gq210.src GROUP BY o_orderpriority""".stripMargin)
-        val rows = coarse.collect()
-        // GLOBAL: the empty grouping also rolls up
-        val globalDf = s.sql(
-          "SELECT count(*) AS n, round(sum(o_totalprice), 2) AS rev FROM gq210.src")
-        val g = globalDf.collect()(0)
-        val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
-        val rolledUp = served(coarse) && served(globalDf) && opened < 8
-        val globalMatches =
-          g.getLong(0) == rows.map(_.getLong(1)).sum
-        s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), coarse.schema)
-          .withColumn("rolled_up", lit(rolledUp))
-          .withColumn("global_matches", lit(globalMatches))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq210")
-        s.conf.unset("spark.sql.catalog.gq210.base")
-      }
+    (s, d) => Fixture(s, "gq210") { (s, base) =>
+      val src = s"$base/src"
+      val baseDf = Tables.orders(s, d)
+        .select("o_orderkey", "o_totalprice", "o_orderpriority", "o_orderstatus")
+      baseDf.filter(col("o_orderkey") < 8000)
+        .repartitionByRange(8, col("o_orderkey"))
+        .write.format("graft-store").mode("overwrite").save(src)
+      s.sql("CALL gq210.system.create_mview('mv', " +
+        "'SELECT o_orderpriority AS priority, o_orderstatus AS status, " +
+        "count(*) AS n, sum(o_totalprice) AS rev, avg(o_totalprice) AS ap, " +
+        "stddev_samp(o_totalprice) AS sd " +
+        "FROM gq210.src GROUP BY o_orderpriority, o_orderstatus')")
+      baseDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
+        .write.format("graft-store").mode("append").save(src)
+      s.sql("CALL gq210.system.refresh_mview('mv')")
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      def served(df: org.apache.spark.sql.DataFrame): Boolean =
+        df.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
+      val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
+      // COARSER than the view's (priority, status) grain
+      val coarse = s.sql(
+        """SELECT o_orderpriority AS priority, count(*) AS n,
+          |  round(sum(o_totalprice), 2) AS rev,
+          |  round(avg(o_totalprice), 2) AS ap,
+          |  round(stddev_samp(o_totalprice), 2) AS sd
+          |FROM gq210.src GROUP BY o_orderpriority""".stripMargin)
+      val rows = coarse.collect()
+      // GLOBAL: the empty grouping also rolls up
+      val globalDf = s.sql(
+        "SELECT count(*) AS n, round(sum(o_totalprice), 2) AS rev FROM gq210.src")
+      val g = globalDf.collect()(0)
+      val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
+      val rolledUp = served(coarse) && served(globalDf) && opened < 8
+      val globalMatches =
+        g.getLong(0) == rows.map(_.getLong(1)).sum
+      s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), coarse.schema)
+        .withColumn("rolled_up", lit(rolledUp))
+        .withColumn("global_matches", lit(globalMatches))
     },
     Some("""SELECT o_orderpriority AS priority, count(*) AS n,
            |  round(sum(o_totalprice), 2) AS rev,
@@ -4416,67 +4027,57 @@ object SystemQueries {
   val q211MviewFilterRewrite = QuerySpec(
     "q211_mview_filter_rewrite", "S-dsv2-mview-filter-rewrite",
     "filtered rewrite: residual WHERE on group cols + a filtered view's exact WHERE",
-    (s, d) => {
-      val base = "/tmp/graft_store_q211"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq211", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq211.base", base)
-      try {
-        val src = s"$base/src"
-        val baseDf = Tables.orders(s, d)
-          .select("o_orderkey", "o_totalprice", "o_orderpriority", "o_orderstatus")
-        baseDf.filter(col("o_orderkey") < 8000)
-          .repartitionByRange(8, col("o_orderkey"))
-          .write.format("graft-store").mode("overwrite").save(src) // 8 files
-        s.sql("CALL gq211.system.create_mview('mva', " +
-          "'SELECT o_orderpriority AS priority, o_orderstatus AS status, " +
-          "count(*) AS n, sum(o_totalprice) AS rev " +
-          "FROM gq211.src GROUP BY o_orderpriority, o_orderstatus')")
-        s.sql("CALL gq211.system.create_mview('mvb', " +
-          "'SELECT o_orderpriority AS priority, count(*) AS n, " +
-          "sum(o_totalprice) AS rev FROM gq211.src " +
-          "WHERE o_totalprice > 100000 GROUP BY o_orderpriority')")
-        // churn, then refresh both views — the serves below are post-churn
-        baseDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
-          .write.format("graft-store").mode("append").save(src)
-        s.sql("CALL gq211.system.refresh_mview('mva')")
-        s.sql("CALL gq211.system.refresh_mview('mvb')")
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        def served(df: org.apache.spark.sql.DataFrame, mv: String): Boolean =
-          df.queryExecution.optimizedPlan.toString.contains(s"$base/$mv")
-        // (a) residual WHERE on a group column + rollup from mva
-        val qa = s.sql(
-          """SELECT o_orderpriority AS priority, count(*) AS n,
-            |  round(sum(o_totalprice), 2) AS rev
-            |FROM gq211.src WHERE o_orderstatus = 'O'
-            |GROUP BY o_orderpriority""".stripMargin)
-        // (b) the filtered view's own WHERE, matched semantically
-        val qb = s.sql(
-          """SELECT o_orderpriority AS priority, count(*) AS n,
-            |  round(sum(o_totalprice), 2) AS rev
-            |FROM gq211.src WHERE o_totalprice > 100000
-            |GROUP BY o_orderpriority""".stripMargin)
-        val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
-        val ra = qa.collect()
-        val rb = qb.collect()
-        val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
-        val servedA = served(qa, "mva")
-        val servedB = served(qb, "mvb")
-        val sliceProof = opened < 8 // never the 8-file base
-        val tagged =
-          s.createDataFrame(s.sparkContext.parallelize(ra.toIndexedSeq), qa.schema)
-            .withColumn("part", lit("grp_where"))
-            .unionByName(s.createDataFrame(
-              s.sparkContext.parallelize(rb.toIndexedSeq), qb.schema)
-              .withColumn("part", lit("mv_where")))
-        tagged.withColumn("served_a", lit(servedA))
-          .withColumn("served_b", lit(servedB))
-          .withColumn("slice_proof", lit(sliceProof))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq211")
-        s.conf.unset("spark.sql.catalog.gq211.base")
-      }
+    (s, d) => Fixture(s, "gq211") { (s, base) =>
+      val src = s"$base/src"
+      val baseDf = Tables.orders(s, d)
+        .select("o_orderkey", "o_totalprice", "o_orderpriority", "o_orderstatus")
+      baseDf.filter(col("o_orderkey") < 8000)
+        .repartitionByRange(8, col("o_orderkey"))
+        .write.format("graft-store").mode("overwrite").save(src) // 8 files
+      s.sql("CALL gq211.system.create_mview('mva', " +
+        "'SELECT o_orderpriority AS priority, o_orderstatus AS status, " +
+        "count(*) AS n, sum(o_totalprice) AS rev " +
+        "FROM gq211.src GROUP BY o_orderpriority, o_orderstatus')")
+      s.sql("CALL gq211.system.create_mview('mvb', " +
+        "'SELECT o_orderpriority AS priority, count(*) AS n, " +
+        "sum(o_totalprice) AS rev FROM gq211.src " +
+        "WHERE o_totalprice > 100000 GROUP BY o_orderpriority')")
+      // churn, then refresh both views — the serves below are post-churn
+      baseDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
+        .write.format("graft-store").mode("append").save(src)
+      s.sql("CALL gq211.system.refresh_mview('mva')")
+      s.sql("CALL gq211.system.refresh_mview('mvb')")
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      def served(df: org.apache.spark.sql.DataFrame, mv: String): Boolean =
+        df.queryExecution.optimizedPlan.toString.contains(s"$base/$mv")
+      // (a) residual WHERE on a group column + rollup from mva
+      val qa = s.sql(
+        """SELECT o_orderpriority AS priority, count(*) AS n,
+          |  round(sum(o_totalprice), 2) AS rev
+          |FROM gq211.src WHERE o_orderstatus = 'O'
+          |GROUP BY o_orderpriority""".stripMargin)
+      // (b) the filtered view's own WHERE, matched semantically
+      val qb = s.sql(
+        """SELECT o_orderpriority AS priority, count(*) AS n,
+          |  round(sum(o_totalprice), 2) AS rev
+          |FROM gq211.src WHERE o_totalprice > 100000
+          |GROUP BY o_orderpriority""".stripMargin)
+      val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
+      val ra = qa.collect()
+      val rb = qb.collect()
+      val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
+      val servedA = served(qa, "mva")
+      val servedB = served(qb, "mvb")
+      val sliceProof = opened < 8 // never the 8-file base
+      val tagged =
+        s.createDataFrame(s.sparkContext.parallelize(ra.toIndexedSeq), qa.schema)
+          .withColumn("part", lit("grp_where"))
+          .unionByName(s.createDataFrame(
+            s.sparkContext.parallelize(rb.toIndexedSeq), qb.schema)
+            .withColumn("part", lit("mv_where")))
+      tagged.withColumn("served_a", lit(servedA))
+        .withColumn("served_b", lit(servedB))
+        .withColumn("slice_proof", lit(sliceProof))
     },
     Some("""SELECT o_orderpriority AS priority, count(*) AS n,
            |  round(sum(o_totalprice), 2) AS rev, 'grp_where' AS part,
@@ -4502,59 +4103,49 @@ object SystemQueries {
   val q212MviewJoinRewrite = QuerySpec(
     "q212_mview_join_rewrite", "S-dsv2-mview-join-rewrite",
     "join rewrite: fresh two-table view serves the join aggregate + global rollup",
-    (s, d) => {
-      val base = "/tmp/graft_store_q212"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq212", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq212.base", base)
-      try {
-        val fact = s"$base/fact"
-        val dim = s"$base/dim"
-        val ordersDf = Tables.orders(s, d)
-          .select("o_orderkey", "o_custkey", "o_totalprice")
-        ordersDf.filter(col("o_orderkey") < 8000)
-          .repartitionByRange(8, col("o_orderkey"))
-          .write.format("graft-store").mode("overwrite").save(fact) // 8 files
-        Tables.customer(s, d).select("c_custkey", "c_mktsegment")
-          .write.format("graft-store").mode("overwrite").save(dim)
-        s.sql("CALL gq212.system.create_mview('mv', " +
-          "'SELECT c_mktsegment AS seg, count(*) AS n, sum(o_totalprice) AS rev " +
-          "FROM gq212.fact JOIN gq212.dim ON o_custkey = c_custkey " +
-          "GROUP BY c_mktsegment')")
-        def joinAgg() = s.sql(
-          """SELECT c_mktsegment AS seg, count(*) AS n,
-            |  round(sum(o_totalprice), 2) AS rev
-            |FROM gq212.fact JOIN gq212.dim ON o_custkey = c_custkey
-            |GROUP BY c_mktsegment""".stripMargin)
-        def served(df: org.apache.spark.sql.DataFrame): Boolean =
-          df.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
-        // fact churn WITHOUT refresh: the view must NOT serve, and the
-        // join answer must include the fresh rows
-        ordersDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
-          .write.format("graft-store").mode("append").save(fact)
-        val staleDf = joinAgg()
-        val staleNotServed = !served(staleDf)
-        val staleN = staleDf.agg(sum("n")).collect()(0).getLong(0)
-        s.sql("CALL gq212.system.refresh_mview('mv')")
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        val q = joinAgg()
-        val globalDf = s.sql(
-          """SELECT count(*) AS n FROM gq212.fact
-            |JOIN gq212.dim ON o_custkey = c_custkey""".stripMargin)
-        val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
-        val rows = q.collect()
-        val globalN = globalDf.collect()(0).getLong(0)
-        val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
-        val bits = served(q) && served(globalDf) && staleNotServed &&
-          staleN == globalN && globalN == rows.map(_.getLong(1)).sum &&
-          opened < 8 // never the 8-file fact base
-        s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), q.schema)
-          .withColumn("join_rewrite_proof", lit(bits))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq212")
-        s.conf.unset("spark.sql.catalog.gq212.base")
-      }
+    (s, d) => Fixture(s, "gq212") { (s, base) =>
+      val fact = s"$base/fact"
+      val dim = s"$base/dim"
+      val ordersDf = Tables.orders(s, d)
+        .select("o_orderkey", "o_custkey", "o_totalprice")
+      ordersDf.filter(col("o_orderkey") < 8000)
+        .repartitionByRange(8, col("o_orderkey"))
+        .write.format("graft-store").mode("overwrite").save(fact) // 8 files
+      Tables.customer(s, d).select("c_custkey", "c_mktsegment")
+        .write.format("graft-store").mode("overwrite").save(dim)
+      s.sql("CALL gq212.system.create_mview('mv', " +
+        "'SELECT c_mktsegment AS seg, count(*) AS n, sum(o_totalprice) AS rev " +
+        "FROM gq212.fact JOIN gq212.dim ON o_custkey = c_custkey " +
+        "GROUP BY c_mktsegment')")
+      def joinAgg() = s.sql(
+        """SELECT c_mktsegment AS seg, count(*) AS n,
+          |  round(sum(o_totalprice), 2) AS rev
+          |FROM gq212.fact JOIN gq212.dim ON o_custkey = c_custkey
+          |GROUP BY c_mktsegment""".stripMargin)
+      def served(df: org.apache.spark.sql.DataFrame): Boolean =
+        df.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
+      // fact churn WITHOUT refresh: the view must NOT serve, and the
+      // join answer must include the fresh rows
+      ordersDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
+        .write.format("graft-store").mode("append").save(fact)
+      val staleDf = joinAgg()
+      val staleNotServed = !served(staleDf)
+      val staleN = staleDf.agg(sum("n")).collect()(0).getLong(0)
+      s.sql("CALL gq212.system.refresh_mview('mv')")
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      val q = joinAgg()
+      val globalDf = s.sql(
+        """SELECT count(*) AS n FROM gq212.fact
+          |JOIN gq212.dim ON o_custkey = c_custkey""".stripMargin)
+      val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
+      val rows = q.collect()
+      val globalN = globalDf.collect()(0).getLong(0)
+      val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
+      val bits = served(q) && served(globalDf) && staleNotServed &&
+        staleN == globalN && globalN == rows.map(_.getLong(1)).sum &&
+        opened < 8 // never the 8-file fact base
+      s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), q.schema)
+        .withColumn("join_rewrite_proof", lit(bits))
     },
     Some("""SELECT c_mktsegment AS seg, count(*) AS n,
            |  round(sum(o_totalprice), 2) AS rev, TRUE AS join_rewrite_proof
@@ -4576,44 +4167,34 @@ object SystemQueries {
   val q214MviewJoinStream = QuerySpec(
     "q214_mview_join_stream", "S-dsv2-mview-join-stream",
     "streaming join-MV: either side's commits trigger delta-rule refresh",
-    (s, d) => {
-      val base = "/tmp/graft_store_q214"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq214", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq214.base", base)
+    (s, d) => Fixture(s, "gq214") { (s, base) =>
+      val fact = s"$base/fact"
+      val dim = s"$base/dim"
+      val mv = s"$base/mv"
+      val ordersDf = Tables.orders(s, d)
+        .select("o_orderkey", "o_custkey", "o_totalprice")
+      ordersDf.filter(col("o_orderkey") < 5000)
+        .write.format("graft-store").mode("overwrite").save(fact)
+      Tables.customer(s, d).select("c_custkey", "c_mktsegment")
+        .write.format("graft-store").mode("overwrite").save(dim)
+      graft.sources.v2.GraftMview.create(s, mv,
+        "SELECT c_mktsegment AS seg, count(*) AS n, " +
+          "sum(o_totalprice) AS rev FROM gq214.fact " +
+          "JOIN gq214.dim ON o_custkey = c_custkey GROUP BY c_mktsegment")
+      val q = graft.sources.v2.GraftMview.streamRefresh(s, mv, s"$base/_ckpt")
       try {
-        val fact = s"$base/fact"
-        val dim = s"$base/dim"
-        val mv = s"$base/mv"
-        val ordersDf = Tables.orders(s, d)
-          .select("o_orderkey", "o_custkey", "o_totalprice")
-        ordersDf.filter(col("o_orderkey") < 5000)
-          .write.format("graft-store").mode("overwrite").save(fact)
-        Tables.customer(s, d).select("c_custkey", "c_mktsegment")
-          .write.format("graft-store").mode("overwrite").save(dim)
-        graft.sources.v2.GraftMview.create(s, mv,
-          "SELECT c_mktsegment AS seg, count(*) AS n, " +
-            "sum(o_totalprice) AS rev FROM gq214.fact " +
-            "JOIN gq214.dim ON o_custkey = c_custkey GROUP BY c_mktsegment")
-        val q = graft.sources.v2.GraftMview.streamRefresh(s, mv, s"$base/_ckpt")
-        try {
-          q.processAllAvailable()
-          // fact-side churn
-          ordersDf.filter(col("o_orderkey") >= 5000 && col("o_orderkey") < 8000)
-            .write.format("graft-store").mode("append").save(fact)
-          q.processAllAvailable()
-          // dim-side churn: group mass moves
-          s.sql("UPDATE gq214.dim SET c_mktsegment = 'MOVED' WHERE c_custkey % 7 = 0")
-          q.processAllAvailable()
-        } finally q.stop()
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        s.read.format("graft-store").load(mv)
-          .select(col("seg"), col("n"), round(col("rev"), 2).as("rev"))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq214")
-        s.conf.unset("spark.sql.catalog.gq214.base")
-      }
+        q.processAllAvailable()
+        // fact-side churn
+        ordersDf.filter(col("o_orderkey") >= 5000 && col("o_orderkey") < 8000)
+          .write.format("graft-store").mode("append").save(fact)
+        q.processAllAvailable()
+        // dim-side churn: group mass moves
+        s.sql("UPDATE gq214.dim SET c_mktsegment = 'MOVED' WHERE c_custkey % 7 = 0")
+        q.processAllAvailable()
+      } finally q.stop()
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      s.read.format("graft-store").load(mv)
+        .select(col("seg"), col("n"), round(col("rev"), 2).as("rev"))
     },
     Some("""SELECT CASE WHEN c_custkey % 7 = 0 THEN 'MOVED'
            |    ELSE c_mktsegment END AS seg,
@@ -4634,59 +4215,49 @@ object SystemQueries {
   val q215MviewRangeRewrite = QuerySpec(
     "q215_mview_range_rewrite", "S-dsv2-mview-range-rewrite",
     "range implication: a tighter WHERE on a group column serves from a wider view",
-    (s, d) => {
-      val base = "/tmp/graft_store_q215"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq215", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq215.base", base)
-      try {
-        val src = s"$base/src"
-        Tables.customer(s, d).select("c_custkey", "c_nationkey", "c_acctbal")
-          .repartitionByRange(8, col("c_custkey"))
-          .write.format("graft-store").mode("overwrite").save(src) // 8 files
-        s.sql("CALL gq215.system.create_mview('mv', " +
-          "'SELECT c_nationkey AS nation, count(*) AS n, " +
-          "sum(c_acctbal) AS bal FROM gq215.src " +
-          "WHERE c_nationkey >= 5 GROUP BY c_nationkey')")
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        def served(df: org.apache.spark.sql.DataFrame): Boolean =
-          df.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
-        // TIGHTER range than the view's WHERE: implied, residual applies
-        val q1 = s.sql(
-          """SELECT c_nationkey AS nation, count(*) AS n,
-            |  round(sum(c_acctbal), 2) AS bal
-            |FROM gq215.src WHERE c_nationkey >= 10
-            |GROUP BY c_nationkey""".stripMargin)
-        // tighter range + GLOBAL rollup: implication + residual + empty
-        // grouping, all at once
-        val q2 = s.sql(
-          "SELECT count(*) AS n FROM gq215.src WHERE c_nationkey >= 20")
-        val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
-        val rows = q1.collect()
-        val g = q2.collect()(0).getLong(0)
-        val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
-        // a WIDER range than the view's serves as the MIXED plan (r13):
-        // view slice ∪ complement scan of only nationkey ∈ [3, 5)
-        val wider = s.sql(
-          "SELECT count(*) AS n FROM gq215.src WHERE c_nationkey >= 3")
-        val widerN = wider.collect()(0).getLong(0)
-        val widerOff = {
-          s.conf.set("spark.graft.mv.rewrite", "false")
-          try s.sql("SELECT count(*) AS n FROM gq215.src " +
-            "WHERE c_nationkey >= 3").collect()(0).getLong(0)
-          finally s.conf.set("spark.graft.mv.rewrite", "true")
-        }
-        val widerMixed = served(wider) && widerN == widerOff
-        val bits = served(q1) && served(q2) && widerMixed &&
-          opened < 8 && // never the 8-file base
-          g == rows.filter(_.getInt(0) >= 20).map(_.getLong(1)).sum
-        s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), q1.schema)
-          .withColumn("range_rewrite_proof", lit(bits))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq215")
-        s.conf.unset("spark.sql.catalog.gq215.base")
+    (s, d) => Fixture(s, "gq215") { (s, base) =>
+      val src = s"$base/src"
+      Tables.customer(s, d).select("c_custkey", "c_nationkey", "c_acctbal")
+        .repartitionByRange(8, col("c_custkey"))
+        .write.format("graft-store").mode("overwrite").save(src) // 8 files
+      s.sql("CALL gq215.system.create_mview('mv', " +
+        "'SELECT c_nationkey AS nation, count(*) AS n, " +
+        "sum(c_acctbal) AS bal FROM gq215.src " +
+        "WHERE c_nationkey >= 5 GROUP BY c_nationkey')")
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      def served(df: org.apache.spark.sql.DataFrame): Boolean =
+        df.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
+      // TIGHTER range than the view's WHERE: implied, residual applies
+      val q1 = s.sql(
+        """SELECT c_nationkey AS nation, count(*) AS n,
+          |  round(sum(c_acctbal), 2) AS bal
+          |FROM gq215.src WHERE c_nationkey >= 10
+          |GROUP BY c_nationkey""".stripMargin)
+      // tighter range + GLOBAL rollup: implication + residual + empty
+      // grouping, all at once
+      val q2 = s.sql(
+        "SELECT count(*) AS n FROM gq215.src WHERE c_nationkey >= 20")
+      val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
+      val rows = q1.collect()
+      val g = q2.collect()(0).getLong(0)
+      val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
+      // a WIDER range than the view's serves as the MIXED plan (r13):
+      // view slice ∪ complement scan of only nationkey ∈ [3, 5)
+      val wider = s.sql(
+        "SELECT count(*) AS n FROM gq215.src WHERE c_nationkey >= 3")
+      val widerN = wider.collect()(0).getLong(0)
+      val widerOff = {
+        s.conf.set("spark.graft.mv.rewrite", "false")
+        try s.sql("SELECT count(*) AS n FROM gq215.src " +
+          "WHERE c_nationkey >= 3").collect()(0).getLong(0)
+        finally s.conf.set("spark.graft.mv.rewrite", "true")
       }
+      val widerMixed = served(wider) && widerN == widerOff
+      val bits = served(q1) && served(q2) && widerMixed &&
+        opened < 8 && // never the 8-file base
+        g == rows.filter(_.getInt(0) >= 20).map(_.getLong(1)).sum
+      s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), q1.schema)
+        .withColumn("range_rewrite_proof", lit(bits))
     },
     Some("""SELECT c_nationkey AS nation, count(*) AS n,
            |  round(sum(c_acctbal), 2) AS bal, TRUE AS range_rewrite_proof
@@ -4708,81 +4279,71 @@ object SystemQueries {
   val q216MviewInRewrite = QuerySpec(
     "q216_mview_in_rewrite", "S-dsv2-mview-in-rewrite",
     "IN-list implication: subset/member/range-covered IN predicates serve from a view",
-    (s, d) => {
-      val base = "/tmp/graft_store_q216"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq216", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq216.base", base)
-      try {
-        val src = s"$base/src"
-        Tables.lineitem(s, d)
-          .select("l_orderkey", "l_returnflag", "l_linenumber", "l_quantity")
-          .repartitionByRange(8, col("l_orderkey"))
-          .write.format("graft-store").mode("overwrite").save(src)
-        // an IN-filtered view grouped by (rf, ln) and a range-filtered
-        // view grouped by ln — between them, all three implication forms
-        s.sql("CALL gq216.system.create_mview('mva', " +
-          "'SELECT l_returnflag AS rf, l_linenumber AS ln, count(*) AS n, " +
-          "sum(l_quantity) AS qty FROM gq216.src " +
-          "WHERE l_linenumber IN (1, 2, 3) GROUP BY l_returnflag, l_linenumber')")
-        s.sql("CALL gq216.system.create_mview('mvr', " +
-          "'SELECT l_linenumber AS ln, count(*) AS n FROM gq216.src " +
-          "WHERE l_linenumber <= 5 GROUP BY l_linenumber')")
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        def served(df: org.apache.spark.sql.DataFrame, mv: String): Boolean =
-          df.queryExecution.optimizedPlan.toString.contains(s"$base/$mv")
-        def off[T](body: => T): T = {
-          s.conf.set("spark.graft.mv.rewrite", "false")
-          try body finally s.conf.set("spark.graft.mv.rewrite", "true")
-        }
-        // IN-subset + rollup + residual-IN over the group column
-        val q1 = s.sql(
-          """SELECT l_returnflag AS rf, count(*) AS n,
-            |  round(sum(l_quantity), 2) AS qty
-            |FROM gq216.src WHERE l_linenumber IN (1, 2)
-            |GROUP BY l_returnflag""".stripMargin)
-        // point equality inside the view's IN-list, global rollup
-        val q2 = s.sql(
-          "SELECT count(*) AS n FROM gq216.src WHERE l_linenumber = 3")
-        // IN-list covered by the range view's bound
-        val q3 = s.sql(
-          "SELECT count(*) AS n FROM gq216.src WHERE l_linenumber IN (2, 4)")
-        val rows = q1.collect()
-        val n2 = q2.collect()(0).getLong(0)
-        val n3 = q3.collect()(0).getLong(0)
-        val sameOff = off {
-          val r1 = s.sql("SELECT l_returnflag AS rf, count(*) AS n, " +
-            "round(sum(l_quantity), 2) AS qty FROM gq216.src " +
-            "WHERE l_linenumber IN (1, 2) GROUP BY l_returnflag").collect()
-          val o2 = s.sql("SELECT count(*) AS n FROM gq216.src " +
-            "WHERE l_linenumber = 3").collect()(0).getLong(0)
-          val o3 = s.sql("SELECT count(*) AS n FROM gq216.src " +
-            "WHERE l_linenumber IN (2, 4)").collect()(0).getLong(0)
-          rows.sortBy(_.getString(0)).sameElements(r1.sortBy(_.getString(0))) &&
-            n2 == o2 && n3 == o3
-        }
-        // a SUPERSET IN-list (6 is outside mva's list AND above mvr's
-        // range) serves as the MIXED plan (r13): one view's slice plus a
-        // complement scan bringing in ln = 6
-        val wider = s.sql("SELECT count(*) AS n FROM gq216.src " +
-          "WHERE l_linenumber IN (1, 2, 6)")
-        val widerN = wider.collect()(0).getLong(0)
-        val widerOff = off(s.sql("SELECT count(*) AS n FROM gq216.src " +
-          "WHERE l_linenumber IN (1, 2, 6)").collect()(0).getLong(0))
-        val widerMixed =
-          (served(wider, "mva") || served(wider, "mvr")) && widerN == widerOff
-        // q2 and q3 are each servable by EITHER view (q2: member-of-IN
-        // on mva / point-in-range on mvr; q3: range-covered IN on mvr /
-        // MIXED plan on mva since r13) — probe order decides which wins
-        val bits = served(q1, "mva") && (served(q2, "mva") || served(q2, "mvr")) &&
-          (served(q3, "mva") || served(q3, "mvr")) && sameOff && widerMixed
-        s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), q1.schema)
-          .withColumn("in_rewrite_proof", lit(bits))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq216")
-        s.conf.unset("spark.sql.catalog.gq216.base")
+    (s, d) => Fixture(s, "gq216") { (s, base) =>
+      val src = s"$base/src"
+      Tables.lineitem(s, d)
+        .select("l_orderkey", "l_returnflag", "l_linenumber", "l_quantity")
+        .repartitionByRange(8, col("l_orderkey"))
+        .write.format("graft-store").mode("overwrite").save(src)
+      // an IN-filtered view grouped by (rf, ln) and a range-filtered
+      // view grouped by ln — between them, all three implication forms
+      s.sql("CALL gq216.system.create_mview('mva', " +
+        "'SELECT l_returnflag AS rf, l_linenumber AS ln, count(*) AS n, " +
+        "sum(l_quantity) AS qty FROM gq216.src " +
+        "WHERE l_linenumber IN (1, 2, 3) GROUP BY l_returnflag, l_linenumber')")
+      s.sql("CALL gq216.system.create_mview('mvr', " +
+        "'SELECT l_linenumber AS ln, count(*) AS n FROM gq216.src " +
+        "WHERE l_linenumber <= 5 GROUP BY l_linenumber')")
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      def served(df: org.apache.spark.sql.DataFrame, mv: String): Boolean =
+        df.queryExecution.optimizedPlan.toString.contains(s"$base/$mv")
+      def off[T](body: => T): T = {
+        s.conf.set("spark.graft.mv.rewrite", "false")
+        try body finally s.conf.set("spark.graft.mv.rewrite", "true")
       }
+      // IN-subset + rollup + residual-IN over the group column
+      val q1 = s.sql(
+        """SELECT l_returnflag AS rf, count(*) AS n,
+          |  round(sum(l_quantity), 2) AS qty
+          |FROM gq216.src WHERE l_linenumber IN (1, 2)
+          |GROUP BY l_returnflag""".stripMargin)
+      // point equality inside the view's IN-list, global rollup
+      val q2 = s.sql(
+        "SELECT count(*) AS n FROM gq216.src WHERE l_linenumber = 3")
+      // IN-list covered by the range view's bound
+      val q3 = s.sql(
+        "SELECT count(*) AS n FROM gq216.src WHERE l_linenumber IN (2, 4)")
+      val rows = q1.collect()
+      val n2 = q2.collect()(0).getLong(0)
+      val n3 = q3.collect()(0).getLong(0)
+      val sameOff = off {
+        val r1 = s.sql("SELECT l_returnflag AS rf, count(*) AS n, " +
+          "round(sum(l_quantity), 2) AS qty FROM gq216.src " +
+          "WHERE l_linenumber IN (1, 2) GROUP BY l_returnflag").collect()
+        val o2 = s.sql("SELECT count(*) AS n FROM gq216.src " +
+          "WHERE l_linenumber = 3").collect()(0).getLong(0)
+        val o3 = s.sql("SELECT count(*) AS n FROM gq216.src " +
+          "WHERE l_linenumber IN (2, 4)").collect()(0).getLong(0)
+        rows.sortBy(_.getString(0)).sameElements(r1.sortBy(_.getString(0))) &&
+          n2 == o2 && n3 == o3
+      }
+      // a SUPERSET IN-list (6 is outside mva's list AND above mvr's
+      // range) serves as the MIXED plan (r13): one view's slice plus a
+      // complement scan bringing in ln = 6
+      val wider = s.sql("SELECT count(*) AS n FROM gq216.src " +
+        "WHERE l_linenumber IN (1, 2, 6)")
+      val widerN = wider.collect()(0).getLong(0)
+      val widerOff = off(s.sql("SELECT count(*) AS n FROM gq216.src " +
+        "WHERE l_linenumber IN (1, 2, 6)").collect()(0).getLong(0))
+      val widerMixed =
+        (served(wider, "mva") || served(wider, "mvr")) && widerN == widerOff
+      // q2 and q3 are each servable by EITHER view (q2: member-of-IN
+      // on mva / point-in-range on mvr; q3: range-covered IN on mvr /
+      // MIXED plan on mva since r13) — probe order decides which wins
+      val bits = served(q1, "mva") && (served(q2, "mva") || served(q2, "mvr")) &&
+        (served(q3, "mva") || served(q3, "mvr")) && sameOff && widerMixed
+      s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), q1.schema)
+        .withColumn("in_rewrite_proof", lit(bits))
     },
     Some("""SELECT l_returnflag AS rf, count(*) AS n,
            |  round(sum(l_quantity), 2) AS qty, TRUE AS in_rewrite_proof
@@ -4803,55 +4364,45 @@ object SystemQueries {
   val q217MviewDistinctRollup = QuerySpec(
     "q217_mview_distinct_rollup", "S-dsv2-mview-distinct-rollup",
     "count/sum/avg(DISTINCT group-col) roll up from a finer MV",
-    (s, d) => {
-      val base = "/tmp/graft_store_q217"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq217", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq217.base", base)
-      try {
-        val src = s"$base/src"
-        Tables.lineitem(s, d)
-          .select("l_orderkey", "l_returnflag", "l_linenumber", "l_suppkey")
-          .repartitionByRange(8, col("l_orderkey"))
-          .write.format("graft-store").mode("overwrite").save(src)
-        s.sql("CALL gq217.system.create_mview('mv', " +
-          "'SELECT l_returnflag AS rf, l_linenumber AS ln, count(*) AS n " +
-          "FROM gq217.src GROUP BY l_returnflag, l_linenumber')")
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        def served(df: org.apache.spark.sql.DataFrame): Boolean =
-          df.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
-        val q1 = s.sql(
-          """SELECT l_returnflag AS rf, count(DISTINCT l_linenumber) AS dln,
-            |  sum(DISTINCT l_linenumber) AS sln,
-            |  avg(DISTINCT l_linenumber) AS aln, count(*) AS n
-            |FROM gq217.src GROUP BY l_returnflag""".stripMargin)
-        val g = s.sql(
-          "SELECT count(DISTINCT l_linenumber) AS d FROM gq217.src")
-        val rows = q1.collect()
-        val gd = g.collect()(0).getLong(0)
-        s.conf.set("spark.graft.mv.rewrite", "false")
-        val sameOff = try {
-          val r1 = s.sql("SELECT l_returnflag AS rf, " +
-            "count(DISTINCT l_linenumber) AS dln, " +
-            "sum(DISTINCT l_linenumber) AS sln, " +
-            "avg(DISTINCT l_linenumber) AS aln, count(*) AS n " +
-            "FROM gq217.src GROUP BY l_returnflag").collect()
-          rows.sortBy(_.getString(0)).sameElements(r1.sortBy(_.getString(0))) &&
-            gd == s.sql("SELECT count(DISTINCT l_linenumber) AS d " +
-              "FROM gq217.src").collect()(0).getLong(0)
-        } finally s.conf.set("spark.graft.mv.rewrite", "true")
-        // distinct over a NON-group column: those values were collapsed
-        // away — must NOT serve
-        val nonGroup = s.sql("SELECT l_returnflag AS rf, " +
-          "count(DISTINCT l_suppkey) AS ds FROM gq217.src GROUP BY l_returnflag")
-        val bits = served(q1) && served(g) && sameOff && !served(nonGroup)
-        s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), q1.schema)
-          .withColumn("distinct_rollup_proof", lit(bits))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq217")
-        s.conf.unset("spark.sql.catalog.gq217.base")
-      }
+    (s, d) => Fixture(s, "gq217") { (s, base) =>
+      val src = s"$base/src"
+      Tables.lineitem(s, d)
+        .select("l_orderkey", "l_returnflag", "l_linenumber", "l_suppkey")
+        .repartitionByRange(8, col("l_orderkey"))
+        .write.format("graft-store").mode("overwrite").save(src)
+      s.sql("CALL gq217.system.create_mview('mv', " +
+        "'SELECT l_returnflag AS rf, l_linenumber AS ln, count(*) AS n " +
+        "FROM gq217.src GROUP BY l_returnflag, l_linenumber')")
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      def served(df: org.apache.spark.sql.DataFrame): Boolean =
+        df.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
+      val q1 = s.sql(
+        """SELECT l_returnflag AS rf, count(DISTINCT l_linenumber) AS dln,
+          |  sum(DISTINCT l_linenumber) AS sln,
+          |  avg(DISTINCT l_linenumber) AS aln, count(*) AS n
+          |FROM gq217.src GROUP BY l_returnflag""".stripMargin)
+      val g = s.sql(
+        "SELECT count(DISTINCT l_linenumber) AS d FROM gq217.src")
+      val rows = q1.collect()
+      val gd = g.collect()(0).getLong(0)
+      s.conf.set("spark.graft.mv.rewrite", "false")
+      val sameOff = try {
+        val r1 = s.sql("SELECT l_returnflag AS rf, " +
+          "count(DISTINCT l_linenumber) AS dln, " +
+          "sum(DISTINCT l_linenumber) AS sln, " +
+          "avg(DISTINCT l_linenumber) AS aln, count(*) AS n " +
+          "FROM gq217.src GROUP BY l_returnflag").collect()
+        rows.sortBy(_.getString(0)).sameElements(r1.sortBy(_.getString(0))) &&
+          gd == s.sql("SELECT count(DISTINCT l_linenumber) AS d " +
+            "FROM gq217.src").collect()(0).getLong(0)
+      } finally s.conf.set("spark.graft.mv.rewrite", "true")
+      // distinct over a NON-group column: those values were collapsed
+      // away — must NOT serve
+      val nonGroup = s.sql("SELECT l_returnflag AS rf, " +
+        "count(DISTINCT l_suppkey) AS ds FROM gq217.src GROUP BY l_returnflag")
+      val bits = served(q1) && served(g) && sameOff && !served(nonGroup)
+      s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), q1.schema)
+        .withColumn("distinct_rollup_proof", lit(bits))
     },
     Some("""SELECT l_returnflag AS rf, count(DISTINCT l_linenumber) AS dln,
            |  CAST(sum(DISTINCT l_linenumber) AS BIGINT) AS sln,
@@ -4875,73 +4426,63 @@ object SystemQueries {
   val q218MviewJoinBack = QuerySpec(
     "q218_mview_joinback", "S-dsv2-mview-joinback",
     "eager-aggregation join-back: a fact-side MV serves the fact-dim join aggregate",
-    (s, d) => {
-      val base = "/tmp/graft_store_q218"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq218", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq218.base", base)
-      try {
-        val fact = s"$base/fact"
-        val dim = s"$base/dim"
-        Tables.orders(s, d)
-          .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-          .repartitionByRange(48, col("o_orderkey"))
-          .write.format("graft-store").mode("overwrite").save(fact) // 48 files
-        Tables.customer(s, d)
-          .select("c_custkey", "c_mktsegment", "c_nationkey", "c_acctbal")
-          .repartitionByRange(4, col("c_custkey"))
-          .write.format("graft-store").mode("overwrite").save(dim)
-        s.sql("CALL gq218.system.create_mview('mv', " +
-          "'SELECT o_custkey AS ck, o_orderstatus AS st, count(*) AS n, " +
-          "sum(o_totalprice) AS rev, min(o_totalprice) AS lo " +
-          "FROM gq218.fact GROUP BY o_custkey, o_orderstatus')")
-        val sql1 =
-          """SELECT c_mktsegment AS seg, count(*) AS n,
-            |  round(sum(o_totalprice), 2) AS rev,
-            |  round(min(o_totalprice), 2) AS lo
-            |FROM gq218.fact JOIN gq218.dim ON o_custkey = c_custkey
-            |WHERE o_orderstatus = 'F' AND c_nationkey < 15
-            |GROUP BY c_mktsegment""".stripMargin
-        def served(df: org.apache.spark.sql.DataFrame): Boolean =
-          df.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
-        val ops = graft.sources.v2.GraftStoreOps
-        // direct (rewrite off) answer + slice count: the fact scan
-        s.conf.set("spark.graft.mv.rewrite", "false")
-        val (offRows, offSlices) = try {
-          val b = ops.scannedFileSlices
-          val r = s.sql(sql1).collect()
-          (r, ops.scannedFileSlices - b)
-        } finally s.conf.set("spark.graft.mv.rewrite", "true")
-        val q1 = s.sql(sql1)
-        val b1 = ops.scannedFileSlices
-        val rows = q1.collect()
-        val onSlices = ops.scannedFileSlices - b1
-        // a dim-side aggregate cannot come from fact partials — refused
-        val dimAgg = s.sql(
-          "SELECT c_mktsegment AS seg, sum(c_acctbal) AS bal " +
-            "FROM gq218.fact JOIN gq218.dim ON o_custkey = c_custkey " +
-            "GROUP BY c_mktsegment")
-        // fact churn stales the MV (the appended row matches no dim key,
-        // so the ANSWER is unchanged — only freshness is at stake)
-        s.sql("INSERT INTO gq218.fact VALUES (99999999, -1, 'F', 1.0)")
-        val stale = s.sql(sql1)
-        val staleServed = served(stale)
-        s.sql("CALL gq218.system.refresh_mview('mv')")
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        val fresh = s.sql(sql1)
-        val sameRows = rows.sortBy(_.getString(0))
-          .sameElements(offRows.sortBy(_.getString(0))) &&
-          rows.sortBy(_.getString(0))
-            .sameElements(fresh.collect().sortBy(_.getString(0)))
-        val bits = served(q1) && sameRows && onSlices < offSlices &&
-          !served(dimAgg) && !staleServed && served(fresh)
-        s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), q1.schema)
-          .withColumn("joinback_proof", lit(bits))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq218")
-        s.conf.unset("spark.sql.catalog.gq218.base")
-      }
+    (s, d) => Fixture(s, "gq218") { (s, base) =>
+      val fact = s"$base/fact"
+      val dim = s"$base/dim"
+      Tables.orders(s, d)
+        .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
+        .repartitionByRange(48, col("o_orderkey"))
+        .write.format("graft-store").mode("overwrite").save(fact) // 48 files
+      Tables.customer(s, d)
+        .select("c_custkey", "c_mktsegment", "c_nationkey", "c_acctbal")
+        .repartitionByRange(4, col("c_custkey"))
+        .write.format("graft-store").mode("overwrite").save(dim)
+      s.sql("CALL gq218.system.create_mview('mv', " +
+        "'SELECT o_custkey AS ck, o_orderstatus AS st, count(*) AS n, " +
+        "sum(o_totalprice) AS rev, min(o_totalprice) AS lo " +
+        "FROM gq218.fact GROUP BY o_custkey, o_orderstatus')")
+      val sql1 =
+        """SELECT c_mktsegment AS seg, count(*) AS n,
+          |  round(sum(o_totalprice), 2) AS rev,
+          |  round(min(o_totalprice), 2) AS lo
+          |FROM gq218.fact JOIN gq218.dim ON o_custkey = c_custkey
+          |WHERE o_orderstatus = 'F' AND c_nationkey < 15
+          |GROUP BY c_mktsegment""".stripMargin
+      def served(df: org.apache.spark.sql.DataFrame): Boolean =
+        df.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
+      val ops = graft.sources.v2.GraftStoreOps
+      // direct (rewrite off) answer + slice count: the fact scan
+      s.conf.set("spark.graft.mv.rewrite", "false")
+      val (offRows, offSlices) = try {
+        val b = ops.scannedFileSlices
+        val r = s.sql(sql1).collect()
+        (r, ops.scannedFileSlices - b)
+      } finally s.conf.set("spark.graft.mv.rewrite", "true")
+      val q1 = s.sql(sql1)
+      val b1 = ops.scannedFileSlices
+      val rows = q1.collect()
+      val onSlices = ops.scannedFileSlices - b1
+      // a dim-side aggregate cannot come from fact partials — refused
+      val dimAgg = s.sql(
+        "SELECT c_mktsegment AS seg, sum(c_acctbal) AS bal " +
+          "FROM gq218.fact JOIN gq218.dim ON o_custkey = c_custkey " +
+          "GROUP BY c_mktsegment")
+      // fact churn stales the MV (the appended row matches no dim key,
+      // so the ANSWER is unchanged — only freshness is at stake)
+      s.sql("INSERT INTO gq218.fact VALUES (99999999, -1, 'F', 1.0)")
+      val stale = s.sql(sql1)
+      val staleServed = served(stale)
+      s.sql("CALL gq218.system.refresh_mview('mv')")
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      val fresh = s.sql(sql1)
+      val sameRows = rows.sortBy(_.getString(0))
+        .sameElements(offRows.sortBy(_.getString(0))) &&
+        rows.sortBy(_.getString(0))
+          .sameElements(fresh.collect().sortBy(_.getString(0)))
+      val bits = served(q1) && sameRows && onSlices < offSlices &&
+        !served(dimAgg) && !staleServed && served(fresh)
+      s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), q1.schema)
+        .withColumn("joinback_proof", lit(bits))
     },
     Some("""SELECT c_mktsegment AS seg, count(*) AS n,
            |  round(sum(o_totalprice), 2) AS rev,
@@ -4965,65 +4506,55 @@ object SystemQueries {
   val q219MviewJoinBack2 = QuerySpec(
     "q219_mview_joinback2", "S-dsv2-mview-joinback2",
     "multi-dim join-back: one fact MV serves a snowflaked 3-table aggregate",
-    (s, d) => {
-      val base = "/tmp/graft_store_q219"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq219", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq219.base", base)
-      try {
-        Tables.orders(s, d)
-          .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-          .repartitionByRange(48, col("o_orderkey"))
-          .write.format("graft-store").mode("overwrite").save(s"$base/fact")
-        Tables.customer(s, d)
-          .select("c_custkey", "c_mktsegment", "c_nationkey")
-          .repartitionByRange(4, col("c_custkey"))
-          .write.format("graft-store").mode("overwrite").save(s"$base/cust")
-        Tables.nation(s, d).select("n_nationkey", "n_name", "n_regionkey")
-          .write.format("graft-store").mode("overwrite").save(s"$base/nat")
-        s.sql("CALL gq219.system.create_mview('mv', " +
-          "'SELECT o_custkey AS ck, count(*) AS n, " +
-          "sum(o_totalprice) AS rev, avg(o_totalprice) AS ap " +
-          "FROM gq219.fact GROUP BY o_custkey')")
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        val sql1 =
-          """SELECT n_name AS nat, count(*) AS n,
-            |  round(sum(o_totalprice), 2) AS rev,
-            |  round(avg(o_totalprice), 2) AS ap
-            |FROM gq219.fact
-            |JOIN gq219.cust ON o_custkey = c_custkey
-            |JOIN gq219.nat ON c_nationkey = n_nationkey
-            |WHERE c_mktsegment = 'BUILDING' AND n_regionkey < 3
-            |GROUP BY n_name""".stripMargin
-        def served(df: org.apache.spark.sql.DataFrame): Boolean =
-          df.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
-        val ops = graft.sources.v2.GraftStoreOps
-        s.conf.set("spark.graft.mv.rewrite", "false")
-        val (offRows, offSlices) = try {
-          val b = ops.scannedFileSlices
-          val r = s.sql(sql1).collect()
-          (r, ops.scannedFileSlices - b)
-        } finally s.conf.set("spark.graft.mv.rewrite", "true")
-        val q1 = s.sql(sql1)
-        val b1 = ops.scannedFileSlices
-        val rows = q1.collect()
-        val onSlices = ops.scannedFileSlices - b1
-        // a nation-side aggregate cannot come from fact partials
-        val dimAgg = s.sql(
-          "SELECT n_name AS nat, sum(n_regionkey) AS rk FROM gq219.fact " +
-            "JOIN gq219.cust ON o_custkey = c_custkey " +
-            "JOIN gq219.nat ON c_nationkey = n_nationkey GROUP BY n_name")
-        val sameRows = rows.sortBy(_.getString(0))
-          .sameElements(offRows.sortBy(_.getString(0)))
-        val bits = served(q1) && sameRows && onSlices < offSlices &&
-          !served(dimAgg)
-        s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), q1.schema)
-          .withColumn("joinback2_proof", lit(bits))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq219")
-        s.conf.unset("spark.sql.catalog.gq219.base")
-      }
+    (s, d) => Fixture(s, "gq219") { (s, base) =>
+      Tables.orders(s, d)
+        .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
+        .repartitionByRange(48, col("o_orderkey"))
+        .write.format("graft-store").mode("overwrite").save(s"$base/fact")
+      Tables.customer(s, d)
+        .select("c_custkey", "c_mktsegment", "c_nationkey")
+        .repartitionByRange(4, col("c_custkey"))
+        .write.format("graft-store").mode("overwrite").save(s"$base/cust")
+      Tables.nation(s, d).select("n_nationkey", "n_name", "n_regionkey")
+        .write.format("graft-store").mode("overwrite").save(s"$base/nat")
+      s.sql("CALL gq219.system.create_mview('mv', " +
+        "'SELECT o_custkey AS ck, count(*) AS n, " +
+        "sum(o_totalprice) AS rev, avg(o_totalprice) AS ap " +
+        "FROM gq219.fact GROUP BY o_custkey')")
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      val sql1 =
+        """SELECT n_name AS nat, count(*) AS n,
+          |  round(sum(o_totalprice), 2) AS rev,
+          |  round(avg(o_totalprice), 2) AS ap
+          |FROM gq219.fact
+          |JOIN gq219.cust ON o_custkey = c_custkey
+          |JOIN gq219.nat ON c_nationkey = n_nationkey
+          |WHERE c_mktsegment = 'BUILDING' AND n_regionkey < 3
+          |GROUP BY n_name""".stripMargin
+      def served(df: org.apache.spark.sql.DataFrame): Boolean =
+        df.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
+      val ops = graft.sources.v2.GraftStoreOps
+      s.conf.set("spark.graft.mv.rewrite", "false")
+      val (offRows, offSlices) = try {
+        val b = ops.scannedFileSlices
+        val r = s.sql(sql1).collect()
+        (r, ops.scannedFileSlices - b)
+      } finally s.conf.set("spark.graft.mv.rewrite", "true")
+      val q1 = s.sql(sql1)
+      val b1 = ops.scannedFileSlices
+      val rows = q1.collect()
+      val onSlices = ops.scannedFileSlices - b1
+      // a nation-side aggregate cannot come from fact partials
+      val dimAgg = s.sql(
+        "SELECT n_name AS nat, sum(n_regionkey) AS rk FROM gq219.fact " +
+          "JOIN gq219.cust ON o_custkey = c_custkey " +
+          "JOIN gq219.nat ON c_nationkey = n_nationkey GROUP BY n_name")
+      val sameRows = rows.sortBy(_.getString(0))
+        .sameElements(offRows.sortBy(_.getString(0)))
+      val bits = served(q1) && sameRows && onSlices < offSlices &&
+        !served(dimAgg)
+      s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), q1.schema)
+        .withColumn("joinback2_proof", lit(bits))
     },
     Some("""SELECT n_name AS nat, count(*) AS n,
            |  round(sum(o_totalprice), 2) AS rev,
@@ -5047,66 +4578,56 @@ object SystemQueries {
   val q220MviewPartialJoin = QuerySpec(
     "q220_mview_partial_join", "S-dsv2-mview-partial-join",
     "partial-join rewrite: a 2-table join MV serves the 3-table query",
-    (s, d) => {
-      val base = "/tmp/graft_store_q220"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq220", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq220.base", base)
-      try {
-        Tables.orders(s, d)
-          .select("o_orderkey", "o_custkey", "o_totalprice")
-          .repartitionByRange(48, col("o_orderkey"))
-          .write.format("graft-store").mode("overwrite").save(s"$base/fact")
-        Tables.customer(s, d).select("c_custkey", "c_nationkey")
-          .repartitionByRange(4, col("c_custkey"))
-          .write.format("graft-store").mode("overwrite").save(s"$base/cust")
-        Tables.nation(s, d).select("n_nationkey", "n_name")
-          .write.format("graft-store").mode("overwrite").save(s"$base/nat")
-        s.sql("CALL gq220.system.create_mview('mv', " +
-          "'SELECT c_nationkey AS nk, count(*) AS n, " +
-          "sum(o_totalprice) AS rev " +
-          "FROM gq220.fact JOIN gq220.cust ON o_custkey = c_custkey " +
-          "GROUP BY c_nationkey')")
-        val sql1 =
-          """SELECT n_name AS nat, count(*) AS n,
-            |  round(sum(o_totalprice), 2) AS rev
-            |FROM gq220.fact
-            |JOIN gq220.cust ON o_custkey = c_custkey
-            |JOIN gq220.nat ON c_nationkey = n_nationkey
-            |GROUP BY n_name""".stripMargin
-        def served(df: org.apache.spark.sql.DataFrame): Boolean =
-          df.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
-        val ops = graft.sources.v2.GraftStoreOps
-        s.conf.set("spark.graft.mv.rewrite", "false")
-        val (offRows, offSlices) = try {
-          val b = ops.scannedFileSlices
-          val r = s.sql(sql1).collect()
-          (r, ops.scannedFileSlices - b)
-        } finally s.conf.set("spark.graft.mv.rewrite", "true")
-        val q1 = s.sql(sql1)
-        val b1 = ops.scannedFileSlices
-        val rows = q1.collect()
-        val onSlices = ops.scannedFileSlices - b1
-        // covered churn stales the MV (the appended row matches no
-        // customer, so the ANSWER is unchanged — freshness is at stake)
-        s.sql("INSERT INTO gq220.fact VALUES (99999999, -1, 1.0)")
-        val staleServed = served(s.sql(sql1))
-        s.sql("CALL gq220.system.refresh_mview('mv')")
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        val fresh = s.sql(sql1)
-        val sameRows = rows.sortBy(_.getString(0))
-          .sameElements(offRows.sortBy(_.getString(0))) &&
-          rows.sortBy(_.getString(0))
-            .sameElements(fresh.collect().sortBy(_.getString(0)))
-        val bits = served(q1) && sameRows && onSlices < offSlices &&
-          !staleServed && served(fresh)
-        s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), q1.schema)
-          .withColumn("partial_join_proof", lit(bits))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq220")
-        s.conf.unset("spark.sql.catalog.gq220.base")
-      }
+    (s, d) => Fixture(s, "gq220") { (s, base) =>
+      Tables.orders(s, d)
+        .select("o_orderkey", "o_custkey", "o_totalprice")
+        .repartitionByRange(48, col("o_orderkey"))
+        .write.format("graft-store").mode("overwrite").save(s"$base/fact")
+      Tables.customer(s, d).select("c_custkey", "c_nationkey")
+        .repartitionByRange(4, col("c_custkey"))
+        .write.format("graft-store").mode("overwrite").save(s"$base/cust")
+      Tables.nation(s, d).select("n_nationkey", "n_name")
+        .write.format("graft-store").mode("overwrite").save(s"$base/nat")
+      s.sql("CALL gq220.system.create_mview('mv', " +
+        "'SELECT c_nationkey AS nk, count(*) AS n, " +
+        "sum(o_totalprice) AS rev " +
+        "FROM gq220.fact JOIN gq220.cust ON o_custkey = c_custkey " +
+        "GROUP BY c_nationkey')")
+      val sql1 =
+        """SELECT n_name AS nat, count(*) AS n,
+          |  round(sum(o_totalprice), 2) AS rev
+          |FROM gq220.fact
+          |JOIN gq220.cust ON o_custkey = c_custkey
+          |JOIN gq220.nat ON c_nationkey = n_nationkey
+          |GROUP BY n_name""".stripMargin
+      def served(df: org.apache.spark.sql.DataFrame): Boolean =
+        df.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
+      val ops = graft.sources.v2.GraftStoreOps
+      s.conf.set("spark.graft.mv.rewrite", "false")
+      val (offRows, offSlices) = try {
+        val b = ops.scannedFileSlices
+        val r = s.sql(sql1).collect()
+        (r, ops.scannedFileSlices - b)
+      } finally s.conf.set("spark.graft.mv.rewrite", "true")
+      val q1 = s.sql(sql1)
+      val b1 = ops.scannedFileSlices
+      val rows = q1.collect()
+      val onSlices = ops.scannedFileSlices - b1
+      // covered churn stales the MV (the appended row matches no
+      // customer, so the ANSWER is unchanged — freshness is at stake)
+      s.sql("INSERT INTO gq220.fact VALUES (99999999, -1, 1.0)")
+      val staleServed = served(s.sql(sql1))
+      s.sql("CALL gq220.system.refresh_mview('mv')")
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      val fresh = s.sql(sql1)
+      val sameRows = rows.sortBy(_.getString(0))
+        .sameElements(offRows.sortBy(_.getString(0))) &&
+        rows.sortBy(_.getString(0))
+          .sameElements(fresh.collect().sortBy(_.getString(0)))
+      val bits = served(q1) && sameRows && onSlices < offSlices &&
+        !staleServed && served(fresh)
+      s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), q1.schema)
+        .withColumn("partial_join_proof", lit(bits))
     },
     Some("""SELECT n_name AS nat, count(*) AS n,
            |  round(sum(o_totalprice), 2) AS rev, TRUE AS partial_join_proof
@@ -5132,65 +4653,55 @@ object SystemQueries {
   val q221MviewCalendar = QuerySpec(
     "q221_mview_calendar", "S-dsv2-mview-calendar",
     "calendar MV: expression group keys maintain incrementally and serve the rewrite",
-    (s, d) => {
-      val base = "/tmp/graft_store_q221"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq221", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq221.base", base)
-      try {
-        val src = s"$base/src"
-        // parquet may carry o_orderdate as TIMESTAMP_NTZ; the store codec
-        // speaks TimestampType — cast under the UTC session (value-exact)
-        val baseDf = Tables.orders(s, d)
-          .select(col("o_orderkey"), col("o_totalprice"),
-            col("o_orderdate").cast("timestamp").as("o_orderdate"),
-            col("o_orderstatus"))
-        baseDf.filter(col("o_orderkey") < 8000)
-          .repartitionByRange(8, col("o_orderkey"))
-          .write.format("graft-store").mode("overwrite").save(src) // 8 files
-        s.sql("CALL gq221.system.create_mview('mv', " +
-          "'SELECT date_trunc(''month'', o_orderdate) AS mon, " +
-          "o_orderstatus AS st, count(*) AS n, sum(o_totalprice) AS rev " +
-          "FROM gq221.src " +
-          "GROUP BY date_trunc(''month'', o_orderdate), o_orderstatus')")
-        // churn both ways, then refresh incrementally
-        baseDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
-          .write.format("graft-store").mode("append").save(src)
-        graft.sources.v2.GraftStoreOps.deleteWhere(s, src,
-          col("o_orderkey") < 1000)
-        val r = s.sql("CALL gq221.system.refresh_mview('mv')").collect()(0)
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        val incremental = r.getString(0) == "incremental"
-        // the month rollup (coarser than the view's (mon, st) grain),
-        // presented through an expression tree over the bucket
-        val sql1 =
-          """SELECT date_format(date_trunc('month', o_orderdate), 'yyyy-MM-dd')
-            |    AS mon,
-            |  count(*) AS n, round(sum(o_totalprice), 2) AS rev
-            |FROM gq221.src
-            |GROUP BY date_trunc('month', o_orderdate)""".stripMargin
-        def served(df: org.apache.spark.sql.DataFrame): Boolean =
-          df.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
-        val ops = graft.sources.v2.GraftStoreOps
-        val q1 = s.sql(sql1)
-        val b1 = ops.scannedFileSlices
-        val rows = q1.collect()
-        val onSlices = ops.scannedFileSlices - b1
-        // a YEAR bucket is coarser by FUNCTIONAL DEPENDENCY, not by group
-        // subset — served since round 14 by re-bucketing the stored month
-        // key (date_trunc('year', mon) — see coarsenOf); q243 hash-checks
-        // the values, this bit pins the serve
-        val qYear = s.sql(
-          """SELECT count(*) AS n FROM gq221.src
-            |GROUP BY date_trunc('year', o_orderdate)""".stripMargin)
-        val bits = served(q1) && onSlices < 8 && served(qYear) && incremental
-        s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), q1.schema)
-          .withColumn("calendar_proof", lit(bits))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq221")
-        s.conf.unset("spark.sql.catalog.gq221.base")
-      }
+    (s, d) => Fixture(s, "gq221") { (s, base) =>
+      val src = s"$base/src"
+      // parquet may carry o_orderdate as TIMESTAMP_NTZ; the store codec
+      // speaks TimestampType — cast under the UTC session (value-exact)
+      val baseDf = Tables.orders(s, d)
+        .select(col("o_orderkey"), col("o_totalprice"),
+          col("o_orderdate").cast("timestamp").as("o_orderdate"),
+          col("o_orderstatus"))
+      baseDf.filter(col("o_orderkey") < 8000)
+        .repartitionByRange(8, col("o_orderkey"))
+        .write.format("graft-store").mode("overwrite").save(src) // 8 files
+      s.sql("CALL gq221.system.create_mview('mv', " +
+        "'SELECT date_trunc(''month'', o_orderdate) AS mon, " +
+        "o_orderstatus AS st, count(*) AS n, sum(o_totalprice) AS rev " +
+        "FROM gq221.src " +
+        "GROUP BY date_trunc(''month'', o_orderdate), o_orderstatus')")
+      // churn both ways, then refresh incrementally
+      baseDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
+        .write.format("graft-store").mode("append").save(src)
+      graft.sources.v2.GraftStoreOps.deleteWhere(s, src,
+        col("o_orderkey") < 1000)
+      val r = s.sql("CALL gq221.system.refresh_mview('mv')").collect()(0)
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      val incremental = r.getString(0) == "incremental"
+      // the month rollup (coarser than the view's (mon, st) grain),
+      // presented through an expression tree over the bucket
+      val sql1 =
+        """SELECT date_format(date_trunc('month', o_orderdate), 'yyyy-MM-dd')
+          |    AS mon,
+          |  count(*) AS n, round(sum(o_totalprice), 2) AS rev
+          |FROM gq221.src
+          |GROUP BY date_trunc('month', o_orderdate)""".stripMargin
+      def served(df: org.apache.spark.sql.DataFrame): Boolean =
+        df.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
+      val ops = graft.sources.v2.GraftStoreOps
+      val q1 = s.sql(sql1)
+      val b1 = ops.scannedFileSlices
+      val rows = q1.collect()
+      val onSlices = ops.scannedFileSlices - b1
+      // a YEAR bucket is coarser by FUNCTIONAL DEPENDENCY, not by group
+      // subset — served since round 14 by re-bucketing the stored month
+      // key (date_trunc('year', mon) — see coarsenOf); q243 hash-checks
+      // the values, this bit pins the serve
+      val qYear = s.sql(
+        """SELECT count(*) AS n FROM gq221.src
+          |GROUP BY date_trunc('year', o_orderdate)""".stripMargin)
+      val bits = served(q1) && onSlices < 8 && served(qYear) && incremental
+      s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), q1.schema)
+        .withColumn("calendar_proof", lit(bits))
     },
     Some("""SELECT strftime(date_trunc('month', o_orderdate), '%Y-%m-%d') AS mon,
            |  count(*) AS n, round(sum(o_totalprice), 2) AS rev,
@@ -5217,72 +4728,62 @@ object SystemQueries {
   val q222MviewHll = QuerySpec(
     "q222_mview_hll", "S-dsv2-mview-hll",
     "approx-distinct MV: HLL sketch column maintains incrementally and serves the rewrite",
-    (s, d) => {
-      val base = "/tmp/graft_store_q222"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq222", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq222.base", base)
-      try {
-        val src = s"$base/src"
-        val baseDf = Tables.orders(s, d)
-          .select("o_orderkey", "o_custkey", "o_orderpriority")
-        baseDf.filter(col("o_orderkey") < 8000)
-          .repartitionByRange(8, col("o_orderkey"))
-          .write.format("graft-store").mode("overwrite").save(src)
-        s.sql("CALL gq222.system.create_mview('mv', " +
-          "'SELECT o_orderpriority AS pr, count(*) AS n, " +
+    (s, d) => Fixture(s, "gq222") { (s, base) =>
+      val src = s"$base/src"
+      val baseDf = Tables.orders(s, d)
+        .select("o_orderkey", "o_custkey", "o_orderpriority")
+      baseDf.filter(col("o_orderkey") < 8000)
+        .repartitionByRange(8, col("o_orderkey"))
+        .write.format("graft-store").mode("overwrite").save(src)
+      s.sql("CALL gq222.system.create_mview('mv', " +
+        "'SELECT o_orderpriority AS pr, count(*) AS n, " +
+        "hll_sketch_estimate(hll_sketch_agg(o_custkey, 12)) AS du " +
+        "FROM gq222.src GROUP BY o_orderpriority')")
+      def mvRows() = s.sql("SELECT pr, du FROM gq222.mv").collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      def recompute() = s.sql(
+        "SELECT o_orderpriority AS pr, " +
           "hll_sketch_estimate(hll_sketch_agg(o_custkey, 12)) AS du " +
-          "FROM gq222.src GROUP BY o_orderpriority')")
-        def mvRows() = s.sql("SELECT pr, du FROM gq222.mv").collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        def recompute() = s.sql(
-          "SELECT o_orderpriority AS pr, " +
-            "hll_sketch_estimate(hll_sketch_agg(o_custkey, 12)) AS du " +
-            "FROM (SELECT * FROM gq222.src) GROUP BY o_orderpriority")
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        // insert churn: the union fast path
-        baseDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
-          .write.format("graft-store").mode("append").save(src)
-        val r1 = s.sql("CALL gq222.system.refresh_mview('mv')").collect()(0)
-        val insOk = r1.getString(0) == "incremental" && mvRows() == recompute()
-        // removal churn: the rescan path
-        graft.sources.v2.GraftStoreOps.deleteWhere(s, src,
-          col("o_orderkey") < 1000)
-        val r2 = s.sql("CALL gq222.system.refresh_mview('mv')").collect()(0)
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        val delOk = r2.getString(0) == "incremental" && mvRows() == recompute()
-        // the rewrite serves the same sketch call — exact grain + global
-        def served(df: org.apache.spark.sql.DataFrame): Boolean =
-          df.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
-        val qe = s.sql(
-          "SELECT o_orderpriority AS pr, " +
-            "hll_sketch_estimate(hll_sketch_agg(o_custkey, 12)) AS du " +
-            "FROM gq222.src GROUP BY o_orderpriority")
-        val qg = s.sql(
-          "SELECT hll_sketch_estimate(hll_sketch_agg(o_custkey, 12)) AS du " +
-            "FROM gq222.src")
-        val gDirect = s.sql(
-          "SELECT hll_sketch_estimate(hll_sketch_agg(o_custkey, 12)) AS du " +
-            "FROM (SELECT * FROM gq222.src)").collect()(0).getLong(0)
-        val rewriteOk = served(qe) && served(qg) &&
-          qe.collect().map(r => r.getString(0) -> r.getLong(1)).toMap == mvRows() &&
-          qg.collect()(0).getLong(0) == gDirect
-        // the exact frame DuckDB can also compute, with the 5% envelope
-        val exact = s.sql(
-          """SELECT o_orderpriority AS pr, count(*) AS n,
-            |  count(DISTINCT o_custkey) AS dv
-            |FROM gq222.src GROUP BY o_orderpriority""".stripMargin)
-        val est = mvRows()
-        val close = exact.collect().forall { r =>
-          val e = est(r.getString(0)).toDouble
-          math.abs(e - r.getLong(2)) / r.getLong(2) < 0.05
-        }
-        exact.withColumn("hll_proof", lit(insOk && delOk && rewriteOk && close))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq222")
-        s.conf.unset("spark.sql.catalog.gq222.base")
+          "FROM (SELECT * FROM gq222.src) GROUP BY o_orderpriority")
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      // insert churn: the union fast path
+      baseDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
+        .write.format("graft-store").mode("append").save(src)
+      val r1 = s.sql("CALL gq222.system.refresh_mview('mv')").collect()(0)
+      val insOk = r1.getString(0) == "incremental" && mvRows() == recompute()
+      // removal churn: the rescan path
+      graft.sources.v2.GraftStoreOps.deleteWhere(s, src,
+        col("o_orderkey") < 1000)
+      val r2 = s.sql("CALL gq222.system.refresh_mview('mv')").collect()(0)
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      val delOk = r2.getString(0) == "incremental" && mvRows() == recompute()
+      // the rewrite serves the same sketch call — exact grain + global
+      def served(df: org.apache.spark.sql.DataFrame): Boolean =
+        df.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
+      val qe = s.sql(
+        "SELECT o_orderpriority AS pr, " +
+          "hll_sketch_estimate(hll_sketch_agg(o_custkey, 12)) AS du " +
+          "FROM gq222.src GROUP BY o_orderpriority")
+      val qg = s.sql(
+        "SELECT hll_sketch_estimate(hll_sketch_agg(o_custkey, 12)) AS du " +
+          "FROM gq222.src")
+      val gDirect = s.sql(
+        "SELECT hll_sketch_estimate(hll_sketch_agg(o_custkey, 12)) AS du " +
+          "FROM (SELECT * FROM gq222.src)").collect()(0).getLong(0)
+      val rewriteOk = served(qe) && served(qg) &&
+        qe.collect().map(r => r.getString(0) -> r.getLong(1)).toMap == mvRows() &&
+        qg.collect()(0).getLong(0) == gDirect
+      // the exact frame DuckDB can also compute, with the 5% envelope
+      val exact = s.sql(
+        """SELECT o_orderpriority AS pr, count(*) AS n,
+          |  count(DISTINCT o_custkey) AS dv
+          |FROM gq222.src GROUP BY o_orderpriority""".stripMargin)
+      val est = mvRows()
+      val close = exact.collect().forall { r =>
+        val e = est(r.getString(0)).toDouble
+        math.abs(e - r.getLong(2)) / r.getLong(2) < 0.05
       }
+      exact.withColumn("hll_proof", lit(insOk && delOk && rewriteOk && close))
     },
     Some("""SELECT o_orderpriority AS pr, count(*) AS n,
            |  count(DISTINCT o_custkey) AS dv, TRUE AS hll_proof
@@ -5305,55 +4806,45 @@ object SystemQueries {
   val q223MviewLeftOuter = QuerySpec(
     "q223_mview_left_outer", "S-dsv2-mview-left-outer",
     "LEFT OUTER MV: incremental refresh through fact append + dim insert/delete null transitions",
-    (s, d) => {
-      val base = "/tmp/graft_store_q223"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq223", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq223.base", base)
-      try {
-        val fact = s"$base/fact"
-        val dim = s"$base/dim"
-        val ordersDf = Tables.orders(s, d)
-          .select("o_orderkey", "o_custkey", "o_totalprice")
-        ordersDf.filter(col("o_orderkey") < 8000)
-          .repartitionByRange(8, col("o_orderkey"))
-          .write.format("graft-store").mode("overwrite").save(fact) // 8 files
-        val custDf = Tables.customer(s, d).select("c_custkey", "c_mktsegment")
-        // only keys ≤ 750 exist at first: higher custkeys are NULL-extended
-        custDf.filter(col("c_custkey") <= 750)
-          .write.format("graft-store").mode("overwrite").save(dim)
-        s.sql("CALL gq223.system.create_mview('mv', " +
-          "'SELECT c_mktsegment AS seg, count(*) AS n, " +
-          "sum(o_totalprice) AS rev FROM gq223.fact " +
-          "LEFT JOIN gq223.dim ON o_custkey = c_custkey " +
-          "GROUP BY c_mktsegment')")
-        // (a) FACT append: refresh stays churn-proportional
-        ordersDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
-          .write.format("graft-store").mode("append").save(fact)
-        val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
-        val r1 = s.sql("CALL gq223.system.refresh_mview('mv')").collect()(0)
-        val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
-        val churnProportional = opened < 8 // never the 8-file fact base
-        // (b) DIM insert: null-extended rows with 750 < custkey ≤ 1100
-        // CONVERT to matched (their NULL-group mass must retract)
-        custDf.filter(col("c_custkey") > 750 && col("c_custkey") <= 1100)
-          .write.format("graft-store").mode("append").save(dim)
-        val r2 = s.sql("CALL gq223.system.refresh_mview('mv')").collect()(0)
-        // (c) DIM delete: matched rows convert BACK to null-extended
-        s.sql("DELETE FROM gq223.dim WHERE c_custkey % 10 = 0")
-        val r3 = s.sql("CALL gq223.system.refresh_mview('mv')").collect()(0)
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        val incremental = Seq(r1, r2, r3)
-          .forall(_.getString(0) == "incremental")
-        s.sql("""SELECT coalesce(seg, '(none)') AS seg, n,
-                |  round(rev, 2) AS rev FROM gq223.mv""".stripMargin)
-          .withColumn("incremental", lit(incremental))
-          .withColumn("churn_proportional", lit(churnProportional))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq223")
-        s.conf.unset("spark.sql.catalog.gq223.base")
-      }
+    (s, d) => Fixture(s, "gq223") { (s, base) =>
+      val fact = s"$base/fact"
+      val dim = s"$base/dim"
+      val ordersDf = Tables.orders(s, d)
+        .select("o_orderkey", "o_custkey", "o_totalprice")
+      ordersDf.filter(col("o_orderkey") < 8000)
+        .repartitionByRange(8, col("o_orderkey"))
+        .write.format("graft-store").mode("overwrite").save(fact) // 8 files
+      val custDf = Tables.customer(s, d).select("c_custkey", "c_mktsegment")
+      // only keys ≤ 750 exist at first: higher custkeys are NULL-extended
+      custDf.filter(col("c_custkey") <= 750)
+        .write.format("graft-store").mode("overwrite").save(dim)
+      s.sql("CALL gq223.system.create_mview('mv', " +
+        "'SELECT c_mktsegment AS seg, count(*) AS n, " +
+        "sum(o_totalprice) AS rev FROM gq223.fact " +
+        "LEFT JOIN gq223.dim ON o_custkey = c_custkey " +
+        "GROUP BY c_mktsegment')")
+      // (a) FACT append: refresh stays churn-proportional
+      ordersDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
+        .write.format("graft-store").mode("append").save(fact)
+      val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
+      val r1 = s.sql("CALL gq223.system.refresh_mview('mv')").collect()(0)
+      val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
+      val churnProportional = opened < 8 // never the 8-file fact base
+      // (b) DIM insert: null-extended rows with 750 < custkey ≤ 1100
+      // CONVERT to matched (their NULL-group mass must retract)
+      custDf.filter(col("c_custkey") > 750 && col("c_custkey") <= 1100)
+        .write.format("graft-store").mode("append").save(dim)
+      val r2 = s.sql("CALL gq223.system.refresh_mview('mv')").collect()(0)
+      // (c) DIM delete: matched rows convert BACK to null-extended
+      s.sql("DELETE FROM gq223.dim WHERE c_custkey % 10 = 0")
+      val r3 = s.sql("CALL gq223.system.refresh_mview('mv')").collect()(0)
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      val incremental = Seq(r1, r2, r3)
+        .forall(_.getString(0) == "incremental")
+      s.sql("""SELECT coalesce(seg, '(none)') AS seg, n,
+              |  round(rev, 2) AS rev FROM gq223.mv""".stripMargin)
+        .withColumn("incremental", lit(incremental))
+        .withColumn("churn_proportional", lit(churnProportional))
     },
     Some("""WITH f AS (
            |  SELECT o_custkey, o_totalprice FROM orders WHERE o_orderkey < 10000),
@@ -5379,53 +4870,43 @@ object SystemQueries {
   val q224MviewNway = QuerySpec(
     "q224_mview_nway", "S-dsv2-mview-nway",
     "3-table join MV: per-side delta terms through fact/middle/leaf churn",
-    (s, d) => {
-      val base = "/tmp/graft_store_q224"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq224", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq224.base", base)
-      try {
-        val fact = s"$base/fact"
-        val cust = s"$base/cust"
-        val nat = s"$base/nat"
-        val ordersDf = Tables.orders(s, d)
-          .select("o_orderkey", "o_custkey", "o_totalprice")
-        ordersDf.filter(col("o_orderkey") < 8000)
-          .repartitionByRange(8, col("o_orderkey"))
-          .write.format("graft-store").mode("overwrite").save(fact) // 8 files
-        Tables.customer(s, d).select("c_custkey", "c_nationkey")
-          .write.format("graft-store").mode("overwrite").save(cust)
-        Tables.nation(s, d).select("n_nationkey", "n_name")
-          .write.format("graft-store").mode("overwrite").save(nat)
-        s.sql("CALL gq224.system.create_mview('mv', " +
-          "'SELECT n_name, count(*) AS n, sum(o_totalprice) AS rev " +
-          "FROM gq224.fact JOIN gq224.cust ON o_custkey = c_custkey " +
-          "JOIN gq224.nat ON c_nationkey = n_nationkey GROUP BY n_name')")
-        // FACT churn: unchurned dims contribute no term — churn-prop proof
-        ordersDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
-          .write.format("graft-store").mode("append").save(fact)
-        val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
-        val r1 = s.sql("CALL gq224.system.refresh_mview('mv')").collect()(0)
-        val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
-        val churnProportional = opened < 8 // never the 8-file fact base
-        // MIDDLE-dim churn: customers change nation → mass moves groups
-        s.sql("UPDATE gq224.cust SET c_nationkey = (c_nationkey + 1) % 25 " +
-          "WHERE c_custkey % 7 = 0")
-        val r2 = s.sql("CALL gq224.system.refresh_mview('mv')").collect()(0)
-        // LEAF-dim churn: nations vanish (their groups leave the view)
-        s.sql("DELETE FROM gq224.nat WHERE n_nationkey >= 20")
-        val r3 = s.sql("CALL gq224.system.refresh_mview('mv')").collect()(0)
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        val incremental = Seq(r1, r2, r3)
-          .forall(_.getString(0) == "incremental")
-        s.sql("""SELECT n_name, n, round(rev, 2) AS rev FROM gq224.mv""")
-          .withColumn("incremental", lit(incremental))
-          .withColumn("churn_proportional", lit(churnProportional))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq224")
-        s.conf.unset("spark.sql.catalog.gq224.base")
-      }
+    (s, d) => Fixture(s, "gq224") { (s, base) =>
+      val fact = s"$base/fact"
+      val cust = s"$base/cust"
+      val nat = s"$base/nat"
+      val ordersDf = Tables.orders(s, d)
+        .select("o_orderkey", "o_custkey", "o_totalprice")
+      ordersDf.filter(col("o_orderkey") < 8000)
+        .repartitionByRange(8, col("o_orderkey"))
+        .write.format("graft-store").mode("overwrite").save(fact) // 8 files
+      Tables.customer(s, d).select("c_custkey", "c_nationkey")
+        .write.format("graft-store").mode("overwrite").save(cust)
+      Tables.nation(s, d).select("n_nationkey", "n_name")
+        .write.format("graft-store").mode("overwrite").save(nat)
+      s.sql("CALL gq224.system.create_mview('mv', " +
+        "'SELECT n_name, count(*) AS n, sum(o_totalprice) AS rev " +
+        "FROM gq224.fact JOIN gq224.cust ON o_custkey = c_custkey " +
+        "JOIN gq224.nat ON c_nationkey = n_nationkey GROUP BY n_name')")
+      // FACT churn: unchurned dims contribute no term — churn-prop proof
+      ordersDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
+        .write.format("graft-store").mode("append").save(fact)
+      val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
+      val r1 = s.sql("CALL gq224.system.refresh_mview('mv')").collect()(0)
+      val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
+      val churnProportional = opened < 8 // never the 8-file fact base
+      // MIDDLE-dim churn: customers change nation → mass moves groups
+      s.sql("UPDATE gq224.cust SET c_nationkey = (c_nationkey + 1) % 25 " +
+        "WHERE c_custkey % 7 = 0")
+      val r2 = s.sql("CALL gq224.system.refresh_mview('mv')").collect()(0)
+      // LEAF-dim churn: nations vanish (their groups leave the view)
+      s.sql("DELETE FROM gq224.nat WHERE n_nationkey >= 20")
+      val r3 = s.sql("CALL gq224.system.refresh_mview('mv')").collect()(0)
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      val incremental = Seq(r1, r2, r3)
+        .forall(_.getString(0) == "incremental")
+      s.sql("""SELECT n_name, n, round(rev, 2) AS rev FROM gq224.mv""")
+        .withColumn("incremental", lit(incremental))
+        .withColumn("churn_proportional", lit(churnProportional))
     },
     Some("""WITH f AS (
            |  SELECT o_custkey, o_totalprice FROM orders WHERE o_orderkey < 10000),
@@ -5455,57 +4936,47 @@ object SystemQueries {
   val q225MviewLeftRewrite = QuerySpec(
     "q225_mview_left_rewrite", "S-dsv2-mview-left-rewrite",
     "left-shape rewrite: LEFT JOIN aggregate served from the left view; inner refuses",
-    (s, d) => {
-      val base = "/tmp/graft_store_q225"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq225", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq225.base", base)
-      try {
-        val fact = s"$base/fact"
-        val dim = s"$base/dim"
-        val ordersDf = Tables.orders(s, d)
-          .select("o_orderkey", "o_custkey", "o_totalprice")
-        ordersDf.filter(col("o_orderkey") < 8000)
-          .repartitionByRange(8, col("o_orderkey"))
-          .write.format("graft-store").mode("overwrite").save(fact) // 8 files
-        Tables.customer(s, d).select("c_custkey", "c_mktsegment")
-          .filter(col("c_custkey") <= 750) // higher keys null-extend
-          .write.format("graft-store").mode("overwrite").save(dim)
-        s.sql("CALL gq225.system.create_mview('mv', " +
-          "'SELECT c_mktsegment AS seg, count(*) AS n, " +
-          "sum(o_totalprice) AS rev FROM gq225.fact " +
-          "LEFT JOIN gq225.dim ON o_custkey = c_custkey " +
-          "GROUP BY c_mktsegment')")
-        ordersDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
-          .write.format("graft-store").mode("append").save(fact)
-        s.sql("CALL gq225.system.refresh_mview('mv')")
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        def served(df: org.apache.spark.sql.DataFrame): Boolean =
-          df.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
-        val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
-        val leftQ = s.sql(
-          """SELECT coalesce(c_mktsegment, '(none)') AS seg, count(*) AS n,
-            |  round(sum(o_totalprice), 2) AS rev
-            |FROM gq225.fact LEFT JOIN gq225.dim ON o_custkey = c_custkey
-            |GROUP BY c_mktsegment""".stripMargin)
-        val rows = leftQ.collect()
-        val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
-        val leftServed = served(leftQ) && opened < 8
-        // the INNER shape over the same tables must NOT read the left view
-        val innerQ = s.sql(
-          """SELECT c_mktsegment AS seg, count(*) AS n
-            |FROM gq225.fact JOIN gq225.dim ON o_custkey = c_custkey
-            |GROUP BY c_mktsegment""".stripMargin)
-        val innerRefused = !served(innerQ) &&
-          innerQ.collect().forall(_.getString(0) != null)
-        s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), leftQ.schema)
-          .withColumn("left_served", lit(leftServed))
-          .withColumn("inner_refused", lit(innerRefused))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq225")
-        s.conf.unset("spark.sql.catalog.gq225.base")
-      }
+    (s, d) => Fixture(s, "gq225") { (s, base) =>
+      val fact = s"$base/fact"
+      val dim = s"$base/dim"
+      val ordersDf = Tables.orders(s, d)
+        .select("o_orderkey", "o_custkey", "o_totalprice")
+      ordersDf.filter(col("o_orderkey") < 8000)
+        .repartitionByRange(8, col("o_orderkey"))
+        .write.format("graft-store").mode("overwrite").save(fact) // 8 files
+      Tables.customer(s, d).select("c_custkey", "c_mktsegment")
+        .filter(col("c_custkey") <= 750) // higher keys null-extend
+        .write.format("graft-store").mode("overwrite").save(dim)
+      s.sql("CALL gq225.system.create_mview('mv', " +
+        "'SELECT c_mktsegment AS seg, count(*) AS n, " +
+        "sum(o_totalprice) AS rev FROM gq225.fact " +
+        "LEFT JOIN gq225.dim ON o_custkey = c_custkey " +
+        "GROUP BY c_mktsegment')")
+      ordersDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
+        .write.format("graft-store").mode("append").save(fact)
+      s.sql("CALL gq225.system.refresh_mview('mv')")
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      def served(df: org.apache.spark.sql.DataFrame): Boolean =
+        df.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
+      val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
+      val leftQ = s.sql(
+        """SELECT coalesce(c_mktsegment, '(none)') AS seg, count(*) AS n,
+          |  round(sum(o_totalprice), 2) AS rev
+          |FROM gq225.fact LEFT JOIN gq225.dim ON o_custkey = c_custkey
+          |GROUP BY c_mktsegment""".stripMargin)
+      val rows = leftQ.collect()
+      val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
+      val leftServed = served(leftQ) && opened < 8
+      // the INNER shape over the same tables must NOT read the left view
+      val innerQ = s.sql(
+        """SELECT c_mktsegment AS seg, count(*) AS n
+          |FROM gq225.fact JOIN gq225.dim ON o_custkey = c_custkey
+          |GROUP BY c_mktsegment""".stripMargin)
+      val innerRefused = !served(innerQ) &&
+        innerQ.collect().forall(_.getString(0) != null)
+      s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), leftQ.schema)
+        .withColumn("left_served", lit(leftServed))
+        .withColumn("inner_refused", lit(innerRefused))
     },
     Some("""WITH f AS (
            |  SELECT o_custkey, o_totalprice FROM orders WHERE o_orderkey < 10000),
@@ -5531,56 +5002,46 @@ object SystemQueries {
   val q226MviewHavingFilter = QuerySpec(
     "q226_mview_having_filter", "S-dsv2-mview-having-filter",
     "HAVING + aggregate FILTER served from the view; collapsed-column FILTER refuses",
-    (s, d) => {
-      val base = "/tmp/graft_store_q226"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq226", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq226.base", base)
-      try {
-        val src = s"$base/src"
-        val baseDf = Tables.orders(s, d)
-          .select("o_orderkey", "o_totalprice", "o_orderpriority", "o_orderstatus")
-        baseDf.filter(col("o_orderkey") < 8000)
-          .repartitionByRange(8, col("o_orderkey"))
-          .write.format("graft-store").mode("overwrite").save(src) // 8 files
-        s.sql("CALL gq226.system.create_mview('mv', " +
-          "'SELECT o_orderpriority AS priority, o_orderstatus AS status, " +
-          "count(*) AS n, sum(o_totalprice) AS rev " +
-          "FROM gq226.src GROUP BY o_orderpriority, o_orderstatus')")
-        baseDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
-          .write.format("graft-store").mode("append").save(src)
-        s.sql("CALL gq226.system.refresh_mview('mv')")
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        def served(df: org.apache.spark.sql.DataFrame): Boolean =
-          df.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
-        val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
-        val havingQ = s.sql(
-          """SELECT o_orderpriority AS priority, count(*) AS n
-            |FROM gq226.src GROUP BY o_orderpriority
-            |HAVING sum(o_totalprice) > 100000""".stripMargin)
-        val havingOk = served(havingQ) && havingQ.collect().nonEmpty
-        val filterQ = s.sql(
-          """SELECT o_orderpriority AS priority, count(*) AS n,
-            |  round(sum(o_totalprice) FILTER (WHERE o_orderstatus = 'O'), 2)
-            |    AS rev_open
-            |FROM gq226.src GROUP BY o_orderpriority""".stripMargin)
-        val rows = filterQ.collect()
-        val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
-        val filterOk = served(filterQ) && opened < 8
-        val refusal = s.sql(
-          """SELECT o_orderpriority AS priority,
-            |  sum(o_totalprice) FILTER (WHERE o_totalprice > 1000) AS rv
-            |FROM gq226.src GROUP BY o_orderpriority""".stripMargin)
-        val refusalKept = !served(refusal)
-        s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), filterQ.schema)
-          .withColumn("having_served", lit(havingOk))
-          .withColumn("filter_served", lit(filterOk))
-          .withColumn("refusal_kept", lit(refusalKept))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq226")
-        s.conf.unset("spark.sql.catalog.gq226.base")
-      }
+    (s, d) => Fixture(s, "gq226") { (s, base) =>
+      val src = s"$base/src"
+      val baseDf = Tables.orders(s, d)
+        .select("o_orderkey", "o_totalprice", "o_orderpriority", "o_orderstatus")
+      baseDf.filter(col("o_orderkey") < 8000)
+        .repartitionByRange(8, col("o_orderkey"))
+        .write.format("graft-store").mode("overwrite").save(src) // 8 files
+      s.sql("CALL gq226.system.create_mview('mv', " +
+        "'SELECT o_orderpriority AS priority, o_orderstatus AS status, " +
+        "count(*) AS n, sum(o_totalprice) AS rev " +
+        "FROM gq226.src GROUP BY o_orderpriority, o_orderstatus')")
+      baseDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
+        .write.format("graft-store").mode("append").save(src)
+      s.sql("CALL gq226.system.refresh_mview('mv')")
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      def served(df: org.apache.spark.sql.DataFrame): Boolean =
+        df.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
+      val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
+      val havingQ = s.sql(
+        """SELECT o_orderpriority AS priority, count(*) AS n
+          |FROM gq226.src GROUP BY o_orderpriority
+          |HAVING sum(o_totalprice) > 100000""".stripMargin)
+      val havingOk = served(havingQ) && havingQ.collect().nonEmpty
+      val filterQ = s.sql(
+        """SELECT o_orderpriority AS priority, count(*) AS n,
+          |  round(sum(o_totalprice) FILTER (WHERE o_orderstatus = 'O'), 2)
+          |    AS rev_open
+          |FROM gq226.src GROUP BY o_orderpriority""".stripMargin)
+      val rows = filterQ.collect()
+      val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
+      val filterOk = served(filterQ) && opened < 8
+      val refusal = s.sql(
+        """SELECT o_orderpriority AS priority,
+          |  sum(o_totalprice) FILTER (WHERE o_totalprice > 1000) AS rv
+          |FROM gq226.src GROUP BY o_orderpriority""".stripMargin)
+      val refusalKept = !served(refusal)
+      s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), filterQ.schema)
+        .withColumn("having_served", lit(havingOk))
+        .withColumn("filter_served", lit(filterOk))
+        .withColumn("refusal_kept", lit(refusalKept))
     },
     Some("""SELECT o_orderpriority AS priority, count(*) AS n,
            |  round(sum(o_totalprice) FILTER (WHERE o_orderstatus = 'O'), 2)
@@ -5603,40 +5064,30 @@ object SystemQueries {
   val q227MviewDcount = QuerySpec(
     "q227_mview_count_distinct", "S-dsv2-mview-count-distinct",
     "exact count(DISTINCT) MV: dup-count companion through insert + delete churn",
-    (s, d) => {
-      val base = "/tmp/graft_store_q227"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq227", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq227.base", base)
-      try {
-        val src = s"$base/src"
-        val baseDf = Tables.orders(s, d)
-          .select("o_orderkey", "o_custkey", "o_orderpriority")
-        baseDf.filter(col("o_orderkey") < 8000)
-          .repartitionByRange(8, col("o_orderkey"))
-          .write.format("graft-store").mode("overwrite").save(src)
-        s.sql("CALL gq227.system.create_mview('mv', " +
-          "'SELECT o_orderpriority AS pr, count(*) AS n, " +
-          "count(DISTINCT o_custkey) AS dc " +
-          "FROM gq227.src GROUP BY o_orderpriority')")
-        // inserts re-reference existing custkeys (dups) and add new ones
-        baseDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
-          .write.format("graft-store").mode("append").save(src)
-        val r1 = s.sql("CALL gq227.system.refresh_mview('mv')").collect()(0)
-        // the delete removes many (priority, custkey) pairs whose custkey
-        // survives in other priorities — per-pair resolution required
-        graft.sources.v2.GraftStoreOps.deleteWhere(s, src,
-          col("o_orderkey") < 1000)
-        val r2 = s.sql("CALL gq227.system.refresh_mview('mv')").collect()(0)
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        val incremental = Seq(r1, r2).forall(_.getString(0) == "incremental")
-        s.sql("SELECT pr, n, dc FROM gq227.mv")
-          .withColumn("incremental", lit(incremental))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq227")
-        s.conf.unset("spark.sql.catalog.gq227.base")
-      }
+    (s, d) => Fixture(s, "gq227") { (s, base) =>
+      val src = s"$base/src"
+      val baseDf = Tables.orders(s, d)
+        .select("o_orderkey", "o_custkey", "o_orderpriority")
+      baseDf.filter(col("o_orderkey") < 8000)
+        .repartitionByRange(8, col("o_orderkey"))
+        .write.format("graft-store").mode("overwrite").save(src)
+      s.sql("CALL gq227.system.create_mview('mv', " +
+        "'SELECT o_orderpriority AS pr, count(*) AS n, " +
+        "count(DISTINCT o_custkey) AS dc " +
+        "FROM gq227.src GROUP BY o_orderpriority')")
+      // inserts re-reference existing custkeys (dups) and add new ones
+      baseDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
+        .write.format("graft-store").mode("append").save(src)
+      val r1 = s.sql("CALL gq227.system.refresh_mview('mv')").collect()(0)
+      // the delete removes many (priority, custkey) pairs whose custkey
+      // survives in other priorities — per-pair resolution required
+      graft.sources.v2.GraftStoreOps.deleteWhere(s, src,
+        col("o_orderkey") < 1000)
+      val r2 = s.sql("CALL gq227.system.refresh_mview('mv')").collect()(0)
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      val incremental = Seq(r1, r2).forall(_.getString(0) == "incremental")
+      s.sql("SELECT pr, n, dc FROM gq227.mv")
+        .withColumn("incremental", lit(incremental))
     },
     Some("""SELECT o_orderpriority AS pr, count(*) AS n,
            |  count(DISTINCT o_custkey) AS dc, TRUE AS incremental
@@ -5657,47 +5108,37 @@ object SystemQueries {
   val q228MviewDdl = QuerySpec(
     "q228_mview_ddl", "S-dsv2-mview-ddl",
     "CREATE/REFRESH/DROP MATERIALIZED VIEW as standard DDL text",
-    (s, d) => {
-      val base = "/tmp/graft_store_q228"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq228", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq228.base", base)
-      try {
-        val src = s"$base/src"
-        val baseDf = Tables.orders(s, d)
-          .select("o_orderkey", "o_totalprice", "o_orderpriority")
-        baseDf.filter(col("o_orderkey") < 8000)
-          .repartitionByRange(8, col("o_orderkey"))
-          .write.format("graft-store").mode("overwrite").save(src)
-        s.sql("CREATE MATERIALIZED VIEW gq228.mv AS " +
-          "SELECT o_orderpriority AS priority, count(*) AS n, " +
-          "sum(o_totalprice) AS rev FROM gq228.src GROUP BY o_orderpriority")
-        baseDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
-          .write.format("graft-store").mode("append").save(src)
-        val r1 = s.sql("REFRESH MATERIALIZED VIEW gq228.mv").collect()(0)
-        // a scratch view exercises IF NOT EXISTS + DROP through DDL too
-        s.sql("CREATE MATERIALIZED VIEW IF NOT EXISTS gq228.scratch AS " +
-          "SELECT o_orderpriority AS p2, count(*) AS n2 " +
-          "FROM gq228.src GROUP BY o_orderpriority")
-        s.sql("DROP MATERIALIZED VIEW gq228.scratch")
-        val dropped =
-          try { s.sql("SELECT * FROM gq228.scratch").collect(); false }
-          catch { case _: Exception => true }
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        val incremental = r1.getString(0) == "incremental"
-        val servedQ = s.sql("SELECT o_orderpriority AS priority, count(*) AS n " +
-          "FROM gq228.src GROUP BY o_orderpriority")
-        val served = servedQ.queryExecution.optimizedPlan.toString
-          .contains(s"$base/mv")
-        s.sql("""SELECT priority, n, round(rev, 2) AS rev FROM gq228.mv""")
-          .withColumn("incremental", lit(incremental))
-          .withColumn("rewrite_served", lit(served))
-          .withColumn("drop_effective", lit(dropped))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq228")
-        s.conf.unset("spark.sql.catalog.gq228.base")
-      }
+    (s, d) => Fixture(s, "gq228") { (s, base) =>
+      val src = s"$base/src"
+      val baseDf = Tables.orders(s, d)
+        .select("o_orderkey", "o_totalprice", "o_orderpriority")
+      baseDf.filter(col("o_orderkey") < 8000)
+        .repartitionByRange(8, col("o_orderkey"))
+        .write.format("graft-store").mode("overwrite").save(src)
+      s.sql("CREATE MATERIALIZED VIEW gq228.mv AS " +
+        "SELECT o_orderpriority AS priority, count(*) AS n, " +
+        "sum(o_totalprice) AS rev FROM gq228.src GROUP BY o_orderpriority")
+      baseDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
+        .write.format("graft-store").mode("append").save(src)
+      val r1 = s.sql("REFRESH MATERIALIZED VIEW gq228.mv").collect()(0)
+      // a scratch view exercises IF NOT EXISTS + DROP through DDL too
+      s.sql("CREATE MATERIALIZED VIEW IF NOT EXISTS gq228.scratch AS " +
+        "SELECT o_orderpriority AS p2, count(*) AS n2 " +
+        "FROM gq228.src GROUP BY o_orderpriority")
+      s.sql("DROP MATERIALIZED VIEW gq228.scratch")
+      val dropped =
+        try { s.sql("SELECT * FROM gq228.scratch").collect(); false }
+        catch { case _: Exception => true }
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      val incremental = r1.getString(0) == "incremental"
+      val servedQ = s.sql("SELECT o_orderpriority AS priority, count(*) AS n " +
+        "FROM gq228.src GROUP BY o_orderpriority")
+      val served = servedQ.queryExecution.optimizedPlan.toString
+        .contains(s"$base/mv")
+      s.sql("""SELECT priority, n, round(rev, 2) AS rev FROM gq228.mv""")
+        .withColumn("incremental", lit(incremental))
+        .withColumn("rewrite_served", lit(served))
+        .withColumn("drop_effective", lit(dropped))
     },
     Some("""SELECT o_orderpriority AS priority, count(*) AS n,
            |  round(sum(o_totalprice), 2) AS rev, TRUE AS incremental,
@@ -5717,41 +5158,31 @@ object SystemQueries {
   val q229MviewChurnPrune = QuerySpec(
     "q229_mview_churn_prune", "S-dsv2-mview-churn-prune",
     "dim-churn refresh prunes the key-clustered fact via net-churn IN pushdown",
-    (s, d) => {
-      val base = "/tmp/graft_store_q229"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq229", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq229.base", base)
-      try {
-        val fact = s"$base/fact"
-        val dim = s"$base/dim"
-        val ordersDf = Tables.orders(s, d)
-          .select("o_orderkey", "o_custkey", "o_totalprice")
-        // fact clustered on the JOIN KEY: key-scoped scans can skip files
-        ordersDf.filter(col("o_orderkey") < 10000)
-          .repartitionByRange(16, col("o_custkey"))
-          .write.format("graft-store").mode("overwrite").save(fact) // 16 files
-        Tables.customer(s, d).select("c_custkey", "c_mktsegment")
-          .write.format("graft-store").mode("overwrite").save(dim)
-        s.sql("CALL gq229.system.create_mview('mv', " +
-          "'SELECT c_mktsegment AS seg, count(*) AS n, " +
-          "sum(o_totalprice) AS rev FROM gq229.fact " +
-          "JOIN gq229.dim ON o_custkey = c_custkey GROUP BY c_mktsegment')")
-        // ONE dim row churns: the delta term must read the churn, the
-        // dim, and the fact slices covering custkey 77 — never 16 files
-        s.sql("UPDATE gq229.dim SET c_mktsegment = 'MOVED' WHERE c_custkey = 77")
-        val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
-        val r1 = s.sql("CALL gq229.system.refresh_mview('mv')").collect()(0)
-        val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        val pruned = opened < 16 && r1.getString(0) == "incremental"
-        s.sql("""SELECT seg, n, round(rev, 2) AS rev FROM gq229.mv""")
-          .withColumn("churn_pruned", lit(pruned))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq229")
-        s.conf.unset("spark.sql.catalog.gq229.base")
-      }
+    (s, d) => Fixture(s, "gq229") { (s, base) =>
+      val fact = s"$base/fact"
+      val dim = s"$base/dim"
+      val ordersDf = Tables.orders(s, d)
+        .select("o_orderkey", "o_custkey", "o_totalprice")
+      // fact clustered on the JOIN KEY: key-scoped scans can skip files
+      ordersDf.filter(col("o_orderkey") < 10000)
+        .repartitionByRange(16, col("o_custkey"))
+        .write.format("graft-store").mode("overwrite").save(fact) // 16 files
+      Tables.customer(s, d).select("c_custkey", "c_mktsegment")
+        .write.format("graft-store").mode("overwrite").save(dim)
+      s.sql("CALL gq229.system.create_mview('mv', " +
+        "'SELECT c_mktsegment AS seg, count(*) AS n, " +
+        "sum(o_totalprice) AS rev FROM gq229.fact " +
+        "JOIN gq229.dim ON o_custkey = c_custkey GROUP BY c_mktsegment')")
+      // ONE dim row churns: the delta term must read the churn, the
+      // dim, and the fact slices covering custkey 77 — never 16 files
+      s.sql("UPDATE gq229.dim SET c_mktsegment = 'MOVED' WHERE c_custkey = 77")
+      val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
+      val r1 = s.sql("CALL gq229.system.refresh_mview('mv')").collect()(0)
+      val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      val pruned = opened < 16 && r1.getString(0) == "incremental"
+      s.sql("""SELECT seg, n, round(rev, 2) AS rev FROM gq229.mv""")
+        .withColumn("churn_pruned", lit(pruned))
     },
     Some("""WITH f AS (
            |  SELECT o_custkey, o_totalprice FROM orders WHERE o_orderkey < 10000),
@@ -5777,58 +5208,48 @@ object SystemQueries {
   val q230MviewLeftChain = QuerySpec(
     "q230_mview_left_chain", "S-dsv2-mview-left-chain",
     "3-table LEFT OUTER chain MV: per-side churn with 2-level null transitions",
-    (s, d) => {
-      val base = "/tmp/graft_store_q230"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq230", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq230.base", base)
-      try {
-        val fact = s"$base/fact"
-        val cust = s"$base/cust"
-        val nat = s"$base/nat"
-        val ordersDf = Tables.orders(s, d)
-          .select("o_orderkey", "o_custkey", "o_totalprice")
-        ordersDf.filter(col("o_orderkey") < 8000)
-          .repartitionByRange(8, col("o_orderkey"))
-          .write.format("graft-store").mode("overwrite").save(fact)
-        // customers ≤ 1200 only: higher custkeys null-extend at level 1
-        Tables.customer(s, d).select("c_custkey", "c_nationkey")
-          .filter(col("c_custkey") <= 1200)
-          .write.format("graft-store").mode("overwrite").save(cust)
-        Tables.nation(s, d).select("n_nationkey", "n_name")
-          .write.format("graft-store").mode("overwrite").save(nat)
-        s.sql("CALL gq230.system.create_mview('mv', " +
-          "'SELECT n_name, count(*) AS n, sum(o_totalprice) AS rev " +
-          "FROM gq230.fact " +
-          "LEFT JOIN gq230.cust ON o_custkey = c_custkey " +
-          "LEFT JOIN gq230.nat ON c_nationkey = n_nationkey " +
-          "GROUP BY n_name')")
-        // fact churn
-        ordersDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
-          .write.format("graft-store").mode("append").save(fact)
-        val r1 = s.sql("CALL gq230.system.refresh_mview('mv')").collect()(0)
-        // middle churn: customers 1200<k≤1350 appear (level-1 null →
-        // matched), customers k%10=0 leave (matched → level-1 null)
-        Tables.customer(s, d).select("c_custkey", "c_nationkey")
-          .filter(col("c_custkey") > 1200 && col("c_custkey") <= 1350)
-          .write.format("graft-store").mode("append").save(cust)
-        s.sql("DELETE FROM gq230.cust WHERE c_custkey % 10 = 0")
-        val r2 = s.sql("CALL gq230.system.refresh_mview('mv')").collect()(0)
-        // leaf churn: nations < 5 vanish — their customers' orders
-        // convert from matched to level-2 null-extended
-        s.sql("DELETE FROM gq230.nat WHERE n_nationkey < 5")
-        val r3 = s.sql("CALL gq230.system.refresh_mview('mv')").collect()(0)
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        val incremental = Seq(r1, r2, r3)
-          .forall(_.getString(0) == "incremental")
-        s.sql("""SELECT coalesce(n_name, '(none)') AS n_name, n,
-                |  round(rev, 2) AS rev FROM gq230.mv""".stripMargin)
-          .withColumn("incremental", lit(incremental))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq230")
-        s.conf.unset("spark.sql.catalog.gq230.base")
-      }
+    (s, d) => Fixture(s, "gq230") { (s, base) =>
+      val fact = s"$base/fact"
+      val cust = s"$base/cust"
+      val nat = s"$base/nat"
+      val ordersDf = Tables.orders(s, d)
+        .select("o_orderkey", "o_custkey", "o_totalprice")
+      ordersDf.filter(col("o_orderkey") < 8000)
+        .repartitionByRange(8, col("o_orderkey"))
+        .write.format("graft-store").mode("overwrite").save(fact)
+      // customers ≤ 1200 only: higher custkeys null-extend at level 1
+      Tables.customer(s, d).select("c_custkey", "c_nationkey")
+        .filter(col("c_custkey") <= 1200)
+        .write.format("graft-store").mode("overwrite").save(cust)
+      Tables.nation(s, d).select("n_nationkey", "n_name")
+        .write.format("graft-store").mode("overwrite").save(nat)
+      s.sql("CALL gq230.system.create_mview('mv', " +
+        "'SELECT n_name, count(*) AS n, sum(o_totalprice) AS rev " +
+        "FROM gq230.fact " +
+        "LEFT JOIN gq230.cust ON o_custkey = c_custkey " +
+        "LEFT JOIN gq230.nat ON c_nationkey = n_nationkey " +
+        "GROUP BY n_name')")
+      // fact churn
+      ordersDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
+        .write.format("graft-store").mode("append").save(fact)
+      val r1 = s.sql("CALL gq230.system.refresh_mview('mv')").collect()(0)
+      // middle churn: customers 1200<k≤1350 appear (level-1 null →
+      // matched), customers k%10=0 leave (matched → level-1 null)
+      Tables.customer(s, d).select("c_custkey", "c_nationkey")
+        .filter(col("c_custkey") > 1200 && col("c_custkey") <= 1350)
+        .write.format("graft-store").mode("append").save(cust)
+      s.sql("DELETE FROM gq230.cust WHERE c_custkey % 10 = 0")
+      val r2 = s.sql("CALL gq230.system.refresh_mview('mv')").collect()(0)
+      // leaf churn: nations < 5 vanish — their customers' orders
+      // convert from matched to level-2 null-extended
+      s.sql("DELETE FROM gq230.nat WHERE n_nationkey < 5")
+      val r3 = s.sql("CALL gq230.system.refresh_mview('mv')").collect()(0)
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      val incremental = Seq(r1, r2, r3)
+        .forall(_.getString(0) == "incremental")
+      s.sql("""SELECT coalesce(n_name, '(none)') AS n_name, n,
+              |  round(rev, 2) AS rev FROM gq230.mv""".stripMargin)
+        .withColumn("incremental", lit(incremental))
     },
     Some("""WITH f AS (
            |  SELECT o_custkey, o_totalprice FROM orders WHERE o_orderkey < 10000),
@@ -5855,56 +5276,46 @@ object SystemQueries {
   val q231MviewMixedChain = QuerySpec(
     "q231_mview_mixed_chain", "S-dsv2-mview-mixed-chain",
     "mixed INNER+LEFT chain MV: per-side churn with gate and null transitions",
-    (s, d) => {
-      val base = "/tmp/graft_store_q231"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq231", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq231.base", base)
-      try {
-        val fact = s"$base/fact"
-        val cust = s"$base/cust"
-        val nat = s"$base/nat"
-        val ordersDf = Tables.orders(s, d)
-          .select("o_orderkey", "o_custkey", "o_totalprice")
-        ordersDf.filter(col("o_orderkey") < 8000)
-          .repartitionByRange(8, col("o_orderkey"))
-          .write.format("graft-store").mode("overwrite").save(fact)
-        Tables.customer(s, d).select("c_custkey", "c_nationkey")
-          .write.format("graft-store").mode("overwrite").save(cust)
-        // nations < 15 only: higher nationkeys null-extend
-        Tables.nation(s, d).select("n_nationkey", "n_name")
-          .filter(col("n_nationkey") < 15)
-          .write.format("graft-store").mode("overwrite").save(nat)
-        s.sql("CALL gq231.system.create_mview('mv', " +
-          "'SELECT n_name, count(*) AS n, sum(o_totalprice) AS rev " +
-          "FROM gq231.fact " +
-          "JOIN gq231.cust ON o_custkey = c_custkey " +
-          "LEFT JOIN gq231.nat ON c_nationkey = n_nationkey " +
-          "GROUP BY n_name')")
-        ordersDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
-          .write.format("graft-store").mode("append").save(fact)
-        val r1 = s.sql("CALL gq231.system.refresh_mview('mv')").collect()(0)
-        // INNER-side churn: customers leave — their orders drop out
-        s.sql("DELETE FROM gq231.cust WHERE c_custkey % 10 = 0")
-        val r2 = s.sql("CALL gq231.system.refresh_mview('mv')").collect()(0)
-        // LEFT-side churn: nations < 5 vanish (matched → null-extended)
-        // and 15..19 appear (null-extended → matched)
-        s.sql("DELETE FROM gq231.nat WHERE n_nationkey < 5")
-        Tables.nation(s, d).select("n_nationkey", "n_name")
-          .filter(col("n_nationkey") >= 15 && col("n_nationkey") < 20)
-          .write.format("graft-store").mode("append").save(nat)
-        val r3 = s.sql("CALL gq231.system.refresh_mview('mv')").collect()(0)
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        val incremental = Seq(r1, r2, r3)
-          .forall(_.getString(0) == "incremental")
-        s.sql("""SELECT coalesce(n_name, '(none)') AS n_name, n,
-                |  round(rev, 2) AS rev FROM gq231.mv""".stripMargin)
-          .withColumn("incremental", lit(incremental))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq231")
-        s.conf.unset("spark.sql.catalog.gq231.base")
-      }
+    (s, d) => Fixture(s, "gq231") { (s, base) =>
+      val fact = s"$base/fact"
+      val cust = s"$base/cust"
+      val nat = s"$base/nat"
+      val ordersDf = Tables.orders(s, d)
+        .select("o_orderkey", "o_custkey", "o_totalprice")
+      ordersDf.filter(col("o_orderkey") < 8000)
+        .repartitionByRange(8, col("o_orderkey"))
+        .write.format("graft-store").mode("overwrite").save(fact)
+      Tables.customer(s, d).select("c_custkey", "c_nationkey")
+        .write.format("graft-store").mode("overwrite").save(cust)
+      // nations < 15 only: higher nationkeys null-extend
+      Tables.nation(s, d).select("n_nationkey", "n_name")
+        .filter(col("n_nationkey") < 15)
+        .write.format("graft-store").mode("overwrite").save(nat)
+      s.sql("CALL gq231.system.create_mview('mv', " +
+        "'SELECT n_name, count(*) AS n, sum(o_totalprice) AS rev " +
+        "FROM gq231.fact " +
+        "JOIN gq231.cust ON o_custkey = c_custkey " +
+        "LEFT JOIN gq231.nat ON c_nationkey = n_nationkey " +
+        "GROUP BY n_name')")
+      ordersDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
+        .write.format("graft-store").mode("append").save(fact)
+      val r1 = s.sql("CALL gq231.system.refresh_mview('mv')").collect()(0)
+      // INNER-side churn: customers leave — their orders drop out
+      s.sql("DELETE FROM gq231.cust WHERE c_custkey % 10 = 0")
+      val r2 = s.sql("CALL gq231.system.refresh_mview('mv')").collect()(0)
+      // LEFT-side churn: nations < 5 vanish (matched → null-extended)
+      // and 15..19 appear (null-extended → matched)
+      s.sql("DELETE FROM gq231.nat WHERE n_nationkey < 5")
+      Tables.nation(s, d).select("n_nationkey", "n_name")
+        .filter(col("n_nationkey") >= 15 && col("n_nationkey") < 20)
+        .write.format("graft-store").mode("append").save(nat)
+      val r3 = s.sql("CALL gq231.system.refresh_mview('mv')").collect()(0)
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      val incremental = Seq(r1, r2, r3)
+        .forall(_.getString(0) == "incremental")
+      s.sql("""SELECT coalesce(n_name, '(none)') AS n_name, n,
+              |  round(rev, 2) AS rev FROM gq231.mv""".stripMargin)
+        .withColumn("incremental", lit(incremental))
     },
     Some("""WITH f AS (
            |  SELECT o_custkey, o_totalprice FROM orders WHERE o_orderkey < 10000),
@@ -5934,57 +5345,47 @@ object SystemQueries {
   val q232MviewLeftJoinBack = QuerySpec(
     "q232_mview_left_joinback", "S-dsv2-mview-left-joinback",
     "LEFT JOIN dim aggregate served from an inner-grain fact MV via join-back",
-    (s, d) => {
-      val base = "/tmp/graft_store_q232"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq232", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq232.base", base)
-      try {
-        val fact = s"$base/fact"
-        val dim = s"$base/dim"
-        val ordersDf = Tables.orders(s, d)
-          .select("o_orderkey", "o_custkey", "o_totalprice")
-        ordersDf.filter(col("o_orderkey") < 8000)
-          .repartitionByRange(8, col("o_orderkey"))
-          .write.format("graft-store").mode("overwrite").save(fact) // 8 files
-        Tables.customer(s, d).select("c_custkey", "c_mktsegment")
-          .filter(col("c_custkey") <= 750) // higher keys null-extend
-          .write.format("graft-store").mode("overwrite").save(dim)
-        // INNER-grain MV: plain per-custkey partials, no join in the view
-        s.sql("CALL gq232.system.create_mview('mv', " +
-          "'SELECT o_custkey, count(*) AS n, sum(o_totalprice) AS rev " +
-          "FROM gq232.fact GROUP BY o_custkey')")
-        ordersDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
-          .write.format("graft-store").mode("append").save(fact)
-        s.sql("CALL gq232.system.refresh_mview('mv')")
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        def served(df: org.apache.spark.sql.DataFrame): Boolean =
-          df.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
-        val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
-        val leftQ = s.sql(
-          """SELECT coalesce(c_mktsegment, '(none)') AS seg, count(*) AS n,
-            |  round(sum(o_totalprice), 2) AS rev
-            |FROM gq232.fact LEFT JOIN gq232.dim ON o_custkey = c_custkey
-            |GROUP BY c_mktsegment""".stripMargin)
-        val rows = leftQ.collect()
-        val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
-        val leftServed = served(leftQ) && opened < 8
-        // preserved-side dim (dim ⟕ fact): the MV lacks the
-        // null-extended fact rows — must refuse and read the base
-        val preservedQ = s.sql(
-          """SELECT c_mktsegment AS seg, sum(o_totalprice) AS rev
-            |FROM gq232.dim LEFT JOIN gq232.fact ON c_custkey = o_custkey
-            |GROUP BY c_mktsegment""".stripMargin)
-        val preservedRefused = !served(preservedQ) &&
-          preservedQ.collect().length > 0
-        s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), leftQ.schema)
-          .withColumn("left_jb_served", lit(leftServed))
-          .withColumn("preserved_refused", lit(preservedRefused))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq232")
-        s.conf.unset("spark.sql.catalog.gq232.base")
-      }
+    (s, d) => Fixture(s, "gq232") { (s, base) =>
+      val fact = s"$base/fact"
+      val dim = s"$base/dim"
+      val ordersDf = Tables.orders(s, d)
+        .select("o_orderkey", "o_custkey", "o_totalprice")
+      ordersDf.filter(col("o_orderkey") < 8000)
+        .repartitionByRange(8, col("o_orderkey"))
+        .write.format("graft-store").mode("overwrite").save(fact) // 8 files
+      Tables.customer(s, d).select("c_custkey", "c_mktsegment")
+        .filter(col("c_custkey") <= 750) // higher keys null-extend
+        .write.format("graft-store").mode("overwrite").save(dim)
+      // INNER-grain MV: plain per-custkey partials, no join in the view
+      s.sql("CALL gq232.system.create_mview('mv', " +
+        "'SELECT o_custkey, count(*) AS n, sum(o_totalprice) AS rev " +
+        "FROM gq232.fact GROUP BY o_custkey')")
+      ordersDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
+        .write.format("graft-store").mode("append").save(fact)
+      s.sql("CALL gq232.system.refresh_mview('mv')")
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      def served(df: org.apache.spark.sql.DataFrame): Boolean =
+        df.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
+      val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
+      val leftQ = s.sql(
+        """SELECT coalesce(c_mktsegment, '(none)') AS seg, count(*) AS n,
+          |  round(sum(o_totalprice), 2) AS rev
+          |FROM gq232.fact LEFT JOIN gq232.dim ON o_custkey = c_custkey
+          |GROUP BY c_mktsegment""".stripMargin)
+      val rows = leftQ.collect()
+      val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
+      val leftServed = served(leftQ) && opened < 8
+      // preserved-side dim (dim ⟕ fact): the MV lacks the
+      // null-extended fact rows — must refuse and read the base
+      val preservedQ = s.sql(
+        """SELECT c_mktsegment AS seg, sum(o_totalprice) AS rev
+          |FROM gq232.dim LEFT JOIN gq232.fact ON c_custkey = o_custkey
+          |GROUP BY c_mktsegment""".stripMargin)
+      val preservedRefused = !served(preservedQ) &&
+        preservedQ.collect().length > 0
+      s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), leftQ.schema)
+        .withColumn("left_jb_served", lit(leftServed))
+        .withColumn("preserved_refused", lit(preservedRefused))
     },
     Some("""WITH f AS (
            |  SELECT o_custkey, o_totalprice FROM orders WHERE o_orderkey < 10000),
@@ -6008,57 +5409,47 @@ object SystemQueries {
   val q233MviewRightOuter = QuerySpec(
     "q233_mview_right_outer", "S-dsv2-mview-right-outer",
     "RIGHT JOIN view maintained via flip normalization; right query served",
-    (s, d) => {
-      val base = "/tmp/graft_store_q233"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq233", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq233.base", base)
-      try {
-        val fact = s"$base/fact"
-        val dim = s"$base/dim"
-        val ordersDf = Tables.orders(s, d)
-          .select("o_orderkey", "o_custkey", "o_totalprice")
-        ordersDf.filter(col("o_orderkey") < 8000)
-          .repartitionByRange(8, col("o_orderkey"))
-          .write.format("graft-store").mode("overwrite").save(fact)
-        Tables.customer(s, d).select("c_custkey", "c_mktsegment")
-          .filter(col("c_custkey") <= 750) // higher keys null-extend
-          .write.format("graft-store").mode("overwrite").save(dim)
-        // the definition is written RIGHT JOIN (fact preserved): the
-        // recognizer flips it into the left-chain machinery
-        s.sql("CALL gq233.system.create_mview('mv', " +
-          "'SELECT c_mktsegment AS seg, count(*) AS n, " +
-          "sum(o_totalprice) AS rev FROM gq233.dim " +
-          "RIGHT JOIN gq233.fact ON c_custkey = o_custkey " +
-          "GROUP BY c_mktsegment')")
-        // fact-direction churn
-        ordersDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
-          .write.format("graft-store").mode("append").save(fact)
-        val r1 = s.sql("CALL gq233.system.refresh_mview('mv')").collect()(0)
-        // dim-direction churn: inserts match waiting rows (null →
-        // matched), deletes null-extend matched rows (matched → null)
-        Tables.customer(s, d).select("c_custkey", "c_mktsegment")
-          .filter(col("c_custkey") > 750 && col("c_custkey") <= 900)
-          .write.format("graft-store").mode("append").save(dim)
-        s.sql("DELETE FROM gq233.dim WHERE c_custkey % 10 = 0")
-        val r2 = s.sql("CALL gq233.system.refresh_mview('mv')").collect()(0)
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        val incremental = Seq(r1, r2).forall(_.getString(0) == "incremental")
-        // a RIGHT JOIN query over the base tables serves from the view
-        val rq = s.sql(
-          """SELECT c_mktsegment AS seg, count(*) AS n
-            |FROM gq233.dim RIGHT JOIN gq233.fact ON c_custkey = o_custkey
-            |GROUP BY c_mktsegment""".stripMargin)
-        val served = rq.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
-        s.sql("""SELECT coalesce(seg, '(none)') AS seg, n,
-                |  round(rev, 2) AS rev FROM gq233.mv""".stripMargin)
-          .withColumn("incremental", lit(incremental))
-          .withColumn("right_served", lit(served))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq233")
-        s.conf.unset("spark.sql.catalog.gq233.base")
-      }
+    (s, d) => Fixture(s, "gq233") { (s, base) =>
+      val fact = s"$base/fact"
+      val dim = s"$base/dim"
+      val ordersDf = Tables.orders(s, d)
+        .select("o_orderkey", "o_custkey", "o_totalprice")
+      ordersDf.filter(col("o_orderkey") < 8000)
+        .repartitionByRange(8, col("o_orderkey"))
+        .write.format("graft-store").mode("overwrite").save(fact)
+      Tables.customer(s, d).select("c_custkey", "c_mktsegment")
+        .filter(col("c_custkey") <= 750) // higher keys null-extend
+        .write.format("graft-store").mode("overwrite").save(dim)
+      // the definition is written RIGHT JOIN (fact preserved): the
+      // recognizer flips it into the left-chain machinery
+      s.sql("CALL gq233.system.create_mview('mv', " +
+        "'SELECT c_mktsegment AS seg, count(*) AS n, " +
+        "sum(o_totalprice) AS rev FROM gq233.dim " +
+        "RIGHT JOIN gq233.fact ON c_custkey = o_custkey " +
+        "GROUP BY c_mktsegment')")
+      // fact-direction churn
+      ordersDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
+        .write.format("graft-store").mode("append").save(fact)
+      val r1 = s.sql("CALL gq233.system.refresh_mview('mv')").collect()(0)
+      // dim-direction churn: inserts match waiting rows (null →
+      // matched), deletes null-extend matched rows (matched → null)
+      Tables.customer(s, d).select("c_custkey", "c_mktsegment")
+        .filter(col("c_custkey") > 750 && col("c_custkey") <= 900)
+        .write.format("graft-store").mode("append").save(dim)
+      s.sql("DELETE FROM gq233.dim WHERE c_custkey % 10 = 0")
+      val r2 = s.sql("CALL gq233.system.refresh_mview('mv')").collect()(0)
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      val incremental = Seq(r1, r2).forall(_.getString(0) == "incremental")
+      // a RIGHT JOIN query over the base tables serves from the view
+      val rq = s.sql(
+        """SELECT c_mktsegment AS seg, count(*) AS n
+          |FROM gq233.dim RIGHT JOIN gq233.fact ON c_custkey = o_custkey
+          |GROUP BY c_mktsegment""".stripMargin)
+      val served = rq.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
+      s.sql("""SELECT coalesce(seg, '(none)') AS seg, n,
+              |  round(rev, 2) AS rev FROM gq233.mv""".stripMargin)
+        .withColumn("incremental", lit(incremental))
+        .withColumn("right_served", lit(served))
     },
     Some("""WITH f AS (
            |  SELECT o_custkey, o_totalprice FROM orders WHERE o_orderkey < 10000),
@@ -6083,46 +5474,36 @@ object SystemQueries {
   val q234MviewDcountRollup = QuerySpec(
     "q234_mview_dcount_rollup", "S-dsv2-mview-dcount-rollup",
     "coarse + global count(DISTINCT) served from the dup-count companion",
-    (s, d) => {
-      val base = "/tmp/graft_store_q234"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq234", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq234.base", base)
-      try {
-        val src = s"$base/src"
-        val baseDf = Tables.orders(s, d)
-          .select("o_orderkey", "o_custkey", "o_orderpriority", "o_orderstatus")
-        baseDf.filter(col("o_orderkey") < 8000)
-          .repartitionByRange(8, col("o_orderkey"))
-          .write.format("graft-store").mode("overwrite").save(src)
-        // FINE grain (priority, status); the served queries group coarser
-        s.sql("CALL gq234.system.create_mview('mv', " +
-          "'SELECT o_orderpriority AS pr, o_orderstatus AS st, " +
-          "count(*) AS n, count(DISTINCT o_custkey) AS dc " +
-          "FROM gq234.src GROUP BY o_orderpriority, o_orderstatus')")
-        baseDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
-          .write.format("graft-store").mode("append").save(src)
-        graft.sources.v2.GraftStoreOps.deleteWhere(s, src,
-          col("o_orderkey") < 1000)
-        val r1 = s.sql("CALL gq234.system.refresh_mview('mv')").collect()(0)
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        val coarse = s.sql(
-          """SELECT o_orderpriority AS pr, count(DISTINCT o_custkey) AS dc
-            |FROM gq234.src GROUP BY o_orderpriority""".stripMargin)
-        val globalQ = s.sql(
-          "SELECT count(DISTINCT o_custkey) AS gdc FROM gq234.src")
-        def served(df: org.apache.spark.sql.DataFrame): Boolean =
-          df.queryExecution.optimizedPlan.toString.contains("_dck_")
-        val ok = served(coarse) && served(globalQ) &&
-          r1.getString(0) == "incremental"
-        val gdc = globalQ.collect()(0).getLong(0)
-        coarse.withColumn("companion_served", lit(ok))
-          .withColumn("global_dc", lit(gdc))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq234")
-        s.conf.unset("spark.sql.catalog.gq234.base")
-      }
+    (s, d) => Fixture(s, "gq234") { (s, base) =>
+      val src = s"$base/src"
+      val baseDf = Tables.orders(s, d)
+        .select("o_orderkey", "o_custkey", "o_orderpriority", "o_orderstatus")
+      baseDf.filter(col("o_orderkey") < 8000)
+        .repartitionByRange(8, col("o_orderkey"))
+        .write.format("graft-store").mode("overwrite").save(src)
+      // FINE grain (priority, status); the served queries group coarser
+      s.sql("CALL gq234.system.create_mview('mv', " +
+        "'SELECT o_orderpriority AS pr, o_orderstatus AS st, " +
+        "count(*) AS n, count(DISTINCT o_custkey) AS dc " +
+        "FROM gq234.src GROUP BY o_orderpriority, o_orderstatus')")
+      baseDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
+        .write.format("graft-store").mode("append").save(src)
+      graft.sources.v2.GraftStoreOps.deleteWhere(s, src,
+        col("o_orderkey") < 1000)
+      val r1 = s.sql("CALL gq234.system.refresh_mview('mv')").collect()(0)
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      val coarse = s.sql(
+        """SELECT o_orderpriority AS pr, count(DISTINCT o_custkey) AS dc
+          |FROM gq234.src GROUP BY o_orderpriority""".stripMargin)
+      val globalQ = s.sql(
+        "SELECT count(DISTINCT o_custkey) AS gdc FROM gq234.src")
+      def served(df: org.apache.spark.sql.DataFrame): Boolean =
+        df.queryExecution.optimizedPlan.toString.contains("_dck_")
+      val ok = served(coarse) && served(globalQ) &&
+        r1.getString(0) == "incremental"
+      val gdc = globalQ.collect()(0).getLong(0)
+      coarse.withColumn("companion_served", lit(ok))
+        .withColumn("global_dc", lit(gdc))
     },
     Some("""WITH f AS (
            |  SELECT o_custkey, o_orderpriority FROM orders
@@ -6144,49 +5525,39 @@ object SystemQueries {
   val q235MviewMixedRollup = QuerySpec(
     "q235_mview_mixed_rollup", "S-dsv2-mview-mixed-rollup",
     "wider-WHERE aggregate served as MV slice ∪ pruned complement base scan",
-    (s, d) => {
-      val base = "/tmp/graft_store_q235"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq235", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq235.base", base)
-      try {
-        val src = s"$base/src"
-        val baseDf = Tables.orders(s, d)
-          .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
-        // the covered (archived) range: 6 files clustered on the key
-        baseDf.filter(col("o_orderkey") < 6000)
-          .repartitionByRange(6, col("o_orderkey"))
-          .write.format("graft-store").mode("overwrite").save(src)
-        s.sql("CALL gq235.system.create_mview('mv', " +
-          "'SELECT o_orderpriority AS pr, count(*) AS n, " +
-          "sum(o_totalprice) AS rev, avg(o_totalprice) AS av " +
-          "FROM gq235.src WHERE o_orderkey < 6000 GROUP BY o_orderpriority')")
-        // the fresh tail lands AFTER the view's range
-        baseDf.filter(col("o_orderkey") >= 6000 && col("o_orderkey") < 10000)
-          .repartitionByRange(2, col("o_orderkey"))
-          .write.format("graft-store").mode("append").save(src)
-        s.sql("CALL gq235.system.refresh_mview('mv')")
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
-        val q = s.sql(
-          """SELECT o_orderpriority AS pr, count(*) AS n,
-            |  round(sum(o_totalprice), 2) AS rev,
-            |  round(avg(o_totalprice), 2) AS av
-            |FROM gq235.src WHERE o_orderkey < 9000
-            |GROUP BY o_orderpriority""".stripMargin)
-        val rows = q.collect()
-        val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
-        // MV slice + ≤2 tail files — never the 6 covered files
-        val mixedServed =
-          q.queryExecution.optimizedPlan.toString.contains(s"$base/mv") &&
-            opened < 6
-        s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), q.schema)
-          .withColumn("mixed_served", lit(mixedServed))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq235")
-        s.conf.unset("spark.sql.catalog.gq235.base")
-      }
+    (s, d) => Fixture(s, "gq235") { (s, base) =>
+      val src = s"$base/src"
+      val baseDf = Tables.orders(s, d)
+        .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
+      // the covered (archived) range: 6 files clustered on the key
+      baseDf.filter(col("o_orderkey") < 6000)
+        .repartitionByRange(6, col("o_orderkey"))
+        .write.format("graft-store").mode("overwrite").save(src)
+      s.sql("CALL gq235.system.create_mview('mv', " +
+        "'SELECT o_orderpriority AS pr, count(*) AS n, " +
+        "sum(o_totalprice) AS rev, avg(o_totalprice) AS av " +
+        "FROM gq235.src WHERE o_orderkey < 6000 GROUP BY o_orderpriority')")
+      // the fresh tail lands AFTER the view's range
+      baseDf.filter(col("o_orderkey") >= 6000 && col("o_orderkey") < 10000)
+        .repartitionByRange(2, col("o_orderkey"))
+        .write.format("graft-store").mode("append").save(src)
+      s.sql("CALL gq235.system.refresh_mview('mv')")
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
+      val q = s.sql(
+        """SELECT o_orderpriority AS pr, count(*) AS n,
+          |  round(sum(o_totalprice), 2) AS rev,
+          |  round(avg(o_totalprice), 2) AS av
+          |FROM gq235.src WHERE o_orderkey < 9000
+          |GROUP BY o_orderpriority""".stripMargin)
+      val rows = q.collect()
+      val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
+      // MV slice + ≤2 tail files — never the 6 covered files
+      val mixedServed =
+        q.queryExecution.optimizedPlan.toString.contains(s"$base/mv") &&
+          opened < 6
+      s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), q.schema)
+        .withColumn("mixed_served", lit(mixedServed))
     },
     Some("""SELECT o_orderpriority AS pr, count(*) AS n,
            |  round(sum(o_totalprice), 2) AS rev,
@@ -6205,52 +5576,42 @@ object SystemQueries {
   val q236MviewLeftStream = QuerySpec(
     "q236_mview_left_stream", "S-dsv2-mview-left-stream",
     "streaming LEFT OUTER MV: dim churn null transitions under continuous refresh",
-    (s, d) => {
-      val base = "/tmp/graft_store_q236"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq236", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq236.base", base)
+    (s, d) => Fixture(s, "gq236") { (s, base) =>
+      val fact = s"$base/fact"
+      val dim = s"$base/dim"
+      val mv = s"$base/mv"
+      val ordersDf = Tables.orders(s, d)
+        .select("o_orderkey", "o_custkey", "o_totalprice")
+      ordersDf.filter(col("o_orderkey") < 5000)
+        .write.format("graft-store").mode("overwrite").save(fact)
+      Tables.customer(s, d).select("c_custkey", "c_mktsegment")
+        .filter(col("c_custkey") <= 750) // higher keys null-extend
+        .write.format("graft-store").mode("overwrite").save(dim)
+      graft.sources.v2.GraftMview.create(s, mv,
+        "SELECT c_mktsegment AS seg, count(*) AS n, " +
+          "sum(o_totalprice) AS rev FROM gq236.fact " +
+          "LEFT JOIN gq236.dim ON o_custkey = c_custkey " +
+          "GROUP BY c_mktsegment")
+      val q = graft.sources.v2.GraftMview.streamRefresh(s, mv, s"$base/_ckpt")
       try {
-        val fact = s"$base/fact"
-        val dim = s"$base/dim"
-        val mv = s"$base/mv"
-        val ordersDf = Tables.orders(s, d)
-          .select("o_orderkey", "o_custkey", "o_totalprice")
-        ordersDf.filter(col("o_orderkey") < 5000)
-          .write.format("graft-store").mode("overwrite").save(fact)
+        q.processAllAvailable()
+        // fact-side commit
+        ordersDf.filter(col("o_orderkey") >= 5000 && col("o_orderkey") < 8000)
+          .write.format("graft-store").mode("append").save(fact)
+        q.processAllAvailable()
+        // dim insert: waiting fact rows transition null → matched
         Tables.customer(s, d).select("c_custkey", "c_mktsegment")
-          .filter(col("c_custkey") <= 750) // higher keys null-extend
-          .write.format("graft-store").mode("overwrite").save(dim)
-        graft.sources.v2.GraftMview.create(s, mv,
-          "SELECT c_mktsegment AS seg, count(*) AS n, " +
-            "sum(o_totalprice) AS rev FROM gq236.fact " +
-            "LEFT JOIN gq236.dim ON o_custkey = c_custkey " +
-            "GROUP BY c_mktsegment")
-        val q = graft.sources.v2.GraftMview.streamRefresh(s, mv, s"$base/_ckpt")
-        try {
-          q.processAllAvailable()
-          // fact-side commit
-          ordersDf.filter(col("o_orderkey") >= 5000 && col("o_orderkey") < 8000)
-            .write.format("graft-store").mode("append").save(fact)
-          q.processAllAvailable()
-          // dim insert: waiting fact rows transition null → matched
-          Tables.customer(s, d).select("c_custkey", "c_mktsegment")
-            .filter(col("c_custkey") > 750 && col("c_custkey") <= 900)
-            .write.format("graft-store").mode("append").save(dim)
-          q.processAllAvailable()
-          // dim delete: matched rows transition → null-extended
-          s.sql("DELETE FROM gq236.dim WHERE c_custkey % 10 = 0")
-          q.processAllAvailable()
-        } finally q.stop()
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        s.read.format("graft-store").load(mv)
-          .select(coalesce(col("seg"), lit("(none)")).as("seg"), col("n"),
-            round(col("rev"), 2).as("rev"))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq236")
-        s.conf.unset("spark.sql.catalog.gq236.base")
-      }
+          .filter(col("c_custkey") > 750 && col("c_custkey") <= 900)
+          .write.format("graft-store").mode("append").save(dim)
+        q.processAllAvailable()
+        // dim delete: matched rows transition → null-extended
+        s.sql("DELETE FROM gq236.dim WHERE c_custkey % 10 = 0")
+        q.processAllAvailable()
+      } finally q.stop()
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      s.read.format("graft-store").load(mv)
+        .select(coalesce(col("seg"), lit("(none)")).as("seg"), col("n"),
+          round(col("rev"), 2).as("rev"))
     },
     Some("""WITH f AS (
            |  SELECT o_custkey, o_totalprice FROM orders WHERE o_orderkey < 8000),
@@ -6272,48 +5633,38 @@ object SystemQueries {
   val q237MviewJoinMixed = QuerySpec(
     "q237_mview_join_mixed", "S-dsv2-mview-join-mixed",
     "wider WHERE over a join view: view slice ∪ pruned complement join",
-    (s, d) => {
-      val base = "/tmp/graft_store_q237"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq237", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq237.base", base)
-      try {
-        val fact = s"$base/fact"
-        val dim = s"$base/dim"
-        val ordersDf = Tables.orders(s, d)
-          .select("o_orderkey", "o_custkey", "o_totalprice")
-        ordersDf.filter(col("o_orderkey") < 10000)
-          .repartitionByRange(8, col("o_orderkey"))
-          .write.format("graft-store").mode("overwrite").save(fact) // 8 files
-        Tables.customer(s, d).select("c_custkey", "c_mktsegment")
-          .write.format("graft-store").mode("overwrite").save(dim)
-        s.sql("CALL gq237.system.create_mview('mv', " +
-          "'SELECT c_mktsegment AS seg, count(*) AS n, " +
-          "sum(o_totalprice) AS rev FROM gq237.fact " +
-          "JOIN gq237.dim ON o_custkey = c_custkey " +
-          "WHERE o_orderkey < 6000 GROUP BY c_mktsegment')")
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
-        val q = s.sql(
-          """SELECT c_mktsegment AS seg, count(*) AS n,
-            |  round(sum(o_totalprice), 2) AS rev
-            |FROM gq237.fact JOIN gq237.dim ON o_custkey = c_custkey
-            |WHERE o_orderkey < 9000
-            |GROUP BY c_mktsegment""".stripMargin)
-        val rows = q.collect()
-        val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
-        // MV slice + dim + the [6000, 9000) tail files — never all 8
-        // covered-range fact files
-        val mixedServed =
-          q.queryExecution.optimizedPlan.toString.contains(s"$base/mv") &&
-            opened < 8
-        s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), q.schema)
-          .withColumn("join_mixed_served", lit(mixedServed))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq237")
-        s.conf.unset("spark.sql.catalog.gq237.base")
-      }
+    (s, d) => Fixture(s, "gq237") { (s, base) =>
+      val fact = s"$base/fact"
+      val dim = s"$base/dim"
+      val ordersDf = Tables.orders(s, d)
+        .select("o_orderkey", "o_custkey", "o_totalprice")
+      ordersDf.filter(col("o_orderkey") < 10000)
+        .repartitionByRange(8, col("o_orderkey"))
+        .write.format("graft-store").mode("overwrite").save(fact) // 8 files
+      Tables.customer(s, d).select("c_custkey", "c_mktsegment")
+        .write.format("graft-store").mode("overwrite").save(dim)
+      s.sql("CALL gq237.system.create_mview('mv', " +
+        "'SELECT c_mktsegment AS seg, count(*) AS n, " +
+        "sum(o_totalprice) AS rev FROM gq237.fact " +
+        "JOIN gq237.dim ON o_custkey = c_custkey " +
+        "WHERE o_orderkey < 6000 GROUP BY c_mktsegment')")
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
+      val q = s.sql(
+        """SELECT c_mktsegment AS seg, count(*) AS n,
+          |  round(sum(o_totalprice), 2) AS rev
+          |FROM gq237.fact JOIN gq237.dim ON o_custkey = c_custkey
+          |WHERE o_orderkey < 9000
+          |GROUP BY c_mktsegment""".stripMargin)
+      val rows = q.collect()
+      val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
+      // MV slice + dim + the [6000, 9000) tail files — never all 8
+      // covered-range fact files
+      val mixedServed =
+        q.queryExecution.optimizedPlan.toString.contains(s"$base/mv") &&
+          opened < 8
+      s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), q.schema)
+        .withColumn("join_mixed_served", lit(mixedServed))
     },
     Some("""SELECT c_mktsegment AS seg, count(*) AS n,
            |  round(sum(o_totalprice), 2) AS rev, TRUE AS join_mixed_served
@@ -6332,53 +5683,43 @@ object SystemQueries {
   val q238MviewJoinDcount = QuerySpec(
     "q238_mview_join_dcount", "S-dsv2-mview-join-dcount",
     "coarse + global count(DISTINCT) over a join served from the join view's companion",
-    (s, d) => {
-      val base = "/tmp/graft_store_q238"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq238", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq238.base", base)
-      try {
-        val fact = s"$base/fact"
-        val dim = s"$base/dim"
-        val ordersDf = Tables.orders(s, d)
-          .select("o_orderkey", "o_custkey", "o_orderpriority")
-        ordersDf.filter(col("o_orderkey") < 8000)
-          .repartitionByRange(8, col("o_orderkey"))
-          .write.format("graft-store").mode("overwrite").save(fact)
-        Tables.customer(s, d).select("c_custkey", "c_mktsegment")
-          .write.format("graft-store").mode("overwrite").save(dim)
-        // FINE grain (segment, priority) tracking distinct custkeys
-        s.sql("CALL gq238.system.create_mview('mv', " +
-          "'SELECT c_mktsegment AS seg, o_orderpriority AS pr, " +
-          "count(*) AS n, count(DISTINCT o_custkey) AS dc " +
-          "FROM gq238.fact JOIN gq238.dim ON o_custkey = c_custkey " +
-          "GROUP BY c_mktsegment, o_orderpriority')")
-        // churn BOTH sides, then refresh (companion re-stamps)
-        ordersDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
-          .write.format("graft-store").mode("append").save(fact)
-        s.sql("UPDATE gq238.dim SET c_mktsegment = 'MOVED' " +
-          "WHERE c_custkey % 9 = 0")
-        val r1 = s.sql("CALL gq238.system.refresh_mview('mv')").collect()(0)
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        val coarse = s.sql(
-          """SELECT c_mktsegment AS seg, count(DISTINCT o_custkey) AS dc
-            |FROM gq238.fact JOIN gq238.dim ON o_custkey = c_custkey
-            |GROUP BY c_mktsegment""".stripMargin)
-        val globalQ = s.sql(
-          """SELECT count(DISTINCT o_custkey) AS gdc
-            |FROM gq238.fact JOIN gq238.dim ON o_custkey = c_custkey""".stripMargin)
-        def viaCompanion(df: org.apache.spark.sql.DataFrame): Boolean =
-          df.queryExecution.optimizedPlan.toString.contains("_dck_")
-        val ok = viaCompanion(coarse) && viaCompanion(globalQ) &&
-          r1.getString(0) == "incremental"
-        val gdc = globalQ.collect()(0).getLong(0)
-        coarse.withColumn("companion_served", lit(ok))
-          .withColumn("global_dc", lit(gdc))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq238")
-        s.conf.unset("spark.sql.catalog.gq238.base")
-      }
+    (s, d) => Fixture(s, "gq238") { (s, base) =>
+      val fact = s"$base/fact"
+      val dim = s"$base/dim"
+      val ordersDf = Tables.orders(s, d)
+        .select("o_orderkey", "o_custkey", "o_orderpriority")
+      ordersDf.filter(col("o_orderkey") < 8000)
+        .repartitionByRange(8, col("o_orderkey"))
+        .write.format("graft-store").mode("overwrite").save(fact)
+      Tables.customer(s, d).select("c_custkey", "c_mktsegment")
+        .write.format("graft-store").mode("overwrite").save(dim)
+      // FINE grain (segment, priority) tracking distinct custkeys
+      s.sql("CALL gq238.system.create_mview('mv', " +
+        "'SELECT c_mktsegment AS seg, o_orderpriority AS pr, " +
+        "count(*) AS n, count(DISTINCT o_custkey) AS dc " +
+        "FROM gq238.fact JOIN gq238.dim ON o_custkey = c_custkey " +
+        "GROUP BY c_mktsegment, o_orderpriority')")
+      // churn BOTH sides, then refresh (companion re-stamps)
+      ordersDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
+        .write.format("graft-store").mode("append").save(fact)
+      s.sql("UPDATE gq238.dim SET c_mktsegment = 'MOVED' " +
+        "WHERE c_custkey % 9 = 0")
+      val r1 = s.sql("CALL gq238.system.refresh_mview('mv')").collect()(0)
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      val coarse = s.sql(
+        """SELECT c_mktsegment AS seg, count(DISTINCT o_custkey) AS dc
+          |FROM gq238.fact JOIN gq238.dim ON o_custkey = c_custkey
+          |GROUP BY c_mktsegment""".stripMargin)
+      val globalQ = s.sql(
+        """SELECT count(DISTINCT o_custkey) AS gdc
+          |FROM gq238.fact JOIN gq238.dim ON o_custkey = c_custkey""".stripMargin)
+      def viaCompanion(df: org.apache.spark.sql.DataFrame): Boolean =
+        df.queryExecution.optimizedPlan.toString.contains("_dck_")
+      val ok = viaCompanion(coarse) && viaCompanion(globalQ) &&
+        r1.getString(0) == "incremental"
+      val gdc = globalQ.collect()(0).getLong(0)
+      coarse.withColumn("companion_served", lit(ok))
+        .withColumn("global_dc", lit(gdc))
     },
     Some("""WITH f AS (
            |  SELECT o_custkey FROM orders WHERE o_orderkey < 10000),
@@ -6408,57 +5749,47 @@ object SystemQueries {
   val q239MviewFullOuter = QuerySpec(
     "q239_mview_full_outer", "S-dsv2-mview-full-outer",
     "FULL OUTER view maintained through symmetric churn; exact-shape serve",
-    (s, d) => {
-      val base = "/tmp/graft_store_q239"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq239", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq239.base", base)
-      try {
-        val fact = s"$base/fact"
-        val dim = s"$base/dim"
-        val ordersDf = Tables.orders(s, d)
-          .select("o_orderkey", "o_custkey", "o_totalprice")
-        ordersDf.filter(col("o_orderkey") < 8000)
-          .repartitionByRange(8, col("o_orderkey"))
-          .write.format("graft-store").mode("overwrite").save(fact)
-        Tables.customer(s, d).select("c_custkey", "c_mktsegment", "c_acctbal")
-          .filter(col("c_custkey") <= 750)
-          .write.format("graft-store").mode("overwrite").save(dim)
-        s.sql("CALL gq239.system.create_mview('mv', " +
-          "'SELECT c_mktsegment AS seg, count(*) AS n, " +
-          "sum(o_totalprice) AS rev, sum(c_acctbal) AS bal " +
-          "FROM gq239.fact FULL OUTER JOIN gq239.dim " +
-          "ON o_custkey = c_custkey GROUP BY c_mktsegment')")
-        // fact-direction churn: new custkeys beyond the dim null-extend
-        ordersDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
-          .write.format("graft-store").mode("append").save(fact)
-        val r1 = s.sql("CALL gq239.system.refresh_mview('mv')").collect()(0)
-        // dim-direction churn: inserts flip waiting facts null → matched
-        // (and keyless customers arrive null-extended); deletes flip
-        // matched facts → null-extended
-        Tables.customer(s, d).select("c_custkey", "c_mktsegment", "c_acctbal")
-          .filter(col("c_custkey") > 750 && col("c_custkey") <= 900)
-          .write.format("graft-store").mode("append").save(dim)
-        s.sql("DELETE FROM gq239.dim WHERE c_custkey % 10 = 0")
-        val r2 = s.sql("CALL gq239.system.refresh_mview('mv')").collect()(0)
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        val incremental = Seq(r1, r2).forall(_.getString(0) == "incremental")
-        val fq = s.sql(
-          """SELECT c_mktsegment AS seg, count(*) AS n
-            |FROM gq239.fact FULL OUTER JOIN gq239.dim
-            |ON o_custkey = c_custkey
-            |GROUP BY c_mktsegment""".stripMargin)
-        val served = fq.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
-        s.sql("""SELECT coalesce(seg, '(none)') AS seg, n,
-                |  round(rev, 2) AS rev, round(bal, 2) AS bal
-                |FROM gq239.mv""".stripMargin)
-          .withColumn("incremental", lit(incremental))
-          .withColumn("full_served", lit(served))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq239")
-        s.conf.unset("spark.sql.catalog.gq239.base")
-      }
+    (s, d) => Fixture(s, "gq239") { (s, base) =>
+      val fact = s"$base/fact"
+      val dim = s"$base/dim"
+      val ordersDf = Tables.orders(s, d)
+        .select("o_orderkey", "o_custkey", "o_totalprice")
+      ordersDf.filter(col("o_orderkey") < 8000)
+        .repartitionByRange(8, col("o_orderkey"))
+        .write.format("graft-store").mode("overwrite").save(fact)
+      Tables.customer(s, d).select("c_custkey", "c_mktsegment", "c_acctbal")
+        .filter(col("c_custkey") <= 750)
+        .write.format("graft-store").mode("overwrite").save(dim)
+      s.sql("CALL gq239.system.create_mview('mv', " +
+        "'SELECT c_mktsegment AS seg, count(*) AS n, " +
+        "sum(o_totalprice) AS rev, sum(c_acctbal) AS bal " +
+        "FROM gq239.fact FULL OUTER JOIN gq239.dim " +
+        "ON o_custkey = c_custkey GROUP BY c_mktsegment')")
+      // fact-direction churn: new custkeys beyond the dim null-extend
+      ordersDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
+        .write.format("graft-store").mode("append").save(fact)
+      val r1 = s.sql("CALL gq239.system.refresh_mview('mv')").collect()(0)
+      // dim-direction churn: inserts flip waiting facts null → matched
+      // (and keyless customers arrive null-extended); deletes flip
+      // matched facts → null-extended
+      Tables.customer(s, d).select("c_custkey", "c_mktsegment", "c_acctbal")
+        .filter(col("c_custkey") > 750 && col("c_custkey") <= 900)
+        .write.format("graft-store").mode("append").save(dim)
+      s.sql("DELETE FROM gq239.dim WHERE c_custkey % 10 = 0")
+      val r2 = s.sql("CALL gq239.system.refresh_mview('mv')").collect()(0)
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      val incremental = Seq(r1, r2).forall(_.getString(0) == "incremental")
+      val fq = s.sql(
+        """SELECT c_mktsegment AS seg, count(*) AS n
+          |FROM gq239.fact FULL OUTER JOIN gq239.dim
+          |ON o_custkey = c_custkey
+          |GROUP BY c_mktsegment""".stripMargin)
+      val served = fq.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
+      s.sql("""SELECT coalesce(seg, '(none)') AS seg, n,
+              |  round(rev, 2) AS rev, round(bal, 2) AS bal
+              |FROM gq239.mv""".stripMargin)
+        .withColumn("incremental", lit(incremental))
+        .withColumn("full_served", lit(served))
     },
     Some("""WITH f AS (
            |  SELECT o_custkey, o_totalprice FROM orders WHERE o_orderkey < 10000),
@@ -6483,52 +5814,42 @@ object SystemQueries {
   val q240MviewMixedJoinback = QuerySpec(
     "q240_mview_mixed_joinback", "S-dsv2-mview-mixed-joinback",
     "wider WHERE + dim join served as [MV slice ∪ complement partials] ⋈ dim",
-    (s, d) => {
-      val base = "/tmp/graft_store_q240"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq240", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq240.base", base)
-      try {
-        val fact = s"$base/fact"
-        val dim = s"$base/dim"
-        val ordersDf = Tables.orders(s, d)
-          .select("o_orderkey", "o_custkey", "o_totalprice")
-        // covered (archived) range in 6 key-clustered files
-        ordersDf.filter(col("o_orderkey") < 6000)
-          .repartitionByRange(6, col("o_orderkey"))
-          .write.format("graft-store").mode("overwrite").save(fact)
-        Tables.customer(s, d).select("c_custkey", "c_mktsegment")
-          .write.format("graft-store").mode("overwrite").save(dim)
-        // SINGLE-TABLE fact MV: per-custkey partials for the archive
-        s.sql("CALL gq240.system.create_mview('mv', " +
-          "'SELECT o_custkey, count(*) AS n, sum(o_totalprice) AS rev " +
-          "FROM gq240.fact WHERE o_orderkey < 6000 GROUP BY o_custkey')")
-        // the fresh tail lands after the view's range
-        ordersDf.filter(col("o_orderkey") >= 6000 && col("o_orderkey") < 10000)
-          .repartitionByRange(2, col("o_orderkey"))
-          .write.format("graft-store").mode("append").save(fact)
-        s.sql("CALL gq240.system.refresh_mview('mv')")
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
-        val q = s.sql(
-          """SELECT c_mktsegment AS seg, count(*) AS n,
-            |  round(sum(o_totalprice), 2) AS rev
-            |FROM gq240.fact JOIN gq240.dim ON o_custkey = c_custkey
-            |WHERE o_orderkey < 9000
-            |GROUP BY c_mktsegment""".stripMargin)
-        val rows = q.collect()
-        val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
-        // MV slice + dim + the tail files — never the 6 covered files
-        val mixedJb =
-          q.queryExecution.optimizedPlan.toString.contains(s"$base/mv") &&
-            opened < 6
-        s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), q.schema)
-          .withColumn("mixed_joinback_served", lit(mixedJb))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq240")
-        s.conf.unset("spark.sql.catalog.gq240.base")
-      }
+    (s, d) => Fixture(s, "gq240") { (s, base) =>
+      val fact = s"$base/fact"
+      val dim = s"$base/dim"
+      val ordersDf = Tables.orders(s, d)
+        .select("o_orderkey", "o_custkey", "o_totalprice")
+      // covered (archived) range in 6 key-clustered files
+      ordersDf.filter(col("o_orderkey") < 6000)
+        .repartitionByRange(6, col("o_orderkey"))
+        .write.format("graft-store").mode("overwrite").save(fact)
+      Tables.customer(s, d).select("c_custkey", "c_mktsegment")
+        .write.format("graft-store").mode("overwrite").save(dim)
+      // SINGLE-TABLE fact MV: per-custkey partials for the archive
+      s.sql("CALL gq240.system.create_mview('mv', " +
+        "'SELECT o_custkey, count(*) AS n, sum(o_totalprice) AS rev " +
+        "FROM gq240.fact WHERE o_orderkey < 6000 GROUP BY o_custkey')")
+      // the fresh tail lands after the view's range
+      ordersDf.filter(col("o_orderkey") >= 6000 && col("o_orderkey") < 10000)
+        .repartitionByRange(2, col("o_orderkey"))
+        .write.format("graft-store").mode("append").save(fact)
+      s.sql("CALL gq240.system.refresh_mview('mv')")
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
+      val q = s.sql(
+        """SELECT c_mktsegment AS seg, count(*) AS n,
+          |  round(sum(o_totalprice), 2) AS rev
+          |FROM gq240.fact JOIN gq240.dim ON o_custkey = c_custkey
+          |WHERE o_orderkey < 9000
+          |GROUP BY c_mktsegment""".stripMargin)
+      val rows = q.collect()
+      val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
+      // MV slice + dim + the tail files — never the 6 covered files
+      val mixedJb =
+        q.queryExecution.optimizedPlan.toString.contains(s"$base/mv") &&
+          opened < 6
+      s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), q.schema)
+        .withColumn("mixed_joinback_served", lit(mixedJb))
     },
     Some("""SELECT c_mktsegment AS seg, count(*) AS n,
            |  round(sum(o_totalprice), 2) AS rev, TRUE AS mixed_joinback_served
@@ -6552,58 +5873,48 @@ object SystemQueries {
   val q241MviewJoinMinmax = QuerySpec(
     "q241_mview_join_minmax", "S-dsv2-mview-join-minmax",
     "join-view min/max: delete evicts group maxes, rescan merges exactly",
-    (s, d) => {
-      val base = "/tmp/graft_store_q241"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq241", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq241.base", base)
-      try {
-        val fact = s"$base/fact"
-        val dim = s"$base/dim"
-        val ordersDf = Tables.orders(s, d)
-          .select("o_orderkey", "o_custkey", "o_totalprice")
-        ordersDf.filter(col("o_orderkey") < 8000)
-          .repartitionByRange(8, col("o_orderkey"))
-          .write.format("graft-store").mode("overwrite").save(fact)
-        Tables.customer(s, d).select("c_custkey", "c_mktsegment")
-          .write.format("graft-store").mode("overwrite").save(dim)
-        s.sql("CALL gq241.system.create_mview('mv', " +
-          "'SELECT c_mktsegment AS seg, count(*) AS n, " +
-          "min(o_totalprice) AS lo, max(o_totalprice) AS hi " +
-          "FROM gq241.fact JOIN gq241.dim ON o_custkey = c_custkey " +
-          "GROUP BY c_mktsegment')")
-        def globalHi(): Double = s.sql("SELECT max(hi) FROM gq241.mv")
-          .collect()(0).getDouble(0)
-        // pure-insert churn first (least/greatest fast path)…
-        ordersDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
-          .write.format("graft-store").mode("append").save(fact)
-        val r1 = s.sql("CALL gq241.system.refresh_mview('mv')").collect()(0)
-        val hiBefore = globalHi()
-        // …then DELETE every row above the threshold: the stored max of
-        // every group holding one is evicted — only a rescan of the
-        // rebuilt join can find the runner-up
-        graft.sources.v2.GraftStoreOps.deleteWhere(s, fact,
-          col("o_totalprice") > 250000.0)
-        val r2 = s.sql("CALL gq241.system.refresh_mview('mv')").collect()(0)
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        val incremental =
-          r1.getString(0) == "incremental" && r2.getString(0) == "incremental"
-        val evicted = hiBefore > 250000.0 && globalHi() <= 250000.0
-        // transparent rewrite: the base join aggregate serves from the view
-        val q = s.sql(
-          """SELECT c_mktsegment AS seg, count(*) AS n,
-            |  round(min(o_totalprice), 2) AS lo,
-            |  round(max(o_totalprice), 2) AS hi
-            |FROM gq241.fact JOIN gq241.dim ON o_custkey = c_custkey
-            |GROUP BY c_mktsegment""".stripMargin)
-        val served =
-          q.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
-        q.withColumn("minmax_proof", lit(incremental && evicted && served))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq241")
-        s.conf.unset("spark.sql.catalog.gq241.base")
-      }
+    (s, d) => Fixture(s, "gq241") { (s, base) =>
+      val fact = s"$base/fact"
+      val dim = s"$base/dim"
+      val ordersDf = Tables.orders(s, d)
+        .select("o_orderkey", "o_custkey", "o_totalprice")
+      ordersDf.filter(col("o_orderkey") < 8000)
+        .repartitionByRange(8, col("o_orderkey"))
+        .write.format("graft-store").mode("overwrite").save(fact)
+      Tables.customer(s, d).select("c_custkey", "c_mktsegment")
+        .write.format("graft-store").mode("overwrite").save(dim)
+      s.sql("CALL gq241.system.create_mview('mv', " +
+        "'SELECT c_mktsegment AS seg, count(*) AS n, " +
+        "min(o_totalprice) AS lo, max(o_totalprice) AS hi " +
+        "FROM gq241.fact JOIN gq241.dim ON o_custkey = c_custkey " +
+        "GROUP BY c_mktsegment')")
+      def globalHi(): Double = s.sql("SELECT max(hi) FROM gq241.mv")
+        .collect()(0).getDouble(0)
+      // pure-insert churn first (least/greatest fast path)…
+      ordersDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
+        .write.format("graft-store").mode("append").save(fact)
+      val r1 = s.sql("CALL gq241.system.refresh_mview('mv')").collect()(0)
+      val hiBefore = globalHi()
+      // …then DELETE every row above the threshold: the stored max of
+      // every group holding one is evicted — only a rescan of the
+      // rebuilt join can find the runner-up
+      graft.sources.v2.GraftStoreOps.deleteWhere(s, fact,
+        col("o_totalprice") > 250000.0)
+      val r2 = s.sql("CALL gq241.system.refresh_mview('mv')").collect()(0)
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      val incremental =
+        r1.getString(0) == "incremental" && r2.getString(0) == "incremental"
+      val evicted = hiBefore > 250000.0 && globalHi() <= 250000.0
+      // transparent rewrite: the base join aggregate serves from the view
+      val q = s.sql(
+        """SELECT c_mktsegment AS seg, count(*) AS n,
+          |  round(min(o_totalprice), 2) AS lo,
+          |  round(max(o_totalprice), 2) AS hi
+          |FROM gq241.fact JOIN gq241.dim ON o_custkey = c_custkey
+          |GROUP BY c_mktsegment""".stripMargin)
+      val served =
+        q.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
+      q.withColumn("minmax_proof", lit(incremental && evicted && served))
     },
     Some("""SELECT c_mktsegment AS seg, count(*) AS n,
            |  round(min(o_totalprice), 2) AS lo,
@@ -6627,61 +5938,51 @@ object SystemQueries {
   val q242MviewGroupingSets = QuerySpec(
     "q242_mview_grouping_sets", "S-dsv2-mview-grouping-sets",
     "GROUPING SETS / CUBE / ROLLUP served from the (a,b)-grain MV",
-    (s, d) => {
-      val base = "/tmp/graft_store_q242"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq242", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq242.base", base)
-      try {
-        val src = s"$base/src"
-        val baseDf = Tables.orders(s, d)
-          .select("o_orderkey", "o_orderstatus", "o_orderpriority", "o_totalprice")
-        baseDf.filter(col("o_orderkey") < 8000)
-          .repartitionByRange(8, col("o_orderkey"))
-          .write.format("graft-store").mode("overwrite").save(src) // 8 files
-        s.sql("CALL gq242.system.create_mview('mv', " +
-          "'SELECT o_orderstatus AS st, o_orderpriority AS pri, " +
-          "count(*) AS n, sum(o_totalprice) AS rev, " +
-          "avg(o_totalprice) AS ap " +
-          "FROM gq242.src GROUP BY o_orderstatus, o_orderpriority')")
-        // churn both ways, refresh incrementally, then drill down
-        baseDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
-          .write.format("graft-store").mode("append").save(src)
-        graft.sources.v2.GraftStoreOps.deleteWhere(s, src,
-          col("o_orderkey") < 1000)
-        val r = s.sql("CALL gq242.system.refresh_mview('mv')").collect()(0)
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        val incremental = r.getString(0) == "incremental"
-        def served(df: org.apache.spark.sql.DataFrame): Boolean =
-          df.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
-        val ops = graft.sources.v2.GraftStoreOps
-        val q = s.sql(
-          """SELECT o_orderstatus AS st, o_orderpriority AS pri,
-            |  count(*) AS n, round(sum(o_totalprice), 2) AS rev
-            |FROM gq242.src
-            |GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
-            |  (o_orderstatus), ())""".stripMargin)
-        val b1 = ops.scannedFileSlices
-        val rows = q.collect()
-        val opened = ops.scannedFileSlices - b1
-        // the sugar forms lower to the same Expand and serve too
-        val cube = s.sql(
-          """SELECT o_orderstatus AS st, o_orderpriority AS pri,
-            |  count(*) AS n
-            |FROM gq242.src GROUP BY CUBE(o_orderstatus, o_orderpriority)""".stripMargin)
-        val rollup = s.sql(
-          """SELECT o_orderstatus AS st, o_orderpriority AS pri,
-            |  avg(o_totalprice) AS ap
-            |FROM gq242.src GROUP BY ROLLUP(o_orderstatus, o_orderpriority)""".stripMargin)
-        val bits = served(q) && opened < 8 && served(cube) &&
-          served(rollup) && incremental
-        s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), q.schema)
-          .withColumn("grouping_sets_proof", lit(bits))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq242")
-        s.conf.unset("spark.sql.catalog.gq242.base")
-      }
+    (s, d) => Fixture(s, "gq242") { (s, base) =>
+      val src = s"$base/src"
+      val baseDf = Tables.orders(s, d)
+        .select("o_orderkey", "o_orderstatus", "o_orderpriority", "o_totalprice")
+      baseDf.filter(col("o_orderkey") < 8000)
+        .repartitionByRange(8, col("o_orderkey"))
+        .write.format("graft-store").mode("overwrite").save(src) // 8 files
+      s.sql("CALL gq242.system.create_mview('mv', " +
+        "'SELECT o_orderstatus AS st, o_orderpriority AS pri, " +
+        "count(*) AS n, sum(o_totalprice) AS rev, " +
+        "avg(o_totalprice) AS ap " +
+        "FROM gq242.src GROUP BY o_orderstatus, o_orderpriority')")
+      // churn both ways, refresh incrementally, then drill down
+      baseDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
+        .write.format("graft-store").mode("append").save(src)
+      graft.sources.v2.GraftStoreOps.deleteWhere(s, src,
+        col("o_orderkey") < 1000)
+      val r = s.sql("CALL gq242.system.refresh_mview('mv')").collect()(0)
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      val incremental = r.getString(0) == "incremental"
+      def served(df: org.apache.spark.sql.DataFrame): Boolean =
+        df.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
+      val ops = graft.sources.v2.GraftStoreOps
+      val q = s.sql(
+        """SELECT o_orderstatus AS st, o_orderpriority AS pri,
+          |  count(*) AS n, round(sum(o_totalprice), 2) AS rev
+          |FROM gq242.src
+          |GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
+          |  (o_orderstatus), ())""".stripMargin)
+      val b1 = ops.scannedFileSlices
+      val rows = q.collect()
+      val opened = ops.scannedFileSlices - b1
+      // the sugar forms lower to the same Expand and serve too
+      val cube = s.sql(
+        """SELECT o_orderstatus AS st, o_orderpriority AS pri,
+          |  count(*) AS n
+          |FROM gq242.src GROUP BY CUBE(o_orderstatus, o_orderpriority)""".stripMargin)
+      val rollup = s.sql(
+        """SELECT o_orderstatus AS st, o_orderpriority AS pri,
+          |  avg(o_totalprice) AS ap
+          |FROM gq242.src GROUP BY ROLLUP(o_orderstatus, o_orderpriority)""".stripMargin)
+      val bits = served(q) && opened < 8 && served(cube) &&
+        served(rollup) && incremental
+      s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), q.schema)
+        .withColumn("grouping_sets_proof", lit(bits))
     },
     Some("""SELECT o_orderstatus AS st, o_orderpriority AS pri,
            |  count(*) AS n, round(sum(o_totalprice), 2) AS rev,
@@ -6704,54 +6005,44 @@ object SystemQueries {
   val q243MviewYearRollup = QuerySpec(
     "q243_mview_year_rollup", "S-dsv2-mview-year-rollup",
     "year-grain queries served from the month-grain calendar MV",
-    (s, d) => {
-      val base = "/tmp/graft_store_q243"
-      val fsPath = new org.apache.hadoop.fs.Path(base)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      s.conf.set("spark.sql.catalog.gq243", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gq243.base", base)
-      try {
-        val src = s"$base/src"
-        val baseDf = Tables.orders(s, d)
-          .select(col("o_orderkey"), col("o_totalprice"),
-            col("o_orderdate").cast("timestamp").as("o_orderdate"))
-        baseDf.filter(col("o_orderkey") < 8000)
-          .repartitionByRange(8, col("o_orderkey"))
-          .write.format("graft-store").mode("overwrite").save(src) // 8 files
-        s.sql("CALL gq243.system.create_mview('mv', " +
-          "'SELECT date_trunc(''month'', o_orderdate) AS mon, " +
-          "count(*) AS n, sum(o_totalprice) AS rev " +
-          "FROM gq243.src GROUP BY date_trunc(''month'', o_orderdate)')")
-        baseDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
-          .write.format("graft-store").mode("append").save(src)
-        graft.sources.v2.GraftStoreOps.deleteWhere(s, src,
-          col("o_orderkey") < 1000)
-        val r = s.sql("CALL gq243.system.refresh_mview('mv')").collect()(0)
-        graft.BenchSetup.mark() // fixture setup ends; queries follow
-        val incremental = r.getString(0) == "incremental"
-        def served(df: org.apache.spark.sql.DataFrame): Boolean =
-          df.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
-        val ops = graft.sources.v2.GraftStoreOps
-        val q1 = s.sql(
-          """SELECT date_format(date_trunc('year', o_orderdate), 'yyyy-MM-dd')
-            |    AS yr,
-            |  count(*) AS n, round(sum(o_totalprice), 2) AS rev
-            |FROM gq243.src
-            |GROUP BY date_trunc('year', o_orderdate)""".stripMargin)
-        val b1 = ops.scannedFileSlices
-        val rows = q1.collect()
-        val onSlices = ops.scannedFileSlices - b1
-        // the year() surface form coarsens through the same device
-        val q2 = s.sql(
-          """SELECT year(o_orderdate) AS y, count(*) AS n FROM gq243.src
-            |GROUP BY year(o_orderdate)""".stripMargin)
-        val bits = served(q1) && onSlices < 8 && served(q2) && incremental
-        s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), q1.schema)
-          .withColumn("year_rollup_proof", lit(bits))
-      } finally {
-        s.conf.unset("spark.sql.catalog.gq243")
-        s.conf.unset("spark.sql.catalog.gq243.base")
-      }
+    (s, d) => Fixture(s, "gq243") { (s, base) =>
+      val src = s"$base/src"
+      val baseDf = Tables.orders(s, d)
+        .select(col("o_orderkey"), col("o_totalprice"),
+          col("o_orderdate").cast("timestamp").as("o_orderdate"))
+      baseDf.filter(col("o_orderkey") < 8000)
+        .repartitionByRange(8, col("o_orderkey"))
+        .write.format("graft-store").mode("overwrite").save(src) // 8 files
+      s.sql("CALL gq243.system.create_mview('mv', " +
+        "'SELECT date_trunc(''month'', o_orderdate) AS mon, " +
+        "count(*) AS n, sum(o_totalprice) AS rev " +
+        "FROM gq243.src GROUP BY date_trunc(''month'', o_orderdate)')")
+      baseDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
+        .write.format("graft-store").mode("append").save(src)
+      graft.sources.v2.GraftStoreOps.deleteWhere(s, src,
+        col("o_orderkey") < 1000)
+      val r = s.sql("CALL gq243.system.refresh_mview('mv')").collect()(0)
+      graft.BenchSetup.mark() // fixture setup ends; queries follow
+      val incremental = r.getString(0) == "incremental"
+      def served(df: org.apache.spark.sql.DataFrame): Boolean =
+        df.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
+      val ops = graft.sources.v2.GraftStoreOps
+      val q1 = s.sql(
+        """SELECT date_format(date_trunc('year', o_orderdate), 'yyyy-MM-dd')
+          |    AS yr,
+          |  count(*) AS n, round(sum(o_totalprice), 2) AS rev
+          |FROM gq243.src
+          |GROUP BY date_trunc('year', o_orderdate)""".stripMargin)
+      val b1 = ops.scannedFileSlices
+      val rows = q1.collect()
+      val onSlices = ops.scannedFileSlices - b1
+      // the year() surface form coarsens through the same device
+      val q2 = s.sql(
+        """SELECT year(o_orderdate) AS y, count(*) AS n FROM gq243.src
+          |GROUP BY year(o_orderdate)""".stripMargin)
+      val bits = served(q1) && onSlices < 8 && served(q2) && incremental
+      s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), q1.schema)
+        .withColumn("year_rollup_proof", lit(bits))
     },
     Some("""SELECT strftime(date_trunc('year', o_orderdate), '%Y-%m-%d') AS yr,
            |  count(*) AS n, round(sum(o_totalprice), 2) AS rev,

@@ -5819,7 +5819,8 @@ object GraftStoreOps {
         if (es.isEmpty) Set.empty[String]
         else spark.read.format("graft-store").load(scratch)
           .select("file").distinct().collect().map(_.getString(0)).toSet
-      sm.files.foreach(e => f.rename(new Path(scratch, e.name), new Path(path, e.name)))
+      GraftStoreFormat.moveLive(f, path, sm.files.map(e => new Path(scratch, e.name)),
+        f.delete(new Path(scratch), true))
       (es, ts)
     }
     if (entries.isEmpty && dropped.isEmpty) { f.delete(new Path(scratch), true); return (0L, 0) }
@@ -6363,7 +6364,8 @@ object GraftStoreOps {
         s"graft-store: COW rewrite changed column types " +
           s"(${sm0.schema.simpleString} vs ${m.schema.simpleString}) — " +
           "cast SET/source expressions to the declared types")
-      sm0.files.foreach(e => f.rename(new Path(scratch, e.name), new Path(path, e.name)))
+      GraftStoreFormat.moveLive(f, path, sm0.files.map(e => new Path(scratch, e.name)),
+        f.delete(new Path(scratch), true))
       // the change log is durable BEFORE the manifest that points at it: a
       // reader that can resolve the new snapshot can always read its changes.
       // A crash here orphans an unreferenced _cdc dir — invisible, reclaimed
@@ -6674,7 +6676,8 @@ object GraftStoreOps {
       .getOrElse(GraftManifest(m.schema, Seq.empty))
     require(sm.files.isEmpty || GraftStoreFormat.sameCols(sm.schema, m.schema),
       "graft-store: re-layout changed column types")
-    sm.files.foreach(e => f.rename(new Path(scratch, e.name), new Path(path, e.name)))
+    GraftStoreFormat.moveLive(f, path, sm.files.map(e => new Path(scratch, e.name)),
+      f.delete(new Path(scratch), true))
     var done = false
     while (!done) {
       val head = GraftStoreFormat.listManifests(path, conf)

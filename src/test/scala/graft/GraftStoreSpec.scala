@@ -11,9 +11,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * exact statistics, pruning. */
 class GraftStoreSpec extends AnyFunSuite with SparkTestBase {
 
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-store-spec").toString
-
   private def sample = {
     import spark.implicits._
     Seq(
@@ -24,7 +21,7 @@ class GraftStoreSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("write → read round-trip preserves rows, types and nulls") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     sample.write.format("graft-store").mode("overwrite").save(dir)
     val back = spark.read.format("graft-store").load(dir)
     assert(back.schema === sample.schema)
@@ -33,7 +30,7 @@ class GraftStoreSpec extends AnyFunSuite with SparkTestBase {
 
   test("append mode accumulates; overwrite replaces the snapshot") {
     import spark.implicits._
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     sample.write.format("graft-store").mode("overwrite").save(dir)
     Seq((4L, Some("delta"), Some(9.0), false)).toDF("id", "name", "score", "flag")
       .write.format("graft-store").mode("append").save(dir)
@@ -47,7 +44,7 @@ class GraftStoreSpec extends AnyFunSuite with SparkTestBase {
 
   test("append under a different schema fails loudly (codec is schema-dependent)") {
     import spark.implicits._
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     sample.write.format("graft-store").mode("overwrite").save(dir)
     val err = intercept[Exception] {
       Seq((1L, 2L)).toDF("id", "other")
@@ -59,7 +56,7 @@ class GraftStoreSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("readers see only manifest-listed files: orphans are invisible") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     sample.write.format("graft-store").mode("overwrite").save(dir)
     // simulate an uncommitted straggler / crashed attempt: a data file that
     // never made it into any manifest
@@ -69,7 +66,7 @@ class GraftStoreSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("scan reports exact statistics (rows from manifest, bytes from files)") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     sample.write.format("graft-store").mode("overwrite").save(dir)
     val stats = spark.read.format("graft-store").load(dir)
       .queryExecution.executedPlan.collectFirst {
@@ -81,7 +78,7 @@ class GraftStoreSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("column pruning reaches the reader output schema") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     sample.write.format("graft-store").mode("overwrite").save(dir)
     val df = spark.read.format("graft-store").load(dir).select("id", "flag")
     val desc = df.queryExecution.executedPlan.collect {
@@ -92,7 +89,7 @@ class GraftStoreSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("one input partition per committed file (parallel writers → parallel readers)") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     sample.repartition(3).write.format("graft-store").mode("overwrite").save(dir)
     val back = spark.read.format("graft-store").load(dir)
     assert(back.rdd.getNumPartitions === 3)
@@ -101,7 +98,7 @@ class GraftStoreSpec extends AnyFunSuite with SparkTestBase {
 
   test("time travel: snapshot index and asOfMillis pin historical reads") {
     import spark.implicits._
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     sample.write.format("graft-store").mode("overwrite").save(dir)
     val hist0 = graft.sources.v2.GraftStoreOps.history(spark, dir)
     assert(hist0.map(h => (h._1, h._4)) === Seq((0, 3L)))
@@ -130,7 +127,7 @@ class GraftStoreSpec extends AnyFunSuite with SparkTestBase {
 
   test("expireSnapshots drops history and unreferenced files; latest still reads") {
     import spark.implicits._
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     sample.write.format("graft-store").mode("overwrite").save(dir)
     Seq((9L, Some("omega"), Some(0.0), true)).toDF("id", "name", "score", "flag")
       .write.format("graft-store").mode("overwrite").save(dir)
@@ -149,7 +146,7 @@ class GraftStoreSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("manifest min/max stats skip files the predicate cannot match") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 1000)
       .selectExpr("id", "cast(id % 10 as double) as v")
       .repartitionByRange(4, org.apache.spark.sql.functions.col("id"))
@@ -178,7 +175,7 @@ class GraftStoreSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("compactSnapshot publishes a compacted snapshot; history keeps the old layout") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 1000).selectExpr("id", "cast(id as double) as v")
       .repartition(8)
       .write.format("graft-store").mode("overwrite").save(dir)
@@ -201,7 +198,7 @@ class GraftStoreSpec extends AnyFunSuite with SparkTestBase {
 
   test("SQL surface: CREATE TEMPORARY VIEW ... USING graft-store with time travel") {
     import spark.implicits._
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     sample.write.format("graft-store").mode("overwrite").save(dir)
     Seq((9L, Some("omega"), Some(0.0), true)).toDF("id", "name", "score", "flag")
       .write.format("graft-store").mode("overwrite").save(dir)
@@ -216,7 +213,7 @@ class GraftStoreSpec extends AnyFunSuite with SparkTestBase {
 
   test("catalog: SQL VERSION AS OF / TIMESTAMP AS OF resolve through GraftCatalog") {
     import spark.implicits._
-    val base = tmpDir()
+    val base = Fixture.dir()
     spark.conf.set("spark.sql.catalog.gcat", "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.gcat.base", base)
     Seq((1L, Some("a"), Some(1.0), true), (2L, Some("b"), Some(2.0), false))
@@ -245,7 +242,7 @@ class GraftStoreSpec extends AnyFunSuite with SparkTestBase {
 
   test("streaming source: snapshots tail incrementally across live appends") {
     import spark.implicits._
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     Seq((1L, Some("a"), Some(1.0), true), (2L, Some("b"), Some(2.0), false))
       .toDF("id", "name", "score", "flag")
       .write.format("graft-store").mode("overwrite").save(dir)
@@ -273,7 +270,7 @@ class GraftStoreSpec extends AnyFunSuite with SparkTestBase {
 
   test("dates and timestamps survive the codec") {
     import spark.implicits._
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     val df = Seq(
       (1L, java.sql.Date.valueOf("2024-05-17"), java.sql.Timestamp.valueOf("2024-05-17 10:30:00")))
       .toDF("id", "d", "ts")

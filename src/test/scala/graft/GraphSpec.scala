@@ -190,7 +190,7 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     val localStars = labelsOf(distributedStars(vertices, edges))
     val localPr = Graph.pageRank(vertices, edges, iters = 3)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = Fixture.dir()
     spark.conf.set("spark.graft.checkpointDir", dir)
     try {
       assert(labelsOf(distributedStars(vertices, edges)) === localStars)
@@ -221,7 +221,7 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     val n = 8L
     val path = (1L until n).map(i => (i, i + 1)).toDF("src", "dst")
     val vs = (1L to n).toDF("id")
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-path").toString
+    val dir = Fixture.dir()
     spark.conf.set("spark.graft.checkpointDir", dir)
     try {
       val got = labelsOf(distributedStars(vs, path))

@@ -201,7 +201,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
 
   test("mixed MV plan: the complement predicate reaches the base scan pushed") {
     import org.apache.spark.sql.functions.{col, count, lit}
-    val base = java.nio.file.Files.createTempDirectory("graft-audit-mx").toString
+    val base = Fixture.dir()
     spark.conf.set("spark.sql.catalog.auditmx", "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.auditmx.base", base)
     try {
@@ -243,7 +243,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     // manifestParseBytes (actual metadata bytes parsed).
     import org.apache.spark.sql.functions.{col, count, lit}
     import graft.sources.v2.GraftStoreOps
-    val base = java.nio.file.Files.createTempDirectory("graft-audit-pb").toString
+    val base = Fixture.dir()
     spark.conf.set("spark.sql.catalog.auditpb", "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.auditpb.base", base)
     spark.conf.set("spark.graft.mv.probeCacheMs", "600000")

@@ -77,7 +77,7 @@ class SoccerSpec extends AnyFunSuite with SparkTestBase {
     val res = SoccerMl.train(ts, "flat", multiclass = true, maxIter = 3)
     assert(res.accuracy >= 0.0 && res.accuracy <= 1.0)
     assert(res.nTrain + res.nTest === ts.count())
-    val dir = java.nio.file.Files.createTempDirectory("graft-models").toString
+    val dir = Fixture.dir()
     val path = SoccerMl.modelPath(dir, "19", 0, "flat")
     SoccerMl.save(res.model, path)
     val reloaded = SoccerMl.load(path)
@@ -95,7 +95,7 @@ class SoccerSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("facade: SoccerPredictor train/persist/predict over a data directory") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-soccer").toString
+    val dir = Fixture.dir()
     record.write.mode("overwrite").parquet(s"$dir/data/game_record")
     odds.write.mode("overwrite").parquet(s"$dir/data/game_odds")
     ou.write.mode("overwrite").parquet(s"$dir/data/game_overunder")

@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class GraftCatalogDdlSpec extends AnyFunSuite with graft.SparkTestBase {
 
   private lazy val catBase: String = {
-    val base = Files.createTempDirectory("graft-ddl").toString
+    val base = Fixture.dir()
     spark.conf.set("spark.sql.catalog.ddlcat", "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.ddlcat.base", base)
     base

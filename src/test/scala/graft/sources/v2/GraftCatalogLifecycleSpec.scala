@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,7 +15,7 @@ class GraftCatalogLifecycleSpec extends AnyFunSuite with graft.SparkTestBase {
     GraftStoreFormat.readLatestManifest(dir, conf).get
 
   private def catalogFor(name: String): String = {
-    val base = Files.createTempDirectory("graft-ddl").toString
+    val base = Fixture.dir()
     spark.conf.set(s"spark.sql.catalog.$name", "graft.sources.v2.GraftCatalog")
     spark.conf.set(s"spark.sql.catalog.$name.base", base)
     base

@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class GraftCatalogViewSpec extends AnyFunSuite with graft.SparkTestBase {
 
   private lazy val catBase: String = {
-    val base = Files.createTempDirectory("graft-views").toString
+    val base = Fixture.dir()
     spark.conf.set("spark.sql.catalog.vcat", "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.vcat.base", base)
     base

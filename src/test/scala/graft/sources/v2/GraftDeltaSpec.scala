@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,7 +13,7 @@ class GraftDeltaSpec extends AnyFunSuite with graft.SparkTestBase {
 
   // ONE catalog for the suite (Spark caches catalog instances per name)
   private lazy val catBase: String = {
-    val base = Files.createTempDirectory("graft-delta").toString
+    val base = Fixture.dir()
     spark.conf.set("spark.sql.catalog.dcat", "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.dcat.base", base)
     base

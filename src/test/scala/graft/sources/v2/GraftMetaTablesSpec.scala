@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -8,9 +8,6 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Metadata tables (`cat.tbl$history` / `cat.tbl$files`): snapshot log and
   * current file inventory as SQL-queryable driver-local tables. */
 class GraftMetaTablesSpec extends AnyFunSuite with graft.SparkTestBase {
-
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-meta").toString
 
   private def withCatalog[T](catName: String, base: String)(body: => T): T = {
     spark.conf.set(s"spark.sql.catalog.$catName", classOf[GraftCatalog].getName)
@@ -23,7 +20,7 @@ class GraftMetaTablesSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("$history reflects commits, layouts, and streaming txn tokens") {
-    val base = tmpDir()
+    val base = Fixture.dir()
     spark.range(0, 40).selectExpr("id", "cast(id % 4 as int) as k")
       .write.format("graft-store").option("partitionBy", "k")
       .mode("overwrite").save(s"$base/t")
@@ -47,7 +44,7 @@ class GraftMetaTablesSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("$files lists the head inventory with widths and partition values") {
-    val base = tmpDir()
+    val base = Fixture.dir()
     spark.range(0, 30).selectExpr("id", "cast(id % 3 as int) as k")
       .write.format("graft-store").option("partitionBy", "k")
       .mode("overwrite").save(s"$base/t")
@@ -70,7 +67,7 @@ class GraftMetaTablesSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("SQL INSERT INTO appends through the catalog (DML surface)") {
-    val base = tmpDir()
+    val base = Fixture.dir()
     spark.range(0, 10).selectExpr("id", "id * 2 as v")
       .write.format("graft-store").option("check", "v >= 0")
       .mode("overwrite").save(s"$base/t")
@@ -91,7 +88,7 @@ class GraftMetaTablesSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("SQL TRUNCATE TABLE empties the head, history stays travelable") {
-    val base = tmpDir()
+    val base = Fixture.dir()
     spark.range(0, 25).selectExpr("id", "id as v")
       .write.format("graft-store").mode("overwrite").save(s"$base/t")
     withCatalog("gtrunc", base) {
@@ -108,7 +105,7 @@ class GraftMetaTablesSpec extends AnyFunSuite with graft.SparkTestBase {
 
   test("$deletes exposes the merge-on-read read debt, both kinds") {
     import spark.implicits._
-    val base = tmpDir()
+    val base = Fixture.dir()
     spark.range(0, 100).selectExpr("id", "id * 2 as v")
       .repartitionByRange(4, col("id"))
       .write.format("graft-store").option("dmlMode", "mor")
@@ -136,7 +133,7 @@ class GraftMetaTablesSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("unknown metadata suffix and missing tables fail loudly") {
-    val base = tmpDir()
+    val base = Fixture.dir()
     spark.range(0, 5).selectExpr("id").write.format("graft-store")
       .mode("overwrite").save(s"$base/t")
     withCatalog("gmeta3", base) {

@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -28,7 +28,7 @@ class GraftMviewChurnPropertySpec extends AnyFunSuite with graft.SparkTestBase {
   import spark.implicits._
 
   private lazy val catBase: String = {
-    val base = Files.createTempDirectory("graft-mv-churn").toString
+    val base = Fixture.dir()
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.v2.GraftCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.base", base)
     base

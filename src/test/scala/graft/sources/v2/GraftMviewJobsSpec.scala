@@ -1,6 +1,7 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
+
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -15,7 +16,7 @@ class GraftMviewJobsSpec extends AnyFunSuite with graft.SparkTestBase {
   import spark.implicits._
 
   private lazy val catBase: String = {
-    val base = Files.createTempDirectory("graft-mv-jobs").toString
+    val base = Fixture.dir()
     spark.conf.set("spark.sql.catalog.mvjobs", "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.mvjobs.base", base)
     base

@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,7 +21,7 @@ class GraftMviewRewritePropertySpec extends AnyFunSuite with graft.SparkTestBase
   import spark.implicits._
 
   private lazy val catBase: String = {
-    val base = Files.createTempDirectory("graft-mv-prop").toString
+    val base = Fixture.dir()
     spark.conf.set("spark.sql.catalog.mvprop", "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.mvprop.base", base)
     base

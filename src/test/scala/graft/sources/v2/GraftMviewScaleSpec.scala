@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,7 +21,7 @@ class GraftMviewScaleSpec extends AnyFunSuite with graft.SparkTestBase {
   import spark.implicits._
 
   private lazy val catBase: String = {
-    val base = Files.createTempDirectory("graft-mv-scale").toString
+    val base = Fixture.dir()
     spark.conf.set("spark.sql.catalog.mvscale", "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.mvscale.base", base)
     base

@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -20,7 +20,7 @@ class GraftMviewServeExtSpec extends AnyFunSuite with graft.SparkTestBase {
   import spark.implicits._
 
   private lazy val catBase: String = {
-    val base = Files.createTempDirectory("graft-mvsx").toString
+    val base = Fixture.dir()
     spark.conf.set("spark.sql.catalog.sxcat", "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.sxcat.base", base)
     base

@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -24,7 +24,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
   import spark.implicits._
 
   private lazy val catBase: String = {
-    val base = Files.createTempDirectory("graft-mv").toString
+    val base = Fixture.dir()
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.v2.GraftCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.base", base)
     base
@@ -143,7 +143,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     catBase
     val srcDir = s"$catBase/src6"
     val mvDir = s"$catBase/mv6"
-    val ckpt = Files.createTempDirectory("graft-mv-ck").toString
+    val ckpt = Fixture.dir()
     Seq(("a", 1L), ("b", 2L)).toDF("g", "v")
       .write.format("graft-store").mode("overwrite").save(srcDir)
     GraftMview.create(spark, mvDir,
@@ -174,7 +174,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     val factDir = s"$catBase/sjfact"
     val dimDir = s"$catBase/sjdim"
     val mvDir = s"$catBase/sjmv"
-    val ckpt = Files.createTempDirectory("graft-mv-jck").toString
+    val ckpt = Fixture.dir()
     Seq((1L, 2L), (2L, 10L)).toDF("fk", "v")
       .write.format("graft-store").mode("overwrite").save(factDir)
     Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("pk", "seg")
@@ -202,7 +202,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     val factDir = s"$catBase/slfact"
     val dimDir = s"$catBase/sldim"
     val mvDir = s"$catBase/slmv"
-    val ckpt = Files.createTempDirectory("graft-mv-lck").toString
+    val ckpt = Fixture.dir()
     // fk=3 starts UNMATCHED (null-extended)
     Seq((1L, 2L), (2L, 10L), (3L, 7L)).toDF("fk", "v")
       .write.format("graft-store").mode("overwrite").save(factDir)
@@ -245,7 +245,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     val faDir = s"$catBase/sffa"
     val fbDir = s"$catBase/sffb"
     val mvDir = s"$catBase/sfmv"
-    val ckpt = Files.createTempDirectory("graft-mv-fck").toString
+    val ckpt = Fixture.dir()
     Seq((1L, 2L), (2L, 10L)).toDF("ka", "va")
       .write.format("graft-store").mode("overwrite").save(faDir)
     Seq((1L, "p"), (3L, "q")).toDF("kb", "h")
@@ -629,7 +629,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     // BACK to null-extended and the east group vanishes entirely. Run
     // this leg under a configured RELIABLE checkpoint dir (the dim-side
     // refresh materializes its key/fact frames through IterGuard).
-    val ckpt = Files.createTempDirectory("graft-mv-ckpt").toString
+    val ckpt = Fixture.dir()
     spark.conf.set("spark.graft.checkpointDir", ckpt)
     try {
       spark.sql(s"DELETE FROM $cat.lod WHERE pk = 1")

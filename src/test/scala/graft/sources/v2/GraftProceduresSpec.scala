@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class GraftProceduresSpec extends AnyFunSuite with graft.SparkTestBase {
 
   private def catalogFor(name: String): String = {
-    val base = Files.createTempDirectory("graft-proc").toString
+    val base = Fixture.dir()
     spark.conf.set(s"spark.sql.catalog.$name", "graft.sources.v2.GraftCatalog")
     spark.conf.set(s"spark.sql.catalog.$name.base", base)
     base

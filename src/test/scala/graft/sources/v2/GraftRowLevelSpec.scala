@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,7 +14,7 @@ class GraftRowLevelSpec extends AnyFunSuite with graft.SparkTestBase {
   // at first use, so re-pointing `base` between tests would silently keep
   // resolving against the first directory
   private lazy val catBase: String = {
-    val base = Files.createTempDirectory("graft-rowlevel").toString
+    val base = Fixture.dir()
     spark.conf.set("spark.sql.catalog.rlcat", "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.rlcat.base", base)
     base

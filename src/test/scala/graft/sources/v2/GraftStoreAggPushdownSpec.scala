@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -14,9 +14,6 @@ import graft.SparkTestBase
   * — and every case where manifest stats cannot answer EXACTLY declines
   * back to the ordinary scan with identical results. */
 class GraftStoreAggPushdownSpec extends AnyFunSuite with SparkTestBase {
-
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-agg-spec").toString
 
   private def sample = {
     import spark.implicits._
@@ -36,7 +33,7 @@ class GraftStoreAggPushdownSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("count(*) / min / max push to the manifest and match a full scan") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     sample.repartition(3).write.format("graft-store").mode("overwrite").save(dir)
     val t = spark.read.format("graft-store").load(dir)
 
@@ -55,7 +52,7 @@ class GraftStoreAggPushdownSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("a WHERE clause declines the pushdown (filters are residual)") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     sample.write.format("graft-store").mode("overwrite").save(dir)
     val t = spark.read.format("graft-store").load(dir)
     val agg = t.filter(col("id") > 2L).agg(count(lit(1)).as("n"), max("id").as("mx"))
@@ -65,7 +62,7 @@ class GraftStoreAggPushdownSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("GROUP BY declines; count(col) pushes via null counts; distinct declines") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     sample.write.format("graft-store").mode("overwrite").save(dir)
     val t = spark.read.format("graft-store").load(dir)
     val grouped = t.groupBy("qty").agg(count(lit(1)).as("n"))
@@ -83,7 +80,7 @@ class GraftStoreAggPushdownSpec extends AnyFunSuite with SparkTestBase {
 
   test("NaN in a float column declines min/max but count(*) still pushes") {
     import spark.implicits._
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     Seq((1L, 1.0), (2L, Double.NaN), (3L, 5.0)).toDF("id", "v")
       .write.format("graft-store").mode("overwrite").save(dir)
     val t = spark.read.format("graft-store").load(dir)
@@ -98,7 +95,7 @@ class GraftStoreAggPushdownSpec extends AnyFunSuite with SparkTestBase {
 
   test(">64-char strings decline min/max on that column only") {
     import spark.implicits._
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     val long = "x" * 80
     Seq((1L, long), (2L, "short")).toDF("id", "s")
       .write.format("graft-store").mode("overwrite").save(dir)
@@ -113,7 +110,7 @@ class GraftStoreAggPushdownSpec extends AnyFunSuite with SparkTestBase {
 
   test("live merge-on-read deletes decline everything; purge restores") {
     import spark.implicits._
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     sample.repartition(2).write.format("graft-store")
       .option("dmlMode", "mor").mode("overwrite").save(dir)
     GraftStoreOps.deleteWhereMor(spark, dir, col("id") === 2L)
@@ -135,7 +132,7 @@ class GraftStoreAggPushdownSpec extends AnyFunSuite with SparkTestBase {
 
   test("schema evolution: new column declines min/max (no stats), count pushes") {
     import spark.implicits._
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     Seq((1L, "a"), (2L, "b")).toDF("id", "name")
       .write.format("graft-store").mode("overwrite").save(dir)
     Seq((3L, "c", 42)).toDF("id", "name", "extra")
@@ -156,7 +153,7 @@ class GraftStoreAggPushdownSpec extends AnyFunSuite with SparkTestBase {
 
   test("time travel aggregates push against the pinned snapshot") {
     import spark.implicits._
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     Seq((1L, 10)).toDF("id", "v").write.format("graft-store")
       .mode("overwrite").save(dir)
     Seq((2L, 20)).toDF("id", "v").write.format("graft-store")
@@ -173,7 +170,7 @@ class GraftStoreAggPushdownSpec extends AnyFunSuite with SparkTestBase {
 
   test("empty selection: count 0, min/max null") {
     import spark.implicits._
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     Seq((1L, 10)).toDF("id", "v").filter(col("id") < 0L)
       .write.format("graft-store").mode("overwrite").save(dir)
     val t = spark.read.format("graft-store").load(dir)
@@ -185,7 +182,7 @@ class GraftStoreAggPushdownSpec extends AnyFunSuite with SparkTestBase {
 
   test("SQL DML still works against a table whose scans push aggregates") {
     import spark.implicits._
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     sample.write.format("graft-store").mode("overwrite").save(dir)
     GraftStoreOps.deleteWhere(spark, dir, col("id") === 5L)
     val t = spark.read.format("graft-store").load(dir)
@@ -194,7 +191,7 @@ class GraftStoreAggPushdownSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("GROUP BY an identity partition column pushes to the manifest") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 400)
       .selectExpr("id", "cast(id % 4 as string) as k", "id * 2 as v")
       .write.format("graft-store").option("partitionBy", "k")
@@ -212,7 +209,7 @@ class GraftStoreAggPushdownSpec extends AnyFunSuite with SparkTestBase {
 
   test("GROUP BY pushdown covers null partitions and composite layouts") {
     import spark.implicits._
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     Seq((1L, Some("a")), (2L, Some("a")), (3L, None)).toDF("id", "k")
       .write.format("graft-store").option("partitionBy", "k")
       .mode("overwrite").save(dir)
@@ -223,7 +220,7 @@ class GraftStoreAggPushdownSpec extends AnyFunSuite with SparkTestBase {
       (Option(r.getString(0)), r.getLong(1), r.getLong(2))).toSet
     assert(got === Set((Some("a"), 2L, 2L), (None, 1L, 3L)))
     // composite layout: identity + bucket still groups by the identity leg
-    val dir2 = tmpDir()
+    val dir2 = Fixture.dir()
     spark.range(0, 100)
       .selectExpr("id", "cast(id % 2 as string) as k")
       .write.format("graft-store").option("partitionBy", "k,bucket(4,id)")
@@ -236,7 +233,7 @@ class GraftStoreAggPushdownSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("GROUP BY a non-partition column declines; results still exact") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 40)
       .selectExpr("id", "cast(id % 4 as string) as k", "cast(id % 2 as string) as j")
       .write.format("graft-store").option("partitionBy", "k")
@@ -247,7 +244,7 @@ class GraftStoreAggPushdownSpec extends AnyFunSuite with SparkTestBase {
     assert(g.collect().map(r => (r.getString(0), r.getLong(1))).toSet ===
       Set(("0", 20L), ("1", 20L)))
     // MOR masks decline the grouped form like the global one
-    val dirm = tmpDir()
+    val dirm = Fixture.dir()
     spark.range(0, 40)
       .selectExpr("id", "cast(id % 4 as string) as k")
       .write.format("graft-store").option("partitionBy", "k")

@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -17,9 +17,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * file read, never a wrong answer.
   */
 class GraftStoreBloomSpec extends AnyFunSuite with graft.SparkTestBase {
-
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-store-bloom").toString
 
   private def scanFiles(df: DataFrame): (Int, Int) = {
     val s = df.queryExecution.executedPlan.toString
@@ -39,7 +36,7 @@ class GraftStoreBloomSpec extends AnyFunSuite with graft.SparkTestBase {
       .mode("overwrite").save(dir)
 
   test("point lookup on an unsorted high-cardinality column skips files") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     writeShuffled(dir, 20000, 8)
     val key = 7L * 2654435761L % 1000000007L
     val q = spark.read.format("graft-store").load(dir).filter(col("key") === key)
@@ -51,7 +48,7 @@ class GraftStoreBloomSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("absent key: definite absence skips everything, result is empty") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     writeShuffled(dir, 10000, 6)
     val q = spark.read.format("graft-store").load(dir)
       .filter(col("key") === 999999999999L)
@@ -61,7 +58,7 @@ class GraftStoreBloomSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("append inherits the bloom property; sidecars accumulate per commit") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     writeShuffled(dir, 5000, 4)
     // append WITHOUT the option: property inherited, new files indexed
     spark.range(100000, 102000).selectExpr("id as key", "id as v")
@@ -79,7 +76,7 @@ class GraftStoreBloomSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("IN-list probes every value; results match a full scan") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     writeShuffled(dir, 20000, 8)
     def k(i: Long) = i * 2654435761L % 1000000007L
     val keys = Seq(k(3), k(777), k(19999))
@@ -92,7 +89,7 @@ class GraftStoreBloomSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("runtime join keys probe blooms (bloom cols are filter attributes)") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     writeShuffled(dir, 20000, 8)
     def k(i: Long) = i * 2654435761L % 1000000007L
     val dim = spark.range(0, 200)
@@ -108,7 +105,7 @@ class GraftStoreBloomSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("overwrite resets property and sidecars; stale entries drop at render") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     writeShuffled(dir, 5000, 4)
     spark.range(0, 100).selectExpr("id as key", "id as v")
       .write.format("graft-store").mode("overwrite").save(dir)
@@ -119,7 +116,7 @@ class GraftStoreBloomSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("expiry reclaims sidecars only when no retained snapshot references them") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     writeShuffled(dir, 3000, 3) // snap 0 (bloom sidecars)
     spark.range(0, 10).selectExpr("id as key", "id as v")
       .write.format("graft-store").mode("overwrite").save(dir) // snap 1, no blooms
@@ -140,7 +137,7 @@ class GraftStoreBloomSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("time travel to a bloom-indexed snapshot still prunes and reads correctly") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     writeShuffled(dir, 10000, 5) // snap 0
     spark.range(0, 10).selectExpr("id * 2654435761 % 1000000007 as key", "id + 50000 as v")
       .write.format("graft-store").mode("append").save(dir) // snap 1
@@ -151,7 +148,7 @@ class GraftStoreBloomSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("declaring a bloom column of unsupported type fails loudly") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     val e = intercept[Exception] {
       spark.range(0, 10).selectExpr("id as key", "cast(id as double) as d")
         .write.format("graft-store").option("bloomCols", "d")

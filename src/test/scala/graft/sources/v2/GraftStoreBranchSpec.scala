@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,11 +14,8 @@ class GraftStoreBranchSpec extends AnyFunSuite with graft.SparkTestBase {
 
   import spark.implicits._
 
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-branch").toString
-
   test("branch writes are invisible to main; branch reads see the lineage") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 20).toDF("id").write.format("graft-store")
       .mode("overwrite").save(dir)
     GraftStoreOps.createBranch(spark, dir, "exp", 0)
@@ -43,7 +40,7 @@ class GraftStoreBranchSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("fast-forward of a diverged branch fails loudly") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 10).toDF("id").write.format("graft-store")
       .mode("overwrite").save(dir)
     GraftStoreOps.createBranch(spark, dir, "b1", 0)
@@ -61,7 +58,7 @@ class GraftStoreBranchSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("branch/tag kinds are enforced; unbranched fast-forward is a no-op") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 5).toDF("id").write.format("graft-store")
       .mode("overwrite").save(dir)
     GraftStoreOps.tagSnapshot(spark, dir, "a-tag", 0)
@@ -78,7 +75,7 @@ class GraftStoreBranchSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("the change feed ignores branch commits until fast-forward") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 10).toDF("id").write.format("graft-store")
       .mode("overwrite").save(dir)
     GraftStoreOps.createBranch(spark, dir, "feedb", 0)
@@ -93,7 +90,7 @@ class GraftStoreBranchSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("tbl$refs metadata table lists tags and branches") {
-    val dir0 = tmpDir()
+    val dir0 = Fixture.dir()
     val base = new java.io.File(dir0).getParent
     val name = new java.io.File(dir0).getName
     spark.conf.set("spark.sql.catalog.refmcat", "graft.sources.v2.GraftCatalog")
@@ -109,7 +106,7 @@ class GraftStoreBranchSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("expiry keeps the branch tip alive past keepLast") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 10).toDF("id").write.format("graft-store")
       .mode("overwrite").save(dir)
     GraftStoreOps.createBranch(spark, dir, "keepme", 0)

@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -17,9 +17,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * ids (and fix null identity keys, see GraftStoreSpjSpec's sibling). */
 class GraftStoreBucketSpec extends AnyFunSuite with graft.SparkTestBase {
 
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-store-bucket").toString
-
   private def withConf[T](pairs: (String, String)*)(body: => T): T = {
     val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
     pairs.foreach { case (k, v) => spark.conf.set(k, v) }
@@ -31,7 +28,7 @@ class GraftStoreBucketSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("bucket write: file count bounded by n on a high-cardinality key") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     // 10k DISTINCT keys — identity partitioning would refuse (1000/task cap)
     spark.range(0, 10000).selectExpr("id", "id * 7 as key")
       .write.format("graft-store").option("partitionBy", "bucket(8,key)")
@@ -74,7 +71,7 @@ class GraftStoreBucketSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("co-bucketed tables join with zero exchange through the catalog") {
-    val base = tmpDir()
+    val base = Fixture.dir()
     spark.range(0, 2000)
       .selectExpr("id as ka", "id * 2 as va")
       .write.format("graft-store").option("partitionBy", "bucket(8,ka)")
@@ -101,7 +98,7 @@ class GraftStoreBucketSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("aggregate on the bucket key after the join stays exchange-free") {
-    val base = tmpDir()
+    val base = Fixture.dir()
     spark.range(0, 3000)
       .selectExpr("id % 500 as k", "id as va")
       .write.format("graft-store").option("partitionBy", "bucket(4,k)")
@@ -131,7 +128,7 @@ class GraftStoreBucketSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("null keys bucket to a dedicated partition and never join") {
-    val base = tmpDir()
+    val base = Fixture.dir()
     spark.range(0, 100)
       .selectExpr("if(id % 10 = 0, null, id) as k", "id as v")
       .write.format("graft-store").option("partitionBy", "bucket(4,k)")
@@ -158,7 +155,7 @@ class GraftStoreBucketSpec extends AnyFunSuite with graft.SparkTestBase {
 
   test("append keeps the bucket layout; a different layout is rejected") {
     import spark.implicits._
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     Seq((1L, 10L)).toDF("id", "k").write.format("graft-store")
       .option("partitionBy", "bucket(4,k)").mode("overwrite").save(dir)
     // whitespace variants normalize to the same canonical layout
@@ -173,7 +170,7 @@ class GraftStoreBucketSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("compaction preserves the bucket layout") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     val df = spark.range(0, 400).selectExpr("id", "id * 13 as k")
     df.filter(col("id") < 200).write.format("graft-store")
       .option("partitionBy", "bucket(4,k)").mode("overwrite").save(dir)
@@ -189,7 +186,7 @@ class GraftStoreBucketSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("bucket is SQL-callable through the catalog and matches the writer") {
-    val base = tmpDir()
+    val base = Fixture.dir()
     withConf(
       "spark.sql.catalog.gbfn" -> classOf[GraftCatalog].getName,
       "spark.sql.catalog.gbfn.base" -> base) {
@@ -208,7 +205,7 @@ class GraftStoreBucketSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("string keys bucket and SPJ like numeric ones") {
-    val base = tmpDir()
+    val base = Fixture.dir()
     spark.range(0, 600).selectExpr("concat('user-', id % 200) as k", "id as va")
       .write.format("graft-store").option("partitionBy", "bucket(4,k)")
       .mode("overwrite").save(s"$base/sa")
@@ -230,7 +227,7 @@ class GraftStoreBucketSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("additive evolution on a partitioned table keeps SPJ grouping") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 40).selectExpr("id", "cast(id % 4 as int) as k")
       .write.format("graft-store").option("partitionBy", "k")
       .mode("overwrite").save(dir)
@@ -248,7 +245,7 @@ class GraftStoreBucketSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("composite spec (identity + bucket): pruning AND zero-exchange SPJ") {
-    val base = tmpDir()
+    val base = Fixture.dir()
     // the canonical lakehouse layout: partition by day, bucket by key
     spark.range(0, 1200)
       .selectExpr("cast(id % 3 as int) as day", "id % 300 as k", "id as va")
@@ -294,14 +291,14 @@ class GraftStoreBucketSpec extends AnyFunSuite with graft.SparkTestBase {
     for (bad <- Seq("bucket(8)", "bucket()", "BUCKET(x,k)")) {
       val err = intercept[Exception] {
         Seq((1L, 2L)).toDF("id", "k").write.format("graft-store")
-          .option("partitionBy", bad).mode("overwrite").save(tmpDir())
+          .option("partitionBy", bad).mode("overwrite").save(Fixture.dir())
       }
       assert(err.getMessage.contains("bucket"), s"$bad: ${err.getMessage}")
     }
   }
 
   test("identity layout with NULL partition values keeps SPJ grouping") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 90)
       .selectExpr("id", "if(id % 3 = 0, null, cast(id % 3 as int)) as k")
       .write.format("graft-store").option("partitionBy", "k")

@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,9 +11,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * JoinEstimation get real numbers without an ANALYZE job. */
 class GraftStoreCboStatsSpec extends AnyFunSuite with graft.SparkTestBase {
 
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-cbo").toString
-
   private def withCbo[A](f: => A): A = {
     val old = spark.conf.get("spark.sql.cbo.enabled", "false")
     spark.conf.set("spark.sql.cbo.enabled", "true")
@@ -21,7 +18,7 @@ class GraftStoreCboStatsSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("column stats reach the optimizer's attribute map under CBO") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 1000)
       .selectExpr("id", "cast(id % 4 as string) as k",
         "cast(id as double) * 2.5 as score")
@@ -46,7 +43,7 @@ class GraftStoreCboStatsSpec extends AnyFunSuite with graft.SparkTestBase {
 
   test("null counts are exact; stats survive filters on other columns") {
     import spark.implicits._
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     Seq((1L, Some(1.0)), (2L, None), (3L, Some(9.0)), (4L, None))
       .toDF("id", "v").coalesce(1)
       .write.format("graft-store").mode("overwrite").save(dir)
@@ -60,7 +57,7 @@ class GraftStoreCboStatsSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("CBO filter estimation uses the ranges: selective filters shrink estimates") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 10000).selectExpr("id", "id * 2 as v")
       .coalesce(2).write.format("graft-store").mode("overwrite").save(dir)
     withCbo {

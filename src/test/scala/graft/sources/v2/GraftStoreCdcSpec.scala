@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,9 +10,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * loud failure on unreconstructable commits, exactly-once restart. */
 class GraftStoreCdcSpec extends AnyFunSuite with graft.SparkTestBase {
 
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-store-cdc").toString
-
   private def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, String, Long)] =
     df.select("id", "v", "change_type", "_commit_snapshot").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3))).toSet
@@ -21,7 +18,7 @@ class GraftStoreCdcSpec extends AnyFunSuite with graft.SparkTestBase {
     spark.read.format("graft-store").option("readChangeFeed", "true").load(dir)
 
   test("batch feed: appends are inserts, COW update/delete carry image pairs") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 40).selectExpr("id", "id * 10 as v")
       .repartitionByRange(4, col("id"))
       .write.format("graft-store").mode("append").save(dir) // snap 0
@@ -38,7 +35,7 @@ class GraftStoreCdcSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("batch feed honors startSnapshot/endSnapshot (both inclusive)") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 10).selectExpr("id", "id as v")
       .write.format("graft-store").mode("append").save(dir) // snap 0
     GraftStoreOps.deleteWhere(spark, dir, col("id") === 1L) // snap 1
@@ -55,7 +52,7 @@ class GraftStoreCdcSpec extends AnyFunSuite with graft.SparkTestBase {
 
   test("merge emits inserts + changed-row image pairs; no-op upserts nothing") {
     import spark.implicits._
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 10).selectExpr("id", "id * 2 as v")
       .write.format("graft-store").mode("append").save(dir) // snap 0
     // 3 -> changed value, 4 -> IDENTICAL value (no-op), 100 -> new key
@@ -71,8 +68,8 @@ class GraftStoreCdcSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("streaming feed tails live DML; checkpoint restart replays nothing") {
-    val dir = tmpDir()
-    val ckpt = tmpDir()
+    val dir = Fixture.dir()
+    val ckpt = Fixture.dir()
     spark.range(0, 20).selectExpr("id", "id as v")
       .write.format("graft-store").mode("append").save(dir) // snap 0
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, String, Long)]()
@@ -109,7 +106,7 @@ class GraftStoreCdcSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("a file-removing commit without a change log fails loudly; skippable") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 10).selectExpr("id", "id as v")
       .write.format("graft-store").mode("append").save(dir) // snap 0
     spark.range(50, 55).selectExpr("id", "id as v")
@@ -125,7 +122,7 @@ class GraftStoreCdcSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("per-commit feed concatenation equals changesBetween on disjoint keys") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 30).selectExpr("id", "id * 3 as v")
       .repartitionByRange(3, col("id"))
       .write.format("graft-store").mode("append").save(dir) // snap 0
@@ -144,7 +141,7 @@ class GraftStoreCdcSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("expireSnapshots drops change stores with their snapshots, keeps live ones") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     val conf = spark.sparkContext.hadoopConfiguration
     spark.range(0, 10).selectExpr("id", "id as v")
       .coalesce(1) // one multi-row file: single-id deletes stay PARTIAL
@@ -173,7 +170,7 @@ class GraftStoreCdcSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("a position recorded by two delete stores is one delete, emitted once") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = GraftStoreFormat.fs(dir, conf)
     spark.range(0, 20).selectExpr("id", "id * 10 as v").coalesce(1)

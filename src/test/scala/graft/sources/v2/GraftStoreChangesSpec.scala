@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,16 +11,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * scan is bounded by the CHANGED files. */
 class GraftStoreChangesSpec extends AnyFunSuite with graft.SparkTestBase {
 
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-store-changes").toString
-
   private def feed(path: String, from: Int, to: Int) =
     GraftStoreOps.changesBetween(spark, path, from, to, "id")
       .select("id", "v", "change_type").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
 
   test("COW update yields exactly pre/post images; carried rows cancel") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 100).selectExpr("id", "id * 10 as v")
       .repartitionByRange(4, col("id"))
       .write.format("graft-store").mode("overwrite").save(dir) // snapshot 0
@@ -34,7 +31,7 @@ class GraftStoreChangesSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("appends surface as inserts, deletes as deletes, net across range") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 10).selectExpr("id", "id as v")
       .write.format("graft-store").mode("overwrite").save(dir) // snap 0
     spark.range(10, 15).selectExpr("id", "id as v")
@@ -47,7 +44,7 @@ class GraftStoreChangesSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("delete-then-reinsert of an identical row is NO net change") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 20).selectExpr("id", "id * 2 as v")
       .write.format("graft-store").mode("overwrite").save(dir) // snap 0
     GraftStoreOps.deleteWhere(spark, dir, col("id") === 5L) // snap 1
@@ -60,14 +57,14 @@ class GraftStoreChangesSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("identical endpoints produce an empty feed without reading data") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 50).selectExpr("id", "id as v")
       .write.format("graft-store").mode("overwrite").save(dir)
     assert(feed(dir, 0, 0) === Set.empty)
   }
 
   test("restore rolls the head back metadata-only; feed shows the undo") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 30).selectExpr("id", "id as v")
       .write.format("graft-store").mode("overwrite").save(dir) // snap 0
     GraftStoreOps.deleteWhere(spark, dir, col("id") < 10L) // snap 1
@@ -88,7 +85,7 @@ class GraftStoreChangesSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("schema change across the range is rejected loudly") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 5).selectExpr("id", "id as v")
       .write.format("graft-store").mode("overwrite").save(dir)
     spark.range(0, 5).selectExpr("id", "id as v", "id as extra")

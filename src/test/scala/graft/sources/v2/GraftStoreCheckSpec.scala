@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,11 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * fails the whole write — the manifest is never touched. */
 class GraftStoreCheckSpec extends AnyFunSuite with graft.SparkTestBase {
 
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-store-check").toString
-
   test("declared constraint persists and rejects violating appends atomically") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 50).selectExpr("id", "id * 10 as v")
       .write.format("graft-store").option("check", "v >= 0")
       .mode("overwrite").save(dir)
@@ -37,7 +34,7 @@ class GraftStoreCheckSpec extends AnyFunSuite with graft.SparkTestBase {
 
   test("NULL constraint results pass (SQL CHECK semantics)") {
     import spark.implicits._
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     Seq((1L, java.lang.Long.valueOf(5L)), (2L, null.asInstanceOf[java.lang.Long]))
       .toDF("id", "v")
       .write.format("graft-store").option("check", "v > 0")
@@ -46,7 +43,7 @@ class GraftStoreCheckSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("COW UPDATE cannot set values that violate the constraint") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 100).selectExpr("id", "id * 2 as v")
       .repartitionByRange(4, col("id"))
       .write.format("graft-store").option("check", "v >= 0")
@@ -70,7 +67,7 @@ class GraftStoreCheckSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("conflicting check option on append fails; overwrite changes it") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 10).selectExpr("id", "id as v")
       .write.format("graft-store").option("check", "v >= 0")
       .mode("overwrite").save(dir)
@@ -93,10 +90,10 @@ class GraftStoreCheckSpec extends AnyFunSuite with graft.SparkTestBase {
 
   test("streaming epochs enforce the table constraint") {
     import spark.implicits._
-    val src = tmpDir()
-    val dir = tmpDir()
-    val ckpt = tmpDir()
-    val seed = tmpDir() + "/seed"
+    val src = Fixture.dir()
+    val dir = Fixture.dir()
+    val ckpt = Fixture.dir()
+    val seed = Fixture.dir() + "/seed"
     spark.range(0, 10).selectExpr("id", "id as v").write.parquet(seed)
     spark.read.parquet(seed)
       .write.format("graft-store").option("check", "v >= 0")
@@ -113,7 +110,7 @@ class GraftStoreCheckSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("compaction preserves the constraint (maintenance must not drop it)") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 100).selectExpr("id", "id as v")
       .write.format("graft-store").option("check", "v >= 0")
       .mode("overwrite").save(dir)
@@ -131,9 +128,9 @@ class GraftStoreCheckSpec extends AnyFunSuite with graft.SparkTestBase {
 
   test("a constraint declared by a STREAM on a fresh table is persisted") {
     import spark.implicits._
-    val src = tmpDir()
-    val dir = tmpDir()
-    val ckpt = tmpDir()
+    val src = Fixture.dir()
+    val dir = Fixture.dir()
+    val ckpt = Fixture.dir()
     Seq((1L, 10L), (2L, 20L)).toDF("id", "v")
       .coalesce(1).write.mode("append").parquet(src)
     val q = spark.readStream.schema("id BIGINT, v BIGINT").parquet(src)
@@ -151,7 +148,7 @@ class GraftStoreCheckSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("type coercion works in constraints (int literal vs double column)") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 5).selectExpr("id", "cast(id as double) / 2 as ratio")
       .write.format("graft-store").option("check", "ratio < 10 AND id >= 0")
       .mode("overwrite").save(dir)

@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,9 +11,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * now including STRING stats — prune equality/range/IN predicates on the
   * cluster column to the few files that hold them. */
 class GraftStoreClusterSpec extends AnyFunSuite with graft.SparkTestBase {
-
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-store-cluster").toString
 
   // cluster-key values that exercise every structural byte of the stats
   // wire format (`:` `|` tab newline `%`) — they must round-trip the
@@ -38,7 +35,7 @@ class GraftStoreClusterSpec extends AnyFunSuite with graft.SparkTestBase {
 
   test("clusterBy: disjoint file ranges, string-stat pruning, exact results") {
     import spark.implicits._
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     (0 until 800).map(i => (i.toLong, cats(i % 8))).toDF("id", "cat")
       .write.format("graft-store")
       .option("clusterBy", "cat").option("clusterFiles", "4")
@@ -73,7 +70,7 @@ class GraftStoreClusterSpec extends AnyFunSuite with graft.SparkTestBase {
 
   test("empty partitions are dropped at the commit point") {
     import spark.implicits._
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     // hash-repartition on a constant: 1 of 8 partitions holds every row
     spark.range(0, 10).toDF("id").repartition(8, lit(0))
       .write.format("graft-store").mode("overwrite").save(dir)
@@ -84,7 +81,7 @@ class GraftStoreClusterSpec extends AnyFunSuite with graft.SparkTestBase {
 
   test("non-ASCII cluster keys: binary-order stats stay consistent with scans") {
     import spark.implicits._
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     val words = Seq("zebra", "Ångström", "éclair", "愛", "apple")
     (0 until 100).map(i => (i.toLong, words(i % 5))).toDF("id", "w")
       .write.format("graft-store")
@@ -113,7 +110,7 @@ class GraftStoreClusterSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("declared clustering survives compaction (OPTIMIZE repairs layout)") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     val df = spark.range(0, 1000).selectExpr("id", "id * 3 as v")
     df.filter(col("id") < 500).write.format("graft-store")
       .option("clusterBy", "id").option("clusterFiles", "4")
@@ -134,7 +131,7 @@ class GraftStoreClusterSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("COW delete keeps the clustered layout range-disjoint") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 1000).selectExpr("id", "id * 7 as v")
       .write.format("graft-store")
       .option("clusterBy", "id").option("clusterFiles", "5")
@@ -154,10 +151,10 @@ class GraftStoreClusterSpec extends AnyFunSuite with graft.SparkTestBase {
 
   test("streaming append carries the partition header; compaction restores SPJ") {
     import spark.implicits._
-    val src = tmpDir()
-    val dir = tmpDir()
-    val ckpt = tmpDir()
-    val seed = tmpDir() + "/seed"
+    val src = Fixture.dir()
+    val dir = Fixture.dir()
+    val ckpt = Fixture.dir()
+    val seed = Fixture.dir() + "/seed"
     // seed through parquet so batch and stream agree on (nullable) schema
     spark.range(0, 40).selectExpr("id", "cast(id % 4 as int) as k")
       .write.parquet(seed)
@@ -188,7 +185,7 @@ class GraftStoreClusterSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("resortOverlapping rewrites only the overlapping slice; idempotent") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 4000).selectExpr("id", "id * 2 as v")
       .write.format("graft-store")
       .option("clusterBy", "id").option("clusterFiles", "4")
@@ -220,7 +217,7 @@ class GraftStoreClusterSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("reported ordering elides per-partition sorts; unsorted appends clear it") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 4000).selectExpr("id", "id * 2 as v")
       .write.format("graft-store")
       .option("clusterBy", "id").option("clusterFiles", "4")
@@ -250,7 +247,7 @@ class GraftStoreClusterSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("resortOverlapping refuses an uncluster-declared table") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 10).selectExpr("id")
       .write.format("graft-store").mode("overwrite").save(dir)
     val e = intercept[IllegalArgumentException] {

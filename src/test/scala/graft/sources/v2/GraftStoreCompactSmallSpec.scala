@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,15 +12,12 @@ class GraftStoreCompactSmallSpec extends AnyFunSuite with graft.SparkTestBase {
 
   import spark.implicits._
 
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-compact-small").toString
-
   private def fileNames(dir: String): Set[String] =
     GraftStoreFormat.readLatestManifest(
       dir, spark.sparkContext.hadoopConfiguration).get.files.map(_.name).toSet
 
   test("compactWhere scopes the rewrite to the matching partition only") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     // day-partitioned table, 3 small epoch appends per day
     (0 until 3).foreach { i =>
       Seq.tabulate(40)(j => (s"d${j % 2}", i * 100L + j)).toDF("day", "v")
@@ -54,7 +51,7 @@ class GraftStoreCompactSmallSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("small files merge; the big file carries untouched") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     // one big file (5000 rows) ...
     spark.range(0, 5000).coalesce(1).selectExpr("id", "repeat('x', 30) as pad")
       .write.format("graft-store").mode("overwrite").save(dir)
@@ -80,7 +77,7 @@ class GraftStoreCompactSmallSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("no-op when nothing is worth merging") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 1000).coalesce(1).selectExpr("id")
       .write.format("graft-store").mode("overwrite").save(dir)
     val before = fileNames(dir)
@@ -91,7 +88,7 @@ class GraftStoreCompactSmallSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("rewriting a masked small file repays its read debt") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 100).coalesce(1).selectExpr("id")
       .write.format("graft-store").option("dmlMode", "mor")
       .mode("overwrite").save(dir)
@@ -109,7 +106,7 @@ class GraftStoreCompactSmallSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("partitioned tables keep their layout through small-file compaction") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 40).selectExpr("id", "id % 2 as part")
       .write.format("graft-store").option("partitionBy", "part")
       .mode("overwrite").save(dir)

@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,16 +17,14 @@ class GraftStoreDecimalSpec extends AnyFunSuite with graft.SparkTestBase {
   import spark.implicits._
 
   private lazy val catBase: String = {
-    val base = Files.createTempDirectory("graft-dec").toString
+    val base = Fixture.dir()
     spark.conf.set("spark.sql.catalog.deccat", "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.deccat.base", base)
     base
   }
 
-  private def tmp(): String = Files.createTempDirectory("graft-dec-t").toString
-
   test("round-trip: exact values, nulls, pruned projection") {
-    val dir = tmp()
+    val dir = Fixture.dir()
     spark.range(0, 1000)
       .select(col("id"),
         when(col("id") % 100 === 0, lit(null))
@@ -48,7 +46,7 @@ class GraftStoreDecimalSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("min/max stats skip files on decimal predicates, exactly") {
-    val dir = tmp()
+    val dir = Fixture.dir()
     spark.range(0, 8000)
       .select(col("id"), (col("id").cast("decimal(14,2)") / 100).as("price"))
       .repartitionByRange(8, col("price"))
@@ -137,7 +135,7 @@ class GraftStoreDecimalSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("min/max aggregate pushdown serves decimal from the manifest") {
-    val dir = tmp()
+    val dir = Fixture.dir()
     spark.range(0, 1000)
       .select(col("id"), (col("id").cast("decimal(12,2)") / 8).as("amt"))
       .repartition(4).write.format("graft-store").mode("overwrite").save(dir)
@@ -153,7 +151,7 @@ class GraftStoreDecimalSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("metadata-only DELETE proves full coverage on a decimal predicate") {
-    val dir = tmp()
+    val dir = Fixture.dir()
     // four files with EXACT disjoint price ranges [0,10) [10,20) ...
     (0 until 4).foreach { i =>
       spark.range(i * 1000, (i + 1) * 1000)
@@ -178,7 +176,7 @@ class GraftStoreDecimalSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("WIDE decimal (p>18): 16-byte codec round-trips beyond-long values exactly") {
-    val dir = tmp()
+    val dir = Fixture.dir()
     // values whose unscaled form exceeds Long.MaxValue in both signs
     val big = Seq(
       (1L, "12345678901234567890.123456"),
@@ -203,7 +201,7 @@ class GraftStoreDecimalSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("WIDE decimal stats: BigInteger min/max skip files; metadata-only DELETE") {
-    val dir = tmp()
+    val dir = Fixture.dir()
     // shift well beyond long range so stats text exercises BigInteger
     spark.range(0, 8000)
       .select(col("id"),

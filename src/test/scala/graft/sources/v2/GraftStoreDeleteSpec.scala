@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,11 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * null semantics, snapshot history, and partition-layout retention. */
 class GraftStoreDeleteSpec extends AnyFunSuite with graft.SparkTestBase {
 
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-store-delete").toString
-
   test("delete rewrites only the files the predicate can touch") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 1000).selectExpr("id", "id * 2 as v")
       .repartitionByRange(4, col("id"))
       .write.format("graft-store").mode("overwrite").save(dir)
@@ -31,7 +28,7 @@ class GraftStoreDeleteSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("delete matching nothing carries every file") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 100).selectExpr("id", "id * 2 as v")
       .repartitionByRange(4, col("id"))
       .write.format("graft-store").mode("overwrite").save(dir)
@@ -43,7 +40,7 @@ class GraftStoreDeleteSpec extends AnyFunSuite with graft.SparkTestBase {
 
   test("SQL DELETE null semantics: null predicate keeps the row") {
     import spark.implicits._
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     Seq((1L, Some(1.0)), (2L, None), (3L, Some(9.0)))
       .toDF("id", "score")
       .write.format("graft-store").mode("overwrite").save(dir)
@@ -55,7 +52,7 @@ class GraftStoreDeleteSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("delete on a partitioned table keeps the layout and SPJ grouping") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 400).selectExpr("id", "cast(id % 4 as int) as k")
       .write.format("graft-store").option("partitionBy", "k")
       .mode("overwrite").save(dir)
@@ -72,7 +69,7 @@ class GraftStoreDeleteSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("update rewrites only may-match files and applies set expressions") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 1000).selectExpr("id", "id * 2 as v")
       .repartitionByRange(4, col("id"))
       .write.format("graft-store").mode("overwrite").save(dir)
@@ -87,7 +84,7 @@ class GraftStoreDeleteSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("updating the partition column itself keeps one-value-per-file") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 400).selectExpr("id", "cast(id % 4 as int) as k")
       .write.format("graft-store").option("partitionBy", "k")
       .mode("overwrite").save(dir)
@@ -106,7 +103,7 @@ class GraftStoreDeleteSpec extends AnyFunSuite with graft.SparkTestBase {
 
   test("merge: updates matched rows, inserts new keys, prunes by source key range") {
     import spark.implicits._
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 1000).selectExpr("id", "id * 2 as v")
       .repartitionByRange(4, col("id"))
       .write.format("graft-store").mode("overwrite").save(dir)
@@ -126,7 +123,7 @@ class GraftStoreDeleteSpec extends AnyFunSuite with graft.SparkTestBase {
     // narrow-range source against a FRESH range-laid table (the merge above
     // rewrote and AQE-coalesced the first table's layout): only the file
     // holding [0, 250) is touched
-    val dir2 = tmpDir()
+    val dir2 = Fixture.dir()
     spark.range(0, 1000).selectExpr("id", "id * 2 as v")
       .repartitionByRange(4, col("id"))
       .write.format("graft-store").mode("overwrite").save(dir2)
@@ -141,7 +138,7 @@ class GraftStoreDeleteSpec extends AnyFunSuite with graft.SparkTestBase {
 
   test("merge with keys beyond every file range still inserts") {
     import spark.implicits._
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 100).selectExpr("id", "id * 2 as v")
       .write.format("graft-store").mode("overwrite").save(dir)
     val source = Seq((90000L, 1L), (90001L, 2L)).toDF("id", "v")
@@ -153,7 +150,7 @@ class GraftStoreDeleteSpec extends AnyFunSuite with graft.SparkTestBase {
 
   test("merge rejects duplicate source keys") {
     import spark.implicits._
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 10).selectExpr("id", "id as v")
       .write.format("graft-store").mode("overwrite").save(dir)
     val dup = Seq((1L, 7L), (1L, 8L)).toDF("id", "v")
@@ -164,7 +161,7 @@ class GraftStoreDeleteSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("SQL DELETE FROM routes through the COW kernel via the catalog") {
-    val base = tmpDir()
+    val base = Fixture.dir()
     spark.conf.set("spark.sql.catalog.graftdel", "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.graftdel.base", base)
     spark.range(0, 100).selectExpr("id", "id * 2 as v")
@@ -178,7 +175,7 @@ class GraftStoreDeleteSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("UPDATE with a wider-typed SET value keeps the declared column type") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 50).selectExpr("id", "cast(id as int) as v")
       .write.format("graft-store").mode("overwrite").save(dir)
     // a LONG literal into an INT column: the kernel casts to the declared
@@ -195,7 +192,7 @@ class GraftStoreDeleteSpec extends AnyFunSuite with graft.SparkTestBase {
 
   test("MERGE with a mismatched source column type is rejected loudly") {
     import spark.implicits._
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 10).selectExpr("id", "cast(id as int) as v")
       .write.format("graft-store").mode("overwrite").save(dir)
     val err = intercept[IllegalArgumentException] {
@@ -206,7 +203,7 @@ class GraftStoreDeleteSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("untranslatable predicates fall back to rewriting every file, correctly") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 100).selectExpr("id", "cast(id as string) as s")
       .repartitionByRange(4, col("id"))
       .write.format("graft-store").mode("overwrite").save(dir)

@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,9 +15,6 @@ class GraftStoreEqCdcResolveSpec extends AnyFunSuite with graft.SparkTestBase {
 
   import spark.implicits._
 
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-eqcdc").toString
-
   private def seed(dir: String): Unit =
     spark.range(0, 100).selectExpr("id", "id * 2 as v")
       .repartitionByRange(2, col("id"))
@@ -25,7 +22,7 @@ class GraftStoreEqCdcResolveSpec extends AnyFunSuite with graft.SparkTestBase {
       .mode("overwrite").save(dir)
 
   test("default stays loud; resolveEqDeletes emits exact delete pre-images") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     seed(dir)
     GraftStoreOps.upsertMor(spark, dir,
       (0L until 10L).map(i => (i, i * 7)).toDF("id", "v"), Seq("id"))
@@ -53,7 +50,7 @@ class GraftStoreEqCdcResolveSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("already-dead rows never re-emit; delete-by-key of a missing key emits nothing") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     seed(dir)
     // kill ids 0-4 positionally first, then an eq delete spanning 0-9
     GraftStoreOps.deleteWhereMor(spark, dir, col("id") < 5)
@@ -78,12 +75,12 @@ class GraftStoreEqCdcResolveSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("streaming feed resolves eq commits with the flag") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     seed(dir)
     GraftStoreOps.upsertMor(spark, dir,
       (95L until 105L).map(i => (i, i * 7)).toDF("id", "v"), Seq("id"))
-    val out = Files.createTempDirectory("eqcdc-sink").toString
-    val ckpt = Files.createTempDirectory("eqcdc-ckpt").toString
+    val out = Fixture.dir()
+    val ckpt = Fixture.dir()
     val q = spark.readStream.format("graft-store")
       .option("readChangeFeed", "true").option("resolveEqDeletes", "true")
       .load(dir)

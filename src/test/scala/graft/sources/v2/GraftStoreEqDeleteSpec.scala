@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,9 +11,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * CDC-ingest architecture on the graft-store manifest. */
 class GraftStoreEqDeleteSpec extends AnyFunSuite with graft.SparkTestBase {
   import spark.implicits._
-
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-store-eqdel").toString
 
   private def manifest(dir: String): GraftManifest =
     GraftStoreFormat.readLatestManifest(
@@ -30,7 +27,7 @@ class GraftStoreEqDeleteSpec extends AnyFunSuite with graft.SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
 
   test("upsertMor: one commit, zero table reads, last wins") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     morTable(dir)
     val filesBefore = manifest(dir).files.map(_.name).toSet
     val snapsBefore = GraftStoreOps.snapshotCount(spark, dir)
@@ -50,7 +47,7 @@ class GraftStoreEqDeleteSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("strict addedSeq < seq: the upsert's own rows survive its delete") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     morTable(dir, 10)
     GraftStoreOps.upsertMor(spark, dir, Seq((3L, 1L)).toDF("id", "v"), Seq("id"))
     // the new version has addedSeq == the eq delete's seq — NOT masked
@@ -59,7 +56,7 @@ class GraftStoreEqDeleteSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("deleteByKeyMor masks by key without scanning") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     morTable(dir)
     val filesBefore = manifest(dir).files.map(_.name).toSet
     val nk = GraftStoreOps.deleteByKeyMor(spark, dir,
@@ -74,7 +71,7 @@ class GraftStoreEqDeleteSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("rows appended AFTER an equality delete are out of its scope") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     morTable(dir, 10)
     GraftStoreOps.deleteByKeyMor(spark, dir, Seq(3L).toDF("id"))
     // re-insert key 3 via a plain append: newer addedSeq, not masked
@@ -86,7 +83,7 @@ class GraftStoreEqDeleteSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("null key fields match null (structural equality)") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     Seq((Some(1L), 10L), (None, 20L), (Some(3L), 30L))
       .toDF("k", "v")
       .write.format("graft-store").option("dmlMode", "mor")
@@ -99,7 +96,7 @@ class GraftStoreEqDeleteSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("stacked upserts: the newest version wins, older ones stay dead") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     morTable(dir, 10)
     GraftStoreOps.upsertMor(spark, dir, Seq((4L, 1L)).toDF("id", "v"), Seq("id"))
     GraftStoreOps.upsertMor(spark, dir, Seq((4L, 2L)).toDF("id", "v"), Seq("id"))
@@ -111,7 +108,7 @@ class GraftStoreEqDeleteSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("composite keys: masking is tuple-exact") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 20)
       .selectExpr("id % 4 as a", "cast(id % 5 as int) as b", "id as v")
       .write.format("graft-store").option("dmlMode", "mor")
@@ -125,7 +122,7 @@ class GraftStoreEqDeleteSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("duplicate source keys are rejected; wrong key type is rejected") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     morTable(dir, 10)
     val dup = Seq((1L, 5L), (1L, 6L)).toDF("id", "v")
     val e1 = intercept[IllegalArgumentException] {
@@ -139,7 +136,7 @@ class GraftStoreEqDeleteSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("upsert enforces the CHECK constraint atomically") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 10).selectExpr("id", "cast(id as double) as price")
       .write.format("graft-store")
       .option("check", "price >= 0").option("dmlMode", "mor")
@@ -154,7 +151,7 @@ class GraftStoreEqDeleteSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("upsert on a partitioned table routes new versions per-value") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 40).selectExpr("id", "cast(id % 4 as int) as k")
       .write.format("graft-store")
       .option("partitionBy", "k").option("dmlMode", "mor")
@@ -171,7 +168,7 @@ class GraftStoreEqDeleteSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("purgeDeletes repays equality read debt; only scoped files rewrite") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     morTable(dir)
     GraftStoreOps.upsertMor(spark, dir, Seq((7L, 1L)).toDF("id", "v"), Seq("id"))
     val (rew, carried) = GraftStoreOps.purgeDeletes(spark, dir)
@@ -185,7 +182,7 @@ class GraftStoreEqDeleteSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("time travel to pre-upsert snapshots reads unmasked") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     morTable(dir, 10)
     GraftStoreOps.upsertMor(spark, dir, Seq((3L, 1L)).toDF("id", "v"), Seq("id"))
     val before = spark.read.format("graft-store").option("snapshot", 0).load(dir)
@@ -195,7 +192,7 @@ class GraftStoreEqDeleteSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("changesBetween across an upsert yields the exact net diff") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     morTable(dir, 20) // snap 0
     GraftStoreOps.upsertMor(spark, dir,
       Seq((5L, 1L), (300L, 2L)).toDF("id", "v"), Seq("id")) // snap 1
@@ -207,7 +204,7 @@ class GraftStoreEqDeleteSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("the CDC feed fails loudly on equality-delete commits; skippable") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     morTable(dir, 10) // snap 0
     GraftStoreOps.upsertMor(spark, dir, Seq((3L, 1L)).toDF("id", "v"), Seq("id")) // snap 1
     val err = intercept[Exception] {
@@ -223,7 +220,7 @@ class GraftStoreEqDeleteSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("expireSnapshots keeps live equality stores; masks survive expiry") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     morTable(dir, 10) // snap 0
     GraftStoreOps.deleteByKeyMor(spark, dir, Seq(3L).toDF("id")) // snap 1
     spark.range(100, 105).selectExpr("id", "id as v")
@@ -235,7 +232,7 @@ class GraftStoreEqDeleteSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("compaction folds equality masks in and clears them") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     morTable(dir, 50)
     GraftStoreOps.upsertMor(spark, dir,
       Seq((10L, 1L), (20L, 2L)).toDF("id", "v"), Seq("id"))
@@ -248,7 +245,7 @@ class GraftStoreEqDeleteSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("rejected duplicate-key upsert leaves no scratch dirs behind") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     morTable(dir, 10)
     val snapsBefore = GraftStoreOps.snapshotCount(spark, dir)
     val e = intercept[IllegalArgumentException] {
@@ -267,7 +264,7 @@ class GraftStoreEqDeleteSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("provably-empty replace source skips the data-scratch write job") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     morTable(dir, 10)
     val filesBefore = manifest(dir).files.map(_.name).toSet
     val jobs = new java.util.concurrent.atomic.AtomicInteger
@@ -298,7 +295,7 @@ class GraftStoreEqDeleteSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("zero-row scratch files are never committed into the table") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     morTable(dir, 10)
     // a COMPUTED source (not provably empty on the driver) whose write
     // leaves most partitions empty: any zero-row scratch file must stay

@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,15 +12,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * changes stay loud failures. */
 class GraftStoreEvolutionSpec extends AnyFunSuite with graft.SparkTestBase {
 
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-store-evolve").toString
-
   private def seed(dir: String): Unit =
     spark.range(0, 100).selectExpr("id", "id * 2 as v")
       .write.format("graft-store").mode("overwrite").save(dir)
 
   test("mergeSchema append adds a trailing nullable column without rewrite") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     seed(dir)
     val conf = spark.sparkContext.hadoopConfiguration
     val filesBefore = GraftStoreFormat.readLatestManifest(dir, conf).get
@@ -44,7 +41,7 @@ class GraftStoreEvolutionSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("projection and filters work across mixed-width files") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     seed(dir)
     spark.range(100, 130).selectExpr("id", "id * 2 as v", "cast(id * 1.5 as double) as score")
       .write.format("graft-store").option("mergeSchema", "true")
@@ -60,7 +57,7 @@ class GraftStoreEvolutionSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("two-step evolution records each epoch's width; first recording wins") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     seed(dir) // width 2
     spark.range(100, 110).selectExpr("id", "id * 2 as v", "concat('t', id) as tag")
       .write.format("graft-store").option("mergeSchema", "true")
@@ -80,7 +77,7 @@ class GraftStoreEvolutionSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("time travel reads a pre-evolution snapshot with its own schema") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     seed(dir)
     spark.range(100, 110).selectExpr("id", "id * 2 as v", "concat('t', id) as tag")
       .write.format("graft-store").option("mergeSchema", "true")
@@ -91,7 +88,7 @@ class GraftStoreEvolutionSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("COW delete on an evolved table keeps widths and upgrades rewrites") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     seed(dir)
     spark.range(100, 150).selectExpr("id", "id * 2 as v", "concat('t', id) as tag")
       .write.format("graft-store").option("mergeSchema", "true")
@@ -106,7 +103,7 @@ class GraftStoreEvolutionSpec extends AnyFunSuite with graft.SparkTestBase {
 
   test("non-additive changes are rejected even with mergeSchema") {
     import spark.implicits._
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     seed(dir)
     def fails(df: org.apache.spark.sql.DataFrame): Unit = {
       val err = intercept[Exception] {

@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,14 +11,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * correct across mixed specs and SPJ capability returns via compaction. */
 class GraftStoreLayoutEvolutionSpec extends AnyFunSuite with graft.SparkTestBase {
 
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-store-layoutevo").toString
-
   private def manifest(dir: String) = GraftStoreFormat.readLatestManifest(
     dir, spark.sparkContext.hadoopConfiguration).get
 
   test("evolution is metadata-only: same files, stamped spec ids, new history") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 100).selectExpr("id", "id % 10 as k")
       .repartition(3)
       .write.format("graft-store").mode("overwrite").save(dir) // snap 0, unpartitioned
@@ -35,7 +32,7 @@ class GraftStoreLayoutEvolutionSpec extends AnyFunSuite with graft.SparkTestBase
   }
 
   test("appends route under the new spec; reads stay correct across the mix") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 100).selectExpr("id", "id % 10 as k")
       .write.format("graft-store").mode("overwrite").save(dir)
     GraftStoreOps.evolvePartitionSpec(spark, dir, Some("bucket(4,k)"))
@@ -56,7 +53,7 @@ class GraftStoreLayoutEvolutionSpec extends AnyFunSuite with graft.SparkTestBase
   }
 
   test("mixed specs degrade grouping; compaction restores it and resets history") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 100).selectExpr("id", "id % 8 as k")
       .repartition(2)
       .write.format("graft-store").mode("overwrite").save(dir)
@@ -81,7 +78,7 @@ class GraftStoreLayoutEvolutionSpec extends AnyFunSuite with graft.SparkTestBase
   }
 
   test("appends declaring a stale layout are rejected after evolution") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 50).selectExpr("id", "id % 5 as k")
       .write.format("graft-store").option("partitionBy", "bucket(8,k)")
       .mode("overwrite").save(dir)
@@ -99,7 +96,7 @@ class GraftStoreLayoutEvolutionSpec extends AnyFunSuite with graft.SparkTestBase
   }
 
   test("evolving to a spec the schema cannot satisfy fails fast, commits nothing") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 20).selectExpr("id", "id % 3 as k", "cast(id as double) as d")
       .write.format("graft-store").mode("overwrite").save(dir)
     val before = GraftStoreOps.snapshotCount(spark, dir)
@@ -122,7 +119,7 @@ class GraftStoreLayoutEvolutionSpec extends AnyFunSuite with graft.SparkTestBase
   }
 
   test("repeated evolutions chain; first stamping wins for old files") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 60).selectExpr("id", "id % 6 as k", "id % 3 as grp")
       .write.format("graft-store").mode("overwrite").save(dir) // spec 0: none
     GraftStoreOps.evolvePartitionSpec(spark, dir, Some("grp")) // spec 1
@@ -144,7 +141,7 @@ class GraftStoreLayoutEvolutionSpec extends AnyFunSuite with graft.SparkTestBase
   }
 
   test("COW delete on an evolved table stamps rewrites, carries old-spec files") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 100).selectExpr("id", "id % 10 as k")
       .repartitionByRange(4, col("id"))
       .write.format("graft-store").mode("overwrite").save(dir)
@@ -160,7 +157,7 @@ class GraftStoreLayoutEvolutionSpec extends AnyFunSuite with graft.SparkTestBase
   }
 
   test("rewriteOldSpecFiles re-layouts ONLY old-spec files, keeps history") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 100).selectExpr("id", "id % 8 as k")
       .repartition(2)
       .write.format("graft-store").mode("overwrite").save(dir)
@@ -188,7 +185,7 @@ class GraftStoreLayoutEvolutionSpec extends AnyFunSuite with graft.SparkTestBase
   }
 
   test("time travel to a pre-evolution snapshot reads the old layout intact") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 90).selectExpr("id", "cast(id % 3 as int) as grp")
       .write.format("graft-store").option("partitionBy", "grp")
       .mode("overwrite").save(dir) // snap 0: identity(grp)

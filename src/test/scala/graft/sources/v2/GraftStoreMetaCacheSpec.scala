@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
@@ -15,9 +15,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class GraftStoreMetaCacheSpec extends AnyFunSuite with graft.SparkTestBase {
 
   import spark.implicits._
-
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-metacache").toString
 
   private def conf = spark.sparkContext.hadoopConfiguration
 
@@ -37,7 +34,7 @@ class GraftStoreMetaCacheSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("second scan of an unchanged table parses zero manifest bytes") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 2000).repartition(200).selectExpr("id", "id * 2 as v")
       .write.format("graft-store").mode("overwrite").save(dir)
     // warm: the first scan parses the manifest + its 200-file segments
@@ -54,7 +51,7 @@ class GraftStoreMetaCacheSpec extends AnyFunSuite with graft.SparkTestBase {
 
   test("a head advance re-parses only the churn (segments stay cached)") {
     eventually(3) {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     // 1000 files: content-defined chunking (boundary p = 1/64 per name)
     // yields ~16 chunks with near-certainty — a 200-file table can land in
     // ONE chunk (p ≈ 4%), where an append legitimately churns everything
@@ -89,7 +86,7 @@ class GraftStoreMetaCacheSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("table delete + recreate is never served stale metadata") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 50).selectExpr("id", "id * 3 as v")
       .write.format("graft-store").mode("overwrite").save(dir)
     assert(spark.read.format("graft-store").load(dir).count() === 50)
@@ -110,7 +107,7 @@ class GraftStoreMetaCacheSpec extends AnyFunSuite with graft.SparkTestBase {
     // granularity window — the key guard alone cannot tell them apart.
     // The seq-0 commit purges the path's cache entries (invalidateTable),
     // so even a forced exact key collision serves the new table.
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     val f = new Path(dir).getFileSystem(conf)
     spark.range(10, 15).selectExpr("id", "id * 2 as v")
       .write.format("graft-store").mode("overwrite").save(dir)
@@ -134,7 +131,7 @@ class GraftStoreMetaCacheSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("CALL procedures and CDC reads re-parse zero metadata on a warm cache") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.conf.set("spark.sql.catalog.mcproc", "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.mcproc.base", new Path(dir).getParent.toString)
     try {
@@ -169,7 +166,7 @@ class GraftStoreMetaCacheSpec extends AnyFunSuite with graft.SparkTestBase {
 
   test("rewrite probe: warm aggregates issue zero FS probes; a same-JVM " +
       "commit flips MV freshness immediately") {
-    val base = tmpDir()
+    val base = Fixture.dir()
     spark.conf.set("spark.sql.catalog.mcprobe", "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.mcprobe.base", base)
     // a large TTL makes the zero-FS-reads pin deterministic AND proves the
@@ -221,7 +218,7 @@ class GraftStoreMetaCacheSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("the OCC loop and concurrent commits stay correct under the cache") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 100).selectExpr("id", "id as v")
       .write.format("graft-store").mode("overwrite").save(dir)
     // interleave reads (cache populates) with appends (head advances):

@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,9 +12,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * the dropped rows as delete pre-images reader-side. */
 class GraftStoreMetaDropSpec extends AnyFunSuite with graft.SparkTestBase {
 
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-store-metadrop").toString
-
   private def conf = spark.sparkContext.hadoopConfiguration
   private def manifest(dir: String): GraftManifest =
     GraftStoreFormat.readLatestManifest(dir, conf).get
@@ -23,7 +20,7 @@ class GraftStoreMetaDropSpec extends AnyFunSuite with graft.SparkTestBase {
       .filter(_.startsWith("part-")).toSet
 
   test("fully-covered file drops metadata-only: no read, no rewrite") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 1000).selectExpr("id", "id * 2 as v")
       .repartitionByRange(4, col("id"))
       .write.format("graft-store").mode("overwrite").save(dir)
@@ -49,7 +46,7 @@ class GraftStoreMetaDropSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("bare DELETE (always-true) drops every file metadata-only") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 400).selectExpr("id", "id * 2 as v")
       .repartitionByRange(4, col("id"))
       .write.format("graft-store").mode("overwrite").save(dir)
@@ -64,7 +61,7 @@ class GraftStoreMetaDropSpec extends AnyFunSuite with graft.SparkTestBase {
 
   test("a possible null defeats the proof: the file rewrites instead") {
     import spark.implicits._
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     // one file, v nullable with an actual null: every non-null v is < 100,
     // but the null row must SURVIVE the delete (cond NULL keeps the row)
     Seq((1L, Some(5.0)), (2L, None), (3L, Some(7.0))).toDF("id", "v")
@@ -78,7 +75,7 @@ class GraftStoreMetaDropSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("negation and disjunction proofs (strict NOT needs null-freedom)") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 1000).selectExpr("id", "id * 2 as v")
       .repartitionByRange(4, col("id"))
       .write.format("graft-store").mode("overwrite").save(dir)
@@ -95,7 +92,7 @@ class GraftStoreMetaDropSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("identity partition value proves equality where string stats cap away") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     // 70-char partition values: the >64-char stat cap drops min/max, so
     // only the explicit partVals can prove full coverage
     spark.range(0, 300)
@@ -114,7 +111,7 @@ class GraftStoreMetaDropSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("change feed resolves dropped files as delete pre-images") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 100).selectExpr("id", "id * 2 as v")
       .repartitionByRange(2, col("id"))
       .write.format("graft-store").mode("overwrite").save(dir)
@@ -130,7 +127,7 @@ class GraftStoreMetaDropSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("drop synthesis applies prior position masks (already-dead rows stay dead)") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 100).selectExpr("id", "id * 2 as v")
       .repartitionByRange(2, col("id"))
       .write.format("graft-store").option("dmlMode", "mor")
@@ -153,7 +150,7 @@ class GraftStoreMetaDropSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("MOR delete mixes drops and masks; partial files keep exact positions") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 1000).selectExpr("id", "id * 2 as v")
       .repartitionByRange(4, col("id"))
       .write.format("graft-store").option("dmlMode", "mor")
@@ -173,7 +170,7 @@ class GraftStoreMetaDropSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("SQL DELETE through the catalog takes the metadata-only path") {
-    val base = tmpDir()
+    val base = Fixture.dir()
     spark.conf.set("spark.sql.catalog.dropcat", "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.dropcat.base", base)
     spark.range(0, 800).selectExpr("id", "id * 3 as v")

@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,9 +10,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * reads merge the masks back out, maintenance repays the read debt.
   * The Iceberg positional-delete shape on the graft-store manifest. */
 class GraftStoreMorSpec extends AnyFunSuite with graft.SparkTestBase {
-
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-store-mor").toString
 
   private def manifest(dir: String): GraftManifest =
     GraftStoreFormat.readLatestManifest(
@@ -26,7 +23,7 @@ class GraftStoreMorSpec extends AnyFunSuite with graft.SparkTestBase {
       .mode("overwrite").save(dir)
 
   test("MOR delete masks rows without touching data files") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     morTable(dir)
     val before = manifest(dir)
     assert(before.isMor && before.deletes.isEmpty)
@@ -50,7 +47,7 @@ class GraftStoreMorSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("SQL DELETE FROM routes to position deletes on a dmlMode=mor table") {
-    val base = tmpDir()
+    val base = Fixture.dir()
     spark.conf.set("spark.sql.catalog.graftmor", "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.graftmor.base", base)
     spark.range(0, 100).selectExpr("id", "id * 2 as v")
@@ -69,7 +66,7 @@ class GraftStoreMorSpec extends AnyFunSuite with graft.SparkTestBase {
 
   test("SQL null semantics: NULL predicate keeps the row") {
     import spark.implicits._
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     Seq((1L, Some(1.0)), (2L, None), (3L, Some(9.0))).toDF("id", "score")
       .write.format("graft-store").option("dmlMode", "mor")
       .mode("overwrite").save(dir)
@@ -80,7 +77,7 @@ class GraftStoreMorSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("(_file, _pos) is a stable row id across a MOR delete") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     morTable(dir)
     val df0 = spark.read.format("graft-store").load(dir)
     val idsBefore = df0.select(df0.metadataColumn("_file").as("f"),
@@ -99,7 +96,7 @@ class GraftStoreMorSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("delete-file covering ranges exclude untouched files") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     morTable(dir)
     // disjoint per-file id ranges: id < 200 lives in exactly one file
     // (partially — full coverage would metadata-drop it, leaving no mask)
@@ -112,7 +109,7 @@ class GraftStoreMorSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("successive deletes accumulate; a re-run matches nothing") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     morTable(dir)
     val (d1, _) = GraftStoreOps.deleteWhereMor(spark, dir, col("id") < 10)
     val (d2, _) = GraftStoreOps.deleteWhereMor(spark, dir, col("id") < 20)
@@ -124,7 +121,7 @@ class GraftStoreMorSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("appends ride along: masks keep covering old files only") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     morTable(dir)
     GraftStoreOps.deleteWhereMor(spark, dir, col("id") < 100)
     spark.range(5000, 5050).selectExpr("id", "id * 2 as v")
@@ -138,7 +135,7 @@ class GraftStoreMorSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("masks apply inside SPJ keyed groups on a partitioned table") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 400).selectExpr("id", "cast(id % 4 as int) as k")
       .write.format("graft-store")
       .option("partitionBy", "k").option("dmlMode", "mor")
@@ -151,7 +148,7 @@ class GraftStoreMorSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("purgeDeletes rewrites only covered files and clears the masks") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     morTable(dir)
     GraftStoreOps.deleteWhereMor(spark, dir, col("id") < 200)
     val (rewritten, carried) = GraftStoreOps.purgeDeletes(spark, dir)
@@ -168,7 +165,7 @@ class GraftStoreMorSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("compaction applies masks and publishes a delete-free snapshot") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     morTable(dir)
     GraftStoreOps.deleteWhereMor(spark, dir, col("id") >= 900)
     GraftStoreOps.compactSnapshot(spark, dir, targetBytes = 1L << 20)
@@ -180,7 +177,7 @@ class GraftStoreMorSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("CDC feed resolves MOR delete refs into full delete rows") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 40).selectExpr("id", "id * 10 as v")
       .repartitionByRange(4, col("id"))
       .write.format("graft-store").option("dmlMode", "mor")
@@ -196,8 +193,8 @@ class GraftStoreMorSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("streaming CDC tails MOR deletes live") {
-    val dir = tmpDir()
-    val ckpt = tmpDir()
+    val dir = Fixture.dir()
+    val ckpt = Fixture.dir()
     spark.range(0, 20).selectExpr("id", "id as v")
       .write.format("graft-store").option("dmlMode", "mor")
       .mode("append").save(dir) // snap 0
@@ -222,7 +219,7 @@ class GraftStoreMorSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("changesBetween re-reads only changed-coverage files across a MOR delete") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     morTable(dir) // snap 0
     GraftStoreOps.deleteWhereMor(spark, dir, col("id") < 5) // snap 1
     val net = GraftStoreOps.changesBetween(spark, dir, 0, 1, "id")
@@ -233,7 +230,7 @@ class GraftStoreMorSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("expireSnapshots treats live delete files as referenced") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     morTable(dir) // snap 0
     GraftStoreOps.deleteWhereMor(spark, dir, col("id") < 100) // snap 1
     spark.range(2000, 2010).selectExpr("id", "id * 2 as v")
@@ -244,7 +241,7 @@ class GraftStoreMorSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("purge after stacked deletes applies every mask") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     morTable(dir)
     GraftStoreOps.deleteWhereMor(spark, dir, col("id") < 10)
     GraftStoreOps.deleteWhereMor(spark, dir, col("id") >= 10 && col("id") < 20)
@@ -258,7 +255,7 @@ class GraftStoreMorSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("ALTER TABLE flips the DML mode; existing masks stay live") {
-    val base = tmpDir()
+    val base = Fixture.dir()
     spark.conf.set("spark.sql.catalog.graftmor2", "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.graftmor2.base", base)
     spark.range(0, 100).selectExpr("id", "id * 2 as v")

@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,16 +19,13 @@ class GraftStoreMultiAttrRuntimeSpec extends AnyFunSuite with graft.SparkTestBas
 
   import spark.implicits._
 
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-store-mattr").toString
-
   test("composite-key join prunes a bucket(n,a,b) table via per-key runtime INs") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 5000).selectExpr("id % 40 as a", "id % 23 as b", "id as v")
       .write.format("graft-store").option("partitionBy", "bucket(8,a,b)")
       .mode("overwrite").save(dir)
     val fact = spark.read.format("graft-store").load(dir)
-    val dimPath = tmpDir() + "/dim"
+    val dimPath = Fixture.dir() + "/dim"
     (0L until 40L).map(i => (i, i % 23, if (i < 2) "keep" else "drop"))
       .toDF("da", "db", "tag").write.mode("overwrite").parquet(dimPath)
     val dim = spark.read.parquet(dimPath).filter(col("tag") === "keep")
@@ -52,7 +49,7 @@ class GraftStoreMultiAttrRuntimeSpec extends AnyFunSuite with graft.SparkTestBas
   }
 
   test("a one-sided key still declines tuple-bucket pruning (conservative)") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 2000).selectExpr("id % 16 as a", "id % 7 as b", "id as v")
       .write.format("graft-store").option("partitionBy", "bucket(8,a,b)")
       .mode("overwrite").save(dir)

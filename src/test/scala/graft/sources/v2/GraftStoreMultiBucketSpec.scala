@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -22,9 +22,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * GraftStoreMultiAttrRuntimeSpec. */
 class GraftStoreMultiBucketSpec extends AnyFunSuite with graft.SparkTestBase {
 
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-store-mbucket").toString
-
   test("parse/render: multi-column bucket specs, composites, malformed rejected") {
     assert(GraftLayout.parse("bucket(4,a,b)").specs ===
       Seq(BucketSpec(4, Seq("a", "b"))))
@@ -40,7 +37,7 @@ class GraftStoreMultiBucketSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("multi-bucket write: bounded files, valid ids, complete read-back") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 5000)
       .selectExpr("id % 97 as a", "concat('p', id % 53) as b", "id as v")
       .repartition(4)
@@ -58,8 +55,8 @@ class GraftStoreMultiBucketSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("equal tuples co-locate identically across independently written tables") {
-    val da = tmpDir()
-    val db = tmpDir()
+    val da = Fixture.dir()
+    val db = Fixture.dir()
     val rows = spark.range(0, 2000)
       .selectExpr("id % 40 as a", "concat('u', id % 31) as b", "id as v")
     rows.write.format("graft-store")
@@ -104,7 +101,7 @@ class GraftStoreMultiBucketSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("rows with null tuple elements write and read back completely") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 100)
       .selectExpr("CASE WHEN id % 10 = 0 THEN NULL ELSE id % 7 END as a",
         "concat('q', id % 5) as b", "id as v")
@@ -118,7 +115,7 @@ class GraftStoreMultiBucketSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("append keeps the multi-bucket layout; a different layout is rejected") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     val rows = spark.range(0, 200).selectExpr("id % 9 as a", "id % 4 as b", "id as v")
     rows.write.format("graft-store")
       .option("partitionBy", "bucket(4,a,b)").mode("overwrite").save(dir)
@@ -134,7 +131,7 @@ class GraftStoreMultiBucketSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("probe record: multi-ref transform resolves but Spark plans no SPJ") {
-    val base = tmpDir()
+    val base = Fixture.dir()
     spark.conf.set("spark.sql.catalog.mbprobe", "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.mbprobe.base", base)
     val df = spark.range(0, 1000).selectExpr("id % 20 as a", "id % 13 as b", "id as v")

@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,9 +12,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class GraftStoreNullStatsSpec extends AnyFunSuite with graft.SparkTestBase {
 
   import spark.implicits._
-
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-nullstats").toString
 
   /** 3 range-disjoint files: ids 0-99 (v null on odds), 100-199 (v all
     * null), 200-299 (v never null). */
@@ -29,7 +26,7 @@ class GraftStoreNullStatsSpec extends AnyFunSuite with graft.SparkTestBase {
       .write.format("graft-store").mode("overwrite").save(dir)
 
   test("count(col) is served from the manifest, exactly") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     seed(dir)
     val t = spark.read.format("graft-store").load(dir)
     val agg = t.agg(count(lit(1)).as("n"), count(col("v")).as("nv"),
@@ -42,7 +39,7 @@ class GraftStoreNullStatsSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("IS NULL / IS NOT NULL prune files by null counts") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     seed(dir)
     val t = spark.read.format("graft-store").load(dir)
     // IS NULL: the all-non-null file (200-299) is skipped
@@ -58,7 +55,7 @@ class GraftStoreNullStatsSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("IS NOT NULL skips files that predate a column entirely") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 50).coalesce(1).selectExpr("id")
       .write.format("graft-store").mode("overwrite").save(dir)
     spark.range(50, 100).coalesce(1).selectExpr("id", "id * 3 as extra")
@@ -72,7 +69,7 @@ class GraftStoreNullStatsSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("count(col) declines under live MOR masks and on DISTINCT") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     seed(dir)
     GraftStoreOps.deleteWhereMor(spark, dir, col("id") === 250)
     val t = spark.read.format("graft-store").load(dir)
@@ -85,7 +82,7 @@ class GraftStoreNullStatsSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("null counts survive rename/drop evolution (logical re-keying)") {
-    val base = Files.createTempDirectory("graft-nullstats-cat").toString
+    val base = Fixture.dir()
     spark.conf.set("spark.sql.catalog.nscat", "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.nscat.base", base)
     seed(s"$base/t")
@@ -103,7 +100,7 @@ class GraftStoreNullStatsSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("pre-null-count manifests decline rather than guess") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     seed(dir)
     // strip the 9th field from the manifest, simulating a v9 writer
     val conf = spark.sparkContext.hadoopConfiguration

@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,11 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * This removes the single-writer caveat the pre-OCC format carried. */
 class GraftStoreOccSpec extends AnyFunSuite with graft.SparkTestBase {
 
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-store-occ").toString
-
   test("CAS: two writers from one head — one wins the seq, the loser re-merges, no snapshot lost") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     val conf = spark.sparkContext.hadoopConfiguration
     val schema = StructType.fromDDL("id BIGINT")
     def entry(n: String, rows: Long) = GraftFileEntry(n, rows, Map.empty)
@@ -58,7 +55,7 @@ class GraftStoreOccSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("concurrent DSv2 appends serialize through the OCC loop: all rows survive") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(1).toDF("id").write.format("graft-store").mode("overwrite").save(dir)
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val threads = (1 to 4).map { i =>

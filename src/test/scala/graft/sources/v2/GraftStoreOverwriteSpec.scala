@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,15 +12,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * stays row-exact. The idempotent-backfill op. */
 class GraftStoreOverwriteSpec extends AnyFunSuite with graft.SparkTestBase {
 
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-store-ovw").toString
-
   private def conf = spark.sparkContext.hadoopConfiguration
   private def manifest(dir: String): GraftManifest =
     GraftStoreFormat.readLatestManifest(dir, conf).get
 
   private def catalogFor(name: String): String = {
-    val base = tmpDir()
+    val base = Fixture.dir()
     spark.conf.set(s"spark.sql.catalog.$name", "graft.sources.v2.GraftCatalog")
     spark.conf.set(s"spark.sql.catalog.$name.base", base)
     base
@@ -131,7 +128,7 @@ class GraftStoreOverwriteSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("plain mode=overwrite (truncate) is unchanged: full replacement") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     mkPart(dir)
     spark.range(0, 5).selectExpr("id", "'9' as k")
       .write.format("graft-store").option("partitionBy", "k")

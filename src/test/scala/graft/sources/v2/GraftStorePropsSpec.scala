@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,7 +15,7 @@ class GraftStorePropsSpec extends AnyFunSuite with graft.SparkTestBase {
   import spark.implicits._
 
   private lazy val catBase: String = {
-    val base = Files.createTempDirectory("graft-props").toString
+    val base = Fixture.dir()
     spark.conf.set("spark.sql.catalog.propcat", "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.propcat.base", base)
     base
@@ -62,7 +62,7 @@ class GraftStorePropsSpec extends AnyFunSuite with graft.SparkTestBase {
 
   test("properties survive a streaming append commit") {
     catBase
-    val src = Files.createTempDirectory("graft-props-src").toString
+    val src = Fixture.dir()
     val dir = s"$catBase/p3"
     spark.sql("CREATE TABLE propcat.p3 (id BIGINT, v BIGINT) USING `graft-store` " +
       "TBLPROPERTIES ('pipeline'='ingest-a')")
@@ -70,7 +70,7 @@ class GraftStorePropsSpec extends AnyFunSuite with graft.SparkTestBase {
       .write.mode("append").parquet(src)
     val q = spark.readStream.schema("id BIGINT, v BIGINT").parquet(src)
       .writeStream.format("graft-store")
-      .option("checkpointLocation", Files.createTempDirectory("graft-props-ck").toString)
+      .option("checkpointLocation", Fixture.dir())
       .start(dir)
     try q.processAllAvailable() finally q.stop()
     assert(spark.read.format("graft-store").load(dir).count() === 2)

@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,9 +15,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class GraftStorePruneDecodeSpec extends AnyFunSuite with graft.SparkTestBase {
 
   import spark.implicits._
-
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-store-prune").toString
 
   /** 10-column store: 2 longs, a double, a boolean, and six fat strings —
     * the wide-table shape where full-row decode dominates scan CPU. */
@@ -43,7 +40,7 @@ class GraftStorePruneDecodeSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("narrow projection of a wide store skips pruned bytes; full read skips none") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     seedWide(dir)
     val back = spark.read.format("graft-store").load(dir)
 
@@ -64,7 +61,7 @@ class GraftStorePruneDecodeSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("pruned and full decode agree on every surviving column") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     seedWide(dir, 500L)
     val back = spark.read.format("graft-store").load(dir)
     // string column read through the pruned path (s3 decoded, s1/s2/... skipped)
@@ -80,7 +77,7 @@ class GraftStorePruneDecodeSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("nulls on the wire cost nothing to skip and stay null either way") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 200)
       .selectExpr("id",
         "if(id % 3 = 0, null, repeat('x', 50)) as fat",
@@ -97,7 +94,7 @@ class GraftStorePruneDecodeSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("equality-delete key columns widen the decode set only for scoped files") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     seedWide(dir, 300L)
     // key-addressed upsert: the mask probe must read `id` from decoded rows
     // even when the projection asks only for s2 (full-width batch — the
@@ -123,7 +120,7 @@ class GraftStorePruneDecodeSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("CDC feed decodes only projected columns from target files") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     seedWide(dir, 400L)
     // COW delete produces a change store; batch CDC read with a narrow
     // projection should seek past the fat strings of pre/post images

@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -21,9 +21,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class GraftStorePruneSpec extends AnyFunSuite with graft.SparkTestBase {
 
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-store-prune").toString
-
   /** `files=a/b` read back from the scan's live description — after an
     * action this reflects runtime filters too (the description recomputes
     * from the scan's current selection). */
@@ -35,7 +32,7 @@ class GraftStorePruneSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("static: point lookup on a bucket layout reads ~1/n of the files") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 10000).selectExpr("id as key", "id * 3 as v")
       .write.format("graft-store").option("partitionBy", "bucket(8,key)")
       .mode("overwrite").save(dir)
@@ -49,7 +46,7 @@ class GraftStorePruneSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("static: IN-list prunes to the union of the keys' buckets") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 8000).selectExpr("id as key", "id as v")
       .write.format("graft-store").option("partitionBy", "bucket(16,key)")
       .mode("overwrite").save(dir)
@@ -64,7 +61,7 @@ class GraftStorePruneSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("static: multi-column bucket prunes when both columns are pinned") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 4000).selectExpr("id as a", "id % 97 as b", "id as v")
       .write.format("graft-store").option("partitionBy", "bucket(8,a,b)")
       .mode("overwrite").save(dir)
@@ -76,7 +73,7 @@ class GraftStorePruneSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("static: identity partVals prune where string stats are capped away") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     // 80-char partition values: the writer DROPS min/max stats over 64
     // chars, so stats-based skipping is blind here — partVals are not
     val pad = "x" * 77
@@ -93,7 +90,7 @@ class GraftStorePruneSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("static: equality never matches the null partition's file") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 300)
       .selectExpr("CASE WHEN id % 3 = 2 THEN NULL ELSE concat('k', id % 3) END as grp",
         "id as v")
@@ -108,7 +105,7 @@ class GraftStorePruneSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("static: pruning is per-file spec across partition-spec evolution") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 1000).selectExpr("id % 4 as grp", "id as v")
       .repartition(col("grp"))
       .write.format("graft-store").option("partitionBy", "grp")
@@ -129,7 +126,7 @@ class GraftStorePruneSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("runtime: join on the bucket column prunes fact files from dim keys") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 20000).selectExpr("id as key", "id * 7 as v")
       .write.format("graft-store").option("partitionBy", "bucket(16,key)")
       .mode("overwrite").save(dir)
@@ -155,7 +152,7 @@ class GraftStorePruneSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("runtime: join on a cluster column prunes by min/max; wide INs collapse to ranges") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     // range-clustered on key: 8 files with tight disjoint key ranges
     spark.range(0, 20000).selectExpr("id as key", "id as v")
       .write.format("graft-store")
@@ -175,7 +172,7 @@ class GraftStorePruneSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("runtime: SPJ-reporting scan stays correct when runtime filters shrink the key groups") {
-    val base = tmpDir()
+    val base = Fixture.dir()
     spark.range(0, 4000).selectExpr("id as key", "id as v")
       .write.format("graft-store").option("partitionBy", "bucket(8,key)")
       .mode("overwrite").save(s"$base/fact")
@@ -202,7 +199,7 @@ class GraftStorePruneSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("results identical with pruning vs a full scan (guard)") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 5000).selectExpr("id as key", "id % 17 as v")
       .write.format("graft-store").option("partitionBy", "bucket(8,key)")
       .mode("overwrite").save(dir)

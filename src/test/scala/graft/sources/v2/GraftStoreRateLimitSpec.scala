@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,9 +15,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * stay readable and unlimited streams keep byte-identical planning.
   */
 class GraftStoreRateLimitSpec extends AnyFunSuite with graft.SparkTestBase {
-
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-store-ratelimit").toString
 
   private def hconf = new SerializableHadoopConf(
     spark.sparkContext.hadoopConfiguration)
@@ -42,7 +39,7 @@ class GraftStoreRateLimitSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("maxFiles advances snapshot-by-snapshot, stopping when the budget is spent") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     writeSnap(dir, 0, 200, 2, mode = "overwrite") // snap 0: 2 files
     writeSnap(dir, 200, 400, 2) // snap 1: 2 files
     writeSnap(dir, 400, 600, 2) // snap 2: 2 files
@@ -59,7 +56,7 @@ class GraftStoreRateLimitSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("a large snapshot streams in file-level slices with partial offsets") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     writeSnap(dir, 0, 500, 5, mode = "overwrite") // snap 0: 5 files
     val st = new GraftStoreMicroBatchStream(dir, schemaOf(dir), schemaOf(dir), hconf)
     val lim = GraftReadLimit(Some(2), None)
@@ -80,7 +77,7 @@ class GraftStoreRateLimitSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("row budget admits at least one file per batch (oversized files make progress)") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     writeSnap(dir, 0, 300, 3, mode = "overwrite") // 3 files of ~100 rows
     val st = new GraftStoreMicroBatchStream(dir, schemaOf(dir), schemaOf(dir), hconf)
     val lim = GraftReadLimit(None, Some(10L)) // far below one file's rows
@@ -96,7 +93,7 @@ class GraftStoreRateLimitSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("staged WAP commits do not advance a rate-limited stream until published") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     writeSnap(dir, 0, 100, 1, mode = "overwrite") // snap 0
     spark.range(100, 200).selectExpr("id as k", "id * 2 as v")
       .coalesce(1)
@@ -115,8 +112,8 @@ class GraftStoreRateLimitSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("end-to-end: rate-limited stream drains in bounded batches with exact content") {
-    val dir = tmpDir()
-    val ckpt = tmpDir()
+    val dir = Fixture.dir()
+    val ckpt = Fixture.dir()
     writeSnap(dir, 0, 300, 3, mode = "overwrite")
     writeSnap(dir, 300, 500, 2)
     val q = spark.readStream.format("graft-store")
@@ -135,7 +132,7 @@ class GraftStoreRateLimitSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("unlimited streams keep legacy single-diff planning (no behavior change)") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     writeSnap(dir, 0, 100, 2, mode = "overwrite")
     writeSnap(dir, 100, 200, 2)
     val st = new GraftStoreMicroBatchStream(dir, schemaOf(dir), schemaOf(dir), hconf)
@@ -146,7 +143,7 @@ class GraftStoreRateLimitSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("invalid limits fail loudly") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     writeSnap(dir, 0, 10, 1, mode = "overwrite")
     intercept[IllegalArgumentException] {
       new GraftStoreMicroBatchStream(dir, schemaOf(dir), schemaOf(dir), hconf,

@@ -1,7 +1,8 @@
 package graft.sources.v2
 
+import graft.Fixture
+
 import java.net.URI
-import java.nio.file.Files
 
 import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 import org.apache.spark.sql.functions._
@@ -31,7 +32,7 @@ class GraftStoreRenameSpec extends AnyFunSuite with graft.SparkTestBase {
   private lazy val base: String = {
     conf.set("fs.flaky.impl", classOf[FlakyRenameFs].getName)
     conf.setBoolean("fs.flaky.impl.disable.cache", true)
-    val b = "flaky:" + Files.createTempDirectory("graft-rename").toString
+    val b = "flaky:" + Fixture.dir()
     spark.conf.set("spark.sql.catalog.rncat", "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.rncat.base", b)
     b
@@ -155,5 +156,64 @@ class GraftStoreRenameSpec extends AnyFunSuite with graft.SparkTestBase {
     assert(rowsOf(dir) === rows)
     spark.sql("UPDATE rncat.cw SET v = v + 1 WHERE id % 2 = 0")
     assert(rowsOf(dir) === (0L until 40L).map(i => (i, i * 10 + (if (i % 2 == 0) 1 else 0))))
+  }
+
+  /** A rename out of a `_rewrite-` scratch store into the table. */
+  private def fromScratch(p: Path): Boolean = p.getParent.getName.startsWith("_rewrite-")
+
+  test("merge-on-read DELETE commit: a failed rename publishes nothing") {
+    val dir = morTable("md")
+    val before = listing(dir)
+    val rows = rowsOf(dir)
+    val snaps = GraftStoreOps.snapshotCount(spark, dir)
+    // the delete store's files move out of its scratch into the table
+    val err = failingOn(fromScratch) {
+      GraftStoreOps.deleteWhereMor(spark, dir, col("id") < 5)
+    }
+    assert(failedMove(err), err)
+    assert(GraftStoreOps.snapshotCount(spark, dir) === snaps)
+    assert(listing(dir) === before)
+    assert(rowsOf(dir) === rows)
+    GraftStoreOps.deleteWhereMor(spark, dir, col("id") < 5)
+    assert(rowsOf(dir) === (5L until 40L).map(i => (i, i * 10)))
+  }
+
+  test("programmatic copy-on-write DELETE commit: a failed rename publishes nothing") {
+    val dir = s"$base/cd"
+    spark.range(0, 40).selectExpr("id", "id * 10 as v").coalesce(2)
+      .write.format("graft-store").mode("overwrite").save(dir)
+    val before = listing(dir)
+    val rows = rowsOf(dir)
+    val snaps = GraftStoreOps.snapshotCount(spark, dir)
+    // both files are rewritten; the first moves, the second's move fails,
+    // so the first must be deleted again
+    var moves = 0
+    val err = failingOn(p => fromScratch(p) && { moves += 1; moves > 1 }) {
+      GraftStoreOps.deleteWhere(spark, dir, col("id") % 2 === 0)
+    }
+    assert(moves === 2)
+    assert(failedMove(err), err)
+    assert(GraftStoreOps.snapshotCount(spark, dir) === snaps)
+    assert(listing(dir) === before)
+    assert(rowsOf(dir) === rows)
+    GraftStoreOps.deleteWhere(spark, dir, col("id") % 2 === 0)
+    assert(rowsOf(dir) === (1L until 40L by 2).map(i => (i, i * 10)))
+  }
+
+  test("re-layout of old-spec files: a failed rename publishes nothing") {
+    val dir = s"$base/rl"
+    spark.range(0, 40).selectExpr("id", "id % 4 as k").coalesce(1)
+      .write.format("graft-store").mode("overwrite").save(dir)
+    GraftStoreOps.evolvePartitionSpec(spark, dir, Some("bucket(2,k)"))
+    val before = listing(dir)
+    val rows = rowsOf(dir)
+    val snaps = GraftStoreOps.snapshotCount(spark, dir)
+    val err = failingOn(fromScratch)(GraftStoreOps.rewriteOldSpecFiles(spark, dir))
+    assert(failedMove(err), err)
+    assert(GraftStoreOps.snapshotCount(spark, dir) === snaps)
+    assert(listing(dir) === before)
+    assert(rowsOf(dir) === rows)
+    assert(GraftStoreOps.rewriteOldSpecFiles(spark, dir)._1 === 1)
+    assert(rowsOf(dir) === rows)
   }
 }

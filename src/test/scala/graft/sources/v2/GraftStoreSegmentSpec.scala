@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
@@ -16,9 +16,6 @@ class GraftStoreSegmentSpec extends AnyFunSuite with graft.SparkTestBase {
 
   import spark.implicits._
 
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-seg").toString
-
   private def conf = spark.sparkContext.hadoopConfiguration
 
   private def segRefs(dir: String): Seq[String] = {
@@ -33,7 +30,7 @@ class GraftStoreSegmentSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("a wide table's manifest segments; reads are exact") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 2000).repartition(200).selectExpr("id", "id * 2 as v")
       .write.format("graft-store").mode("overwrite").save(dir)
     val m = GraftStoreFormat.readLatestManifest(dir, conf).get
@@ -45,7 +42,7 @@ class GraftStoreSegmentSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("an append reuses almost every segment (commit metadata = O(churn))") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 2000).repartition(200).selectExpr("id", "id * 2 as v")
       .write.format("graft-store").mode("overwrite").save(dir)
     val before = segRefs(dir).toSet
@@ -63,7 +60,7 @@ class GraftStoreSegmentSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("a selective COW delete re-chunks only the touched neighborhood") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 2000).repartitionByRange(200, col("id"))
       .selectExpr("id", "id * 2 as v")
       .write.format("graft-store").mode("overwrite").save(dir)
@@ -77,7 +74,7 @@ class GraftStoreSegmentSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("expiry collects segments no retained manifest references") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 1000).repartition(100).selectExpr("id")
       .write.format("graft-store").mode("overwrite").save(dir)
     // churn: several overwrites leave dead segment generations behind
@@ -95,7 +92,7 @@ class GraftStoreSegmentSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("tbl$segments metadata table exposes the chunk map") {
-    val dir0 = tmpDir()
+    val dir0 = Fixture.dir()
     val base = new java.io.File(dir0).getParent
     val name = new java.io.File(dir0).getName
     spark.conf.set("spark.sql.catalog.segcat", "graft.sources.v2.GraftCatalog")
@@ -111,7 +108,7 @@ class GraftStoreSegmentSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("expireOlderThan keeps everything at-or-after the cut, at least the head") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 10).selectExpr("id")
       .write.format("graft-store").mode("overwrite").save(dir)
     spark.range(10, 20).selectExpr("id")
@@ -131,7 +128,7 @@ class GraftStoreSegmentSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("small tables stay inline (no segments)") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 100).repartition(4).selectExpr("id")
       .write.format("graft-store").mode("overwrite").save(dir)
     assert(segRefs(dir).isEmpty)
@@ -140,7 +137,7 @@ class GraftStoreSegmentSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("DML, masks, and evolution work unchanged over a segmented manifest") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 2000).repartitionByRange(100, col("id"))
       .selectExpr("id", "id * 2 as v")
       .write.format("graft-store").option("dmlMode", "mor")

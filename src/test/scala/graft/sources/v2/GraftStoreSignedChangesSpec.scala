@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.DataFrame
@@ -20,7 +20,7 @@ class GraftStoreSignedChangesSpec extends AnyFunSuite with graft.SparkTestBase {
   import spark.implicits._
 
   private lazy val catBase: String = {
-    val base = Files.createTempDirectory("graft-signed").toString
+    val base = Fixture.dir()
     spark.conf.set("spark.sql.catalog.sgcat", "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.sgcat.base", base)
     base

@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
@@ -12,14 +12,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * the `tbl$partitions` metadata table. */
 class GraftStoreSizingSpec extends AnyFunSuite with graft.SparkTestBase {
 
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-store-sizing").toString
-
   private def fsOf(dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   test("rolling: file sizes stay bounded regardless of task skew") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     // one task writing ~3 MB: without rolling this is ONE file
     spark.range(0, 100000).selectExpr("id as k", "concat('v', id) as s")
       .coalesce(1)
@@ -40,7 +37,7 @@ class GraftStoreSizingSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("rolling preserves partition values; the scan still groups by key") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 40000).selectExpr("id % 2 as g", "id as v", "concat('x', id) as s")
       .repartition(col("g"))
       .write.format("graft-store")
@@ -61,7 +58,7 @@ class GraftStoreSizingSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("rolling composes with bloom sidecars: rolled files are indexed") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 50000)
       .selectExpr("id * 2654435761 % 1000000007 as key", "concat('p', id) as s")
       .coalesce(1)
@@ -82,7 +79,7 @@ class GraftStoreSizingSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("removeOrphans reclaims debris, keeps every referenced file, drops no history") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 1000).selectExpr("id as k", "id * 2 as v")
       .repartition(2)
       .write.format("graft-store").mode("overwrite").save(dir) // snap 0
@@ -113,7 +110,7 @@ class GraftStoreSizingSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("removeOrphans grace period protects young files (in-flight commits)") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 100).selectExpr("id as k", "id as v")
       .write.format("graft-store").mode("overwrite").save(dir)
     val fs = fsOf(dir)
@@ -125,7 +122,7 @@ class GraftStoreSizingSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("tbl$partitions reports per-partition file and row counts from the manifest") {
-    val base = tmpDir()
+    val base = Fixture.dir()
     spark.range(0, 6000).selectExpr("id as k", "id as v")
       .write.format("graft-store").option("partitionBy", "bucket(4,k)")
       .mode("overwrite").save(s"$base/t")

@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,9 +13,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * capability on the engine's own format. */
 class GraftStoreSpjSpec extends AnyFunSuite with graft.SparkTestBase {
 
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-store-spj").toString
-
   private def withConf[T](pairs: (String, String)*)(body: => T): T = {
     val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
     pairs.foreach { case (k, v) => spark.conf.set(k, v) }
@@ -27,7 +24,7 @@ class GraftStoreSpjSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("partitionBy write: one file per value, partition-pruned reads") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 1000)
       .selectExpr("id", "cast(id % 8 as int) as k")
       .write.format("graft-store").option("partitionBy", "k")
@@ -44,7 +41,7 @@ class GraftStoreSpjSpec extends AnyFunSuite with graft.SparkTestBase {
 
   test("append inherits the table's partition layout (no option needed)") {
     import spark.implicits._
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     Seq((1L, 1)).toDF("id", "k").write.format("graft-store")
       .option("partitionBy", "k").mode("overwrite").save(dir)
     // layout is a TABLE property (Delta/Iceberg discipline): an append
@@ -69,8 +66,8 @@ class GraftStoreSpjSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("co-partitioned tables join with zero shuffle exchange (SPJ)") {
-    val dirA = tmpDir()
-    val dirB = tmpDir()
+    val dirA = Fixture.dir()
+    val dirB = Fixture.dir()
     spark.range(0, 1000)
       .selectExpr("id as ida", "cast(id % 20 as int) as k", "id * 2 as va")
       .write.format("graft-store").option("partitionBy", "k")
@@ -104,8 +101,8 @@ class GraftStoreSpjSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("SPJ survives partially-overlapping partition value sets") {
-    val dirA = tmpDir()
-    val dirB = tmpDir()
+    val dirA = Fixture.dir()
+    val dirB = Fixture.dir()
     // A holds keys 0..19, B only 0..9 — Spark must align the value sets
     // (pushPartValues) instead of falling back to a shuffle
     spark.range(0, 400)
@@ -131,8 +128,8 @@ class GraftStoreSpjSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("multi-column partition keys: SPJ on a composite key, zero exchange") {
-    val dirA = tmpDir()
-    val dirB = tmpDir()
+    val dirA = Fixture.dir()
+    val dirB = Fixture.dir()
     spark.range(0, 600)
       .selectExpr("id as ida", "cast(id % 4 as int) as k1", "cast(id % 3 as int) as k2")
       .write.format("graft-store").option("partitionBy", "k1,k2")
@@ -157,7 +154,7 @@ class GraftStoreSpjSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("pruning the partition column out of the read schema stays safe") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 100).selectExpr("id", "cast(id % 4 as int) as k")
       .write.format("graft-store").option("partitionBy", "k")
       .mode("overwrite").save(dir)
@@ -175,7 +172,7 @@ class GraftStoreSpjSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("compaction preserves the partition layout (and SPJ capability)") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     val df = spark.range(0, 400).selectExpr("id", "cast(id % 5 as int) as k")
     // two appends -> 2 files per key value
     df.filter(col("id") < 200).write.format("graft-store")

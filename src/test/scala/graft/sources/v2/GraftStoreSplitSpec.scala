@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,15 +12,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * stay exact across slices (each slice knows its physical row start). */
 class GraftStoreSplitSpec extends AnyFunSuite with graft.SparkTestBase {
 
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-split").toString
-
   private def manifest(dir: String): GraftManifest =
     GraftStoreFormat.readLatestManifest(
       dir, spark.sparkContext.hadoopConfiguration).get
 
   test("an oversized file scans as multiple parallel slices, results exact") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 20000).selectExpr("id", "id * 3 as v")
       .coalesce(1)
       .write.format("graft-store").option("splitBlockBytes", "65536")
@@ -42,7 +39,7 @@ class GraftStoreSplitSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("(_file, _pos) stays a stable physical id across slices") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 10000).selectExpr("id", "id as v").coalesce(1)
       .write.format("graft-store").option("splitBlockBytes", "65536")
       .mode("overwrite").save(dir)
@@ -56,7 +53,7 @@ class GraftStoreSplitSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("position-delete masks apply exactly across slice boundaries") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 20000).selectExpr("id", "id as v").coalesce(1)
       .write.format("graft-store").option("splitBlockBytes", "65536")
       .option("dmlMode", "mor").mode("overwrite").save(dir)
@@ -72,7 +69,7 @@ class GraftStoreSplitSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("small files record no blocks at the default granularity") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 1000).selectExpr("id", "id as v").coalesce(1)
       .write.format("graft-store").mode("overwrite").save(dir)
     assert(manifest(dir).files.head.blocks.isEmpty)
@@ -80,7 +77,7 @@ class GraftStoreSplitSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("key-grouped (SPJ) scans keep one partition per key — never split") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 20000).selectExpr("id", "cast(id % 2 as string) as k")
       .write.format("graft-store").option("splitBlockBytes", "65536")
       .option("partitionBy", "k").mode("overwrite").save(dir)

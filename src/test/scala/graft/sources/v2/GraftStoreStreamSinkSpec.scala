@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
@@ -12,13 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * `#txn=queryId-epochId` token making replayed epoch commits no-ops. */
 class GraftStoreStreamSinkSpec extends AnyFunSuite with graft.SparkTestBase {
 
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-stream-sink").toString
-
   test("streaming sink: epochs land as snapshots; restart appends nothing") {
-    val src = tmpDir()
-    val dir = tmpDir()
-    val ckpt = tmpDir()
+    val src = Fixture.dir()
+    val dir = Fixture.dir()
+    val ckpt = Fixture.dir()
     import spark.implicits._
     // 3 source files -> 3 triggers/epochs with maxFilesPerTrigger=1
     Seq((1L, 10L), (2L, 20L)).toDF("id", "v").coalesce(1).write.mode("append").parquet(src)
@@ -48,7 +45,7 @@ class GraftStoreStreamSinkSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("epoch replay is idempotent via the txn token") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     val conf = spark.sparkContext.hadoopConfiguration
     val schema = StructType.fromDDL("id BIGINT")
     val sw = new GraftStoreStreamingWrite(dir, schema, conf, queryId = "qx")
@@ -70,9 +67,9 @@ class GraftStoreStreamSinkSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("streaming into a partitioned table routes files by the inherited layout") {
-    val src = tmpDir()
-    val dir = tmpDir()
-    val ckpt = tmpDir()
+    val src = Fixture.dir()
+    val dir = Fixture.dir()
+    val ckpt = Fixture.dir()
     import spark.implicits._
     // the table declares its layout; the stream passes NO layout options
     Seq((-1L, "seed0"), (-2L, "seed1")).toDF("id", "k")
@@ -98,9 +95,9 @@ class GraftStoreStreamSinkSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("a stream CREATING a partitioned table persists the layout header") {
-    val src = tmpDir()
-    val dir = tmpDir()
-    val ckpt = tmpDir()
+    val src = Fixture.dir()
+    val dir = Fixture.dir()
+    val ckpt = Fixture.dir()
     import spark.implicits._
     Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("id", "k")
       .coalesce(1).write.mode("append").parquet(src)

@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.Files
+import graft.Fixture
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -14,9 +14,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * ts < B` prunes a `days(ts)` table by partition value (Iceberg's
   * predicate projection). */
 class GraftStoreTemporalSpec extends AnyFunSuite with graft.SparkTestBase {
-
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-store-temporal").toString
 
   private def scanFiles(df: DataFrame): (Int, Int) = {
     val s = df.queryExecution.executedPlan.toString
@@ -36,7 +33,7 @@ class GraftStoreTemporalSpec extends AnyFunSuite with graft.SparkTestBase {
       .mode("overwrite").save(dir)
 
   test("days(ts): time-range predicates prune files by partition value") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     events(dir, "days(ts)")
     val m = GraftStoreFormat.readLatestManifest(
       dir, spark.sparkContext.hadoopConfiguration).get
@@ -61,7 +58,7 @@ class GraftStoreTemporalSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("hours(ts) prunes; hours(date) is rejected") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     events(dir, "hours(ts)")
     val q = spark.read.format("graft-store").load(dir)
       .filter(col("ts") >= expr("timestamp_micros(1700000000000000)") &&
@@ -72,13 +69,13 @@ class GraftStoreTemporalSpec extends AnyFunSuite with graft.SparkTestBase {
     val e = intercept[Exception] {
       spark.range(0, 10).selectExpr("date_add(date'2024-01-01', cast(id as int)) as d", "id as v")
         .write.format("graft-store").option("partitionBy", "hours(d)")
-        .mode("overwrite").save(tmpDir())
+        .mode("overwrite").save(Fixture.dir())
     }
     assert(e.getMessage.contains("hours"))
   }
 
   test("months(date): equality and range prune by calendar arithmetic") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 300)
       .selectExpr("date_add(date'2023-11-15', cast(id as int)) as d", "id as v")
       .coalesce(1)
@@ -98,7 +95,7 @@ class GraftStoreTemporalSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("truncate on numerics: ranges project through the floor") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 10000).selectExpr("id as k", "id as v")
       .coalesce(2)
       .write.format("graft-store").option("partitionBy", "truncate(1000,k)")
@@ -111,7 +108,7 @@ class GraftStoreTemporalSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("truncate on strings: prefix grouping, equality prunes") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 260).selectExpr(
       "concat(char(97 + id % 26), char(97 + (id DIV 26) % 26), '-', id) as s",
       "id as v")
@@ -125,7 +122,7 @@ class GraftStoreTemporalSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("composite days(ts),bucket(4,key): both dimensions prune independently") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     events(dir, "days(ts),bucket(4,key)")
     val full = spark.read.format("graft-store").load(dir)
     assert(full.count() === 1000)
@@ -141,7 +138,7 @@ class GraftStoreTemporalSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("null timestamps land in a null partition that predicates never match") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 100)
       .selectExpr(
         "CASE WHEN id % 10 = 0 THEN NULL ELSE timestamp_micros(1700000000000000 + id * 86400000000) END as ts",
@@ -162,7 +159,7 @@ class GraftStoreTemporalSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("spec evolution to days(ts) validates types; appends route by the new spec") {
-    val dir = tmpDir()
+    val dir = Fixture.dir()
     spark.range(0, 100)
       .selectExpr("timestamp_micros(1700000000000000 + id * 86400000000) as ts", "id as v")
       .coalesce(1)
