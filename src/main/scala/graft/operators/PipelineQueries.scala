@@ -411,29 +411,22 @@ object PipelineQueries {
   // ---------------------------------------------------------------- runtime bloom-filter join
   /** The fact-side-pruned shuffle join ([[RuntimeFilters]]): a bloom filter
     * built from the filtered dim side's keys drops non-joining fact rows
-    * BEFORE the exchange. The physical plan is pinned while the tuned confs
-    * are in effect (planning is cached on the QueryExecution), then session
-    * confs are restored so no other query inherits them. Results are
+    * BEFORE the exchange. The tuned confs are set on a private session
+    * ([[Fixture]]), so no other query inherits them. Results are
     * byte-identical to the plain join — only the shuffle volume changes. */
   val q70BloomJoin = QuerySpec(
     "q70_bloom_join", "§2.3-runtime-filter",
     "shuffle join with runtime bloom-filter fact-side pruning",
-    (s, d) => {
+    (s0, d) => Fixture(s0) { (s, _) =>
       RuntimeFilters.enableAtAnyScale(s)
-      val prevBroadcast = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
-        val li = Tables.lineitem(s, d)
-        val ord = Tables.orders(s, d).filter(col("o_totalprice") > 450000)
-        val out = li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-          .groupBy("l_returnflag", "o_orderpriority")
-          .agg(count(lit(1)).as("n"), round(sum("l_extendedprice"), 2).as("sum_price"))
-        out.queryExecution.executedPlan // pin the bloom-filtered plan now
-        out
-      } finally {
-        RuntimeFilters.restoreDefaults(s)
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
-      }
+      val li = Tables.lineitem(s, d)
+      val ord = Tables.orders(s, d).filter(col("o_totalprice") > 450000)
+      val out = li.join(ord, li("l_orderkey") === ord("o_orderkey"))
+        .groupBy("l_returnflag", "o_orderpriority")
+        .agg(count(lit(1)).as("n"), round(sum("l_extendedprice"), 2).as("sum_price"))
+      out.queryExecution.executedPlan // plan while the private session is active
+      out
     },
     Some("""SELECT l_returnflag, o_orderpriority, count(*) AS n,
            |  round(sum(l_extendedprice), 2) AS sum_price

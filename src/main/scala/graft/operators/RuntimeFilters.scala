@@ -26,17 +26,12 @@ object RuntimeFilters {
 
   /** Make runtime bloom filters fire at test scale: any-size application
     * side, generous creation side. Production sessions should NOT call this
-    * — the stock thresholds already fire exactly when profitable. */
+    * — the stock thresholds already fire exactly when profitable. Call it
+    * on a private session (`newSession()`): the confs stay set for the
+    * session's life. */
   def enableAtAnyScale(spark: SparkSession): Unit = {
     spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
     spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "100MB")
     spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-  }
-
-  /** Restore the stock thresholds. */
-  def restoreDefaults(spark: SparkSession): Unit = {
-    spark.conf.unset("spark.sql.optimizer.runtime.bloomFilter.enabled")
-    spark.conf.unset("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold")
-    spark.conf.unset("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
   }
 }

@@ -3712,10 +3712,9 @@ object SystemQueries {
         .write.format("graft-store").mode("append").save(src)
       graft.sources.v2.GraftStoreOps.deleteWhere(s, src,
         col("o_orderkey") < 1000)
-      val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
       val r = s.sql("CALL gq205.system.refresh_mview('mv')").collect()(0)
       graft.BenchSetup.mark() // fixture setup ends; queries follow
-      val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
+      val opened = r.getLong(4)
       val incremental = r.getString(0) == "incremental"
       // churn-proportional: the delta pass + tiny-MV merge opens fewer
       // slices than the 8-file base a recompute would have to scan
@@ -3817,9 +3816,8 @@ object SystemQueries {
       // FACT-only churn: refresh must stay churn-proportional
       ordersDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
         .write.format("graft-store").mode("append").save(fact)
-      val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
       val r1 = s.sql("CALL gq207.system.refresh_mview('mv')").collect()(0)
-      val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
+      val opened = r1.getLong(4)
       val churnProportional = opened < 8 // never the 8-file fact base
       // BOTH sides churn: dim UPDATE moves group mass; fact DELETE
       s.sql("UPDATE gq207.dim SET c_mktsegment = 'MOVED' WHERE c_custkey % 10 = 0")
@@ -3893,10 +3891,9 @@ object SystemQueries {
       // refresh restores freshness; the served plan reads the TINY view
       s.sql("CALL gq208.system.refresh_mview('mv')")
       graft.BenchSetup.mark() // fixture setup ends; queries follow
-      val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
       val finalDf = agg()
       val rows = finalDf.collect()
-      val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
+      val opened = graft.sources.v2.GraftStoreOps.slicesOpened(finalDf)
       val servedAfterRefresh = served(finalDf)
       val readTheView = opened < 8 // the 8-file fact base never opens
       s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq), finalDf.schema)
@@ -3983,7 +3980,6 @@ object SystemQueries {
       graft.BenchSetup.mark() // fixture setup ends; queries follow
       def served(df: org.apache.spark.sql.DataFrame): Boolean =
         df.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
-      val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
       // COARSER than the view's (priority, status) grain
       val coarse = s.sql(
         """SELECT o_orderpriority AS priority, count(*) AS n,
@@ -3996,7 +3992,7 @@ object SystemQueries {
       val globalDf = s.sql(
         "SELECT count(*) AS n, round(sum(o_totalprice), 2) AS rev FROM gq210.src")
       val g = globalDf.collect()(0)
-      val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
+      val opened = Seq(coarse, globalDf).map(graft.sources.v2.GraftStoreOps.slicesOpened).sum
       val rolledUp = served(coarse) && served(globalDf) && opened < 8
       val globalMatches =
         g.getLong(0) == rows.map(_.getLong(1)).sum
@@ -4062,10 +4058,9 @@ object SystemQueries {
           |  round(sum(o_totalprice), 2) AS rev
           |FROM gq211.src WHERE o_totalprice > 100000
           |GROUP BY o_orderpriority""".stripMargin)
-      val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
       val ra = qa.collect()
       val rb = qb.collect()
-      val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
+      val opened = Seq(qa, qb).map(graft.sources.v2.GraftStoreOps.slicesOpened).sum
       val servedA = served(qa, "mva")
       val servedB = served(qb, "mvb")
       val sliceProof = opened < 8 // never the 8-file base
@@ -4137,10 +4132,9 @@ object SystemQueries {
       val globalDf = s.sql(
         """SELECT count(*) AS n FROM gq212.fact
           |JOIN gq212.dim ON o_custkey = c_custkey""".stripMargin)
-      val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
       val rows = q.collect()
       val globalN = globalDf.collect()(0).getLong(0)
-      val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
+      val opened = Seq(q, globalDf).map(graft.sources.v2.GraftStoreOps.slicesOpened).sum
       val bits = served(q) && served(globalDf) && staleNotServed &&
         staleN == globalN && globalN == rows.map(_.getLong(1)).sum &&
         opened < 8 // never the 8-file fact base
@@ -4237,10 +4231,9 @@ object SystemQueries {
       // grouping, all at once
       val q2 = s.sql(
         "SELECT count(*) AS n FROM gq215.src WHERE c_nationkey >= 20")
-      val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
       val rows = q1.collect()
       val g = q2.collect()(0).getLong(0)
-      val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
+      val opened = Seq(q1, q2).map(graft.sources.v2.GraftStoreOps.slicesOpened).sum
       // a WIDER range than the view's serves as the MIXED plan (r13):
       // view slice ∪ complement scan of only nationkey ∈ [3, 5)
       val wider = s.sql(
@@ -4454,14 +4447,12 @@ object SystemQueries {
       // direct (rewrite off) answer + slice count: the fact scan
       s.conf.set("spark.graft.mv.rewrite", "false")
       val (offRows, offSlices) = try {
-        val b = ops.scannedFileSlices
-        val r = s.sql(sql1).collect()
-        (r, ops.scannedFileSlices - b)
+        val off = s.sql(sql1)
+        (off.collect(), ops.slicesOpened(off))
       } finally s.conf.set("spark.graft.mv.rewrite", "true")
       val q1 = s.sql(sql1)
-      val b1 = ops.scannedFileSlices
       val rows = q1.collect()
-      val onSlices = ops.scannedFileSlices - b1
+      val onSlices = ops.slicesOpened(q1)
       // a dim-side aggregate cannot come from fact partials — refused
       val dimAgg = s.sql(
         "SELECT c_mktsegment AS seg, sum(c_acctbal) AS bal " +
@@ -4536,14 +4527,12 @@ object SystemQueries {
       val ops = graft.sources.v2.GraftStoreOps
       s.conf.set("spark.graft.mv.rewrite", "false")
       val (offRows, offSlices) = try {
-        val b = ops.scannedFileSlices
-        val r = s.sql(sql1).collect()
-        (r, ops.scannedFileSlices - b)
+        val off = s.sql(sql1)
+        (off.collect(), ops.slicesOpened(off))
       } finally s.conf.set("spark.graft.mv.rewrite", "true")
       val q1 = s.sql(sql1)
-      val b1 = ops.scannedFileSlices
       val rows = q1.collect()
-      val onSlices = ops.scannedFileSlices - b1
+      val onSlices = ops.slicesOpened(q1)
       // a nation-side aggregate cannot come from fact partials
       val dimAgg = s.sql(
         "SELECT n_name AS nat, sum(n_regionkey) AS rk FROM gq219.fact " +
@@ -4605,14 +4594,12 @@ object SystemQueries {
       val ops = graft.sources.v2.GraftStoreOps
       s.conf.set("spark.graft.mv.rewrite", "false")
       val (offRows, offSlices) = try {
-        val b = ops.scannedFileSlices
-        val r = s.sql(sql1).collect()
-        (r, ops.scannedFileSlices - b)
+        val off = s.sql(sql1)
+        (off.collect(), ops.slicesOpened(off))
       } finally s.conf.set("spark.graft.mv.rewrite", "true")
       val q1 = s.sql(sql1)
-      val b1 = ops.scannedFileSlices
       val rows = q1.collect()
-      val onSlices = ops.scannedFileSlices - b1
+      val onSlices = ops.slicesOpened(q1)
       // covered churn stales the MV (the appended row matches no
       // customer, so the ANSWER is unchanged — freshness is at stake)
       s.sql("INSERT INTO gq220.fact VALUES (99999999, -1, 1.0)")
@@ -4689,9 +4676,8 @@ object SystemQueries {
         df.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
       val ops = graft.sources.v2.GraftStoreOps
       val q1 = s.sql(sql1)
-      val b1 = ops.scannedFileSlices
       val rows = q1.collect()
-      val onSlices = ops.scannedFileSlices - b1
+      val onSlices = ops.slicesOpened(q1)
       // a YEAR bucket is coarser by FUNCTIONAL DEPENDENCY, not by group
       // subset — served since round 14 by re-bucketing the stored month
       // key (date_trunc('year', mon) — see coarsenOf); q243 hash-checks
@@ -4826,9 +4812,8 @@ object SystemQueries {
       // (a) FACT append: refresh stays churn-proportional
       ordersDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
         .write.format("graft-store").mode("append").save(fact)
-      val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
       val r1 = s.sql("CALL gq223.system.refresh_mview('mv')").collect()(0)
-      val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
+      val opened = r1.getLong(4)
       val churnProportional = opened < 8 // never the 8-file fact base
       // (b) DIM insert: null-extended rows with 750 < custkey ≤ 1100
       // CONVERT to matched (their NULL-group mass must retract)
@@ -4890,9 +4875,8 @@ object SystemQueries {
       // FACT churn: unchurned dims contribute no term — churn-prop proof
       ordersDf.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 10000)
         .write.format("graft-store").mode("append").save(fact)
-      val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
       val r1 = s.sql("CALL gq224.system.refresh_mview('mv')").collect()(0)
-      val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
+      val opened = r1.getLong(4)
       val churnProportional = opened < 8 // never the 8-file fact base
       // MIDDLE-dim churn: customers change nation → mass moves groups
       s.sql("UPDATE gq224.cust SET c_nationkey = (c_nationkey + 1) % 25 " +
@@ -4958,14 +4942,13 @@ object SystemQueries {
       graft.BenchSetup.mark() // fixture setup ends; queries follow
       def served(df: org.apache.spark.sql.DataFrame): Boolean =
         df.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
-      val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
       val leftQ = s.sql(
         """SELECT coalesce(c_mktsegment, '(none)') AS seg, count(*) AS n,
           |  round(sum(o_totalprice), 2) AS rev
           |FROM gq225.fact LEFT JOIN gq225.dim ON o_custkey = c_custkey
           |GROUP BY c_mktsegment""".stripMargin)
       val rows = leftQ.collect()
-      val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
+      val opened = graft.sources.v2.GraftStoreOps.slicesOpened(leftQ)
       val leftServed = served(leftQ) && opened < 8
       // the INNER shape over the same tables must NOT read the left view
       val innerQ = s.sql(
@@ -5019,19 +5002,18 @@ object SystemQueries {
       graft.BenchSetup.mark() // fixture setup ends; queries follow
       def served(df: org.apache.spark.sql.DataFrame): Boolean =
         df.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
-      val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
       val havingQ = s.sql(
         """SELECT o_orderpriority AS priority, count(*) AS n
           |FROM gq226.src GROUP BY o_orderpriority
           |HAVING sum(o_totalprice) > 100000""".stripMargin)
-      val havingOk = served(havingQ) && havingQ.collect().nonEmpty
+      val havingOk = havingQ.collect().nonEmpty && served(havingQ)
       val filterQ = s.sql(
         """SELECT o_orderpriority AS priority, count(*) AS n,
           |  round(sum(o_totalprice) FILTER (WHERE o_orderstatus = 'O'), 2)
           |    AS rev_open
           |FROM gq226.src GROUP BY o_orderpriority""".stripMargin)
       val rows = filterQ.collect()
-      val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
+      val opened = Seq(havingQ, filterQ).map(graft.sources.v2.GraftStoreOps.slicesOpened).sum
       val filterOk = served(filterQ) && opened < 8
       val refusal = s.sql(
         """SELECT o_orderpriority AS priority,
@@ -5176,9 +5158,8 @@ object SystemQueries {
       // ONE dim row churns: the delta term must read the churn, the
       // dim, and the fact slices covering custkey 77 — never 16 files
       s.sql("UPDATE gq229.dim SET c_mktsegment = 'MOVED' WHERE c_custkey = 77")
-      val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
       val r1 = s.sql("CALL gq229.system.refresh_mview('mv')").collect()(0)
-      val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
+      val opened = r1.getLong(4)
       graft.BenchSetup.mark() // fixture setup ends; queries follow
       val pruned = opened < 16 && r1.getString(0) == "incremental"
       s.sql("""SELECT seg, n, round(rev, 2) AS rev FROM gq229.mv""")
@@ -5366,14 +5347,13 @@ object SystemQueries {
       graft.BenchSetup.mark() // fixture setup ends; queries follow
       def served(df: org.apache.spark.sql.DataFrame): Boolean =
         df.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
-      val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
       val leftQ = s.sql(
         """SELECT coalesce(c_mktsegment, '(none)') AS seg, count(*) AS n,
           |  round(sum(o_totalprice), 2) AS rev
           |FROM gq232.fact LEFT JOIN gq232.dim ON o_custkey = c_custkey
           |GROUP BY c_mktsegment""".stripMargin)
       val rows = leftQ.collect()
-      val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
+      val opened = graft.sources.v2.GraftStoreOps.slicesOpened(leftQ)
       val leftServed = served(leftQ) && opened < 8
       // preserved-side dim (dim ⟕ fact): the MV lacks the
       // null-extended fact rows — must refuse and read the base
@@ -5543,7 +5523,6 @@ object SystemQueries {
         .write.format("graft-store").mode("append").save(src)
       s.sql("CALL gq235.system.refresh_mview('mv')")
       graft.BenchSetup.mark() // fixture setup ends; queries follow
-      val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
       val q = s.sql(
         """SELECT o_orderpriority AS pr, count(*) AS n,
           |  round(sum(o_totalprice), 2) AS rev,
@@ -5551,7 +5530,7 @@ object SystemQueries {
           |FROM gq235.src WHERE o_orderkey < 9000
           |GROUP BY o_orderpriority""".stripMargin)
       val rows = q.collect()
-      val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
+      val opened = graft.sources.v2.GraftStoreOps.slicesOpened(q)
       // MV slice + ≤2 tail files — never the 6 covered files
       val mixedServed =
         q.queryExecution.optimizedPlan.toString.contains(s"$base/mv") &&
@@ -5649,7 +5628,6 @@ object SystemQueries {
         "JOIN gq237.dim ON o_custkey = c_custkey " +
         "WHERE o_orderkey < 6000 GROUP BY c_mktsegment')")
       graft.BenchSetup.mark() // fixture setup ends; queries follow
-      val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
       val q = s.sql(
         """SELECT c_mktsegment AS seg, count(*) AS n,
           |  round(sum(o_totalprice), 2) AS rev
@@ -5657,7 +5635,7 @@ object SystemQueries {
           |WHERE o_orderkey < 9000
           |GROUP BY c_mktsegment""".stripMargin)
       val rows = q.collect()
-      val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
+      val opened = graft.sources.v2.GraftStoreOps.slicesOpened(q)
       // MV slice + dim + the [6000, 9000) tail files — never all 8
       // covered-range fact files
       val mixedServed =
@@ -5835,7 +5813,6 @@ object SystemQueries {
         .write.format("graft-store").mode("append").save(fact)
       s.sql("CALL gq240.system.refresh_mview('mv')")
       graft.BenchSetup.mark() // fixture setup ends; queries follow
-      val before = graft.sources.v2.GraftStoreOps.scannedFileSlices
       val q = s.sql(
         """SELECT c_mktsegment AS seg, count(*) AS n,
           |  round(sum(o_totalprice), 2) AS rev
@@ -5843,7 +5820,7 @@ object SystemQueries {
           |WHERE o_orderkey < 9000
           |GROUP BY c_mktsegment""".stripMargin)
       val rows = q.collect()
-      val opened = graft.sources.v2.GraftStoreOps.scannedFileSlices - before
+      val opened = graft.sources.v2.GraftStoreOps.slicesOpened(q)
       // MV slice + dim + the tail files — never the 6 covered files
       val mixedJb =
         q.queryExecution.optimizedPlan.toString.contains(s"$base/mv") &&
@@ -5967,9 +5944,8 @@ object SystemQueries {
           |FROM gq242.src
           |GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
           |  (o_orderstatus), ())""".stripMargin)
-      val b1 = ops.scannedFileSlices
       val rows = q.collect()
-      val opened = ops.scannedFileSlices - b1
+      val opened = ops.slicesOpened(q)
       // the sugar forms lower to the same Expand and serve too
       val cube = s.sql(
         """SELECT o_orderstatus AS st, o_orderpriority AS pri,
@@ -6033,9 +6009,8 @@ object SystemQueries {
           |  count(*) AS n, round(sum(o_totalprice), 2) AS rev
           |FROM gq243.src
           |GROUP BY date_trunc('year', o_orderdate)""".stripMargin)
-      val b1 = ops.scannedFileSlices
       val rows = q1.collect()
-      val onSlices = ops.scannedFileSlices - b1
+      val onSlices = ops.slicesOpened(q1)
       // the year() surface form coarsens through the same device
       val q2 = s.sql(
         """SELECT year(o_orderdate) AS y, count(*) AS n FROM gq243.src

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression,
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, SubqueryAlias}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** MATERIALIZED VIEWS with CDC-driven INCREMENTAL refresh.
@@ -111,6 +112,21 @@ object GraftMview {
   /** [[LocalFrameRows]] as the refresh reads it: tests run a refresh
     * under `withValue(0)` to take the checkpoint path for every frame. */
   private[graft] val localFrameRows = new scala.util.DynamicVariable[Long](LocalFrameRows)
+
+  /** The graft-store slices opened by the plans one refresh runs (its
+    * futures share one): `apply` runs a plan by `action`, then adds the
+    * `slicesOpened` metric of that plan ([[GraftStoreOps.slicesOpened]]). */
+  private[v2] final class Reads {
+    private val n = new java.util.concurrent.atomic.AtomicLong
+    def apply[T](df: DataFrame)(action: DataFrame => T): T = {
+      val out = action(df)
+      n.addAndGet(GraftStoreOps.slicesOf(df))
+      out
+    }
+    def checkpoint(df: DataFrame): DataFrame = apply(df)(graft.operators.IterGuard(_))
+    def local(df: DataFrame): DataFrame = apply(df)(GraftLocal.collect)
+    def total: Long = n.get
+  }
 
   /** One output column of the view: a group key or an aggregate. */
   private[v2] sealed trait ColSpec { def out: String }
@@ -720,13 +736,13 @@ object GraftMview {
     * appears in the key set. None when over cap; callers keep their exact
     * (null-safe) semi-join either way, this only prunes files. */
   private[v2] def boundedKeyPred(keys: DataFrame, keyCols: Seq[String],
-      targetCols: Seq[String]): Option[Column] = {
+      targetCols: Seq[String])(implicit reads: Reads): Option[Column] = {
     val sel = keys.select(keyCols.map(col): _*)
     // a driver-local key frame is read without a job (duplicate rows
     // would only repeat IN values; they are dropped for the cap count)
     val rows =
       if (GraftLocal.rows(sel).isDefined) sel.collect().distinct.take(1001)
-      else sel.distinct().limit(1001).collect()
+      else reads(sel.distinct().limit(1001))(_.collect())
     // an EMPTY key set is the strongest predicate, not the weakest: every
     // caller pairs this with an exact (semi-)join on the same keys, whose
     // output is empty for empty keys — `false` skips the scan entirely
@@ -756,11 +772,11 @@ object GraftMview {
     * loses IN precision, never all pruning. None for unorderable key
     * types (the caller stays conservative, exactly as before). */
   private def rangeKeyPred(keys: DataFrame, keyCols: Seq[String],
-      targetCols: Seq[String]): Option[Column] =
+      targetCols: Seq[String])(implicit reads: Reads): Option[Column] =
     try {
       val aggs = keyCols.flatMap(k => Seq(min(col(k)), max(col(k)),
         max(when(col(k).isNull, 1).otherwise(0))))
-      val r = keys.agg(aggs.head, aggs.tail: _*).collect()(0)
+      val r = reads(keys.agg(aggs.head, aggs.tail: _*))(_.collect())(0)
       Some(targetCols.zipWithIndex.map { case (tc, i) =>
         val lo = r.get(3 * i)
         val hi = r.get(3 * i + 1)
@@ -784,19 +800,19 @@ object GraftMview {
     * key frame on the refresh path. Over the cap it degrades to the usual
     * [[graft.operators.IterGuard]] checkpoint: identical frames, identical
     * semantics, churn-proportional exactly as before. */
-  private def materializeKeys(df: DataFrame): DataFrame =
+  private def materializeKeys(df: DataFrame)(implicit reads: Reads): DataFrame =
     if (GraftLocal.rows(df).isDefined) df // already on the driver: no job
     else {
-      val rows = df.limit(1001).collect()
+      val rows = reads(df.limit(1001))(_.collect())
       if (rows.length <= 1000)
         df.sparkSession.createDataFrame(
           java.util.Arrays.asList(rows: _*), df.schema)
-      else graft.operators.IterGuard(df)
+      else reads.checkpoint(df)
     }
 
   /** [[materializeKeys]] of the DISTINCT rows of `df`: a driver-local
     * frame dedupes on the driver, with no job. */
-  private def materializeDistinctKeys(df: DataFrame): DataFrame =
+  private def materializeDistinctKeys(df: DataFrame)(implicit reads: Reads): DataFrame =
     GraftLocal.distinct(df).getOrElse(materializeKeys(df.distinct()))
 
   /** Collapse carried-identical ± pairs down to NET row churn: a
@@ -836,7 +852,8 @@ object GraftMview {
     * cascade along its branch — the join itself stays exact either way,
     * and the driver transfer is always ≤ cap+1 rows per hop. */
   private[v2] def pruneByChurnKeys(frames0: Seq[DataFrame],
-      keys: Seq[(Int, String, Int, String)], churned: Int): Seq[DataFrame] = {
+      keys: Seq[(Int, String, Int, String)], churned: Int)
+      (implicit reads: Reads): Seq[DataFrame] = {
     val cap = 1000
     val frames = frames0.toArray
     val visited = scala.collection.mutable.Set(churned)
@@ -855,7 +872,7 @@ object GraftMview {
           val vals =
             if (GraftLocal.rows(sel).isDefined)
               sel.collect().map(_.get(0)).distinct.take(cap + 1)
-            else sel.distinct().limit(cap + 1).collect().map(_.get(0))
+            else reads(sel.distinct().limit(cap + 1))(_.collect()).map(_.get(0))
           visited += other
           if (vals.length <= cap) {
             frames(other) = frames(other)
@@ -959,24 +976,30 @@ object GraftMview {
     * frame: one row per surviving (group…, value) pair. */
   private def writeCompanion(spark: SparkSession, cp: String, pf: DataFrame,
       filterSql: Option[String], cols: Seq[ColSpec], src0: String,
-      wmProp: String): Unit = {
+      wmProp: String)(implicit reads: Reads): Unit = {
     val groupOuts = cols.collect { case g: GroupCol => g }
     val filtered = filterSql.fold(pf)(f => pf.filter(expr(f)))
-    filtered.filter(col(src0).isNotNull)
+    overwrite(filtered.filter(col(src0).isNotNull)
       .groupBy(groupOuts.map(g => groupKey(g).as(g.out)) :+
         col(src0).as("__dv"): _*)
       .agg(count(lit(1)).cast(LongType).as("__dc"))
       // range-cluster on the group keys: refresh-time key-scoped reads
       // of the (distinct-pairs-sized) companion skip files via stats
-      .repartitionByRange(groupOuts.map(g => col(g.out)) :+ col("__dv"): _*)
-      .write.format("graft-store").option("dmlMode", "mor")
-      .option("setProps", s"${enc("graft.dck.wms")}:${enc(wmProp)}")
-      .mode("overwrite").save(cp)
+      .repartitionByRange(groupOuts.map(g => col(g.out)) :+ col("__dv"): _*),
+      cp, "dmlMode" -> "mor",
+      "setProps" -> s"${enc("graft.dck.wms")}:${enc(wmProp)}")
   }
+
+  /** `df.write.format("graft-store").mode("overwrite")` with `options`,
+    * run as a command frame so the reads under the write count in
+    * `reads`. */
+  private def overwrite(df: DataFrame, path: String, options: (String, String)*)
+      (implicit reads: Reads): Unit =
+    reads(graftshim.overwrite(df, new GraftStore, Map("path" -> path) ++ options))(_ => ())
 
   private def writeFull(spark: SparkSession, mvPath: String, src: MvSource,
       filterSql: Option[String], cols: Seq[ColSpec], wms2: Seq[(Int, String)],
-      props: Map[String, String]): Long = {
+      props: Map[String, String])(implicit reads: Reads): Long = {
     val heads = wms2.map(_._1)
     val pf = pinnedFrame(spark, src, heads)
     // the aggregate executes exactly once (this write); the row count
@@ -984,11 +1007,9 @@ object GraftMview {
     // pair cost two extra Spark jobs per full (re)build for a number the
     // write already knows — and a plain write recomputes from the pinned
     // source on task retry, so no checkpoint is needed for reliability.
-    aggregate(pf, filterSql, cols)
-      .write.format("graft-store").option("dmlMode", "mor")
-      .option("setProps", props.toSeq.sortBy(_._1)
+    overwrite(aggregate(pf, filterSql, cols), mvPath, "dmlMode" -> "mor",
+      "setProps" -> props.toSeq.sortBy(_._1)
         .map { case (k, v) => s"${enc(k)}:${enc(v)}" }.mkString(","))
-      .mode("overwrite").save(mvPath)
     val n = GraftStoreFormat
       .readLatestManifest(mvPath, spark.sparkContext.hadoopConfiguration)
       .map(_.files.map(_.rows).sum).getOrElse(0L)
@@ -1023,7 +1044,7 @@ object GraftMview {
       (ms.size - 1, ms.last.getName)
     }
     val n = writeFull(spark, mvPath, src, filterSql, cols, wms,
-      wmProps(src, filterSql, cols, sql, wms))
+      wmProps(src, filterSql, cols, sql, wms))(new Reads)
     // register the dependent on its SOURCE(s) (the `_mvdeps.d` sidecar —
     // NOT a commit: registering must not advance the source's history,
     // which would stale the view it just created): the
@@ -1069,9 +1090,13 @@ object GraftMview {
     * watermark snapshot is still retained; FULL recompute (overwrite,
     * still pinned + atomically stamped) when it expired or on
     * `forceFull`. Returns (mode, groups changed, groups deleted, new
-    * watermark). */
+    * watermark, slices opened). Slices opened is the `slicesOpened` SQL
+    * metric summed over every plan the refresh ran: the source churn
+    * reads and positional walks, the pinned-side and companion reads, the
+    * view-side merge scan, and a full recompute's write. */
   def refresh(spark: SparkSession, mvPath: String,
-      forceFull: Boolean = false): (String, Long, Long, Int) = {
+      forceFull: Boolean = false): (String, Long, Long, Int, Long) = {
+    implicit val reads: Reads = new Reads
     val conf = spark.sparkContext.hadoopConfiguration
     val props = GraftStoreOps.tableProps(spark, mvPath)
     require(props.get("graft.mv").contains("true"),
@@ -1097,7 +1122,7 @@ object GraftMview {
       w < ms.size && ms(w).getName == nm
     }
     val atHead = wms.map(_._1) == heads
-    if (wmValid && atHead && !forceFull) return ("noop", 0L, 0L, wms.head._1)
+    if (wmValid && atHead && !forceFull) return ("noop", 0L, 0L, wms.head._1, 0L)
     val newProps = wmProps(src, filterSql, cols, props("graft.mv.query"),
       heads.zip(msAll).map { case (h, ms) => (h, ms(h).getName) })
     val mvSchema = spark.read.format("graft-store").load(mvPath).schema
@@ -1107,7 +1132,7 @@ object GraftMview {
     if (forceFull || !wmValid || legacy) {
       val n = writeFull(spark, mvPath, src, filterSql, cols,
         heads.zip(msAll).map { case (h, ms) => (h, ms(h).getName) }, newProps)
-      return ("full", n, 0L, heads.head)
+      return ("full", n, 0L, heads.head, reads.total)
     }
     // ---- incremental ----
     // every maintenance frame below is churn-sized, not corpus-sized: the
@@ -1130,8 +1155,7 @@ object GraftMview {
     // one collect onto the driver when the frame's rows are bounded by
     // `rows` ≤ the local bound, else the usual checkpoint
     def materialize(df: DataFrame, rows: Long): DataFrame =
-      if (rows <= localBound) GraftLocal.collect(df)
-      else graft.operators.IterGuard(df)
+      if (rows <= localBound) reads.local(df) else reads.checkpoint(df)
     // the signed churn of the MAINTAINED RELATION. Single table: the
     // source's own +1/-1 deltas. Join: the delta rule
     //   Δ(R⋈S) = ΔR ⋈ S_new  ∪  R_old ⋈ ΔS
@@ -1165,7 +1189,7 @@ object GraftMview {
         // COUNT(DISTINCT) column: then a driver-sized churn is collected
         // once; otherwise the deltas' one job reads it directly
         val net = churnAt(p, 0)
-        if (hasDCount && estimates.head <= localBound) GraftLocal.collect(net) else net
+        if (hasDCount && estimates.head <= localBound) reads.local(net) else net
       case JoinSrc(paths2, keys, ls) if ls.isEmpty =>
         // N-WAY delta rule, one term per CHURNED side i:
         //   Δi = R1_old ⋈ … ⋈ R(i-1)_old ⋈ ΔRi ⋈ R(i+1)_new ⋈ … ⋈ Rn_new
@@ -1362,7 +1386,7 @@ object GraftMview {
             while (child != 0) {
               val par = parentOf(child)
               val childKeys = keys.filter(_._3 == child)
-              val fj = graft.operators.IterGuard(
+              val fj = reads.checkpoint(
                 restrict(pin(par), childKeys.map(_._2), kf))
               restricted(par) = fj
               if (par != 0) {
@@ -1455,11 +1479,11 @@ object GraftMview {
     // (one row per delta row) below
     val (deltas, deltaRows) = src match {
       case SingleSrc(_) if estimates.head <= localBound =>
-        val l = GraftLocal.collect(deltas0)
+        val l = reads.local(deltas0)
         (l, GraftLocal.rows(l).get.size.toLong)
       case _ =>
         val obs = new org.apache.spark.sql.Observation()
-        val c = graft.operators.IterGuard(deltas0.observe(obs, count(lit(1)).as("n")))
+        val c = reads.checkpoint(deltas0.observe(obs, count(lit(1)).as("n")))
         val metrics = obs.get
         (c, metrics("n").asInstanceOf[Long])
     }
@@ -1494,7 +1518,7 @@ object GraftMview {
               col(s0).as("__dv"): _*)
             .agg(sum(col("_sign")).cast(LongType).as("__cd"))
             .filter(col("__cd") =!= 0L)
-            .transform(graft.operators.IterGuard(_))
+            .transform(reads.checkpoint)
           val stored0 = spark.read.format("graft-store").load(cp)
           // churned pairs are bounded: push them into the companion scan
           val stored = boundedKeyPred(vd,
@@ -1509,7 +1533,7 @@ object GraftMview {
               vd("__dv"),
               (coalesce(stored("__dc"), lit(0L)) + col("__cd"))
                 .cast(LongType).as("__dc")): _*)
-            .transform(graft.operators.IterGuard(_))
+            .transform(reads.checkpoint)
           val keyCols = groupOuts.map(_.out) :+ "__dv"
           // pairs reaching zero are in keys but not survivors: deleted
           GraftStoreOps.replaceByKeyMor(spark, cp,
@@ -1717,6 +1741,6 @@ object GraftMview {
     // churned group (every input to it is per-group), so the vanished
     // count (live <= 0) is exactly nKeys − nUp — the former separate
     // count() job re-derived a number the commit already knows.
-    ("incremental", nUp, nKeys - nUp, heads.head)
+    ("incremental", nUp, nKeys - nUp, heads.head, reads.total)
   }
 }

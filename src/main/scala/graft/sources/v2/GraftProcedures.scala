@@ -160,15 +160,17 @@ private[v2] class GraftProcedures(base: String) {
       }),
     Proc("refresh_mview",
       "advance a materialized view to the source head (incremental: O(churn) " +
-        "signed deltas; one atomic commit carries rows + watermark)",
+        "signed deltas; one atomic commit carries rows + watermark); " +
+        "slices_opened = graft-store data-file slices the refresh's plans opened",
       Seq(p("name", StringType), pd("force_full", BooleanType, "false")),
       (s, in) => {
-        val (mode, changed, deleted, wm) = GraftMview.refresh(s,
+        val (mode, changed, deleted, wm, slices) = GraftMview.refresh(s,
           pathOf(in.getUTF8String(0).toString), in.getBoolean(1))
         oneRow(("mode", StringType, UTF8String.fromString(mode)),
           ("groups_changed", LongType, changed),
           ("groups_deleted", LongType, deleted),
-          ("watermark", IntegerType, wm))
+          ("watermark", IntegerType, wm),
+          ("slices_opened", LongType, slices))
       })
   ).map(pr => pr.procName -> pr).toMap
 

@@ -6,11 +6,14 @@ import java.util.{OptionalLong, UUID}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsDelete, SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
@@ -730,12 +733,6 @@ private[v2] object GraftStoreFormat {
     e.copy(stats = stats2, nullCounts = nulls3)
   }
 
-  /** Diagnostic counter: manifest + segment bytes actually PARSED in this
-    * JVM (cache misses only — a cache hit adds nothing). Exists so specs
-    * can PROVE the second scan of an unchanged table re-parses zero
-    * metadata, the same discipline as [[prunedBytesSkipped]]. */
-  val manifestParseBytes = new java.util.concurrent.atomic.LongAdder
-
   /** PARSED-MANIFEST CACHE. Manifest files are write-once per name
     * (commitManifest's CAS never overwrites), so a parsed [[GraftManifest]]
     * is reusable for as long as the file exists — the key's (length,
@@ -814,11 +811,7 @@ private[v2] object GraftStoreFormat {
     *     deployments. The dep list needs no TTL for CORRECTNESS (a stale
     *     dep fails candidate validation and is skipped; a missing new dep
     *     only forgoes an optimization), but it rides the same entry.
-    *
-    * [[mvProbeFsOps]] counts actual filesystem probe work (misses only),
-    * so specs can PIN that N repeated aggregates over an MV'd table issue
-    * zero metadata reads after the first — the manifest-cache discipline
-    * extended to the rewrite probe. */
+    */
   private case class MvProbe(at: Long, deps: Seq[String], head: Option[String]) {
     @volatile var manifest: Option[GraftManifest] = null // lazily filled
   }
@@ -827,10 +820,6 @@ private[v2] object GraftStoreFormat {
       override def removeEldestEntry(
           e: java.util.Map.Entry[String, MvProbe]): Boolean = size() > 64
     })
-
-  /** Diagnostic counter: rewrite-probe FILESYSTEM reads actually issued
-    * (cache misses only — a hit adds nothing). */
-  val mvProbeFsOps = new java.util.concurrent.atomic.LongAdder
 
   def invalidateMvProbe(path: String): Unit = mvProbeCache.remove(path)
 
@@ -844,7 +833,6 @@ private[v2] object GraftStoreFormat {
       val hit = mvProbeCache.get(path)
       if (hit != null && now - hit.at <= ttlMs) return (hit.deps, hit.head)
     }
-    mvProbeFsOps.increment()
     val deps = readMvDeps(path, conf)
     val head = listManifests(path, conf).lastOption.map(_.getName)
     if (ttlMs > 0) mvProbeCache.put(path, MvProbe(now, deps, head))
@@ -944,7 +932,6 @@ private[v2] object GraftStoreFormat {
     if (hit != null) return hit
     val in = fsys.open(p)
     val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    manifestParseBytes.add(body.length.toLong)
     val m = parseManifest(path, conf, p, body)
     manifestCache.put(key, m)
     m
@@ -1136,7 +1123,6 @@ private[v2] object GraftStoreFormat {
           val segBody =
             try scala.io.Source.fromInputStream(sin, "UTF-8").mkString
             finally sin.close()
-          manifestParseBytes.add(segBody.length.toLong)
           segBody.split("\n").filter(_.nonEmpty).toSeq.map(parseFileEntry)
         }
         val segNames = fileLines0.collect {
@@ -1618,21 +1604,6 @@ private[v2] object GraftStoreFormat {
     vals
   }
 
-  /** Diagnostic counter: payload bytes SKIPPED (advanced without decoding)
-    * by [[readRowPruned]] in this JVM. Executor-local by nature — on a real
-    * cluster each executor counts its own share; it exists so specs and
-    * local benches can PROVE a narrow projection does less decode work,
-    * not as a distributed metric. A per-row local tally is added once per
-    * row, so the hot loop touches the adder at most once per row. */
-  val prunedBytesSkipped = new java.util.concurrent.atomic.LongAdder
-
-  /** Diagnostic counter: data-file SLICES opened by scan readers in this
-    * JVM (one add per planned slice at reader creation — zero hot-path
-    * cost). Same spec-proof role as [[prunedBytesSkipped]]: lets a test
-    * assert a plan's file footprint (churn-proportional refresh, pruning)
-    * instead of trusting the narrative. */
-  val scannedFileSlices = new java.util.concurrent.atomic.LongAdder
-
   /** `skipBytes` contract-safe full skip (it may skip fewer — loop, and a
     * short skip at stream end is a truncated row, not a clean EOF). */
   private def skipFully(in: DataInputStream, n: Int): Unit = {
@@ -1655,9 +1626,10 @@ private[v2] object GraftStoreFormat {
     * for 2 columns plus a seek per pruned field. `wanted` may be longer
     * than `schema` (prefix-evolved files). Returns null at EOF; pruned
     * entries of the returned array stay null — callers must only index
-    * positions they asked for (or the metadata pseudo-columns). */
+    * positions they asked for (or the metadata pseudo-columns). The
+    * skipped payload bytes add to `tally`, the calling reader's counts. */
   def readRowPruned(in: DataInputStream, schema: StructType,
-      wanted: Array[Boolean]): Array[Any] = {
+      wanted: Array[Boolean], tally: GraftScanTally): Array[Any] = {
     val marker = in.read()
     if (marker == -1) return null
     require(marker == 1, s"graft-store: corrupt row marker $marker")
@@ -1698,7 +1670,7 @@ private[v2] object GraftStoreFormat {
       }
       i += 1
     }
-    if (skipped > 0) prunedBytesSkipped.add(skipped)
+    tally.skipped += skipped
     vals
   }
 
@@ -1817,18 +1789,19 @@ private[v2] final class GraftRowEncoder(schema: StructType) {
   * wraps the buffer region — safe: the buffer is read-only and Spark
   * copies rows on materialization), and pruned fields advance by pure
   * cursor arithmetic. Contract matches the stream decoder: clean EOF
-  * exactly at buffer end, loud failure mid-row. */
+  * exactly at buffer end, loud failure mid-row. Pruned payload bytes add
+  * to `tally`, the owning reader's counts. */
 private[v2] final class GraftBufferedRowReader(buf: Array[Byte], codes: Array[Byte],
+    tally: GraftScanTally,
     precs: Array[Int] = Array.empty, scales: Array[Int] = Array.empty) {
   private val bb = java.nio.ByteBuffer.wrap(buf)
   private var pos = 0
-  private var skipped = 0L
 
   /** Decode the next row's `wanted` fields into `vals` (pruned slots are
     * nulled); false at clean EOF. `vals` is caller-owned and reused — the
     * values it holds are invalidated by the next call. */
   def readPruned(wanted: Array[Boolean], vals: Array[Any]): Boolean = {
-    if (pos >= buf.length) { flushSkipped(); return false }
+    if (pos >= buf.length) return false
     require(buf(pos) == 1, s"graft-store: corrupt row marker ${buf(pos)}")
     pos += 1
     var i = 0
@@ -1854,23 +1827,17 @@ private[v2] final class GraftBufferedRowReader(buf: Array[Byte], codes: Array[By
         } else {
           vals(i) = null
           codes(i) match {
-            case 0 | 2 | 6 => pos += 8; skipped += 8
-            case 7 => pos += 16; skipped += 16
-            case 1 | 3 => pos += 4; skipped += 4
-            case 4 => pos += 1; skipped += 1
-            case _ => val len = bb.getInt(pos); pos += 4 + len; skipped += len
+            case 0 | 2 | 6 => pos += 8; tally.skipped += 8
+            case 7 => pos += 16; tally.skipped += 16
+            case 1 | 3 => pos += 4; tally.skipped += 4
+            case 4 => pos += 1; tally.skipped += 1
+            case _ => val len = bb.getInt(pos); pos += 4 + len; tally.skipped += len
           }
         }
       }
       i += 1
     }
     true
-  }
-
-  /** Fold locally-tallied pruned bytes into the JVM counter (EOF/close —
-    * once per file, not once per row). */
-  def flushSkipped(): Unit = {
-    if (skipped > 0) { GraftStoreFormat.prunedBytesSkipped.add(skipped); skipped = 0 }
   }
 
   /** UNSAFE fast path: decode the next row STRAIGHT into an
@@ -1885,7 +1852,7 @@ private[v2] final class GraftBufferedRowReader(buf: Array[Byte], codes: Array[By
     * clean EOF. */
   def readRowUnsafe(outOf: Array[Int],
       w: org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter): Boolean = {
-    if (pos >= buf.length) { flushSkipped(); return false }
+    if (pos >= buf.length) return false
     require(buf(pos) == 1, s"graft-store: corrupt row marker ${buf(pos)}")
     pos += 1
     var i = 0
@@ -1914,11 +1881,11 @@ private[v2] final class GraftBufferedRowReader(buf: Array[Byte], codes: Array[By
             val len = bb.getInt(pos); pos += 4
             w.write(out, UTF8String.fromBytes(buf, pos, len)); pos += len
         } else codes(i) match {
-          case 0 | 2 | 6 => pos += 8; skipped += 8
-          case 7 => pos += 16; skipped += 16
-          case 1 | 3 => pos += 4; skipped += 4
-          case 4 => pos += 1; skipped += 1
-          case _ => val len = bb.getInt(pos); pos += 4 + len; skipped += len
+          case 0 | 2 | 6 => pos += 8; tally.skipped += 8
+          case 7 => pos += 16; tally.skipped += 16
+          case 1 | 3 => pos += 4; tally.skipped += 4
+          case 4 => pos += 1; tally.skipped += 1
+          case _ => val len = bb.getInt(pos); pos += 4 + len; tally.skipped += len
         }
       }
       i += 1
@@ -1930,7 +1897,7 @@ private[v2] final class GraftBufferedRowReader(buf: Array[Byte], codes: Array[By
     * are skipped on the unsafe path (a deleted row's bytes never
     * materialize). False at clean EOF. */
   def skipRow(): Boolean = {
-    if (pos >= buf.length) { flushSkipped(); return false }
+    if (pos >= buf.length) return false
     require(buf(pos) == 1, s"graft-store: corrupt row marker ${buf(pos)}")
     pos += 1
     var i = 0
@@ -4564,6 +4531,7 @@ private[v2] class GraftStoreScan(protected val path: String,
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftStoreReaderFactory(manifest.schema, required, conf,
       GraftStoreFormat.logicalDefaults(manifest))
+  override def supportedCustomMetrics(): Array[CustomMetric] = GraftScanMetrics.supported
 
   // streaming admission-control knobs (read options), injected by the
   // scan builder — plumbing only, the stream owns the semantics
@@ -5220,7 +5188,7 @@ private[v2] class GraftCdcReaderFactory(table: StructType, required: StructType,
       w
     }
     val defaultVals = decodedDefaults()
-    new PartitionReader[InternalRow] {
+    new GraftCountedReader {
       private var in: DataInputStream = _
       private lazy val eqMasks = priorEq.map { case (s, ks) => (ks.toArray, loadKeys(s, ks)) }
       private val curFile = UTF8String.fromString(target)
@@ -5235,8 +5203,9 @@ private[v2] class GraftCdcReaderFactory(table: StructType, required: StructType,
             val abs = new Path(target)
             in = new DataInputStream(new BufferedInputStream(
               abs.getFileSystem(conf.value).open(abs), 1 << 16))
+            tally.slices += 1
           }
-          cur = GraftStoreFormat.readRowPruned(in, fileSchema, wanted)
+          cur = GraftStoreFormat.readRowPruned(in, fileSchema, wanted, tally)
           if (cur == null) return false
           pos += 1
           if (masked(maskIdx) == pos) {
@@ -5283,11 +5252,12 @@ private[v2] class GraftCdcReaderFactory(table: StructType, required: StructType,
         if (i < fileSchema.length) w(i) = true))
       w
     }
-    new PartitionReader[InternalRow] {
+    new GraftCountedReader {
       private val abs = new Path(target)
       private val fs = abs.getFileSystem(conf.value)
       private val in = new DataInputStream(
         new BufferedInputStream(fs.open(abs), 1 << 16))
+      tally.slices = 1
       private val curFile = UTF8String.fromString(target)
       private val newMasks = keyStores.map { case (s, ks) => (ks.toArray, loadKeys(s, ks)) }
       private val oldMasks = priorEq.map { case (s, ks) => (ks.toArray, loadKeys(s, ks)) }
@@ -5302,7 +5272,7 @@ private[v2] class GraftCdcReaderFactory(table: StructType, required: StructType,
           else if (i < defaultVals.length) defaultVals(i) else null).toSeq
       override def next(): Boolean = {
         while (true) {
-          cur = GraftStoreFormat.readRowPruned(in, fileSchema, wanted)
+          cur = GraftStoreFormat.readRowPruned(in, fileSchema, wanted, tally)
           if (cur == null) return false
           pos += 1
           // prior position mask, then prior equality masks: rows already
@@ -5365,13 +5335,14 @@ private[v2] class GraftCdcReaderFactory(table: StructType, required: StructType,
       }
       w
     }
-    new PartitionReader[InternalRow] {
+    new GraftCountedReader {
       private val fs = new Path(file).getFileSystem(conf.value)
       private val in = new DataInputStream(
         new BufferedInputStream(fs.open(new Path(file)), 1 << 16))
+      tally.slices = 1
       private var cur: Array[Any] = _
       override def next(): Boolean = {
-        cur = GraftStoreFormat.readRowPruned(in, fileSchema, wanted)
+        cur = GraftStoreFormat.readRowPruned(in, fileSchema, wanted, tally)
         cur != null
       }
       override def get(): InternalRow =
@@ -5409,6 +5380,7 @@ private[v2] class GraftStoreCdcScan(path: String, table: StructType,
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String = s"graft-store-cdc $path"
+  override def supportedCustomMetrics(): Array[CustomMetric] = GraftScanMetrics.supported
 
   override def planInputPartitions(): Array[InputPartition] = {
     val ms = GraftStoreFormat.listManifests(path, conf.value)
@@ -5478,21 +5450,6 @@ private[v2] class GraftStoreCdcMicroBatchStream(path: String, table: StructType,
   * churn rate — append-mostly tables retain near-zero extra data bytes
   * because old snapshots' files are subsets of new ones. */
 object GraftStoreOps {
-
-  /** Monotone count of data-file slices opened by graft-store scans since
-    * JVM start — the I/O-proportionality probe queries and specs diff
-    * around an operation to prove churn-proportional reads. */
-  def scannedFileSlices: Long = GraftStoreFormat.scannedFileSlices.sum()
-
-  /** Monotone count of MV-rewrite probe FILESYSTEM reads (cache misses
-    * only) — the planning-cost budget specs diff around planning to prove
-    * a warm plan issues zero metadata work. */
-  def mvProbeFsOps: Long = GraftStoreFormat.mvProbeFsOps.sum()
-
-  /** Monotone count of manifest bytes parsed — the companion budget
-    * counter (a probe hit that still re-parsed metadata would hide
-    * planning cost from [[mvProbeFsOps]] alone). */
-  def manifestParseBytes: Long = GraftStoreFormat.manifestParseBytes.sum()
 
   /** Snapshot history, oldest first: (snapshot index, publication millis,
     * file count, total rows). Driver-side metadata only — the listing is
@@ -7194,16 +7151,64 @@ object GraftStoreOps {
 
   /** The rows the walk units name, as a frame of the table's schema: one
     * Spark partition per unit, read through the change feed's reader by
-    * the DSv2 reader RDD, so the walk's bytes count as scan input. */
+    * the DSv2 reader RDD, so the walk's bytes count as scan input and the
+    * targets it opens as [[slicesOpened]]. */
   private def walkedRows(spark: SparkSession, m: GraftManifest,
       units: Seq[GraftCdcRefPartition]): org.apache.spark.sql.DataFrame = {
     val factory = new GraftCdcReaderFactory(m.schema, m.schema,
       new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration),
       GraftStoreFormat.logicalDefaults(m))
-    org.apache.spark.sql.graftshim.internalDataFrame(spark,
-      new org.apache.spark.sql.execution.datasources.v2.DataSourceRDD(
-        spark.sparkContext, units.map(Seq(_)), factory, false, Map.empty),
+    val slices = SQLMetrics.createV2CustomMetric(spark.sparkContext,
+      new GraftScanMetrics.SlicesOpenedMetric)
+    org.apache.spark.sql.graftshim.internalDataFrame(spark, new GraftWalkRDD(
+      spark.sparkContext, units, factory, Map(GraftScanMetrics.SlicesOpened -> slices)),
       m.schema)
+  }
+
+  /** Data-file slices that `df`'s graft-store reads opened: the reads'
+    * `slicesOpened` SQL metric summed over the executed plan (the final
+    * adaptive plan, its stages and subqueries, the walks). Metrics belong
+    * to the plan that ran: read this after running `df` itself
+    * (`collect()`, a checkpoint), since `df.count()` and `df.write` run a
+    * new query. Fails when the plan holds no graft-store read, whose
+    * metric would read 0 whether or not it ran. */
+  def slicesOpened(df: DataFrame): Long = readMetric(df, GraftScanMetrics.SlicesOpened)
+
+  /** Payload bytes `df`'s graft-store reads seeked past without decoding
+    * (pruned columns), read like [[slicesOpened]]. */
+  def bytesSkipped(df: DataFrame): Long = readMetric(df, GraftScanMetrics.BytesSkipped)
+
+  private def readMetric(df: DataFrame, name: String): Long = {
+    val reads = graftReads(df.queryExecution.executedPlan)
+    require(reads.nonEmpty, "graft-store: no graft-store read in the plan to report")
+    sumOf(reads, name)
+  }
+
+  /** [[slicesOpened]] of a plan that may read no graft-store table (0). */
+  private[v2] def slicesOf(df: DataFrame): Long =
+    sumOf(graftReads(df.queryExecution.executedPlan), GraftScanMetrics.SlicesOpened)
+
+  // a reused exchange or subquery is its original node: count each metric once
+  private def sumOf(reads: Seq[Map[String, SQLMetric]], name: String): Long =
+    reads.flatMap(_.get(name)).distinctBy(_.id).map(_.value).sum
+
+  private def graftReads(p: SparkPlan): Seq[Map[String, SQLMetric]] = {
+    import org.apache.spark.sql.execution.{CommandResultExec, RDDScanExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    p match {
+      case a: AdaptiveSparkPlanExec => graftReads(a.executedPlan)
+      case q: QueryStageExec => graftReads(q.plan)
+      case c: CommandResultExec => graftReads(c.commandPhysicalPlan)
+      case b: BatchScanExec
+          if b.scan.isInstanceOf[GraftStoreScan] || b.scan.isInstanceOf[GraftStoreCdcScan] =>
+        Seq(b.metrics)
+      case r: RDDScanExec => r.rdd match {
+        case w: GraftWalkRDD => Seq(w.metrics)
+        case _ => Nil
+      }
+      case other => (other.children ++ other.subqueries).flatMap(graftReads)
+    }
   }
 
   /** True when [[signedChanges]] between two snapshots may return rows
@@ -7410,6 +7415,57 @@ private[v2] case class GraftKeyedFilesPartition(files: Seq[GraftFileSlice], key:
   override def partitionKey(): InternalRow = key
 }
 
+/** The SQL metrics of graft-store reads (DSv2 custom sum metrics): each
+  * reader reports its own [[GraftScanTally]] through
+  * `currentMetricsValues`, and Spark sums the tasks' values into the scan
+  * node of the executed plan, where [[GraftStoreOps.slicesOpened]] reads
+  * them back. */
+private[v2] object GraftScanMetrics {
+  val SlicesOpened = "slicesOpened"
+  val BytesSkipped = "bytesSkipped"
+  class SlicesOpenedMetric extends CustomSumMetric {
+    override def name(): String = SlicesOpened
+    override def description(): String = "graft-store slices opened"
+  }
+  class BytesSkippedMetric extends CustomSumMetric {
+    override def name(): String = BytesSkipped
+    override def description(): String = "graft-store payload bytes skipped by pruned decode"
+  }
+  def supported: Array[CustomMetric] = Array(new SlicesOpenedMetric, new BytesSkippedMetric)
+}
+
+/** One reader's counts: data-file slices it opened and payload bytes its
+  * decoder seeked past. Reader-local: counting never contends and never
+  * mixes two queries. */
+private[v2] final class GraftScanTally { var slices = 0L; var skipped = 0L }
+
+/** A graft-store partition reader reporting its [[GraftScanTally]] as the
+  * scan's SQL metrics. Spark hands a task's next reader the values of the
+  * reader before it (a keyed group reads several partitions in one task);
+  * the counts continue from them. */
+private[v2] trait GraftCountedReader extends PartitionReader[InternalRow] {
+  protected val tally = new GraftScanTally
+  override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
+    task(GraftScanMetrics.SlicesOpened, tally.slices),
+    task(GraftScanMetrics.BytesSkipped, tally.skipped))
+  override def initMetricsValues(ms: Array[CustomTaskMetric]): Unit = ms.foreach { m =>
+    if (m.name() == GraftScanMetrics.SlicesOpened) tally.slices += m.value()
+    else tally.skipped += m.value()
+  }
+  private def task(n: String, v: Long) = new CustomTaskMetric {
+    override def name(): String = n
+    override def value(): Long = v
+  }
+}
+
+/** The positional walk's reader RDD ([[GraftStoreOps.signedChanges]]),
+  * holding its `slicesOpened` metric where a plan walk can find it. */
+private[v2] final class GraftWalkRDD(sc: org.apache.spark.SparkContext,
+    units: Seq[GraftCdcRefPartition], factory: PartitionReaderFactory,
+    val metrics: Map[String, SQLMetric])
+    extends org.apache.spark.sql.execution.datasources.v2.DataSourceRDD(
+      sc, units.map(Seq(_)), factory, false, metrics)
+
 /** NOTE — columnar read path: probed and REJECTED (measured, not
   * assumed). A `ColumnarBatch`/`OnHeapColumnVector` reader was built and
   * benchmarked against the buffered row reader below: full-width 1.73 →
@@ -7437,10 +7493,6 @@ private[v2] class GraftStoreReaderFactory(full: StructType, required: StructType
       case GraftFilePartition(s) => Seq(s)
       case GraftKeyedFilesPartition(fs, _) => fs
     }
-    // diagnostic, once per planned slice (never in the row loop): lets
-    // specs PROVE a scan's file footprint — e.g. that an incremental MV
-    // refresh opens churn + view files, not the base table
-    GraftStoreFormat.scannedFileSlices.add(files.size.toLong)
     // -1 = the `_file` metadata column, -2 = `_pos` (both served from the
     // reader's position, no decode); anything else indexes the decoded row
     val keep: Array[Int] = required.fieldNames.map {
@@ -7460,7 +7512,12 @@ private[v2] class GraftStoreReaderFactory(full: StructType, required: StructType
       keep.foreach(i => if (i >= 0) w(i) = true)
       w
     }
-    new PartitionReader[InternalRow] {
+    new GraftCountedReader {
+      // the slices metric counts every planned slice once, at reader
+      // creation (never in the row loop): a scan's file footprint — e.g.
+      // an incremental MV refresh opens churn + view files, not the base
+      // table
+      tally.slices = files.size.toLong
       private var remaining = files
       private var in: DataInputStream = _           // stream fallback (>1 GiB files)
       private var bufr: GraftBufferedRowReader = _  // buffered hot path
@@ -7602,7 +7659,7 @@ private[v2] class GraftStoreReaderFactory(full: StructType, required: StructType
           }
           if (pendingBuf != null) {
             bufr = new GraftBufferedRowReader(pendingBuf,
-              GraftStoreFormat.typeCodes(fileSchema),
+              GraftStoreFormat.typeCodes(fileSchema), tally,
               fileSchema.fields.map {
                 case StructField(_, d: DecimalType, _, _) => d.precision; case _ => 0 },
               fileSchema.fields.map {
@@ -7735,7 +7792,7 @@ private[v2] class GraftStoreReaderFactory(full: StructType, required: StructType
                 if (bufr.readPruned(wanted, vals)) { cur = vals; true }
                 else { cur = null; false }
               } else {
-                cur = GraftStoreFormat.readRowPruned(in, fileSchema, wanted)
+                cur = GraftStoreFormat.readRowPruned(in, fileSchema, wanted, tally)
                 cur != null
               }
             if (!got) {
@@ -7798,10 +7855,7 @@ private[v2] class GraftStoreReaderFactory(full: StructType, required: StructType
         }
         outRow
       }
-      override def close(): Unit = {
-        if (in != null) in.close()
-        if (bufr != null) bufr.flushSkipped()
-      }
+      override def close(): Unit = if (in != null) in.close()
     }
   }
 }

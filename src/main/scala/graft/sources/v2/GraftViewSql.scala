@@ -417,10 +417,12 @@ private[v2] case class GraftRefreshMviewCommand(catalog: GraftCatalog,
     AttributeReference("groups_deleted",
       org.apache.spark.sql.types.LongType, nullable = false)(),
     AttributeReference("watermark",
-      org.apache.spark.sql.types.IntegerType, nullable = false)())
+      org.apache.spark.sql.types.IntegerType, nullable = false)(),
+    AttributeReference("slices_opened",
+      org.apache.spark.sql.types.LongType, nullable = false)())
   override def run(spark: SparkSession): Seq[Row] = {
-    val (mode, changed, deleted, wm) =
+    val (mode, changed, deleted, wm, slices) =
       GraftMview.refresh(spark, catalog.tablePath(ident), forceFull)
-    Seq(Row(mode, changed, deleted, wm))
+    Seq(Row(mode, changed, deleted, wm, slices))
   }
 }

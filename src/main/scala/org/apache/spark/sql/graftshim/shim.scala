@@ -46,4 +46,20 @@ package object graftshim {
     * shadow one. */
   def isTempView(spark: SparkSession, nameParts: Seq[String]): Boolean =
     spark.sessionState.catalog.isTempView(nameParts)
+
+  /** Overwrite `provider`'s table at `options("path")` with `df`, as
+    * `df.write.mode("overwrite").options(options).save()` does, and return
+    * the executed command as a frame. The writer keeps its QueryExecution
+    * to itself; the returned frame's plan holds the write's plan, and with
+    * it the SQL metrics of the reads under the write. */
+  def overwrite(df: DataFrame, provider: connector.catalog.TableProvider,
+      options: Map[String, String]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    val table = provider.getTable(df.schema.asNullable, Array.empty, options.asJava)
+    val relation = execution.datasources.v2.DataSourceV2Relation.create(
+      table, None, None, new util.CaseInsensitiveStringMap(options.asJava))
+    ofRows(df.sparkSession, catalyst.plans.logical.OverwriteByExpression.byName(
+      relation, df.asInstanceOf[classic.Dataset[_]].logicalPlan,
+      catalyst.expressions.Literal(true), options))
+  }
 }

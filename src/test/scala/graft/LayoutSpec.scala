@@ -10,8 +10,8 @@ class LayoutSpec extends AnyFunSuite with SparkTestBase {
   private val d = "/root/testdata/sf0.001"
 
   test("z-ordered files cover small rectangles on BOTH dimensions") {
-    val zDir = "/tmp/graft-layout-spec/zorder"
-    val rDir = "/tmp/graft-layout-spec/random"
+    val zDir = Fixture.dir()
+    val rDir = Fixture.dir()
     val li = Tables.lineitem(spark, d).select("l_partkey", "l_suppkey", "l_extendedprice")
     ZOrder.writeZOrdered(li, zDir, "l_partkey", "l_suppkey", numFiles = 16)
     li.repartition(16).write.mode("overwrite").parquet(rDir)

@@ -239,11 +239,13 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     // for tables with no `_mvdeps.d` sidecar at all (the overwhelmingly
     // common case on a real cluster) AND for tables with k registered
     // views; a cold probe is bounded by 1 (source) + k (candidate
-    // manifests). Counter-backed via mvProbeFsOps (probe events) and
-    // manifestParseBytes (actual metadata bytes parsed).
+    // manifests). Observed by the `flaky:` filesystem's call log under
+    // this test's directory: registry calls (probe work) and manifest or
+    // segment opens (metadata parses).
     import org.apache.spark.sql.functions.{col, count, lit}
-    import graft.sources.v2.GraftStoreOps
-    val base = Fixture.dir()
+    import graft.sources.v2.FlakyRenameFs
+    import graft.sources.v2.FlakyRenameFs.{callsUnder, metadataOpens, mvDepsCalls, mvProbes}
+    val base = FlakyRenameFs.dir(spark.sparkContext.hadoopConfiguration)
     spark.conf.set("spark.sql.catalog.auditpb", "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.auditpb.base", base)
     spark.conf.set("spark.graft.mv.probeCacheMs", "600000")
@@ -254,13 +256,13 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
       def qPlain() = spark.read.format("graft-store").load(s"$base/plain")
         .groupBy("k").agg(count(lit(1)).as("n"))
       qPlain().queryExecution.optimizedPlan // cold: pays the one probe
-      val p0 = GraftStoreOps.mvProbeFsOps
-      val b0 = GraftStoreOps.manifestParseBytes
-      (1 to 10).foreach(_ => qPlain().queryExecution.optimizedPlan)
-      assert(GraftStoreOps.mvProbeFsOps === p0,
+      val plain = callsUnder(base) {
+        (1 to 10).foreach(_ => qPlain().queryExecution.optimizedPlan)
+      }
+      assert(mvDepsCalls(plain) === 0,
         "planning 10 aggregates over a no-sidecar table must issue ZERO probe FS ops")
-      assert(GraftStoreOps.manifestParseBytes === b0,
-        "warm planning must re-parse zero metadata bytes")
+      assert(metadataOpens(plain) === 0,
+        "warm planning must re-parse zero metadata files")
       // ---- table with k = 4 registered (non-matching) views ----------
       // non-matching on purpose: the lazy candidate scan stops at the
       // first HIT, so refusing candidates is the worst case — every one
@@ -275,16 +277,16 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
       def qMiss() = spark.read.format("graft-store").load(s"$base/fanned")
         .groupBy(col("a"), col("b")) // (a, b) matches NO single-key view
         .agg(count(lit(1)).as("n"))
-      val c0 = GraftStoreOps.mvProbeFsOps
-      qMiss().queryExecution.optimizedPlan // cold
-      val cold = GraftStoreOps.mvProbeFsOps - c0
+      val cold = mvProbes(callsUnder(base) {
+        qMiss().queryExecution.optimizedPlan
+      })
       assert(cold <= 1 + 4, s"cold probe issued $cold FS probes for k=4 views")
-      val w0 = GraftStoreOps.mvProbeFsOps
-      val wb0 = GraftStoreOps.manifestParseBytes
-      (1 to 10).foreach(_ => qMiss().queryExecution.optimizedPlan)
-      assert(GraftStoreOps.mvProbeFsOps === w0,
+      val warm = callsUnder(base) {
+        (1 to 10).foreach(_ => qMiss().queryExecution.optimizedPlan)
+      }
+      assert(mvDepsCalls(warm) === 0,
         "warm planning with 4 refusing candidates must issue ZERO probe FS ops")
-      assert(GraftStoreOps.manifestParseBytes === wb0)
+      assert(metadataOpens(warm) === 0)
     } finally {
       spark.conf.unset("spark.graft.mv.probeCacheMs")
       spark.conf.unset("spark.sql.catalog.auditpb")

@@ -74,8 +74,9 @@ class ScaleSpec extends AnyFunSuite with SparkTestBase {
 
   test("partitionBy write prunes partitions at read (PartitionFilters, not data scan)") {
     val ev = Tables.events(spark, "/root/testdata/sf0.001")
-    ev.write.mode("overwrite").partitionBy("event_type").parquet("/tmp/graft-part-spec/events")
-    val back = spark.read.parquet("/tmp/graft-part-spec/events")
+    val dir = Fixture.dir()
+    ev.write.mode("overwrite").partitionBy("event_type").parquet(dir)
+    val back = spark.read.parquet(dir)
       .filter(col("event_type") === "purchase")
     val plan = back.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [isnotnull(event_type"), plan.take(2000))
@@ -121,26 +122,24 @@ class ScaleSpec extends AnyFunSuite with SparkTestBase {
   test("runtime bloom filter prunes the fact side before the shuffle") {
     import graft.operators.RuntimeFilters
     val d = "/root/testdata/sf0.001"
-    val li = Tables.lineitem(spark, d)
-    val ord = Tables.orders(spark, d).filter(col("o_totalprice") > 450000)
-    def join() = li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-      .groupBy("l_returnflag").agg(count(lit(1)).as("n"))
-    val baseline = join().collect().map(r => (r.getString(0), r.getLong(1))).toMap
-    val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    // force a shuffle join (broadcast joins don't need a runtime filter)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    RuntimeFilters.enableAtAnyScale(spark)
-    try {
-      val pruned = join()
-      val opt = pruned.queryExecution.optimizedPlan.toString
-      assert(opt.contains("might_contain"), opt.take(2000))
-      assert(opt.contains("bloom_filter_agg"), opt.take(2000))
-      val got = pruned.collect().map(r => (r.getString(0), r.getLong(1))).toMap
-      assert(got === baseline)
-    } finally {
-      RuntimeFilters.restoreDefaults(spark)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
+    def join(s: org.apache.spark.sql.SparkSession) = {
+      val li = Tables.lineitem(s, d)
+      val ord = Tables.orders(s, d).filter(col("o_totalprice") > 450000)
+      li.join(ord, li("l_orderkey") === ord("o_orderkey"))
+        .groupBy("l_returnflag").agg(count(lit(1)).as("n"))
     }
+    val baseline = join(spark).collect().map(r => (r.getString(0), r.getLong(1))).toMap
+    // a private session takes the tuned confs: force a shuffle join
+    // (broadcast joins don't need a runtime filter)
+    val tuned = spark.newSession()
+    tuned.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    RuntimeFilters.enableAtAnyScale(tuned)
+    val pruned = join(tuned)
+    val opt = pruned.queryExecution.optimizedPlan.toString
+    assert(opt.contains("might_contain"), opt.take(2000))
+    assert(opt.contains("bloom_filter_agg"), opt.take(2000))
+    val got = pruned.collect().map(r => (r.getString(0), r.getLong(1))).toMap
+    assert(got === baseline)
   }
 
   test("GraftExtensions registers all native functions via the injection hook") {

@@ -107,7 +107,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     val qArr = emb.filter(col("vec_id") === 0)
       .select("embedding").collect()(0).getSeq[Float](0).toArray
     val index = graft.ext.Ivf.build(emb.filter(col("vec_id") =!= 0), numCells = 8)
-    val path = "/tmp/graft-ivf-spec/index"
+    val path = Fixture.dir()
     graft.ext.Ivf.save(index, path)
     val loaded = graft.ext.Ivf.load(spark, path)
     // loaded search = in-memory search, row for row
@@ -126,13 +126,14 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     import graft.streaming.EventsPipeline
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def at(min: Long) = new java.sql.Timestamp(base.getTime + min * 60000)
+    val dir = Fixture.dir()
     Seq((1L, at(0), 1L, "click", 1.0), (1L, at(1), 1L, "click", 1.0), // dup id
         (2L, at(2), 1L, "view", 2.0))
       .toDF("event_id", "ts", "user_id", "event_type", "value")
-      .write.mode("overwrite").parquet("/tmp/graft-dedup-spec/events")
+      .write.mode("overwrite").parquet(dir)
     val stream = spark.readStream
       .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE")
-      .parquet("/tmp/graft-dedup-spec/events")
+      .parquet(dir)
     val q = EventsPipeline.dedupStream(stream).writeStream
       .outputMode("append").format("memory").queryName("spec_dedup").start()
     try q.processAllAvailable() finally q.stop()

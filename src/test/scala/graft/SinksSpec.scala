@@ -9,7 +9,7 @@ class SinksSpec extends AnyFunSuite with SparkTestBase {
 
   test("permissive CSV ingestion quarantines malformed rows, keeps clean ones") {
     import graft.sources.ScrapeIngest
-    val dir = "/tmp/graft-sinks-spec/permissive"
+    val dir = Fixture.dir()
     val lines = Seq(
       "id,score,name",
       "1,2.5,alpha",
@@ -48,17 +48,19 @@ class SinksSpec extends AnyFunSuite with SparkTestBase {
 
   test("guardedWrite rejects non-whitelisted tables (GameSpider.py:193-196)") {
     val df = Seq(1).toDF("x")
+    val dir = Fixture.dir()
     intercept[IllegalArgumentException] {
-      Sinks.guardedWrite(df, "evil", Set("team_list", "game_record"), "/tmp/graft-sink-spec")
+      Sinks.guardedWrite(df, "evil", Set("team_list", "game_record"), dir)
     }
-    Sinks.guardedWrite(df, "team_list", Set("team_list"), "/tmp/graft-sink-spec")
-    assert(spark.read.parquet("/tmp/graft-sink-spec/team_list").count() === 1)
+    Sinks.guardedWrite(df, "team_list", Set("team_list"), dir)
+    assert(spark.read.parquet(s"$dir/team_list").count() === 1)
   }
 
   test("csv sink round-trips with header") {
     val df = Seq((1, "x"), (2, "y")).toDF("id", "name")
-    Sinks.csvSink(df, "/tmp/graft-sink-spec/csv")
-    val back = spark.read.option("header", "true").csv("/tmp/graft-sink-spec/csv")
+    val dir = Fixture.dir()
+    Sinks.csvSink(df, dir)
+    val back = spark.read.option("header", "true").csv(dir)
     assert(back.columns.toSeq === Seq("id", "name"))
     assert(back.count() === 2)
   }

@@ -32,8 +32,7 @@ class StreamingNearDupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("single batch: near-dups collide with the lowest-id canonical, distinct docs don't") {
-    val dir = "/tmp/graft-neardup-spec/single"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val dir = Fixture.dir()
     writeDocs(dir, Seq(1L -> A, 2L -> A2, 3L -> B, 4L -> A3, 5L -> C))
     val got = runStream(dir, "neardup_single")
     assert(got.get(2L).contains(1L), got.toString)
@@ -44,8 +43,7 @@ class StreamingNearDupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("cross-batch: bucket state remembers batch-1 canonicals when batch 2 arrives") {
-    val dir = "/tmp/graft-neardup-spec/multi"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val dir = Fixture.dir()
     writeDocs(dir, Seq(10L -> A, 11L -> B))
     Thread.sleep(150) // distinct mtimes → deterministic file → batch order
     writeDocs(dir, Seq(12L -> A2, 13L -> C))
@@ -62,8 +60,7 @@ class StreamingNearDupSpec extends AnyFunSuite with SparkTestBase {
     spark.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val dir = "/tmp/graft-neardup-spec/rocksdb"
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      val dir = Fixture.dir()
       writeDocs(dir, Seq(1L -> A, 2L -> A2, 3L -> B, 4L -> A3, 5L -> C))
       val got = runStream(dir, "neardup_rocksdb")
       assert(got.get(2L).contains(1L), got.toString)
@@ -85,8 +82,7 @@ class StreamingNearDupSpec extends AnyFunSuite with SparkTestBase {
       .select(col("doc_id"), col("band_id"), col("band_hash"))
     val batchPairs = graft.ext.Dedup.candidatePairs(banded, "doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val dir = "/tmp/graft-neardup-spec/subset"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val dir = Fixture.dir()
     writeDocs(dir, Seq(1L -> A, 2L -> A2, 3L -> B, 4L -> A3, 5L -> C))
     val streamHits = runStream(dir, "neardup_subset")
     streamHits.foreach { case (doc, dupOf) =>

@@ -51,12 +51,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
 
   test("foreachBatch graft-store upsert converges over multiple triggers") {
     import spark.implicits._
-    val src = "/tmp/graft-stream-spec/upsert-src"
-    val store = "/tmp/graft-stream-spec/upsert-store"
-    for (p <- Seq(src, store)) {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(hp, true)
-    }
+    val src = Fixture.dir()
+    val store = Fixture.dir()
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def at(min: Long) = new java.sql.Timestamp(base.getTime + min * 60000)
     // three files -> three triggers with maxFilesPerTrigger=1; user 1 is
@@ -101,9 +97,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
   test("streaming decontamination totals are independent of batching") {
     import spark.implicits._
     import graft.ext.Decontamination
-    val src = "/tmp/graft-stream-spec/decon-src"
-    val hp = new org.apache.hadoop.fs.Path(src)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(hp, true)
+    val src = Fixture.dir()
     // the real corpus split into 3 files -> 3 triggers with maxFilesPerTrigger=1
     val docsAll = Tables.documents(spark, dir)
     docsAll.filter(col("doc_id") % 3 === 0).coalesce(1).write.mode("append").parquet(src)
@@ -151,10 +145,11 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       // watermark pusher: a far-future event so earlier sessions time out
       (7L, at(10000), 99L, "click", 0.0)
     ).toDF("event_id", "ts", "user_id", "event_type", "value")
-    events.write.mode("overwrite").parquet("/tmp/graft-stream-spec/events")
+    val eventsDir = Fixture.dir()
+    events.write.mode("overwrite").parquet(eventsDir)
     val stream = spark.readStream
       .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE")
-      .parquet("/tmp/graft-stream-spec/events")
+      .parquet(eventsDir)
     val sessions = EventsPipeline.sessionize(spark, stream, gapMinutes = 30)
     val q = sessions.writeStream.outputMode("append")
       .format("memory").queryName("spec_sessions").start()

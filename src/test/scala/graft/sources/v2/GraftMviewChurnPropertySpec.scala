@@ -150,7 +150,7 @@ class GraftMviewChurnPropertySpec extends AnyFunSuite with graft.SparkTestBase {
               .write.format("graft-store").mode("append").save(d2)
         }
       }
-      val (mode, _, _, _) = GraftMview.refresh(spark, mvDir)
+      val (mode, _, _, _, _) = GraftMview.refresh(spark, mvDir)
       assert(mode == "incremental" || mode == "noop",
         s"$shape round $round refreshed via $mode")
       val got = canon(spark.read.format("graft-store").load(mvDir)

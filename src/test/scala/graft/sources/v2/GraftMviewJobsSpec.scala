@@ -15,6 +15,9 @@ class GraftMviewJobsSpec extends AnyFunSuite with graft.SparkTestBase {
 
   import spark.implicits._
 
+  // the key helpers add the slices their jobs open to a refresh's tally
+  private implicit val reads: GraftMview.Reads = new GraftMview.Reads
+
   private lazy val catBase: String = {
     val base = Fixture.dir()
     spark.conf.set("spark.sql.catalog.mvjobs", "graft.sources.v2.GraftCatalog")
@@ -76,7 +79,7 @@ class GraftMviewJobsSpec extends AnyFunSuite with graft.SparkTestBase {
     val ckpt = view("mv_ckpt")
     Seq(("a", 10L), ("d", 4L)).toDF("g", "v")
       .write.format("graft-store").mode("append").save(src)
-    val ((mode, changed, _, _), nLocal) = jobsDuring(GraftMview.refresh(spark, local))
+    val ((mode, changed, _, _, _), nLocal) = jobsDuring(GraftMview.refresh(spark, local))
     val (_, nCkpt) = jobsDuring(
       GraftMview.localFrameRows.withValue(0L)(GraftMview.refresh(spark, ckpt)))
     assert(mode === "incremental" && changed === 2L)

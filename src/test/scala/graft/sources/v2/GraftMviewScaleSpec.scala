@@ -97,11 +97,9 @@ class GraftMviewScaleSpec extends AnyFunSuite with graft.SparkTestBase {
       spark.sql(s"DELETE FROM mvscale.f_$tag WHERE fk = 7 AND v > 50")
     if (shape != "single" && shape != "minmax" && shape != "joinminmax")
       spark.sql(s"UPDATE mvscale.c_$tag SET nk = (nk + 1) % 25 WHERE pk = 7")
-    val slicesBefore = GraftStoreFormat.scannedFileSlices.sum()
     val t0 = System.nanoTime()
-    val (mode, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (mode, _, _, _, opened) = GraftMview.refresh(spark, mvDir)
     val wall = (System.nanoTime() - t0) / 1e9
-    val opened = GraftStoreFormat.scannedFileSlices.sum() - slicesBefore
     assert(mode === "incremental", s"$tag must refresh incrementally")
     (opened, wall, files)
   }
@@ -176,9 +174,7 @@ class GraftMviewScaleSpec extends AnyFunSuite with graft.SparkTestBase {
       // 1500 distinct churned keys — over the 1000-key IN cap, but
       // contiguous: the [min, max] fallback can still skip fact files
       spark.sql(s"UPDATE mvscale.c_$tag SET nk = (nk + 1) % 25 WHERE pk < 1500")
-      val slicesBefore = GraftStoreFormat.scannedFileSlices.sum()
-      val (mode, _, _, _) = GraftMview.refresh(spark, mvDir)
-      val opened = GraftStoreFormat.scannedFileSlices.sum() - slicesBefore
+      val (mode, _, _, _, opened) = GraftMview.refresh(spark, mvDir)
       assert(mode === "incremental", s"$tag must refresh incrementally")
       // EXACTNESS under the degraded pruning: the refreshed view equals
       // a from-scratch recompute over the live tables
@@ -271,9 +267,8 @@ class GraftMviewScaleSpec extends AnyFunSuite with graft.SparkTestBase {
     }
     assert(df.queryExecution.optimizedPlan.toString.contains(mvDir),
       s"$tag: the query must serve from the MV")
-    val before = GraftStoreFormat.scannedFileSlices.sum()
     df.collect()
-    (GraftStoreFormat.scannedFileSlices.sum() - before, files)
+    (GraftStoreOps.slicesOpened(df), files)
   }
 
   private def serveProbe(shape: String): Unit = {

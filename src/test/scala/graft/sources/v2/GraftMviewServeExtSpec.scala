@@ -266,9 +266,8 @@ class GraftMviewServeExtSpec extends AnyFunSuite with graft.SparkTestBase {
     assert(served(q, mv),
       "wider-WHERE 3-table query must mixed-join-back through the covered pair:\n" +
         q.queryExecution.optimizedPlan.toString.take(2000))
-    val before = GraftStoreOps.scannedFileSlices
     val rows = q.collect()
-    val opened = GraftStoreOps.scannedFileSlices - before
+    val opened = GraftStoreOps.slicesOpened(q)
     // view (≤4 files) + single-file d1/d2 + the complement range's ~2
     // fact files — never the 12 covered files of the 16-file fact base
     assert(opened < 12,
@@ -309,17 +308,17 @@ class GraftMviewServeExtSpec extends AnyFunSuite with graft.SparkTestBase {
     // pure INSERT churn: the least/greatest fast path
     Seq((3L, 999L, 9001L), (4L, -5L, 9002L)).toDF("fk", "v", "id")
       .write.format("graft-store").mode("append").save(fact)
-    val (m1, _, _, _) = GraftMview.refresh(spark, mv)
+    val (m1, _, _, _, _) = GraftMview.refresh(spark, mv)
     assert(m1 === "incremental")
     assert(mvMap() === joinRecompute(fact, dim))
     // REMOVAL evicting extremes: the touched groups rescan the rebuilt join
     GraftStoreOps.deleteWhere(spark, fact, col("v") > 90L)
-    val (m2, _, _, _) = GraftMview.refresh(spark, mv)
+    val (m2, _, _, _, _) = GraftMview.refresh(spark, mv)
     assert(m2 === "incremental")
     assert(mvMap() === joinRecompute(fact, dim))
     // DIM churn moving a key between groups also rescans exactly
     spark.sql("UPDATE sxcat.mmj_dim SET grp = 'gX' WHERE pk = 3")
-    val (m3, _, _, _) = GraftMview.refresh(spark, mv)
+    val (m3, _, _, _, _) = GraftMview.refresh(spark, mv)
     assert(m3 === "incremental")
     assert(mvMap() === joinRecompute(fact, dim))
     // the rewrite serves the exact shape and the rollup (global) shape
@@ -365,13 +364,13 @@ class GraftMviewServeExtSpec extends AnyFunSuite with graft.SparkTestBase {
     // delete evicting the max of the NULL-extended group (fk 6, 7, NULL
     // rows live in grp NULL) and of real groups
     GraftStoreOps.deleteWhere(spark, fact, col("v") >= 45L)
-    val (m1, _, _, _) = GraftMview.refresh(spark, mv)
+    val (m1, _, _, _, _) = GraftMview.refresh(spark, mv)
     assert(m1 === "incremental")
     assert(mvMap() === recompute())
     // dim DELETE flips matched rows to null-extended: the ± pair touches
     // both groups; extremes rescan
     GraftStoreOps.deleteWhere(spark, dim, col("pk") === 1L)
-    val (m2, _, _, _) = GraftMview.refresh(spark, mv)
+    val (m2, _, _, _, _) = GraftMview.refresh(spark, mv)
     assert(m2 === "incremental")
     assert(mvMap() === recompute())
   }
@@ -403,14 +402,14 @@ class GraftMviewServeExtSpec extends AnyFunSuite with graft.SparkTestBase {
     assert(mvMap() === recompute())
     // side-b delete evicting maxes (touches matched ka groups + NULL)
     GraftStoreOps.deleteWhere(spark, fb, col("vb") >= 60L)
-    val (m1, _, _, _) = GraftMview.refresh(spark, mv)
+    val (m1, _, _, _, _) = GraftMview.refresh(spark, mv)
     assert(m1 === "incremental")
     assert(mvMap() === recompute())
     // side-a churn: delete + append (NULL keys included)
     GraftStoreOps.deleteWhere(spark, fa, col("va") < 5L)
     Seq((java.lang.Long.valueOf(3L), 500L), (null.asInstanceOf[java.lang.Long], 501L))
       .toDF("ka", "va").write.format("graft-store").mode("append").save(fa)
-    val (m2, _, _, _) = GraftMview.refresh(spark, mv)
+    val (m2, _, _, _, _) = GraftMview.refresh(spark, mv)
     assert(m2 === "incremental")
     assert(mvMap() === recompute())
   }

@@ -82,9 +82,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       s"SELECT g, count(*) AS n, sum(v) AS s FROM $cat.src2 GROUP BY g")
     Seq(("0", 1L)).toDF("g", "v")
       .write.format("graft-store").mode("append").save(srcDir)
-    val before = GraftStoreFormat.scannedFileSlices.sum()
-    val (mode, _, _, _) = GraftMview.refresh(spark, mvDir)
-    val opened = GraftStoreFormat.scannedFileSlices.sum() - before
+    val (mode, _, _, _, opened) = GraftMview.refresh(spark, mvDir)
     assert(mode === "incremental")
     // the delta pass opens the ONE churned file + the small MV's files —
     // a full recompute would open all 8 base files and fail this bound
@@ -126,14 +124,14 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     GraftStoreOps.upsertMor(spark, srcDir,
       Seq(("c", 9L)).toDF("g", "v"), Seq("g", "v"))
     spark.sql(s"DELETE FROM $cat.src4 WHERE v = 4")
-    val (m1, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m1, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m1 === "incremental")
     assert(mvRows(mvDir) === Map("a" -> ((1L, 1L)), "b" -> ((1L, 2L)), "c" -> ((1L, 9L))))
     // expire history past the watermark -> refresh detects and recomputes
     Seq(("d", 3L)).toDF("g", "v")
       .write.format("graft-store").mode("append").save(srcDir)
     GraftStoreOps.expireSnapshots(spark, srcDir, keepLast = 1)
-    val (m2, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m2, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m2 === "full")
     assert(mvRows(mvDir) === Map("a" -> ((1L, 1L)), "b" -> ((1L, 2L)),
       "c" -> ((1L, 9L)), "d" -> ((1L, 3L))))
@@ -292,13 +290,13 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     // pure inserts: the fast least/greatest path (new extreme + new group)
     Seq(("a", 100L), ("c", 3L)).toDF("g", "v")
       .write.format("graft-store").mode("append").save(srcDir)
-    val (m1, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m1, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m1 === "incremental")
     assert(rows() === Map("a" -> ((3L, 1L, 100L)), "b" -> ((2L, 5L, 7L)),
       "c" -> ((1L, 3L, 3L))))
     // removal of a's MAX: only a rescans; b/c keep their stored values
     spark.sql(s"DELETE FROM $cat.src7 WHERE v = 100")
-    val (m2, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m2, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m2 === "incremental")
     assert(rows() === Map("a" -> ((2L, 1L, 9L)), "b" -> ((2L, 5L, 7L)),
       "c" -> ((1L, 3L, 3L))))
@@ -352,7 +350,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     Seq((null.asInstanceOf[String], 7L)).toDF("g", "v")
       .write.format("graft-store").mode("append").save(srcDir)
     spark.sql(s"DELETE FROM $cat.src8 WHERE v = 10")
-    val (m, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m === "incremental")
     // stored count/sum MERGE with the delta (2+1-1, 30+7-10) and the
     // removal-touched NULL group rescans its exact min — never a reset
@@ -381,7 +379,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       (g, v.map(Long.box).orNull) }.toDF("g", "v")
       .write.format("graft-store").mode("append").save(srcDir)
     spark.sql(s"DELETE FROM $cat.src9 WHERE v = 4")
-    val (m, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m === "incremental")
     assert(rows() === Map("a" -> ((2L, Some(3L), 2L)),
       "n" -> ((2L, None, 0L)), "one" -> ((1L, None, 0L))))
@@ -422,7 +420,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     // AFTER this watermark — must NOT appear until the dim side commits)
     Seq((2L, 100L), (4L, 50L)).toDF("fk", "v")
       .write.format("graft-store").mode("append").save(fact)
-    val (m1, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m1, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m1 === "incremental")
     assert(rows() === recompute())
     assert(!rows().contains("north") && rows()("west") === ((2L, 105L, 52.5)))
@@ -431,14 +429,14 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     Seq((4L, "north")).toDF("pk", "region")
       .write.format("graft-store").mode("append").save(dim)
     spark.sql(s"UPDATE $cat.jd SET region = 'west' WHERE pk = 3")
-    val (m2, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m2, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m2 === "incremental")
     assert(rows() === recompute())
     assert(rows()("north") === ((1L, 50L, 50.0)))
     // BOTH sides churn between refreshes; a dim delete vanishes a group
     spark.sql(s"DELETE FROM $cat.jd WHERE region = 'north'")
     Seq((1L, 3L)).toDF("fk", "v").write.format("graft-store").mode("append").save(fact)
-    val (m3, _, vanished, _) = GraftMview.refresh(spark, mvDir)
+    val (m3, _, vanished, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m3 === "incremental" && vanished === 1L)
     assert(rows() === recompute())
     // no churn: noop; dim watermark expiry falls back to full
@@ -446,7 +444,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     Seq((5L, "south")).toDF("pk", "region")
       .write.format("graft-store").mode("append").save(dim)
     GraftStoreOps.expireSnapshots(spark, dim, keepLast = 1)
-    val (m4, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m4, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m4 === "full")
     assert(rows() === recompute())
   }
@@ -467,9 +465,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
         s"JOIN $cat.jd2 ON fk = pk GROUP BY grp")
     Seq((0L, 1L)).toDF("fk", "v")
       .write.format("graft-store").mode("append").save(fact)
-    val before = GraftStoreFormat.scannedFileSlices.sum()
-    val (mode, _, _, _) = GraftMview.refresh(spark, mvDir)
-    val opened = GraftStoreFormat.scannedFileSlices.sum() - before
+    val (mode, _, _, _, opened) = GraftMview.refresh(spark, mvDir)
     assert(mode === "incremental")
     // the fact side reads ONLY its churn file: 1 churned + 1 dim + MV
     // files — a recompute would open all 8 fact files and fail the bound
@@ -522,21 +518,19 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     // the 8-file fact base is never rescanned — slice-count proof
     Seq((0L, 1L)).toDF("fk", "v")
       .write.format("graft-store").mode("append").save(fact)
-    val before = GraftStoreFormat.scannedFileSlices.sum()
-    val (m1, _, _, _) = GraftMview.refresh(spark, mvDir)
-    val opened = GraftStoreFormat.scannedFileSlices.sum() - before
+    val (m1, _, _, _, opened) = GraftMview.refresh(spark, mvDir)
     assert(m1 === "incremental")
     assert(opened < 16, s"3-way fact refresh opened $opened slices — an " +
       "unchurned side must contribute no pinned-fact term (fact base is 16 files)")
     assert(rows() === recompute())
     // MIDDLE-dim churn: UPDATE moves group mass across nations
     spark.sql(s"UPDATE $cat.n3c SET nk = (nk + 1) % 10 WHERE pk % 7 = 0")
-    val (m2, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m2, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m2 === "incremental")
     assert(rows() === recompute())
     // LEAF-dim churn: a nation vanishes (its group leaves the view)
     spark.sql(s"DELETE FROM $cat.n3n WHERE nk2 = 9")
-    val (m3, _, vanished, _) = GraftMview.refresh(spark, mvDir)
+    val (m3, _, vanished, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m3 === "incremental" && vanished >= 1L)
     assert(rows() === recompute() && !rows().contains("n9"))
     // TWO sides churn between refreshes: one term per churned side
@@ -544,7 +538,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       .write.format("graft-store").mode("append").save(fact)
     Seq((100L, 3L)).toDF("pk", "nk")
       .write.format("graft-store").mode("append").save(d1)
-    val (m4, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m4, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m4 === "incremental")
     assert(rows() === recompute())
     assert(GraftMview.refresh(spark, mvDir)._1 === "noop")
@@ -614,14 +608,14 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     // (a) FACT append: one matched row, one null-extended row
     Seq((2L, 100L), (8L, 50L)).toDF("fk", "v")
       .write.format("graft-store").mode("append").save(fact)
-    val (m1, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m1, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m1 === "incremental")
     assert(rows() === recompute() && rows()(None) === ((2L, 149L)))
     // (b) DIM insert: key 9 gains a row — its null-extended fact rows
     // must CONVERT to matched (the +new/−old pair retracts the NULL rows)
     Seq((9L, "north")).toDF("pk", "region")
       .write.format("graft-store").mode("append").save(dim)
-    val (m2, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m2, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m2 === "incremental")
     assert(rows() === recompute())
     assert(rows()(Some("north")) === ((1L, 99L)) && rows()(None) === ((1L, 50L)))
@@ -633,7 +627,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     spark.conf.set("spark.graft.checkpointDir", ckpt)
     try {
       spark.sql(s"DELETE FROM $cat.lod WHERE pk = 1")
-      val (m3, _, vanished, _) = GraftMview.refresh(spark, mvDir)
+      val (m3, _, vanished, _, _) = GraftMview.refresh(spark, mvDir)
       assert(m3 === "incremental" && vanished === 1L)
       assert(rows() === recompute())
       assert(!rows().contains(Some("east")) && rows()(None) === ((3L, 80L)))
@@ -641,7 +635,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     // (d) dim UPDATE moves mass between groups; fact DELETE in same round
     spark.sql(s"UPDATE $cat.lod SET region = 'south' WHERE pk = 2")
     spark.sql(s"DELETE FROM $cat.lof WHERE fk = 8")
-    val (m4, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m4, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m4 === "incremental")
     assert(rows() === recompute())
     assert(rows()(Some("south")) === ((2L, 105L)) && rows()(None) === ((2L, 30L)))
@@ -685,7 +679,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     // FACT churn: matched + unmatched rows appended
     Seq((2L, 100L), (8L, 50L)).toDF("fk", "v")
       .write.format("graft-store").mode("append").save(fact)
-    val (m1, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m1, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m1 === "incremental")
     assert(rows() === recompute())
     // MIDDLE (cust) churn: fk=9 gains its cust row (level-1 null
@@ -693,7 +687,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     Seq((9L, 1L)).toDF("pk", "nk")
       .write.format("graft-store").mode("append").save(d1)
     spark.sql(s"UPDATE $cat.lc3c SET nk = 1 WHERE pk = 1")
-    val (m2, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m2, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m2 === "incremental")
     assert(rows() === recompute())
     assert(rows()(Some("west")) === ((5L, 234L)))
@@ -703,20 +697,20 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     // east already left at m2 when its last cust row moved away)
     Seq((77L, "north")).toDF("nk2", "nname")
       .write.format("graft-store").mode("append").save(d2)
-    val (m3, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m3, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m3 === "incremental")
     assert(rows() === recompute())
     assert(rows()(Some("north")) === ((1L, 7L)))
     assert(!rows().contains(Some("east")))
     spark.sql(s"DELETE FROM $cat.lc3n WHERE nname = 'west'")
-    val (m4, _, vanished, _) = GraftMview.refresh(spark, mvDir)
+    val (m4, _, vanished, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m4 === "incremental" && vanished >= 1L)
     assert(rows() === recompute() && !rows().contains(Some("west")))
     // TWO sides churn between refreshes; then noop at head
     Seq((3L, 1000L)).toDF("fk", "v")
       .write.format("graft-store").mode("append").save(fact)
     spark.sql(s"DELETE FROM $cat.lc3c WHERE pk = 2")
-    val (m5, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m5, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m5 === "incremental")
     assert(rows() === recompute())
     assert(GraftMview.refresh(spark, mvDir)._1 === "noop")
@@ -770,12 +764,12 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     // churn EACH side: fact append; d2 gains 200 (conversion); d1 loses a2
     Seq((2L, 7L, 200L)).toDF("k1", "v", "k2")
       .write.format("graft-store").mode("append").save(fact)
-    val (m1, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m1, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m1 === "incremental" && rows() === recompute())
     Seq((200L, "b2")).toDF("bk", "blab")
       .write.format("graft-store").mode("append").save(d2)
     spark.sql(s"DELETE FROM $cat.ls3a WHERE alab = 'a2'")
-    val (m2, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m2, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m2 === "incremental")
     assert(rows() === recompute())
     assert(rows()((None, Some("b2"))) === ((2L, 27L)))
@@ -906,9 +900,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     // stats pruning keeps opened slices below the 8-file fact base.
     Seq((150L, "gNEW")).toDF("pk", "grp")
       .write.format("graft-store").mode("append").save(dim)
-    val before = GraftStoreFormat.scannedFileSlices.sum()
-    val (mode, _, _, _) = GraftMview.refresh(spark, mvDir)
-    val opened = GraftStoreFormat.scannedFileSlices.sum() - before
+    val (mode, _, _, _, opened) = GraftMview.refresh(spark, mvDir)
     assert(mode === "incremental")
     // the fact side is range-laid-out on fk: the churned key's rescans
     // prune to its one file via min/max stats — never the 8-file base
@@ -947,7 +939,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     Seq((2L, -100L), (2L, 7L)).toDF("fk", "v")
       .write.format("graft-store").mode("append").save(fact)
     spark.sql(s"UPDATE $cat.jw2 SET grp = 'b' WHERE pk = 3")
-    val (m, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m === "incremental")
     assert(rows() === Map("a" -> ((1L, 10L)), "b" -> ((3L, 57L))))
   }
@@ -1575,7 +1567,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     // churn: inserts into two buckets, a delete that moves Feb's min
     writeRows(Seq(("2024-01-25", 4L), ("2024-04-01", 100L)), "append")
     GraftStoreOps.deleteWhere(spark, srcDir, $"v" === 10L)
-    val (mode, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (mode, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(mode === "incremental")
     assert(rows() === Map("2024-01" -> ((3L, 7L, 1L)), "2024-02" -> ((1L, 20L, 20L)),
       "2024-03" -> ((1L, 7L, 7L)), "2024-04" -> ((1L, 100L, 100L))))
@@ -1677,12 +1669,12 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     assert(mv() === recompute())
     // insert churn (NULL group key included): the union fast path
     write(Seq(("a", 1L, 10L), ("b", null, 11L), ("c", 7L, 12L)), "append")
-    val (m1, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m1, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m1 === "incremental")
     assert(mv() === recompute())
     // removal churn: the rescan path (and a vanished group leaves)
     GraftStoreOps.deleteWhere(spark, srcDir, $"k" === 2L || $"k" === 12L)
-    val (m2, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m2, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m2 === "incremental")
     assert(mv() === recompute())
     assert(!mv().contains(("c", 7L)))
@@ -1839,14 +1831,14 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     // INSERTS: a dup (no d change), a new value, a new group
     Seq((7L, "a", 2L), (8L, "a", 9L), (9L, "d", 5L)).toDF("id", "g", "u")
       .write.format("graft-store").mode("append").save(srcDir)
-    val (m1, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m1, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m1 === "incremental")
     assert(rows() === recompute() && rows()("a") === ((5L, 3L)))
     // DELETES: one of a's two u=1 rows (a keeps the value — dup-count);
     // b's only u=1 row (the value VANISHES from b while SURVIVING in a);
     // all of c (the whole group leaves)
     spark.sql(s"DELETE FROM $cat.ddsrc WHERE id IN (2, 4, 6)")
-    val (m2, _, vanished, _) = GraftMview.refresh(spark, mvDir)
+    val (m2, _, vanished, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m2 === "incremental" && vanished === 1L)
     assert(rows() === recompute())
     assert(rows()("a") === ((4L, 3L)), "dup removal must not drop the value")
@@ -1856,7 +1848,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     spark.sql(s"UPDATE $cat.ddsrc SET g = 'd' WHERE id = 8")
     Seq((10L, "b", 5L)).toDF("id", "g", "u")
       .write.format("graft-store").mode("append").save(srcDir)
-    val (m3, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m3, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m3 === "incremental")
     assert(rows() === recompute())
     assert(rows()("d") === ((2L, 2L)) && rows()("b") === ((2L, 1L)))
@@ -1873,12 +1865,12 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     assert(!q().queryExecution.optimizedPlan.toString.contains(mvDir))
     // watermark EXPIRY falls back to a full rebuild — companion included
     GraftStoreOps.expireSnapshots(spark, srcDir, keepLast = 1)
-    val (m4, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m4, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m4 === "full")
     assert(rows() === recompute())
     Seq((12L, "b", 7L)).toDF("id", "g", "u")
       .write.format("graft-store").mode("append").save(srcDir)
-    val (m5, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m5, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m5 === "incremental", "companion must resume incrementally after rebuild")
     assert(rows() === recompute())
   }
@@ -1909,12 +1901,12 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     // fact churn: a dup of 10 in east (via fk=3? no — fk=3 is east, v=10 dup)
     Seq((3L, 10L), (2L, 99L)).toDF("fk", "v")
       .write.format("graft-store").mode("append").save(fact)
-    val (m1, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m1, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m1 === "incremental")
     assert(rows() === recompute() && rows()("east") === ((4L, 3L)))
     // dim churn: pk=3 moves east→west (v=30 and the dup'd 10 move with it)
     spark.sql(s"UPDATE $cat.djd SET region = 'west' WHERE pk = 3")
-    val (m2, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m2, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m2 === "incremental")
     assert(rows() === recompute())
     assert(rows()("east") === ((2L, 2L)) && rows()("west") === ((4L, 3L)))
@@ -2065,7 +2057,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     Seq(("a", 1.0), ("d", 3.0), ("d", 8.0)).toDF("g", "v")
       .write.format("graft-store").mode("append").save(srcDir)
     spark.sql(s"DELETE FROM $cat.vsrc WHERE g = 'b' AND v = 5.0")
-    val (m, _, vanished, _) = GraftMview.refresh(spark, mvDir)
+    val (m, _, vanished, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m === "incremental" && vanished === 1L, "b vanished (both rows matched)")
     close(rows(), recompute())
     // the transparent rewrite serves stddev from the stored column
@@ -2102,7 +2094,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       (g, v.map(Double.box).orNull) }.toDF("g", "v")
       .write.format("graft-store").mode("append").save(srcDir)
     spark.sql(s"DELETE FROM $cat.src10 WHERE g = 'b'")
-    val (m, _, vanished, _) = GraftMview.refresh(spark, mvDir)
+    val (m, _, vanished, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m === "incremental")
     assert(vanished === 1L)
     assert(rows() === Map("a" -> ((3L, Some(5.0))), "z" -> ((2L, Some(7.0)))))
@@ -2252,7 +2244,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     // fact-direction churn (preserved side)
     Seq((Option(2L), 20L), (Option(9L), 1L)).toDF("fk", "v")
       .write.format("graft-store").mode("append").save(factDir)
-    val (m1, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m1, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m1 === "incremental")
     assert(got() === expect())
     // dim-direction churn: insert matches waiting rows (fk=3 null →
@@ -2260,7 +2252,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     Seq((3L, "c")).toDF("pk", "seg")
       .write.format("graft-store").mode("append").save(dimDir)
     spark.sql(s"DELETE FROM $cat.rodim WHERE pk = 2")
-    val (m2, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m2, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m2 === "incremental")
     assert(got() === expect())
     // a RIGHT JOIN query flips inside the rewrite rule and serves
@@ -2315,7 +2307,7 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     Seq(("z", "x", 9L), ("c", "y", 1L)).toDF("g", "h", "u")
       .write.format("graft-store").mode("append").save(srcDir)
     spark.sql(s"DELETE FROM $cat.dcrsrc WHERE g = 'b'")
-    val (m, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m === "incremental")
     val q4 = src().groupBy("g").agg(countDistinct(col("u")).as("dc"))
     assert(servedFromMv(q4), "the refreshed companion must keep serving")
@@ -2390,14 +2382,13 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
       df.queryExecution.optimizedPlan.toString.contains(mvDir)
     def src() = spark.read.format("graft-store").load(srcDir)
     // the wider WHERE: view covers day<10, query wants day<20
-    val before = GraftStoreFormat.scannedFileSlices.sum()
     val q1 = src().filter(col("day") < 20)
       .groupBy("g").agg(count(lit(1)).as("n"), sum("v").as("s"),
         avg("v").as("av"))
     assert(servedFromMv(q1), "the mixed plan must serve the wider WHERE")
     val got = q1.collect().map(r =>
       r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
-    val opened = GraftStoreFormat.scannedFileSlices.sum() - before
+    val opened = GraftStoreOps.slicesOpened(q1)
     assert(got === Map("a" -> ((3L, 13L, 13.0 / 3)), "b" -> ((2L, 30L, 15.0)),
       "c" -> ((1L, 5L, 5.0))))
     // the PUSHABLE complement (day >= 10 OR day IS NULL) must skip the
@@ -2619,24 +2610,24 @@ class GraftMviewSpec extends AnyFunSuite with graft.SparkTestBase {
     // side-A churn that flips a B row: ka=3 arrives — fb's kb=3 row
     // transitions null-extended → matched (the OTHER side flips)
     writeA(Seq((Some(3L), "x", 30L)), "append")
-    val (m1, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m1, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m1 === "incremental")
     assert(got() === expect(), "B-side flip via A churn diverged")
     // side-B churn that flips an A row: kb=1 leaves — fa's ka=1 row
     // transitions matched → null-extended
     spark.sql(s"DELETE FROM $cat.fofb WHERE kb = 1")
-    val (m2, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m2, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m2 === "incremental")
     assert(got() === expect(), "A-side flip via B churn diverged")
     // NULL-key churn on BOTH sides: pure null-extended linear terms
     writeA(Seq((None, "x", 7L)), "append")
     writeB(Seq((Some(9L), "z", 4L), (None, "z", 5L)), "append")
-    val (m3, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m3, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m3 === "incremental")
     assert(got() === expect(), "NULL-key churn diverged")
     // delete a NULL-key row (removal through the linear term)
     spark.sql(s"DELETE FROM $cat.fofa WHERE ka IS NULL AND va = 99")
-    val (m4, _, _, _) = GraftMview.refresh(spark, mvDir)
+    val (m4, _, _, _, _) = GraftMview.refresh(spark, mvDir)
     assert(m4 === "incremental")
     assert(got() === expect(), "NULL-key removal diverged")
     // rewrite: the full-outer query serves — in either table order —

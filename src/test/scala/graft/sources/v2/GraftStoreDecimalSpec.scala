@@ -51,10 +51,11 @@ class GraftStoreDecimalSpec extends AnyFunSuite with graft.SparkTestBase {
       .select(col("id"), (col("id").cast("decimal(14,2)") / 100).as("price"))
       .repartitionByRange(8, col("price"))
       .write.format("graft-store").mode("overwrite").save(dir)
-    val before = GraftStoreFormat.scannedFileSlices.sum()
-    val n = spark.read.format("graft-store").load(dir)
-      .filter(col("price") < lit(new java.math.BigDecimal("1.00"))).count()
-    val opened = GraftStoreFormat.scannedFileSlices.sum() - before
+    val q = spark.read.format("graft-store").load(dir)
+      .filter(col("price") < lit(new java.math.BigDecimal("1.00")))
+      .agg(count(lit(1)))
+    val n = q.collect()(0).getLong(0)
+    val opened = GraftStoreOps.slicesOpened(q)
     assert(n === 100) // prices 0.00 .. 0.99
     assert(opened <= 2, s"decimal range predicate opened $opened of 8 files")
     // boundary exactness: no off-by-scale in the unscaled comparison
@@ -210,11 +211,11 @@ class GraftStoreDecimalSpec extends AnyFunSuite with graft.SparkTestBase {
           .cast("decimal(38,6)").as("amt"))
       .repartitionByRange(8, col("amt"))
       .write.format("graft-store").mode("overwrite").save(dir)
-    val before = GraftStoreFormat.scannedFileSlices.sum()
-    val n = spark.read.format("graft-store").load(dir)
+    val q = spark.read.format("graft-store").load(dir)
       .filter(col("amt") < lit(new java.math.BigDecimal("10000000000000000000100")))
-      .count()
-    val opened = GraftStoreFormat.scannedFileSlices.sum() - before
+      .agg(count(lit(1)))
+    val n = q.collect()(0).getLong(0)
+    val opened = GraftStoreOps.slicesOpened(q)
     assert(n === 100)
     assert(opened <= 2, s"wide-decimal range predicate opened $opened of 8 files")
     // metadata-only DELETE: the BigInteger must-proof drops every FULLY

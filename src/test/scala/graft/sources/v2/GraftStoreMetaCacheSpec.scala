@@ -1,6 +1,7 @@
 package graft.sources.v2
 
 import graft.Fixture
+import graft.sources.v2.FlakyRenameFs.{callsUnder, metadataOpens, mvDepsCalls}
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
@@ -10,79 +11,61 @@ import org.scalatest.funsuite.AnyFunSuite
   * name and segments are content-addressed, so parsed metadata is reusable
   * across scans — an interactive/repeated query against a million-file
   * table must not re-pay the metadata parse per scan, and a commit must
-  * re-parse only its churn. [[GraftStoreFormat.manifestParseBytes]] counts
-  * actual parse work (cache misses only), which is what these tests pin. */
+  * re-parse only its churn. A parse opens the manifest or segment file (a
+  * cache hit only validates it by a status call), so these tests pin the
+  * opens that the `flaky:` filesystem logs under each test's own table
+  * directory ([[FlakyRenameFs.callsUnder]]). */
 class GraftStoreMetaCacheSpec extends AnyFunSuite with graft.SparkTestBase {
 
   import spark.implicits._
 
   private def conf = spark.sparkContext.hadoopConfiguration
 
-  /** The JVM-global parse counter can tick from UNRELATED background work
-    * (a prior suite's draining stream poll) between two samples — retry
-    * absorbs that; a genuine cache regression fails every attempt. */
-  private def eventually[A](attempts: Int)(body: => A): A = {
-    var left = attempts
-    while (true) {
-      try return body
-      catch {
-        case e: org.scalatest.exceptions.TestFailedException if left > 1 =>
-          left -= 1
-      }
-    }
-    sys.error("unreachable")
-  }
-
   test("second scan of an unchanged table parses zero manifest bytes") {
-    val dir = Fixture.dir()
+    val dir = FlakyRenameFs.dir(conf)
     spark.range(0, 2000).repartition(200).selectExpr("id", "id * 2 as v")
       .write.format("graft-store").mode("overwrite").save(dir)
     // warm: the first scan parses the manifest + its 200-file segments
     assert(spark.read.format("graft-store").load(dir).count() === 2000)
-    eventually(3) {
-      val before = GraftStoreFormat.manifestParseBytes.sum()
+    val calls = callsUnder(dir) {
       val got = spark.read.format("graft-store").load(dir)
         .agg(sum("v")).collect()(0).getLong(0)
       assert(got === (0L until 2000L).map(_ * 2).sum)
-      assert(GraftStoreFormat.manifestParseBytes.sum() === before,
-        "an unchanged table's second scan must re-parse ZERO metadata bytes")
     }
+    assert(metadataOpens(calls) === 0,
+      "an unchanged table's second scan must re-parse ZERO metadata files")
   }
 
   test("a head advance re-parses only the churn (segments stay cached)") {
-    eventually(3) {
-    val dir = Fixture.dir()
+    val dir = FlakyRenameFs.dir(conf)
     // 1000 files: content-defined chunking (boundary p = 1/64 per name)
     // yields ~16 chunks with near-certainty — a 200-file table can land in
     // ONE chunk (p ≈ 4%), where an append legitimately churns everything
     spark.range(0, 4000).repartition(1000).selectExpr("id", "id * 2 as v")
       .write.format("graft-store").mode("overwrite").save(dir)
     spark.read.format("graft-store").load(dir).count() // warm the caches
-    val before = GraftStoreFormat.manifestParseBytes.sum()
-    spark.range(4000, 4010).coalesce(1).selectExpr("id", "id * 2 as v")
-      .write.format("graft-store").mode("append").save(dir)
-    assert(spark.read.format("graft-store").load(dir).count() === 4010)
-    assert(GraftStoreFormat.manifestParseBytes.sum() > before,
-      "the new manifest itself must parse")
-    // the O(churn) property, in two deterministic halves (the raw parsed-
-    // bytes fraction is at the mercy of unrelated background parses in a
-    // shared JVM): (a) the appended manifest re-REFERENCES nearly every
-    // prior chunk — and the segment cache serves chunks BY NAME, so a
-    // re-referenced chunk never re-parses; (b) the next scan of the now-
-    // cached head parses zero bytes for THIS table's chunks
+    val appended = callsUnder(dir) {
+      spark.range(4000, 4010).coalesce(1).selectExpr("id", "id * 2 as v")
+        .write.format("graft-store").mode("append").save(dir)
+      assert(spark.read.format("graft-store").load(dir).count() === 4010)
+    }
+    assert(metadataOpens(appended) > 0, "the new manifest itself must parse")
+    // the O(churn) property, in two deterministic halves: (a) the appended
+    // manifest re-REFERENCES nearly every prior chunk — and the segment
+    // cache serves chunks BY NAME, so a re-referenced chunk never
+    // re-parses; (b) the next scan of the now-cached head parses zero
+    // metadata files of this table
     val ms = GraftStoreFormat.listManifests(dir, conf)
     val before0 = GraftStoreFormat.manifestSegmentRefs(dir, conf, ms.init.last).toSet
     val after0 = GraftStoreFormat.manifestSegmentRefs(dir, conf, ms.last).toSet
     assert((before0 intersect after0).size >= before0.size - 2,
       s"the appended manifest must re-reference prior chunks " +
         s"(${(before0 intersect after0).size} of ${before0.size})")
-    eventually(3) {
-      val b2 = GraftStoreFormat.manifestParseBytes.sum()
+    val next = callsUnder(dir) {
       assert(spark.read.format("graft-store").load(dir).count() === 4010)
-      assert(GraftStoreFormat.manifestParseBytes.sum() === b2,
-        "the post-append head must be fully cached on the next scan")
     }
-    }
+    assert(metadataOpens(next) === 0,
+      "the post-append head must be fully cached on the next scan")
   }
 
   test("table delete + recreate is never served stale metadata") {
@@ -131,7 +114,7 @@ class GraftStoreMetaCacheSpec extends AnyFunSuite with graft.SparkTestBase {
   }
 
   test("CALL procedures and CDC reads re-parse zero metadata on a warm cache") {
-    val dir = Fixture.dir()
+    val dir = FlakyRenameFs.dir(conf)
     spark.conf.set("spark.sql.catalog.mcproc", "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.mcproc.base", new Path(dir).getParent.toString)
     try {
@@ -147,17 +130,16 @@ class GraftStoreMetaCacheSpec extends AnyFunSuite with graft.SparkTestBase {
       spark.read.format("graft-store").option("readChangeFeed", "true")
         .option("startSnapshot", "0").load(dir).count()
       GraftStoreOps.history(spark, dir)
-      eventually(3) {
-        val before = GraftStoreFormat.manifestParseBytes.sum()
+      val calls = callsUnder(dir) {
         // metadata-table path, procedure-style driver metadata reads, and
         // the CDC reader must all serve from the parsed-manifest cache
         spark.sql(s"SELECT * FROM mcproc.`$name$$history`").count()
         GraftStoreOps.history(spark, dir)
         assert(spark.read.format("graft-store").option("readChangeFeed", "true")
           .option("startSnapshot", "0").load(dir).count() === 130)
-        assert(GraftStoreFormat.manifestParseBytes.sum() === before,
-          "warm-cache procedure/CDC statements must re-parse ZERO metadata bytes")
       }
+      assert(metadataOpens(calls) === 0,
+        "warm-cache procedure/CDC statements must re-parse ZERO metadata files")
     } finally {
       spark.conf.unset("spark.sql.catalog.mcproc")
       spark.conf.unset("spark.sql.catalog.mcproc.base")
@@ -166,7 +148,7 @@ class GraftStoreMetaCacheSpec extends AnyFunSuite with graft.SparkTestBase {
 
   test("rewrite probe: warm aggregates issue zero FS probes; a same-JVM " +
       "commit flips MV freshness immediately") {
-    val base = Fixture.dir()
+    val base = FlakyRenameFs.dir(conf)
     spark.conf.set("spark.sql.catalog.mcprobe", "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.mcprobe.base", base)
     // a large TTL makes the zero-FS-reads pin deterministic AND proves the
@@ -184,20 +166,18 @@ class GraftStoreMetaCacheSpec extends AnyFunSuite with graft.SparkTestBase {
         df.queryExecution.optimizedPlan.toString.contains(s"$base/mv")
       assert(served(q())) // warm: this probe pays the FS reads
       q().collect()
-      eventually(3) {
-        val ops0 = GraftStoreFormat.mvProbeFsOps.sum()
-        val bytes0 = GraftStoreFormat.manifestParseBytes.sum()
+      val calls = callsUnder(base) {
         (1 to 5).foreach { _ =>
           val df = q()
           assert(served(df))
           assert(df.count() === 7)
         }
-        assert(GraftStoreFormat.mvProbeFsOps.sum() === ops0,
-          "N repeated aggregates over an MV'd table must issue ZERO " +
-            "probe filesystem reads after the first")
-        assert(GraftStoreFormat.manifestParseBytes.sum() === bytes0,
-          "warm rewrite probes must re-parse ZERO dep/manifest bytes")
       }
+      assert(mvDepsCalls(calls) === 0,
+        "N repeated aggregates over an MV'd table must issue ZERO " +
+          "probe filesystem reads after the first")
+      assert(metadataOpens(calls) === 0,
+        "warm rewrite probes must re-parse ZERO dep/manifest files")
       // a same-JVM commit purges the probe entry through commitManifest —
       // the very next query must see the MV as stale (well inside the TTL)
       spark.range(1000, 1010).selectExpr("cast(id % 7 as string) as k", "id as v")

@@ -9,9 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * reader output. A narrow projection of a wide store must SEEK past the
   * fields it did not ask for (strings: length-prefix skip without UTF-8
   * materialization; fixed width: byte seek) instead of decoding them. The
-  * [[GraftStoreFormat.prunedBytesSkipped]] JVM-local adder exists exactly
-  * so this suite can PROVE the skip happens — local[4] shares the test
-  * JVM, so executor-side skips land in the same counter. */
+  * scan's `bytesSkipped` SQL metric ([[GraftStoreOps.bytesSkipped]])
+  * counts the payload bytes seeked past, so this suite can PROVE the skip
+  * happens, per query. */
 class GraftStorePruneDecodeSpec extends AnyFunSuite with graft.SparkTestBase {
 
   import spark.implicits._
@@ -33,29 +33,22 @@ class GraftStorePruneDecodeSpec extends AnyFunSuite with graft.SparkTestBase {
         "repeat(concat('f', id), 20) as s6")
       .write.format("graft-store").mode("overwrite").save(dir)
 
-  private def skippedDuring(body: => Unit): Long = {
-    val before = GraftStoreFormat.prunedBytesSkipped.sum()
-    body
-    GraftStoreFormat.prunedBytesSkipped.sum() - before
-  }
-
   test("narrow projection of a wide store skips pruned bytes; full read skips none") {
     val dir = Fixture.dir()
     seedWide(dir)
     val back = spark.read.format("graft-store").load(dir)
 
-    val narrowSkipped = skippedDuring {
-      val got = back.select("id", "v").agg(sum("v")).collect()(0).getLong(0)
-      assert(got === (0L until 2000L).map(_ * 3).sum)
-    }
+    val narrow = back.select("id", "v").agg(sum("v"))
+    assert(narrow.collect()(0).getLong(0) === (0L until 2000L).map(_ * 3).sum)
+    val narrowSkipped = GraftStoreOps.bytesSkipped(narrow)
     // six strings of ~60+ chars each x 2000 rows: megabytes of payload the
     // decoder must have seeked past, not materialized
     assert(narrowSkipped > 100L * 2000L,
       s"expected substantial skip for a 2-of-10 projection, got $narrowSkipped bytes")
 
-    val fullSkipped = skippedDuring {
-      assert(back.select(back.columns.map(col): _*).collect().length === 2000)
-    }
+    val full = back.select(back.columns.map(col): _*)
+    assert(full.collect().length === 2000)
+    val fullSkipped = GraftStoreOps.bytesSkipped(full)
     assert(fullSkipped === 0L,
       s"a full-width projection must decode everything (skipped $fullSkipped)")
   }
@@ -70,10 +63,9 @@ class GraftStorePruneDecodeSpec extends AnyFunSuite with graft.SparkTestBase {
     assert(viaPruned === viaFull)
     // filter attributes fold into the required schema: filtering on a
     // column the projection drops still decodes it (and only it + output)
-    val skipped = skippedDuring {
-      assert(back.filter($"flag" && $"id" < 100).select("v").collect().length === 50)
-    }
-    assert(skipped > 0L)
+    val flagged = back.filter($"flag" && $"id" < 100).select("v")
+    assert(flagged.collect().length === 50)
+    assert(GraftStoreOps.bytesSkipped(flagged) > 0L)
   }
 
   test("nulls on the wire cost nothing to skip and stay null either way") {
@@ -84,11 +76,10 @@ class GraftStorePruneDecodeSpec extends AnyFunSuite with graft.SparkTestBase {
         "if(id % 5 = 0, cast(null as long), id * 2) as v")
       .write.format("graft-store").mode("overwrite").save(dir)
     val back = spark.read.format("graft-store").load(dir)
-    val skipped = skippedDuring {
-      assert(back.select("id", "v").filter($"v".isNull).count() === 40)
-    }
+    val nullV = back.select("id", "v").filter($"v".isNull).agg(count(lit(1)))
+    assert(nullV.collect()(0).getLong(0) === 40)
     // 2/3 of rows carry a 50-char string that was skipped
-    assert(skipped >= 50L * 100L)
+    assert(GraftStoreOps.bytesSkipped(nullV) >= 50L * 100L)
     assert(back.select("fat").filter($"fat".isNull).count() ===
       back.collect().count(_.isNullAt(1)))
   }
@@ -115,8 +106,9 @@ class GraftStorePruneDecodeSpec extends AnyFunSuite with graft.SparkTestBase {
     val s2s = back.select("s2").collect().length
     assert(s2s === 300)
     // and the skip machinery still engaged for the fat columns
-    val skipped = skippedDuring { back.select("id").count() }
-    assert(skipped > 0L)
+    val ids = back.select("id").agg(count(lit(1)))
+    ids.collect()
+    assert(GraftStoreOps.bytesSkipped(ids) > 0L)
   }
 
   test("CDC feed decodes only projected columns from target files") {
@@ -125,14 +117,13 @@ class GraftStorePruneDecodeSpec extends AnyFunSuite with graft.SparkTestBase {
     // COW delete produces a change store; batch CDC read with a narrow
     // projection should seek past the fat strings of pre/post images
     GraftStoreOps.deleteWhere(spark, dir, col("id") < 100)
-    val skipped = skippedDuring {
-      val feed = spark.read.format("graft-store")
-        .option("readChangeFeed", "true").option("startSnapshot", "0")
-        .load(dir)
-        .select("id", "change_type")
-      assert(feed.filter($"change_type" === "delete").count() === 100)
-    }
-    assert(skipped > 0L,
+    val feed = spark.read.format("graft-store")
+      .option("readChangeFeed", "true").option("startSnapshot", "0")
+      .load(dir)
+      .select("id", "change_type")
+    val deletes = feed.filter($"change_type" === "delete").agg(count(lit(1)))
+    assert(deletes.collect()(0).getLong(0) === 100)
+    assert(GraftStoreOps.bytesSkipped(deletes) > 0L,
       "CDC narrow projection should skip unprojected payload bytes")
   }
 }

@@ -1,26 +1,8 @@
 package graft.sources.v2
 
-import graft.Fixture
-
-import java.net.URI
-
-import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-
-/** A local filesystem under the `flaky:` scheme whose `rename` returns
-  * false, without moving anything, when [[FlakyRenameFs.fails]] says so —
-  * how some filesystems report a failed rename instead of throwing. */
-class FlakyRenameFs extends RawLocalFileSystem {
-  override def getUri: URI = URI.create("flaky:///")
-  override def getScheme: String = "flaky"
-  override def rename(src: Path, dst: Path): Boolean =
-    if (FlakyRenameFs.fails(src)) false else super.rename(src, dst)
-}
-
-object FlakyRenameFs {
-  @volatile var fails: Path => Boolean = _ => false
-}
 
 /** A commit whose move of a written file into the table returns false
   * publishes nothing: the commit fails, the files it already moved and its
@@ -30,9 +12,7 @@ class GraftStoreRenameSpec extends AnyFunSuite with graft.SparkTestBase {
   private def conf = spark.sparkContext.hadoopConfiguration
 
   private lazy val base: String = {
-    conf.set("fs.flaky.impl", classOf[FlakyRenameFs].getName)
-    conf.setBoolean("fs.flaky.impl.disable.cache", true)
-    val b = "flaky:" + Fixture.dir()
+    val b = FlakyRenameFs.dir(conf)
     spark.conf.set("spark.sql.catalog.rncat", "graft.sources.v2.GraftCatalog")
     spark.conf.set("spark.sql.catalog.rncat.base", b)
     b
